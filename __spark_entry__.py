@@ -52,14 +52,12 @@ _DRIVER_HEAD = [
     "bucket_allocation_vs_load",
     # --- round-13 rotation (VERDICT r12 item 5: front the now-stalest
     # cohort). Stalest-first by (last drawn round, total draws, name),
-    # recomputed from CORRECTNESS_r01..r12.json: the two never-drawn
-    # names (the r12 24-bit FLAC stretch and this round's parallel
-    # lifetime router), the thirty-six r08/draws=1 names, then the
+    # recomputed from CORRECTNESS_r01..r12.json: the never-drawn
+    # parallel lifetime router, the r08/draws=1 names, then the
     # r09/draws=1 cohort (alphabetical) up to the window budget; every
     # entry is hash-oracled (the all-oracled-window rule from r10
     # holds, pinned by
     # tests/test_round10_fixes.py::test_driver_head_is_all_oracled).
-    "multimodal_flac24_roundtrip",
     "stream_route_lifetime",
     "customer_rfm",
     "documents_weighted_sample",
@@ -80,8 +78,6 @@ _DRIVER_HEAD = [
     "layout_autobroadcast_canary",
     "layout_rebalance_impact",
     "lineitem_benford",
-    "multimodal_audio_decode",
-    "multimodal_video_decode",
     "nation_trade_matrix",
     "neardup_bfs_hops",
     "neardup_kcore",
@@ -102,13 +98,13 @@ _DRIVER_HEAD = [
     "lineitem_bloom_prefilter",
     "orders_pit_fx_enrich",
     "part_supplier_degree",
+    "stream_abc_incremental",
+    "stream_rfm_incremental",
+    "user_value_pareto",
     # --- window boundary (~50) ---
     # (overflow) next-stalest oracled cohort — the r09/draws=1
     # remainder then the r09/draws=2 head — fronted next round per
     # the rotation policy.
-    "stream_abc_incremental",
-    "stream_rfm_incremental",
-    "user_value_pareto",
     "vocab_rank_census",
     "bucket_metric_unpivot",
     "copurchase_lift",

@@ -66,10 +66,8 @@ HEADLINE = [
     "bucket_value_kll",
     # round-5 additions: steady-state incremental-dedup twin (the
     # operator's actual per-batch contract — run 1 builds the sig
-    # store, run 2 probes it, min-of-two reports the probe) and the
-    # real-image-decode pipeline.
+    # store, run 2 probes it, min-of-two reports the probe).
     "dedup_incremental_steady",
-    "multimodal_image_decode",
     "heavy_hitter_users",
     "decontamination_bloom",
     "changelog_compaction",
@@ -98,12 +96,7 @@ HEADLINE = [
     "corpus_merkle_buckets",
     # round 8: percentile bridge family (histogram-lattice exact order
     # stats + the KLL bridge) and the unhinted-layout-join broadcast
-    # canary. multimodal_jpeg_roundtrip is deliberately NOT a bench
-    # headline: ~16 s at sf0.1 of which >99% is the pure-Python
-    # entropy coder — it would measure the codec, not an engine plan.
-    # Its performance evidence is the 100x scale probe
-    # (docs/artifacts/scale_probe_r08_jpeg.json) and its correctness
-    # the per-round driver draw + SELF_AUDITS envelope.
+    # canary.
     "bucket_percentile_exact",
     "bucket_percentile_bridge",
     "layout_autobroadcast_canary",
@@ -144,10 +137,6 @@ HEADLINE = [
     "rolling_active_users",
     "rolling_active_users_hll",
     "events_ab_test",
-    # round 8, seventh batch: real RIFF/WAVE PCM decode + integer
-    # signal features in Arrow-batched mapInPandas.
-    "multimodal_audio_decode",
-    "multimodal_video_decode",
     # round 8, eighth batch: RFM quintile census (histogram fences),
     # dedup-aware corpus sizing (rides the closure), ship-SLA watch.
     "customer_rfm",
@@ -178,10 +167,7 @@ HEADLINE = [
     "user_decayed_value",
     # round 9, first batch: Pareto coverage + Lorenz deciles (both on
     # the distributed global ordered scan), PIT FX enrichment
-    # (broadcast effective-dated range join). multimodal_mjpg_roundtrip
-    # is deliberately NOT a headline for the same reason as
-    # multimodal_jpeg_roundtrip (it measures the pure-Python entropy
-    # coder, not an engine plan; evidence = 100x probe + SELF_AUDITS).
+    # (broadcast effective-dated range join).
     "user_value_pareto",
     "customer_lorenz_deciles",
     "orders_pit_fx_enrich",

@@ -12,15 +12,14 @@ deltas). Both sides are exact integer state machines, so encode and
 decode are bit-reproducible across runs and partitions; the codec is
 LOSSY (quantized differences), so the round-trip contract is the JPEG
 family's: exact container invariants + a fixture-calibrated error
-envelope, hash-oracled as flags.
+envelope.
 
 Container: canonical RIFF/WAVE with format tag 0x0011, the required
 ``cbSize=2`` fmt extension carrying samples-per-block, and the
 ``fact`` chunk carrying the true sample count (mandatory for
 compressed WAVE — it is what lets the decoder trim block padding).
 Payload size is a CLOSED-FORM function of the sample count
-(header + n_blocks * block_align), which gives the DuckDB oracle real
-arithmetic content beyond the flag columns.
+(header + n_blocks * block_align).
 """
 
 from __future__ import annotations
@@ -101,8 +100,7 @@ def _encode_sample(sample: int, predictor: int, index: int) -> int:
 
 def adpcm_payload_bytes(n_samples: int) -> int:
     """Exact WAV payload size for a mono int16 vector of ``n_samples``
-    — closed-form, which is what lets the round-trip query's oracle
-    recompute it: RIFF(12) + fmt(8+20) + fact(8+4) + data hdr(8) +
+    — closed-form: RIFF(12) + fmt(8+20) + fact(8+4) + data hdr(8) +
     ceil(n/SAMPLES_PER_BLOCK) * BLOCK_ALIGN."""
     n_blocks = -(-n_samples // SAMPLES_PER_BLOCK)
     return 12 + 28 + 12 + 8 + n_blocks * BLOCK_ALIGN
@@ -164,7 +162,7 @@ def encode_wav_adpcm(samples: np.ndarray, *, sample_rate: int = 8000) -> bytes:
 def decode_wav_adpcm(payload: bytes) -> tuple[int, np.ndarray]:
     """Decode an IMA-ADPCM WAVE payload to ``(rate, int16 samples)``.
     Chunk-walking parser (LIST/cue chunks and odd-length padding
-    handled like ``decode_wav``); format tags other than 0x0011 raise
+    handled); format tags other than 0x0011 raise
     through the honest seam."""
     if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE payload")
@@ -193,8 +191,7 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, np.ndarray]:
     if audio_format != 0x0011:
         raise NotImplementedError(
             f"WAVE format {audio_format:#x} is not IMA ADPCM "
-            "(use decode_wav for PCM; other compressed formats are the "
-            "documented codec seam)"
+            "(other formats are the documented codec seam)"
         )
     if n_channels != 1 or bits != 4:
         raise NotImplementedError(

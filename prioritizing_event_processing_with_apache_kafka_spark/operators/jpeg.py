@@ -1,9 +1,7 @@
 """Baseline sequential JPEG codec — pure numpy/stdlib, no codec
 library.
 
-Closes the round-7 verdict's documented multimodal seam
-(``multimodal.py``: PPM/BMP/PNG decoded for real, JPEG stubbed): both
-directions of baseline JFIF are implemented from the public JPEG
+Both directions of baseline JFIF are implemented from the public JPEG
 specification (ITU-T T.81):
 
 - ``encode_jpeg``: 4:4:4 (no chroma subsampling), 8-bit, interleaved
@@ -22,7 +20,7 @@ specification (ITU-T T.81):
   refinement scan per component with correction bits). Carries the
   identical quantized coefficients as ``encode_jpeg`` at the same
   quality, so the progressive decode is bit-identical to the baseline
-  round trip — the audit the round-trip query enforces.
+  round trip.
 - ``decode_jpeg``: parses SOI/APP0/DQT/SOF0|SOF2/DHT/SOS, canonical
   Huffman decode with 0xFF00 unstuffing, dequantize, de-zigzag,
   orthonormal 8×8 IDCT, level shift, YCbCr→RGB (JFIF matrix), clamp.
@@ -44,15 +42,13 @@ specification (ITU-T T.81):
 Determinism: every step is integer or IEEE-double arithmetic with a
 fixed operation order (einsum against a precomputed DCT matrix,
 ``np.round`` half-to-even quantization), so encode and decode are
-bit-reproducible across runs and partitions — which is what lets the
-round-trip query self-audit with hard equality on dimensions and a
+bit-reproducible across runs and partitions — which is what lets a
+round trip be checked with hard equality on dimensions and a
 fixed error envelope on pixels (JPEG is lossy BY DESIGN; byte-exact
 pixel recovery is not a JPEG property, so the audit bounds
-``max_abs_err`` instead — see ``q_multimodal_jpeg_roundtrip``).
+``max_abs_err`` instead).
 
-Scale shape: the codec runs inside Arrow-batched ``mapInPandas``
-(``multimodal.py``), so decode is partition-parallel with zero driver
-involvement; the DCT/IDCT is vectorized over all blocks of an image
+Scale shape: the DCT/IDCT is vectorized over all blocks of an image
 at once (one einsum per plane), and only the entropy coding is
 per-symbol Python — the honest cost of a bit-serial format.
 """

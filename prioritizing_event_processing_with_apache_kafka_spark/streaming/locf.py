@@ -85,7 +85,14 @@ def locf_enrich(
     row-for-row the old plan's. Extracted from :func:`locf_apply_batch`
     so the per-batch plan shape can be fingerprinted
     (tests/plan_fingerprints.json) without driving the effectful
-    protocol."""
+    protocol.
+
+    NULL keys form ONE group: the window's ``partitionBy`` and the
+    state's ``groupBy`` both put every NULL ``key_col`` row together,
+    so NULL-key rows fill from each other and are seeded from the
+    NULL-key state row like any other key. That is the batch LOCF
+    window's behaviour (SQL ``PARTITION BY`` groups NULLs too), so the
+    determinism contract holds for NULL keys."""
     # Observation typed against THIS batch: a hardcoded double would
     # fork the output schema between batch 0 (no state) and later
     # batches for non-double observations.

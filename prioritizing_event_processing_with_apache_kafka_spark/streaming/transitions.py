@@ -84,7 +84,15 @@ def transitions_count_plan(
     (key, order, state) first keeps payload columns out of the
     exchange. Extracted from :func:`transitions_apply_batch` so the
     per-batch plan shape can be fingerprinted without driving the
-    effectful protocol."""
+    effectful protocol.
+
+    NULL states never start an edge. A row whose predecessor state is
+    NULL (mid-batch, or a key's first row after a batch that ended on
+    NULL, whose stored seed is then NULL) has a NULL lag and emits no
+    transition; the edge INTO the NULL is counted with ``next_state``
+    NULL. That is exactly the batch ``transition_matrix`` lag, so the
+    streamed counts stay bit-identical with NULL states present. NULL
+    keys form one sequence, as in the batch window."""
     state_type = batch.select(F.col(state_col)).schema[0].dataType
     order_types = {
         f.name: f.dataType

@@ -91,6 +91,35 @@ class TestStreamingTransitions:
         _apply(spark, [(3, 1, "a", _t(2))], root, 1)
         assert _result(spark, root) == once
 
+    def test_null_states_match_batch_operator(self, spark):
+        from prioritizing_event_processing_with_apache_kafka_spark.operators.sequence import (
+            transition_matrix,
+        )
+
+        # user 1: a, NULL, b | c   -> a>NULL counted, NULL>b not, b>c
+        # user 2: a, NULL | b      -> batch 0 ends on NULL: no NULL>b
+        b0 = [
+            (1, 1, "a", _t(0)), (2, 1, None, _t(1)), (3, 1, "b", _t(2)),
+            (4, 2, "a", _t(3)), (5, 2, None, _t(4)),
+        ]
+        b1 = [(6, 1, "c", _t(5)), (7, 2, "b", _t(6))]
+        root = tempfile.mkdtemp(prefix="peps-trans-null-")
+        _apply(spark, b0, root, 0)
+        _apply(spark, b1, root, 1)
+        want = {
+            (r.prev_state, r.next_state): (r.transitions, r.prob_ppm)
+            for r in transition_matrix(
+                spark.createDataFrame(b0 + b1, SCHEMA),
+                key_col="user_id",
+                state_col="event_type",
+                order_cols=("ts", "event_id"),
+            ).collect()
+        }
+        assert _result(spark, root) == want == {
+            ("a", None): (2, 1_000_000),
+            ("b", "c"): (1, 1_000_000),
+        }
+
     def test_property_matches_batch_operator_on_any_split(self, spark):
         from hypothesis import HealthCheck, given, settings
         from hypothesis import strategies as st

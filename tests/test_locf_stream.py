@@ -145,3 +145,37 @@ class TestLocf:
             for r in locf_result(spark, os.path.join(root, "out")).collect()
         }
         assert got == {1: 20.0, 2: 20.0, 3: 20.0}
+
+    def test_null_keys_form_one_seeded_group(self, spark):
+        import duckdb
+
+        from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
+            SQL_STREAM_LOCF_FILL,
+        )
+
+        b0 = [(1, None, _t(0), 20.0), (2, "a", _t(1), 30.0), (3, None, _t(2), 1.0)]
+        b1 = [(4, None, _t(3), 2.0), (5, "a", _t(4), 3.0)]
+        root = tempfile.mkdtemp(prefix="peps-locf-null-")
+        _apply(spark, _rows(spark, b0), root, 0)
+        _apply(spark, _rows(spark, b1), root, 1)
+        got = {
+            r.event_id: (r.filled_value, r.was_filled)
+            for r in locf_result(spark, os.path.join(root, "out")).collect()
+        }
+        con = duckdb.connect()
+        con.register("events", _rows(spark, b0 + b1).toPandas())
+        want = {
+            r[0]: (r[1], r[2])
+            for r in con.execute(
+                f"SELECT event_id, filled_value, was_filled FROM ({SQL_STREAM_LOCF_FILL})"
+            ).fetchall()
+        }
+        # event 4 is filled across the batch boundary from the NULL-key
+        # state row written by batch 0
+        assert got == want == {
+            1: (20.0, False),
+            2: (30.0, False),
+            3: (20.0, True),
+            4: (20.0, True),
+            5: (30.0, True),
+        }

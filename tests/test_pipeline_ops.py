@@ -1,9 +1,9 @@
-"""Pipeline-operator tests: dedup, similarity, text, multimodal.
+"""Pipeline-operator tests: dedup, similarity, text.
 
 Small in-memory corpora with known structure; the sf-fixture parity is
 covered by the oracle harness (tools/check_oracle.py), so these tests
-pin operator *semantics* — candidate generation, verification,
-determinism and the stubbed multimodal seam.
+pin operator *semantics*: candidate generation, verification and
+determinism.
 """
 
 from __future__ import annotations
@@ -12,9 +12,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators import dedup as D
-from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-    multimodal as M,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators import (
     similarity as S,
 )
@@ -158,288 +155,6 @@ class TestText:
         fp = {r["doc_id"]: r["fingerprint"] for r in TX.fingerprint(df).collect()}
         assert fp[0] == fp[2]
         assert fp[0] != fp[1]
-
-
-class TestMultimodal:
-    def test_decode_stub_raises(self):
-        with pytest.raises(NotImplementedError, match="image/audio"):
-            M.decode_stub(b"\x00", "image/png")
-
-    def test_blob_features(self, spark):
-        docs = spark.createDataFrame(
-            [(7, "hello world", "en", "src0", 11)],
-            "doc_id long, text string, lang string, source string, n_chars long",
-        )
-        blobs = M.as_blob_table(docs)
-        meta = blobs.first()["meta"]
-        assert meta["format"] == "text/plain" and meta["declared_size"] == 11
-        feat = M.extract_features(blobs).first()
-        assert feat["n_bytes"] == 11
-        assert feat["first_byte"] == ord("h") and feat["last_byte"] == ord("d")
-        assert feat["checksum"] == (ord("h") * 31 + 11) % 997
-
-
-class TestImageCodecs:
-    """Golden-pixel round trips for the REAL decoders (pure numpy PPM
-    P6 + 24-bit BMP + stdlib-zlib PNG). Widths chosen to exercise
-    every BMP row-padding case (w*3 % 4 in {0,1,2,3}); the PNG suite
-    covers all five scanline filters, CRC verification, and the
-    unsupported-variant error path."""
-
-    def _rand_img(self, h, w, seed=0):
-        import numpy as np
-
-        return np.random.default_rng(seed).integers(
-            0, 256, size=(h, w, 3), dtype=np.uint8
-        )
-
-    def test_ppm_round_trip(self):
-        import numpy as np
-
-        arr = self._rand_img(5, 7)
-        out = M.decode_ppm(M.encode_ppm(arr))
-        assert out.shape == (5, 7, 3)
-        assert np.array_equal(out, arr)
-
-    def test_ppm_header_comments(self):
-        import numpy as np
-
-        arr = self._rand_img(2, 3, seed=1)
-        payload = b"P6\n# a comment\n3 2\n# another\n255\n" + arr.tobytes()
-        assert np.array_equal(M.decode_ppm(payload), arr)
-
-    def test_ppm_crlf_header_rejected_not_shifted(self):
-        import pytest as _pytest
-
-        arr = self._rand_img(3, 4, seed=2)
-        # CRLF after maxval: must error loudly, never decode pixels
-        # shifted by one byte
-        payload = b"P6\n4 3\n255\r\n" + arr.tobytes()
-        with _pytest.raises(ValueError, match="whitespace|length"):
-            M.decode_ppm(payload)
-
-    def test_bmp_round_trip_all_paddings(self):
-        import numpy as np
-
-        for w in (4, 5, 6, 7):  # row padding 0, 1, 2, 3 bytes
-            arr = self._rand_img(3, w, seed=w)
-            payload = M.encode_bmp(arr)
-            out = M.decode_bmp(payload)
-            assert np.array_equal(out, arr), f"BMP round trip failed at w={w}"
-
-    def test_bmp_top_down_rows(self):
-        import numpy as np
-        import struct as st
-
-        arr = self._rand_img(4, 5, seed=9)
-        payload = bytearray(M.encode_bmp(arr))
-        # Flip to top-down storage: negate height, reverse row blocks.
-        st.pack_into("<i", payload, 22, -4)
-        stride = (5 * 3 + 3) // 4 * 4
-        body = payload[54:]
-        rows = [bytes(body[i * stride : (i + 1) * stride]) for i in range(4)]
-        payload[54:] = b"".join(reversed(rows))
-        assert np.array_equal(M.decode_bmp(bytes(payload)), arr)
-
-    def test_decode_image_dispatch_and_stub_seam(self):
-        import numpy as np
-
-        arr = self._rand_img(3, 4, seed=2)
-        assert np.array_equal(M.decode_image(M.encode_ppm(arr)), arr)
-        assert np.array_equal(M.decode_image(M.encode_bmp(arr)), arr)
-        assert np.array_equal(M.decode_image(M.encode_png(arr)), arr)
-        # JPEG now decodes for real (operators/jpeg.py) — lossy, so
-        # dims-exact + bounded error rather than array equality
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.jpeg import (
-            encode_jpeg,
-        )
-
-        out = M.decode_image(encode_jpeg(arr, quality=95))
-        assert out.shape == arr.shape
-        # a malformed JPEG-magic payload is a corrupt file, not a seam
-        with pytest.raises(ValueError):
-            M.decode_image(b"\xff\xd8\xff\xe0....")
-        # audio/video remain the honest NotImplementedError seam
-        with pytest.raises(NotImplementedError):
-            M.decode_image(b"RIFF....WAVE")
-
-    def test_png_round_trip(self):
-        import numpy as np
-
-        for h, w in [(1, 1), (3, 4), (8, 6), (5, 17)]:
-            arr = self._rand_img(h, w, seed=h * 31 + w)
-            out = M.decode_png(M.encode_png(arr))
-            assert np.array_equal(out, arr), (h, w)
-
-    def test_png_all_scanline_filters(self):
-        """Golden decode of a PNG whose five rows each use a different
-        scanline filter (None/Sub/Up/Average/Paeth) — hand-filtered
-        here, so a sign error or neighbor-index slip in any unfilter
-        branch flips pixels and fails."""
-        import struct as st
-        import zlib
-
-        import numpy as np
-
-        def paeth(a, b, c):
-            p = a + b - c
-            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-            return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-
-        h, w = 5, 7
-        arr = self._rand_img(h, w, seed=42)
-        rows = []
-        prev = np.zeros(w * 3, dtype=np.int64)
-        for y in range(h):
-            ftype = y % 5
-            rec = arr[y].reshape(-1).astype(np.int64)
-            filt = np.zeros(w * 3, dtype=np.int64)
-            for x in range(w * 3):
-                a = rec[x - 3] if x >= 3 else 0
-                b = prev[x]
-                c = prev[x - 3] if x >= 3 else 0
-                pred = [0, a, b, (a + b) >> 1, paeth(a, b, c)][ftype]
-                filt[x] = (rec[x] - pred) & 255
-            rows.append(bytes([ftype]) + bytes(filt.astype(np.uint8)))
-            prev = rec
-        ihdr = st.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        png = (
-            M._PNG_SIG
-            + M._png_chunk(b"IHDR", ihdr)
-            + M._png_chunk(b"IDAT", zlib.compress(b"".join(rows)))
-            + M._png_chunk(b"IEND", b"")
-        )
-        assert np.array_equal(M.decode_png(png), arr)
-
-    def test_png_crc_mismatch_raises(self):
-        bad = bytearray(M.encode_png(self._rand_img(2, 2, seed=3)))
-        bad[-5] ^= 0xFF  # corrupt IEND CRC
-        with pytest.raises(ValueError, match="CRC"):
-            M.decode_png(bytes(bad))
-
-    def test_png_truncated_chunk_raises_valueerror(self):
-        # the corrupt-format seam is ValueError, never struct.error /
-        # zlib.error: truncate at EVERY offset and demand a clean
-        # raise (offsets that leave < 8 trailing bytes escape the
-        # in-loop guard and must be caught by the no-IEND check;
-        # corrupt-but-parseable IDAT must be caught at decompress)
-        full = M.encode_png(self._rand_img(4, 4, seed=7))
-        for cut in range(len(M._PNG_SIG) + 1, len(full) - 1, 3):
-            with pytest.raises(ValueError):
-                M.decode_png(full[:cut])
-
-    def test_png_unsupported_color_type_raises(self):
-        import struct as st
-
-        # grayscale (color type 0) header: explicit unsupported error,
-        # not a garbage decode
-        ihdr = st.pack(">IIBBBBB", 2, 2, 8, 0, 0, 0, 0)
-        png = (
-            M._PNG_SIG
-            + M._png_chunk(b"IHDR", ihdr)
-            + M._png_chunk(b"IEND", b"")
-        )
-        with pytest.raises(NotImplementedError, match="truecolor"):
-            M.decode_png(png)
-
-    def test_resize_images_nearest_neighbor_round_trip(self, spark):
-        # decode -> NN resize -> re-encode -> decode: the emitted
-        # payload must decode to exactly the floor-convention sample
-        # of the source pixels, in both formats.
-        import numpy as np
-
-        docs = spark.createDataFrame(
-            [(i, "t", "en", "s", 1) for i in range(4)],
-            "doc_id long, text string, lang string, source string, n_chars long",
-        )
-        out = {
-            r["doc_id"]: r
-            for r in M.resize_images(
-                M.synth_image_blobs(docs), out_w=3, out_h=2
-            ).collect()
-        }
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            _synth_pixels,
-        )
-
-        for doc_id in range(4):
-            src = _synth_pixels(doc_id)
-            h, w, _ = src.shape
-            rows = (np.arange(2) * h) // 2
-            cols = (np.arange(3) * w) // 3
-            expected = src[rows][:, cols]
-            decoded = M.decode_image(bytes(out[doc_id]["payload"]))
-            assert np.array_equal(decoded, expected), f"doc {doc_id}"
-            sums = expected.reshape(-1, 3).sum(axis=0)
-            assert out[doc_id]["r_sum"] == int(sums[0])
-            assert out[doc_id]["g_sum"] == int(sums[1])
-            assert out[doc_id]["b_sum"] == int(sums[2])
-
-    def test_synth_decode_features_spark(self, spark):
-        # End-to-end through mapInPandas: synthesize → decode → sums,
-        # verified against the analytic pixel pattern for both codecs.
-        docs = spark.createDataFrame(
-            [(i, "t", "en", "s", 1) for i in range(6)],
-            "doc_id long, text string, lang string, source string, n_chars long",
-        )
-        rows = {
-            r["doc_id"]: r
-            for r in M.decode_image_features(M.synth_image_blobs(docs)).collect()
-        }
-        import numpy as np
-
-        for doc_id in range(6):
-            w, h = 4 + doc_id % 5, 3 + doc_id % 4
-            i = np.arange(w * h, dtype=np.int64)
-            r_sum = int(((doc_id + i) % 256).sum())
-            row = rows[doc_id]
-            assert (row["width"], row["height"]) == (w, h)
-            if doc_id % 3 == 0:
-                expected_fmt = "image/png"
-            elif doc_id % 2 == 0:
-                expected_fmt = "image/x-portable-pixmap"
-            else:
-                expected_fmt = "image/bmp"
-            assert row["format"] == expected_fmt
-            assert row["r_sum"] == r_sum
-            assert row["g_sum"] == 255 * w * h - r_sum
-            assert row["b_sum"] == (doc_id % 256) * w * h
-
-
-class TestMultimodalResizeAndFrames:
-    def test_resize_keeps_every_step_byte(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-            multimodal as M,
-        )
-
-        df = spark.createDataFrame(
-            [(0, "abcdefghij", "x", "s", 10)],
-            "doc_id long, text string, lang string, source string, n_chars int",
-        )
-        row = M.resize_payloads(M.as_blob_table(df), step=4).first()
-        assert row["orig_bytes"] == 10
-        assert row["resized_bytes"] == 3
-        assert bytes(row["resized_payload"]) == b"aei"
-
-    def test_frame_sampling_shape_and_tail(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-            multimodal as M,
-        )
-
-        # 70 bytes, 16-byte frames, every 4th → starts at 0 and 64;
-        # the second frame is the truncated 6-byte tail.
-        text = "a" * 64 + "zz" + "y" * 4
-        df = spark.createDataFrame(
-            [(1, text, "x", "s", len(text))],
-            "doc_id long, text string, lang string, source string, n_chars int",
-        )
-        rows = sorted(
-            M.sample_frames(M.as_blob_table(df), frame_size=16, every=4).collect(),
-            key=lambda r: r["frame_idx"],
-        )
-        assert [(r["frame_idx"], r["frame_bytes"]) for r in rows] == [(0, 16), (1, 6)]
-        assert rows[0]["frame_first_byte"] == ord("a")
-        assert rows[1]["frame_first_byte"] == ord("z")
 
 
 class TestKmeans:

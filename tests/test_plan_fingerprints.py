@@ -86,9 +86,5 @@ def test_fingerprints_cover_zero_shuffle_pipelines(queries):
     for name in (
         "bucket_extract",
         "doc_fingerprint",
-        "multimodal_image_decode",
-        "multimodal_image_resize",
-        "multimodal_jpeg_roundtrip",
-        "multimodal_mjpg_roundtrip",
     ):
         assert FINGERPRINTS[name]["shuffle_exchanges"] == 0

@@ -2,10 +2,8 @@
 top-k key dropped by decrements must never go silently missing; the
 readout now certifies against the decrement bound and falls back to a
 full exact recount), the JPEG AC-refinement band-overrun guard (ADVICE
-r10 — refuse, don't silently drop a pending coefficient), the FLAC
-escape-cost model (ADVICE r10 — the escape partition pays a 5-bit
-width field the Rice partition doesn't), and the registry-derived
-pinned-fingerprint count (VERDICT r10 "what's wrong" #2)."""
+r10 — refuse, don't silently drop a pending coefficient), and the
+registry-derived pinned-fingerprint count (VERDICT r10 "what's wrong" #2)."""
 
 from __future__ import annotations
 
@@ -86,30 +84,6 @@ class TestJpegRefinementGuard:
             al=0,
         )
         assert coefs[1][0, 1] == 1
-
-
-class TestFlacEscapeCost:
-    def test_cost_model_includes_width_field(self):
-        # The in-between regime: Rice total within 5 bits above the raw
-        # total used to flip to escape even though escape's 5-bit width
-        # field made it the WIDER encoding. Whatever the chooser picks,
-        # the round trip must stay exact — and for a deliberately
-        # high-entropy signal (escape regime) and a smooth signal (Rice
-        # regime) both paths are exercised.
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.flac import (
-            decode_flac,
-            encode_flac,
-        )
-
-        rng = np.random.default_rng(11)
-        noisy = rng.integers(-32768, 32767, 4096, dtype=np.int16)
-        smooth = (
-            (np.sin(np.arange(4096) / 50.0) * 12000).round().astype(np.int16)
-        )
-        for sig in (noisy, smooth):
-            rate, out = decode_flac(encode_flac(sig, sample_rate=8000))
-            assert rate == 8000
-            np.testing.assert_array_equal(out, sig)
 
 
 class TestMgExactTopkCertificate:

@@ -3,9 +3,7 @@
 pre-planted and would execute in the driver and every worker), the
 scoped google.* sys.modules eviction (ADVICE r11), the certified MG
 readout returned as a local relation so the candidate recount runs
-once (ADVICE r11), the FLAC stereo plan reuse (ADVICE r11 — the four
-channel-assignment candidates share four distinct (signal, bps) plans
-and the winner's plans flow into the serializer un-replanned), the
+once (ADVICE r11), the
 _fact_partitions non-local-path fallback (ADVICE r11), and the
 SCALE.md fingerprint-count prose now derivation-tested like
 COVERAGE.md's (VERDICT r11 item 6)."""
@@ -16,7 +14,6 @@ import json
 import os
 import re
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -133,48 +130,6 @@ class TestMgCertifiedReadoutRunsOnce:
             (7, 300),
             (8, 250),
         ]
-
-
-class TestFlacStereoPlanReuse:
-    def test_four_plans_per_stereo_frame(self, monkeypatch):
-        # ADVICE r11: costing all four channel assignments used to plan
-        # 8 subframes and then re-plan the winner's 2 — 10 runs of
-        # autocorrelation + Levinson-Durbin + Rice scans per frame.
-        # The distinct (signal, eff_bps) pairs number exactly 4
-        # (left@16, right@16, mid@16, side@17): assert the planner runs
-        # exactly 4 times per stereo frame and the serializer reuses
-        # the winner's plans.
-        from prioritizing_event_processing_with_apache_kafka_spark.operators import flac
-
-        calls = {"n": 0}
-        real = flac._plan_subframe
-
-        def counting(x, eff_bps):
-            calls["n"] += 1
-            return real(x, eff_bps)
-
-        monkeypatch.setattr(flac, "_plan_subframe", counting)
-        rng = np.random.default_rng(12)
-        left = rng.integers(-2000, 2000, 1024, dtype=np.int32)
-        right = left + rng.integers(-50, 50, 1024, dtype=np.int32)
-        flac._encode_stereo_frame(left, right, 0)
-        assert calls["n"] == 4, f"expected 4 subframe plans, ran {calls['n']}"
-
-    def test_stereo_roundtrip_still_lossless(self):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.flac import (
-            decode_flac,
-            encode_flac,
-        )
-
-        rng = np.random.default_rng(13)
-        left = (np.sin(np.arange(4096) / 30.0) * 9000).round().astype(np.int16)
-        right = (left.astype(np.int32) + rng.integers(-100, 100, 4096)).clip(
-            -32768, 32767
-        ).astype(np.int16)
-        sig = np.stack([left, right], axis=1)
-        rate, out = decode_flac(encode_flac(sig, sample_rate=16000))
-        assert rate == 16000
-        np.testing.assert_array_equal(out, sig)
 
 
 class TestBenchReferenceMedian:

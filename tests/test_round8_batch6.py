@@ -138,187 +138,3 @@ class TestTwoProportionAudit:
             self._armed(spark, rows), arm_col="arm", success_col="converted"
         ).first()
         assert r["arm_a"] is None and r["z_score"] is None
-
-
-class TestWavCodec:
-    """Round-trip + contract tests for the RIFF/WAVE PCM codec (the
-    audio half of the multimodal seam, closed in round 8)."""
-
-    def _samples(self, n=50, seed=3):
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            _synth_samples,
-        )
-
-        return _synth_samples(seed)[:n]
-
-    def test_roundtrip(self):
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_wav,
-            encode_wav,
-        )
-
-        s = self._samples()
-        rate, out = decode_wav(encode_wav(s, sample_rate=16000))
-        assert rate == 16000
-        assert np.array_equal(s, out)
-
-    def test_chunk_walking_skips_list_chunk(self):
-        # A LIST chunk (odd length -> padded) between fmt and data must
-        # be walked over, not misread as sample data.
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_wav,
-            encode_wav,
-        )
-
-        s = self._samples()
-        raw = encode_wav(s)
-        fmt_end = 12 + 8 + 16
-        lst = b"LIST" + (3).to_bytes(4, "little") + b"abc" + b"\x00"
-        patched = raw[:fmt_end] + lst + raw[fmt_end:]
-        patched = (
-            b"RIFF" + (len(patched) - 8).to_bytes(4, "little") + patched[8:]
-        )
-        rate, out = decode_wav(patched)
-        assert np.array_equal(s, out)
-
-    def test_compressed_format_is_the_documented_seam(self):
-        import struct
-
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_wav,
-            encode_wav,
-        )
-
-        raw = bytearray(encode_wav(self._samples()))
-        # flip audio_format (offset: RIFF(12) + 'fmt '+len(8) = 20)
-        struct.pack_into("<H", raw, 20, 85)  # MP3
-        with _pytest.raises(NotImplementedError, match="PCM only"):
-            decode_wav(bytes(raw))
-
-    def test_corrupt_payload_raises_value_error(self):
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_wav,
-        )
-
-        with _pytest.raises(ValueError):
-            decode_wav(b"not a wave file at all....")
-
-    def test_features_hand_case(self, spark):
-        # doc_id 0: s[i] = (17*i) % 65536 - 32768 for i in 0..63 — all
-        # negative (17*63 = 1071 < 32768), so zero crossings = 0 and
-        # sum_abs = sum(32768 - 17*i).
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_audio_features,
-            synth_audio_blobs,
-        )
-
-        docs = spark.createDataFrame([(0,)], "doc_id long")
-        r = decode_audio_features(synth_audio_blobs(docs)).first()
-        assert r["n_samples"] == 64
-        assert r["sum_abs"] == sum(32768 - 17 * i for i in range(64))
-        assert r["max_abs"] == 32768
-        assert r["zero_crossings"] == 0
-
-
-class TestAviCodec:
-    """Round-trip + contract tests for the RIFF/AVI video codec (the
-    video half of the multimodal seam, closed in round 8)."""
-
-    def _frames(self, doc_id=5):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            _synth_frames,
-        )
-
-        return _synth_frames(doc_id)
-
-    def test_dib_roundtrip_exact(self):
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_avi,
-            encode_avi,
-        )
-
-        fr = self._frames()
-        out = decode_avi(encode_avi(fr))
-        assert len(out) == len(fr)
-        assert all(np.array_equal(a, b) for a, b in zip(fr, out))
-
-    def test_mjpg_roundtrip_within_jpeg_envelope(self):
-        # Same container, lossy payload: frames decode through the
-        # baseline JPEG codec; mean abs error bounded like
-        # multimodal_jpeg_roundtrip's envelope.
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_avi,
-            encode_avi,
-        )
-
-        fr = self._frames()
-        out = decode_avi(encode_avi(fr, codec="MJPG"))
-        assert len(out) == len(fr)
-        for a, b in zip(fr, out):
-            assert float(np.abs(a.astype(int) - b.astype(int)).mean()) < 12.0
-
-    def test_padded_rows_and_odd_chunks_walk(self):
-        # width 5 -> 15-byte rows padded to 16: the raster stride path;
-        # 3x3 -> 9-byte rows padded to 12.
-        import numpy as np
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_avi,
-            encode_avi,
-        )
-
-        fr = [np.arange(45, dtype=np.uint8).reshape(3, 5, 3)]
-        out = decode_avi(encode_avi(fr))
-        assert np.array_equal(fr[0], out[0])
-
-    def test_unknown_compression_is_the_seam(self):
-        import struct
-
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_avi,
-            encode_avi,
-        )
-
-        raw = bytearray(encode_avi(self._frames()))
-        i = raw.find(b"strf")
-        # biCompression is at strf body offset 16; body starts i+8
-        struct.pack_into("<I", raw, i + 8 + 16, 0x30355856)  # 'XVID'-ish
-        # also flip bpp to make it non-24 so the DIB branch rejects
-        with _pytest.raises(NotImplementedError, match="DIB / MJPG"):
-            decode_avi(bytes(raw))
-
-    def test_corrupt_container_raises_value_error(self):
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            decode_avi,
-        )
-
-        with _pytest.raises(ValueError):
-            decode_avi(b"RIFF\x04\x00\x00\x00WAVE")
-
-    def test_validation(self):
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            encode_avi,
-        )
-
-        with _pytest.raises(ValueError, match="at least one frame"):
-            encode_avi([])

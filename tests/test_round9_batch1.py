@@ -1,5 +1,5 @@
 """Round-9 batch-1 semantics: Pareto coverage, Lorenz deciles, PIT FX
-enrichment, MJPG round trip (fixture parity covered by the oracle
+enrichment (fixture parity covered by the oracle
 harness; these tests replay the math independently in Python)."""
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import numpy as np
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
     q_customer_lorenz_deciles,
-    q_multimodal_mjpg_roundtrip,
     q_orders_pit_fx_enrich,
     q_user_value_pareto,
 )
@@ -125,41 +124,6 @@ class TestOrdersPitFxEnrich:
         # at least one market OR matches everything — either way the
         # left-join never drops rows
         assert sum(r["n_orders"] for r in rows.values()) == len(orders)
-
-
-class TestMjpgRoundtrip:
-    def test_invariant_flags_and_frames_match(self, spark):
-        # r13: the query graduated from SELF_AUDITS to a hash oracle —
-        # it now projects invariant flags. The flags must all be 1 and
-        # the dims/frame-count must match the synth fixture.
-        df = q_multimodal_mjpg_roundtrip(spark, SF).limit(200)
-        pdf = df.toPandas()
-        assert (pdf["dims_match"] == 1).all()
-        assert (pdf["redecode_match"] == 1).all()
-        assert (pdf["envelope_ok"] == 1).all()
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            _synth_frames,
-        )
-
-        for _, row in pdf.head(20).iterrows():
-            frames = _synth_frames(int(row["doc_id"]))
-            assert row["n_frames"] == len(frames)
-            assert (row["height"], row["width"]) == frames[0].shape[:2]
-
-    def test_raw_error_magnitudes_stay_visible(self, spark):
-        # the metrics function keeps the numeric envelope testable even
-        # though the declared query projects it to a flag
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-            mjpg_roundtrip_metrics,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import (
-            load_table,
-        )
-
-        docs = load_table(spark, SF, "documents").limit(50)
-        pdf = mjpg_roundtrip_metrics(docs).toPandas()
-        assert (pdf["max_abs_err"] <= 64).all()
-        assert (pdf["mean_abs_err_ppm"] >= 0).all()
 
 
 class TestStreamingTwins:

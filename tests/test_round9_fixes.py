@@ -4,10 +4,8 @@ Covers the three ADVICE.md lows: (1) encode_jpeg must never emit
 out-of-spec Huffman size categories (AC > 10 / DC > 11) even at
 quality 100 on max-contrast input; (2) decode_jpeg's marker walk must
 accept legal 0xFF fill bytes and parameterless markers (TEM, stray
-RSTn) between segments; (3) decode_avi must dispatch '00dc' chunks on
-the strf compression fourCC and raise the documented
-NotImplementedError for non-MJPG codecs instead of a confusing
-decode_jpeg ValueError.
+RSTn) between segments, and (3) raise ValueError on fill bytes
+running to end of file.
 """
 
 from __future__ import annotations
@@ -20,10 +18,6 @@ import pytest
 from prioritizing_event_processing_with_apache_kafka_spark.operators.jpeg import (
     decode_jpeg,
     encode_jpeg,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators.multimodal import (
-    decode_avi,
-    encode_avi,
 )
 
 
@@ -121,38 +115,6 @@ class TestMarkerWalkRobustness:
         )
         got = decode_jpeg(patched)
         assert np.array_equal(got, want)
-
-
-class TestAviCodecDispatch:
-    def _frames(self) -> list[np.ndarray]:
-        y, x = np.indices((16, 16))
-        base = np.stack(
-            [(y * 9).astype(np.uint8), (x * 9).astype(np.uint8),
-             np.full((16, 16), 50, dtype=np.uint8)],
-            axis=2,
-        )
-        return [base, np.roll(base, 3, axis=1)]
-
-    def test_non_mjpg_compressed_stream_raises_seam(self):
-        payload = bytearray(encode_avi(self._frames(), codec="MJPG"))
-        idx = bytes(payload).find(b"strf")
-        assert idx > 0
-        # strf body: biSize(4) w(4) h(4) planes(2) bpp(2) compression(4)
-        comp_off = idx + 8 + 16
-        assert bytes(payload[comp_off : comp_off + 4]) == b"MJPG"
-        payload[comp_off : comp_off + 4] = b"XVID"
-        with pytest.raises(NotImplementedError, match="fourCC"):
-            decode_avi(bytes(payload))
-
-    def test_mjpg_still_decodes(self):
-        frames = self._frames()
-        out = decode_avi(encode_avi(frames, codec="MJPG"))
-        assert len(out) == len(frames)
-        for got, want in zip(out, frames):
-            assert got.shape == want.shape
-            assert np.abs(
-                got.astype(np.int64) - want.astype(np.int64)
-            ).max() <= 32
 
 
 class TestMarkerWalkTruncation:

@@ -371,17 +371,6 @@ SELF_AUDITS = {
         + _audit_abs_max("max_offdiag_corr", 0.02)(pdf)
         + _audit_min("evr_margin", -1e-6)(pdf)
     ),
-    # The baseline/progressive/4:2:0 JPEG round trips moved OUT of
-    # this audit set in r13 (VERDICT r12 item 6): their contracts —
-    # closed-form dims, bit-identical re-decode/baseline-match, the
-    # calibrated error envelope, the per-row 4:2:0 payload shrink —
-    # are exact invariants, so the declared queries now project them
-    # as flags and are HASH-ORACLED against DuckDB directly (a codec
-    # slip flips a flag and breaks the value hash). Raw magnitudes
-    # stay testable via the metrics functions in
-    # operators/multimodal.py.
-    # (multimodal_mjpg_roundtrip graduated to a hash oracle with the
-    # still-image round trips in r13 — same invariant-flag projection.)
     # SimHash's probabilistic (7,16] hamming band, priced as a bound:
     # recall vs the in-plan exact Jaccard truth >= 0.99 (fixtures
     # measure 1.0; the 10x replica 0.9953), and zero extra pairs

@@ -47,8 +47,6 @@ REPORT_QUERIES = [
     "events_variant_extract",
     # round-5 additions
     "dedup_incremental_steady",
-    "multimodal_image_decode",
-    "multimodal_image_resize",
     # round-7 additions
     "nb_lang_classifier",
     "leakage_safe_split",

@@ -37,8 +37,6 @@ GUARDED = [
     "text_token_stats",
     "doc_fingerprint",
     "events_asof_last_purchase",
-    "multimodal_image_decode",
-    "multimodal_image_resize",
     "heavy_hitter_users",
     "decontamination_bloom",
     "changelog_compaction",
@@ -167,9 +165,6 @@ GUARDED = [
     "bucket_percentile_exact",
     "bucket_percentile_bridge",
     "layout_autobroadcast_canary",
-    # round 8: the JPEG round trip must stay a map-only pipeline
-    # (0 shuffles) like the other multimodal codecs.
-    "multimodal_jpeg_roundtrip",
     # round 8 second batch: MAD must stay two histogram aggregates +
     # two histogram windows + broadcast joins (a raw-row sort is the
     # regression); the rebalance impact rides the exact routing plan
@@ -218,10 +213,6 @@ GUARDED = [
     "rolling_active_users",
     "rolling_active_users_hll",
     "events_ab_test",
-    # round 8 seventh batch: synth + decode are two chained
-    # mapInPandas stages over one scan — zero exchanges is the pin.
-    "multimodal_audio_decode",
-    "multimodal_video_decode",
     # round 8 eighth batch: RFM must stay per-customer agg + histogram
     # fences + broadcasts (a global sort is the regression); the SLA
     # watch one fact join + supplier-keyed agg + histogram subtree.
@@ -281,12 +272,10 @@ GUARDED = [
     # round 9 first batch: Pareto/Lorenz ride the distributed ordered
     # scan (an unpartitioned-window regression would change the
     # shape); the PIT enrich must keep its dimension BROADCAST onto
-    # one fact aggregate (a sort-merge range join is the regression);
-    # the MJPG round trip is map-only like the other codec pipelines.
+    # one fact aggregate (a sort-merge range join is the regression).
     "user_value_pareto",
     "customer_lorenz_deciles",
     "orders_pit_fx_enrich",
-    "multimodal_mjpg_roundtrip",
     # round 9 second batch: the Zipf census must keep the ordered-scan
     # shape over the term aggregate (bin-sized after it). The streaming
     # twins are pinned via their __core builders instead.

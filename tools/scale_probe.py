@@ -106,10 +106,6 @@ PROBED = [
     "bucket_percentile_exact",
     "bucket_percentile_bridge",
     "layout_autobroadcast_canary",
-    # round 8: JPEG encode+decode per replicated document — pure
-    # map-side Arrow batches, expected to track the replica linearly
-    # (it is real per-item compute, not an aggregation).
-    "multimodal_jpeg_roundtrip",
     # round 8 second batch: MAD (histogram-sized after the first agg —
     # expected strongly sub-linear) and the rebalance impact (tracks
     # route_events_exact + broadcast joins).
@@ -148,16 +144,6 @@ PROBED = [
     "rolling_active_users",
     "rolling_active_users_hll",
     "events_ab_test",
-    # round 8 seventh batch: WAV decode — pure map-side Arrow stages,
-    # expected ~linear in docs with no shuffle at all.
-    "multimodal_audio_decode",
-    "multimodal_video_decode",
-    # round 13 codecs: restart-interval + 4:2:2 JPEG and IMA-ADPCM
-    # round trips — pure map-side Arrow stages like the other codec
-    # pipelines, expected ~linear in docs with no shuffle.
-    "multimodal_jpeg_rst_roundtrip",
-    "multimodal_jpeg422_roundtrip",
-    "multimodal_adpcm_roundtrip",
     # round 8 eighth batch: RFM (post-agg state customer-sized, fences
     # distinct-value-sized), corpus sizing (tracks the CC closure),
     # SLA watch (supplier-sized after the lag join).
@@ -190,10 +176,8 @@ PROBED = [
     # round 9 first batch: Pareto coverage runs the distributed ordered
     # scan over per-USER sums — the events replica shifts user ids per
     # copy, so the scan input honestly grows Nx here (the TPC-H-keyed
-    # ordered scans grow under --grow-tpch instead). The MJPG round
-    # trip is a pure map pipeline like the other codecs.
+    # ordered scans grow under --grow-tpch instead).
     "user_value_pareto",
-    "multimodal_mjpg_roundtrip",
     # round 9 second batch: the Zipf census's ordered-scan input is the
     # VOCABULARY, which the decorrelated replica grows Nx by design.
     "vocab_rank_census",
@@ -201,16 +185,6 @@ PROBED = [
     # after ONE map-combined pass however big the input; expected
     # strongly sub-linear.
     "heavy_hitters_cms",
-    # round 10: the two new per-document codec pipelines — pure
-    # map-side Arrow batches like the other codecs, expected ~linear.
-    "multimodal_jpeg_progressive",
-    "multimodal_flac_roundtrip",
-    # round 11: the stereo/LPC FLAC round trip — same pure map-side
-    # Arrow shape as the other codecs, expected ~linear.
-    "multimodal_flac_lpc_roundtrip",
-    # round 11: the 4:2:0 JPEG round trip — encodes BOTH layouts per
-    # doc (the payload-shrink audit), so ~2x the 4:4:4 probe's work.
-    "multimodal_jpeg420_roundtrip",
     # round 10: streaming vocab census — the decorrelated replica grows
     # the VOCABULARY (the rollup key space) Nx by design; wall includes
     # the two staged writes + both micro-batches + the ordered-scan
