@@ -198,11 +198,6 @@ HEADLINE = [
     "stream_heavy_hitters",
     "stream_lorenz_incremental",
     "stream_vocab_incremental",
-    # round 11: the transformWithState router promoted to a declared
-    # query — two staged writes + two RocksDB-backed micro-batches
-    # through the typed ValueState counter (same replay-cost shape as
-    # the other streaming twins, plus the state-server round trip).
-    "stream_route_tws",
     # round 13: the parallel lifetime router (VERDICT r12 item 1) —
     # same two staged writes + two foreachBatch micro-batches, but the
     # per-batch work is the distributed zip-with-index instead of a
@@ -242,7 +237,6 @@ STREAM_TWINS = frozenset(
         "stream_heavy_hitters",
         "stream_lorenz_incremental",
         "stream_vocab_incremental",
-        "stream_route_tws",
         "stream_route_lifetime",
     }
     & set(HEADLINE)

@@ -1306,118 +1306,6 @@ FROM events GROUP BY 1, 2
 """
 
 
-def q_stream_route_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's lifetime per-bucket round-robin counter
-    (``Bucket.java:14,22-29`` / ``BucketPriorityPartitioner.java:62-94``)
-    on Spark 4's ``transformWithState`` API, driven as a REAL two-batch
-    availableNow file stream and hash-oracled (VERDICT r10 item 2 — the
-    forward-path stateful API promoted from test-only to declared).
-
-    The events are split at the event_id midpoint and replayed as two
-    micro-batches in id order; ``route_stream_tws``
-    (``streaming/stateful.py``) keeps one typed ``ValueState`` counter
-    per bucket, so batch 2 CONTINUES batch 1's sequence exactly like
-    the reference's producer-lifetime ``AtomicInteger``. Because the
-    batch split respects event_id order and the processor sorts each
-    batch by event_id, the streamed assignment is bit-identical to the
-    batch exact-mode router — this query SHARES the
-    ``route_events_exact`` oracle (``SQL_ROUTE_EVENTS_EXACT``).
-
-    transformWithState keeps each state variable in its own column
-    family, which only the RocksDB state-store provider supports; the
-    provider is scoped to this query and restored after the drain.
-    """
-    import shutil
-    import tempfile
-
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (
-        stage_two_batch_stream,
-    )
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-        route_stream_tws,
-    )
-
-    events = with_routing_key(load_table(spark, sf_dir, "events")).select(
-        "event_id", "key"
-    )
-    # Deterministic id-ordered split: the two-batch replay must feed the
-    # counter in event_id order for the lifetime sequence to equal the
-    # batch ROW_NUMBER. One 1-row scalar fetch (min+max midpoint).
-    lo_hi = events.agg(
-        F.min("event_id").alias("lo"), F.max("event_id").alias("hi")
-    ).collect()[0]
-    mid = (lo_hi["lo"] + lo_hi["hi"]) // 2
-    root = tempfile.mkdtemp(prefix="peps-tws-route-")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    # State partitions sized to KEY CARDINALITY, not ambient shuffle
-    # parallelism (r13, guide §2/§5): the stateful operator has exactly
-    # #buckets + 1 (NULL) distinct keys at ANY data scale, but every
-    # shuffle partition of a transformWithState stream costs a RocksDB
-    # instance + snapshot upload + state-server handshake PER
-    # MICRO-BATCH even when it holds zero keys — measured 6.0 s for a
-    # 1-row two-batch drain at 32 partitions vs 3.2 s at 2 (the
-    # per-partition machinery, not data, dominates; the same per-
-    # partition cost recurs every batch on a cluster). Scoped to this
-    # stream and restored after the drain, like the provider conf.
-    # NOTE (ADVICE r13): Spark fixes a stream's state-partition count
-    # from the SESSION conf at query start — there is no per-query knob
-    # — so any query planned on this session during the drain window
-    # would also see the reduced value. Safe here because the bench and
-    # oracle runners execute one query at a time on the session; a
-    # concurrent-query host should wrap this query in its own
-    # SparkSession.newSession() instead.
-    part_key = "spark.sql.shuffle.partitions"
-    prev_parts = spark.conf.get(part_key)
-    n_state_parts = len(EVENTS_CONFIG.buckets) + 1
-    try:
-        # files_per_batch stays 1 here: an r13 experiment with k=8
-        # parallel staging (valid — the processor concat-sorts each
-        # group) measured a consistent 4.6 s -> 7.2 s REGRESSION: more
-        # input splits per trigger mean more Arrow chunks and state-
-        # server round trips per bucket group, which dominates the
-        # ~0.3 s the parallel stage write saves at fixture scale.
-        src_dir, schema = stage_two_batch_stream(
-            root,
-            [
-                events.filter(F.col("event_id") <= mid),
-                events.filter(F.col("event_id") > mid),
-            ],
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-        routed = route_stream_tws(
-            stream,
-            EVENTS_CONFIG,
-            EVENTS_NUM_PARTITIONS,
-            key_col="key",
-            order_col="event_id",
-        )
-        spark.conf.set(
-            prov_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        spark.conf.set(part_key, str(n_state_parts))
-        sink = _drain_to_memory_sink(
-            spark,
-            routed.select("event_id", "bucket", "partition"),
-            name_prefix="stream_route_tws",
-            output_mode="append",
-        )
-        return sink.localCheckpoint(eager=True)
-    finally:
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-        spark.conf.set(part_key, prev_parts)
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def q_stream_route_lifetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's lifetime per-bucket round-robin counter
     (``Bucket.java:14,22-29``) with FULL intra-batch parallelism
@@ -1427,14 +1315,12 @@ def q_stream_route_lifetime(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``seq = base + rank`` reproduces the exact AtomicInteger sequence
     with no one-task-per-bucket funnel (``streaming/lifetime.py``).
 
-    Driven exactly like ``stream_route_tws`` — the events table split
-    at the event_id midpoint, replayed as two real availableNow
-    micro-batches through ``foreachBatch`` with a checkpoint and a
-    versioned counter-state dir — and SHARES the ``route_events_exact``
-    oracle: batch 2 continues batch 1's sequence bit-identically to the
-    batch exact-mode router. This is the scale default for
-    lifetime-exact routing (the stateful.py routers remain the
-    state-store API showcase).
+    The events table is split at the event_id midpoint and replayed as
+    two real availableNow micro-batches through ``foreachBatch`` with a
+    checkpoint and a versioned counter-state dir; the query SHARES the
+    ``route_events_exact`` oracle: batch 2 continues batch 1's sequence
+    bit-identically to the batch exact-mode router. ``lifetime.py`` is
+    the package's one lifetime-exact router.
     """
     import os
     import shutil
@@ -2882,7 +2768,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ts_gap_fill": q_ts_gap_fill,
     "sliding_window_throughput": q_sliding_window_throughput,
     "stream_route_counts": q_stream_route_counts,
-    "stream_route_tws": q_stream_route_tws,
     "stream_route_lifetime": q_stream_route_lifetime,
     "stream_windowed_throughput": q_stream_windowed_throughput,
     "stream_sessionized_users": q_stream_sessionized_users,
@@ -2954,7 +2839,6 @@ ORACLES: dict[str, str] = {
     "ts_gap_fill": SQL_TS_GAP_FILL,
     "sliding_window_throughput": SQL_SLIDING_WINDOW_THROUGHPUT,
     "stream_route_counts": SQL_STREAM_ROUTE_COUNTS,
-    "stream_route_tws": SQL_ROUTE_EVENTS_EXACT,
     "stream_route_lifetime": SQL_ROUTE_EVENTS_EXACT,
     "stream_windowed_throughput": SQL_STREAM_WINDOWED_THROUGHPUT,
     "stream_sessionized_users": SQL_STREAM_SESSIONIZED_USERS,

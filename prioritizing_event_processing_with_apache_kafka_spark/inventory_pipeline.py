@@ -6345,7 +6345,7 @@ GROUP BY 1
 
 
 # Staging for the availableNow replays — shared home is
-# streaming/staging.py (the tws router promotion in inventory.py needs
+# streaming/staging.py (the lifetime router query in inventory.py needs
 # it too); the local alias keeps this module's call sites unchanged.
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.staging import (  # noqa: E402
     stage_two_batch_stream as _stage_two_batch_stream,

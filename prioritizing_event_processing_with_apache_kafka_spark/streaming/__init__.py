@@ -26,9 +26,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.streaming.sinks impor
     idempotent_parquet_sink,
     read_idempotent_output,
 )
-from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-    route_stream_stateful,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.telemetry import (
     bucket_throughput,
     dedup_within_watermark,
@@ -41,7 +38,6 @@ __all__ = [
     "consume_plan",
     "kafka_reader_options",
     "route_stream",
-    "route_stream_stateful",
     "idempotent_parquet_sink",
     "read_idempotent_output",
     "dedup_ingest_batch",

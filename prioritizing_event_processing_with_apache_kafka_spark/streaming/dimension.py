@@ -128,6 +128,14 @@ def _write_version(df: DataFrame, path: str, version: int) -> None:
     fs.delete(tmp, True)  # drop the now-empty staging shell (_SUCCESS)
 
 
+_CALLER_PROPERTIES = (
+    "spark.jobGroup.id",
+    "spark.job.description",
+    "spark.job.interruptOnCancel",
+    "spark.scheduler.pool",
+)
+
+
 def _write_versions_overlapped(
     writes: list[tuple[DataFrame, str, int]],
 ) -> None:
@@ -143,14 +151,26 @@ def _write_versions_overlapped(
     between the two commits, and replay regenerates BOTH stores
     deterministically from the parent state, so commit order between
     the pair was never load-bearing. Exceptions from either publish
-    propagate (the micro-batch fails and is replayed)."""
+    propagate (the micro-batch fails and is replayed).
+
+    Spark's job group, description and scheduler pool are thread-local,
+    so the caller's are copied into each pool thread: the publishes'
+    jobs stay attributed to the stream and are cancelled with it."""
     if len(writes) == 1:
         _write_version(*writes[0])
         return
     from concurrent.futures import ThreadPoolExecutor
 
+    sc = writes[0][0].sparkSession.sparkContext
+    props = {k: sc.getLocalProperty(k) for k in _CALLER_PROPERTIES}
+
+    def publish(df: DataFrame, path: str, version: int) -> None:
+        for k, v in props.items():
+            sc.setLocalProperty(k, v)  # None clears a stale value
+        _write_version(df, path, version)
+
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        for f in [pool.submit(_write_version, *w) for w in writes]:
+        for f in [pool.submit(publish, *w) for w in writes]:
             f.result()
 
 

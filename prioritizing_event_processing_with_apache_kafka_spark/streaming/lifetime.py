@@ -1,14 +1,13 @@
-"""Parallel lifetime-exact routing: counter-block reservation per batch.
+"""Lifetime-exact routing: counter-block reservation per micro-batch.
 
 The reference keeps one ``AtomicInteger`` per bucket for the producer
 process lifetime (``Bucket.java:14,22-29``): record N+1 continues where
-record N left off, across batches. ``route_stream_stateful`` /
-``route_stream_tws`` (``stateful.py``) reproduce that sequence with one
-state-store key per bucket — which serializes each bucket's slice of
-every micro-batch into a single task (the r12 grow probe measured 68×
-wall at 100× data vs 4–5× for the stateless router). This module keeps
-the SAME bit-exact lifetime sequence with full intra-batch parallelism
-(VERDICT r12 item 1):
+record N left off, across batches. This module is the package's one
+lifetime-exact router. It reproduces that sequence bit-exactly with
+full intra-batch parallelism and no state store: a per-bucket state key
+would serialize each bucket's slice of every micro-batch into a single
+task (the r12 grow probe measured 68x wall at 100x data for such a
+router vs 4-5x for the stateless one). Per micro-batch:
 
 1. **rank** — distributed per-bucket zip-with-index *within* the batch:
    one range shuffle on (bucket, order) + local sort +
@@ -16,8 +15,8 @@ the SAME bit-exact lifetime sequence with full intra-batch parallelism
    stats aggregate turns local indices into global batch ranks — the
    same technique as the batch exact router
    (``operators/routing.py:_exact_global_sequence``), here
-   NULL-bucket-inclusive so unparseable keys keep their own counter
-   exactly like the stateful routers' NULL group.
+   NULL-bucket-inclusive so unparseable keys share one counter of
+   their own.
 2. **reserve** — the stats aggregate also yields per-bucket row counts;
    adding them to the persisted lifetime counters reserves each
    bucket's contiguous block ``[base, base+n)`` for this batch.
@@ -38,13 +37,12 @@ state after batch B committed). Structured Streaming replays at most
 the last uncommitted batch with the SAME batch id after a crash, so
 batch B always reads ``counters-after-{B-1}`` and deterministically
 (re)writes ``counters-after-{B}`` — idempotent exactly-once
-continuation, the same recovery contract the state-store routers get
-from checkpointing, at #buckets-row cost instead of state-store I/O.
+continuation from Structured Streaming's own replay contract, at
+#buckets-row cost and with no state store.
 
 Keys are expected to be strings (the reference only parses
 ``key instanceof String``, ``BucketPriorityPartitioner.java:69``);
-non-parseable keys land in the NULL-bucket group with NULL partition,
-matching ``route_stream_stateful``.
+non-parseable keys land in the NULL-bucket group with NULL partition.
 """
 
 from __future__ import annotations
@@ -53,8 +51,9 @@ import json
 import os
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from prioritizing_event_processing_with_apache_kafka_spark.functions.keys import extract_bucket
 from prioritizing_event_processing_with_apache_kafka_spark.operators.caching import scoped_persist
@@ -62,9 +61,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.plans.config import (
     BucketPriorityConfig,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
-from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-    stateful_output_schema,
-)
 
 __all__ = [
     "route_batch_lifetime",
@@ -73,6 +69,30 @@ __all__ = [
 ]
 
 _MID_LOCAL_MASK = (1 << 33) - 1
+
+
+def _output_schema(
+    batch_df: DataFrame, *, key_col: str, order_col: str
+) -> T.StructType:
+    """``(order_col, key_col, bucket, partition, seq)``, with the order
+    and key types taken from the input (a hardcoded long/string pair
+    would mislabel e.g. a timestamp order column or binary keys)."""
+    by_name = {f.name: f.dataType for f in batch_df.schema.fields}
+    missing = [c for c in (order_col, key_col) if c not in by_name]
+    if missing:
+        raise ValueError(
+            f"columns {missing} not found in stream schema "
+            f"{[f.name for f in batch_df.schema.fields]}"
+        )
+    return T.StructType(
+        [
+            T.StructField(order_col, by_name[order_col]),
+            T.StructField(key_col, by_name[key_col]),
+            T.StructField("bucket", T.StringType()),
+            T.StructField("partition", T.IntegerType()),
+            T.StructField("seq", T.LongType()),
+        ]
+    )
 
 
 def _range_partitions(batch_df: DataFrame, *, target_mb: int = 32) -> int:
@@ -117,9 +137,8 @@ def route_batch_lifetime(
     """Route one bounded batch, continuing the lifetime sequence from
     ``base_counters`` (bucket → next seq value; missing buckets start
     at 0). Returns ``(routed, new_counters)`` where ``routed`` has the
-    stateful routers' exact output shape ``(order_col, key_col,
-    bucket, partition, seq)`` and ``new_counters`` is the advanced
-    counter map to feed the next batch.
+    shape ``(order_col, key_col, bucket, partition, seq)`` and
+    ``new_counters`` is the advanced counter map to feed the next batch.
 
     The returned frame carries a ``_peps_exact_cache`` handle (the
     persisted rank midframe) so bounded-lifetime callers can unpersist
@@ -165,9 +184,8 @@ def route_batch_lifetime(
     # inherited the ambient shuffle-partition count: one near-empty
     # reducer task per configured partition, PER MICRO-BATCH (32 extra
     # tasks/batch in the 32-core bench; more on a cluster). One reducer
-    # is enough for KBs of partials; scoped set/restore like the tws
-    # router's provider conf (single-writer micro-batch discipline —
-    # the scope is this one collect).
+    # is enough for KBs of partials; scoped set/restore (single-writer
+    # micro-batch discipline — the scope is this one collect).
     part_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(part_key)
     spark.conf.set(part_key, "1")
@@ -192,9 +210,7 @@ def route_batch_lifetime(
         offset_rows.append((int(row["__peps_pid"]), b, seq_base, int(row["__peps_lo"])))
         new_counters[b] = seq_base + int(row["__peps_cnt"])
 
-    out_schema = stateful_output_schema(
-        batch_df, key_col=key_col, order_col=order_col
-    )
+    out_schema = _output_schema(batch_df, key_col=key_col, order_col=order_col)
     if not offset_rows:  # empty batch: counters unchanged, empty frame
         empty = spark.createDataFrame([], out_schema)
         empty._peps_exact_cache = srt  # type: ignore[attr-defined]

@@ -1,7 +1,8 @@
 """Micro-batch staging for the streaming twins' availableNow replays.
 
 Shared by every streaming twin (RFM/ABC/heavy-hitters/Lorenz/vocab,
-and the transformWithState router): a list of batch frames becomes
+and ``stream_route_lifetime``, which drives ``lifetime.py``, the
+package's one lifetime-exact router): a list of batch frames becomes
 single-file parquet drops with strictly increasing mtimes, so a
 ``maxFilesPerTrigger=1`` / availableNow file stream replays them as
 separate micro-batches in a deterministic order.

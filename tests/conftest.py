@@ -3,49 +3,10 @@
 from __future__ import annotations
 
 import os
-import sys
 
 import pytest
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-
-
-def _wire_local_protobuf() -> None:
-    """Make a locally-available protobuf importable when the site
-    environment lacks one (no pip install in this container), so the
-    transformWithState path — whose state-server protocol is
-    protobuf-framed — runs instead of skipping.
-
-    The Google Cloud SDK bundles the public protobuf runtime; if it's
-    present, add it to sys.path (driver) and PYTHONPATH (inherited by
-    Spark's Python workers — must happen BEFORE the session starts).
-    Its runtime may trail pyspark's gencode by a minor version, which
-    is wire-compatible; protobuf's own escape hatch disables the
-    strict equality check.
-    """
-    try:
-        import google.protobuf  # noqa: F401
-
-        return
-    except ImportError:
-        pass
-    vendored = "/usr/lib/google-cloud-sdk/platform/google_appengine"
-    if not os.path.isdir(os.path.join(vendored, "google", "protobuf")):
-        return
-    # APPEND, don't prepend: the appengine dir ships a regular
-    # `google` package that would otherwise shadow any site-packages
-    # google.* namespace distribution (google-auth etc.) in the driver
-    # and every worker. As a fallback for absent protobuf the tail of
-    # the path is sufficient.
-    sys.path.append(vendored)
-    existing = os.environ.get("PYTHONPATH", "")
-    os.environ["PYTHONPATH"] = (
-        (existing + os.pathsep if existing else "") + vendored
-    )
-    os.environ.setdefault("TEMPORARILY_DISABLE_PROTOBUF_VERSION_CHECK", "true")
-
-
-_wire_local_protobuf()
 
 
 @pytest.fixture(scope="session")

@@ -257,3 +257,37 @@ def test_empty_frame_commits_no_version(spark, tmp_path):
     _apply(spark, path, [(1, "seg-a2", "2024-02-01")], 1)  # version 2
     assert _versions(spark, path) == [0, 2]
     assert (1, "seg-a2") in _snapshot(spark, path)
+
+
+def test_overlapped_publishes_inherit_the_callers_job_group(spark, tmp_path):
+    """The two-store operators publish their OUTPUT and STATE versions
+    from a thread pool. Spark's job group is thread-local, so each pool
+    thread must carry the caller's group: otherwise the publishes'
+    jobs escape ``cancelJobGroup`` (and a stopping stream) and lose
+    their attribution in the UI."""
+    from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
+        _write_versions_overlapped,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "peps-overlapped-publish"
+    a = spark.createDataFrame([(1, "x")], "k long, v string")
+    b = spark.createDataFrame([(2, "y")], "k long, v string")
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "overlapped publish", interruptOnCancel=True)
+    try:
+        _write_versions_overlapped(
+            [(a, str(tmp_path / "out"), 1), (b, str(tmp_path / "state"), 1)]
+        )
+    finally:
+        for k in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(k, None)
+    grouped = tracker.getJobIdsForGroup(group)
+    # one write job per publish, at least; none ran outside the group
+    assert len(grouped) >= 2
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()

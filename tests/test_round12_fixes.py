@@ -1,9 +1,5 @@
-"""Round-12 fixes: the per-user 0700 vendored-protobuf staging dir
-(ADVICE r11 medium — a predictable world-writable /tmp zip could be
-pre-planted and would execute in the driver and every worker), the
-scoped google.* sys.modules eviction (ADVICE r11), the certified MG
-readout returned as a local relation so the candidate recount runs
-once (ADVICE r11), the
+"""Round-12 fixes: the certified MG readout returned as a local
+relation so the candidate recount runs once (ADVICE r11), the
 _fact_partitions non-local-path fallback (ADVICE r11), and the
 SCALE.md fingerprint-count prose now derivation-tested like
 COVERAGE.md's (VERDICT r11 item 6)."""
@@ -36,60 +32,6 @@ class TestFingerprintProseCounts:
         assert not wrong, (
             f"SCALE.md mentions fingerprint counts {wrong}, registry holds {n}"
         )
-
-
-class TestPrivateZipPath:
-    def test_fresh_dir_is_user_only(self, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-            _private_zip_path,
-        )
-
-        zpath = _private_zip_path(base_tmp=str(tmp_path))
-        zdir = os.path.dirname(zpath)
-        st = os.lstat(zdir)
-        assert st.st_uid == os.getuid()
-        assert (st.st_mode & 0o777) == 0o700
-        # idempotent: second call reuses the same safe dir
-        assert _private_zip_path(base_tmp=str(tmp_path)) == zpath
-
-    def test_group_accessible_preexisting_dir_refused(self, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-            _private_zip_path,
-        )
-
-        planted = tmp_path / f"peps-protobuf-{os.getuid()}"
-        planted.mkdir(mode=0o777)
-        os.chmod(planted, 0o777)  # defeat umask
-        zpath = _private_zip_path(base_tmp=str(tmp_path))
-        zdir = os.path.dirname(zpath)
-        assert zdir != str(planted), "group/other-accessible dir must be refused"
-        assert (os.lstat(zdir).st_mode & 0o777) == 0o700
-
-    def test_symlinked_preexisting_dir_refused(self, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-            _private_zip_path,
-        )
-
-        target = tmp_path / "elsewhere"
-        target.mkdir(mode=0o700)
-        link = tmp_path / f"peps-protobuf-{os.getuid()}"
-        link.symlink_to(target)
-        zpath = _private_zip_path(base_tmp=str(tmp_path))
-        assert os.path.dirname(zpath) != str(link)
-
-    def test_google_eviction_is_scoped(self):
-        # ADVICE r11: ensure_protobuf must not evict unrelated google.*
-        # namespace packages (e.g. google.cloud) — read the eviction
-        # predicate straight from the source to pin the scope.
-        import inspect
-
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
-            stateful,
-        )
-
-        src = inspect.getsource(stateful.ensure_protobuf)
-        assert 'n.startswith("google.protobuf.")' in src
-        assert 'n.startswith("google.")' not in src
 
 
 class TestMgCertifiedReadoutRunsOnce:

@@ -1,72 +1,103 @@
-"""Cross-batch stateful round-robin: the counter must continue across
-micro-batches exactly like the reference's per-bucket AtomicInteger."""
+"""Lifetime round-robin: the counter must continue across micro-batches
+exactly like the reference's per-bucket AtomicInteger
+(``Bucket.java:14,22-29``). ``streaming/lifetime.py`` is the package's
+one lifetime-exact router; these tests drive it through real file
+streams, including a sink crash between the write and the commit."""
 
 from __future__ import annotations
 
+import collections
 import datetime as dt
 import shutil
 import tempfile
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from prioritizing_event_processing_with_apache_kafka_spark import BucketPriorityConfig
-from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-    route_stream_stateful,
+from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
+    lifetime_foreach_batch,
+    load_counters,
+    route_batch_lifetime,
+)
+from prioritizing_event_processing_with_apache_kafka_spark.streaming.route_stream import (
+    routed_foreach_batch,
+)
+from prioritizing_event_processing_with_apache_kafka_spark.streaming.sinks import (
+    idempotent_parquet_sink,
+    read_idempotent_output,
 )
 
 CFG = BucketPriorityConfig(
     topic="events", buckets=["Platinum", "Gold"], allocation=[70, 30]
 )
 # layout over 10 partitions: Platinum=[0..6] (7), Gold=[7..9] (3)
+LAYOUT = {"Platinum": (0, 7), "Gold": (7, 3)}
 
 SCHEMA = "event_id long, ts timestamp, user_id long, key string"
 
 
 @pytest.fixture()
 def dirs():
-    src = tempfile.mkdtemp(prefix="peps-stateful-src-")
-    chk = tempfile.mkdtemp(prefix="peps-stateful-chk-")
-    yield src, chk
-    shutil.rmtree(src, ignore_errors=True)
-    shutil.rmtree(chk, ignore_errors=True)
+    paths = [
+        tempfile.mkdtemp(prefix=f"peps-lifetime-{p}-")
+        for p in ("src", "chk", "state")
+    ]
+    yield paths
+    for p in paths:
+        shutil.rmtree(p, ignore_errors=True)
 
 
 def chunk(spark, src, n0, n, bucket="Platinum"):
+    """One parquet drop of events ``n0..n0+n-1``; ``bucket`` may be a
+    tuple of bucket names, cycled over the events."""
+    names = (bucket,) if isinstance(bucket, str) else bucket
     base = dt.datetime(2024, 1, 1)
     rows = [
-        (i, base + dt.timedelta(seconds=i), 1, f"{bucket}-{i}")
+        (i, base + dt.timedelta(seconds=i), 1, f"{names[i % len(names)]}-{i}")
         for i in range(n0, n0 + n)
     ]
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(src)
 
 
-def test_counter_continues_across_micro_batches(spark, dirs):
-    src, chk = dirs
-    chunk(spark, src, 0, 5)  # 5 Platinum records before the query starts
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
+def start_lifetime(spark, dirs, sink=None):
+    """Start ``lifetime_foreach_batch`` over the parquet drops in the
+    source dir, one file per micro-batch. Returns ``(query, rows)``;
+    without a ``sink``, ``rows`` collects every routed row."""
+    src, chk, state = dirs
+    rows = []
+
+    def collect(batch_df, batch_id):
+        rows.extend(batch_df.collect())
+
+    source = (
+        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
+    )
     q = (
-        routed.writeStream.format("memory")
-        .queryName("stateful_routed")
-        .outputMode("append")
+        source.writeStream.foreachBatch(
+            lifetime_foreach_batch(
+                CFG, 10, sink or collect, state_dir=state, order_col="event_id"
+            )
+        )
         .option("checkpointLocation", chk)
         .start()
     )
+    return q, rows
+
+
+def test_counter_continues_across_micro_batches(spark, dirs):
+    src = dirs[0]
+    chunk(spark, src, 0, 5)  # 5 Platinum records before the query starts
+    q, routed = start_lifetime(spark, dirs)
     try:
         q.processAllAvailable()
-        first = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("stateful_routed").collect()
-        }
+        first = {r["event_id"]: (r["seq"], r["partition"]) for r in routed}
         # batch 1: seq 0..4 → partitions 0..4 (Platinum lo=0, size=7)
         assert first == {i: (i, i) for i in range(5)}
 
         chunk(spark, src, 100, 5)  # second micro-batch
         q.processAllAvailable()
-        both = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("stateful_routed").collect()
-        }
+        both = {r["event_id"]: (r["seq"], r["partition"]) for r in routed}
         # batch 2 CONTINUES the counter: seq 5..9 → partitions 5, 6, 0, 1, 2
         assert both[100] == (5, 5)
         assert both[101] == (6, 6)
@@ -78,21 +109,12 @@ def test_counter_continues_across_micro_batches(spark, dirs):
 
 
 def test_buckets_keep_independent_counters(spark, dirs):
-    src, chk = dirs
+    src = dirs[0]
     chunk(spark, src, 0, 3, "Platinum")
     chunk(spark, src, 50, 4, "Gold")
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("stateful_two_buckets")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
+    q, rows = start_lifetime(spark, dirs)
     try:
         q.processAllAvailable()
-        rows = spark.table("stateful_two_buckets").collect()
         platinum = sorted(
             (r["seq"], r["partition"]) for r in rows if r["bucket"] == "Platinum"
         )
@@ -105,211 +127,67 @@ def test_buckets_keep_independent_counters(spark, dirs):
 
 
 def test_unknown_bucket_gets_null_partition(spark, dirs):
-    src, chk = dirs
-    chunk(spark, src, 0, 2, "Silver")
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("stateful_unknown")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
+    chunk(spark, dirs[0], 0, 2, "Silver")
+    q, rows = start_lifetime(spark, dirs)
     try:
         q.processAllAvailable()
-        rows = spark.table("stateful_unknown").collect()
         assert len(rows) == 2
         assert all(r["partition"] is None for r in rows)
     finally:
         q.stop()
 
 
-def test_counter_survives_restart_across_many_batches(spark, dirs):
-    # VERDICT r1 item 8: 10+ micro-batches with a mid-stream restart;
-    # the state-store checkpoint must carry the counter across the stop
-    # so the sequence continues exactly (the reference's AtomicInteger
-    # lives for the producer process lifetime; ours lives in the
-    # checkpoint and therefore survives even a process restart). The
-    # memory sink cannot recover from a checkpoint, so the routed
-    # stream lands in a parquet sink (exactly-once via the checkpoint).
-    src, chk = dirs
-    out = tempfile.mkdtemp(prefix="peps-stateful-out-")
-    per_batch = 4
-
-    def run(n_batches, first_batch):
-        source = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
-        q = (
-            routed.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", chk)
-            .outputMode("append")
-            .start()
-        )
-        try:
-            for b in range(first_batch, first_batch + n_batches):
-                chunk(spark, src, b * 100, per_batch)
-                q.processAllAvailable()
-        finally:
-            q.stop()
-
-    try:
-        run(6, 0)   # first run: 6 micro-batches of 4 records
-        run(5, 6)   # restart from the same checkpoint: 5 more
-        combined = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert len(combined) == 11 * per_batch
-
-        # seq must be the global arrival order 0..43 with no gap or
-        # repeat at the restart boundary, and partition = seq % 7
-        # (Platinum lo=0, size=7).
-        by_arrival = sorted(combined)  # event_ids were written in seq order
-        seqs = [combined[e][0] for e in by_arrival]
-        assert seqs == list(range(11 * per_batch))
-        assert all(combined[e][1] == combined[e][0] % 7 for e in by_arrival)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def test_tws_counter_continues_across_micro_batches(spark, dirs):
-    # Same contract as route_stream_stateful, on Spark 4's
-    # transformWithState API (typed ValueState in a StatefulProcessor).
-    # The state-server protocol is protobuf-framed; skip where the
-    # container lacks protobuf (route_stream_stateful covers the
-    # semantics dependency-free; conftest wires a locally-available
-    # protobuf onto the worker PYTHONPATH when it finds one).
-    pytest.importorskip("google.protobuf")
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.stateful import (
-        route_stream_tws,
-    )
-
-    src, chk = dirs
-    chunk(spark, src, 0, 5)
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_tws(source, CFG, 10, order_col="event_id")
-    # transformWithState keeps each state variable in its own column
-    # family — only the RocksDB provider supports that (the default
-    # HDFS-backed provider refuses); scope the provider to this query.
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_prov = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("tws_routed")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
+def test_counter_state_equals_rows_routed_per_bucket(spark, dirs):
+    """The lifetime counters are a small JSON file per micro-batch;
+    ``load_counters(state_dir, b)`` is the ops path for inspecting the
+    live counter state, and after batch b it must equal the number of
+    rows routed per bucket so far, unknown buckets included."""
+    src, _, state = dirs
+    chunk(spark, src, 0, 7, "Platinum")
+    q, rows = start_lifetime(spark, dirs)
     try:
         q.processAllAvailable()
-        first = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("tws_routed").collect()
-        }
-        assert first == {i: (i, i) for i in range(5)}
-
-        chunk(spark, src, 100, 5)
+        assert load_counters(state, 0) == {"Platinum": 7}
+        chunk(spark, src, 50, 3, "Gold")
         q.processAllAvailable()
-        both = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.table("tws_routed").collect()
-        }
-        assert both[100] == (5, 5)
-        assert both[101] == (6, 6)
-        assert both[102] == (7, 0)
-        assert both[103] == (8, 1)
-        assert both[104] == (9, 2)
-    finally:
-        q.stop()
-        if prev_prov is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev_prov)
-
-
-def test_statestore_reader_exposes_counter_state(spark, dirs):
-    """Spark 4's state data source reads a streaming checkpoint's state
-    store as a batch DataFrame — the ops path for inspecting (or
-    auditing) live stateful-routing state without stopping the query.
-    The lifetime counter kept by applyInPandasWithState must be visible
-    there and equal the number of routed records per bucket."""
-    src, chk = dirs
-    chunk(spark, src, 0, 7)
-    source = spark.readStream.schema(SCHEMA).parquet(src)
-    routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("statestore_probe")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
+        chunk(spark, src, 80, 2, "Silver")
         q.processAllAvailable()
     finally:
         q.stop()
-    state = spark.read.format("statestore").load(chk)
-    # schema: key (struct with the grouping column), value (state struct)
-    rows = state.collect()
-    assert rows, "state store must contain the per-bucket counter state"
-    by_bucket = {r["key"][0]: r["value"] for r in rows}
-    assert "Platinum" in by_bucket
-    # 7 records routed through the Platinum counter; the stored state's
-    # counter field must have advanced to exactly that count.
-    # value nests the applyInPandasWithState struct under groupState
-    assert by_bucket["Platinum"]["groupState"]["counter"] == 7
-
-
-def test_declared_tws_query_matches_batch_exact_router(spark):
-    """The promoted `stream_route_tws` declared query (VERDICT r10 item
-    2) must be bit-identical to the batch exact-mode router: the
-    two-batch id-ordered replay through the typed ValueState counter IS
-    the lifetime AtomicInteger sequence, so both paths share the
-    `route_events_exact` oracle."""
-    from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
-        q_route_events_exact,
-        q_stream_route_tws,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    got = {
-        r["event_id"]: (r["bucket"], r["partition"])
-        for r in q_stream_route_tws(spark, sf).collect()
-    }
-    expect = {
-        r["event_id"]: (r["bucket"], r["partition"])
-        for r in q_route_events_exact(spark, sf).collect()
-    }
-    assert got == expect
+    routed = collections.Counter(r["bucket"] for r in rows)
+    assert load_counters(state, 2) == dict(routed)
+    assert dict(routed) == {"Platinum": 7, "Gold": 3, "Silver": 2}
 
 
 # ---------------------------------------------------------------------------
-# Parallel lifetime router (streaming/lifetime.py, VERDICT r12 item 1):
-# counter-block reservation + distributed rank must reproduce the
-# stateful routers' sequence bit-exactly with no per-bucket task funnel.
+# Counter-block reservation + distributed rank must reproduce the
+# reference's sequence bit-exactly with no per-bucket task funnel.
 # ---------------------------------------------------------------------------
 
 
-def test_lifetime_batch_matches_stateful_router(spark, dirs):
-    """route_batch_lifetime chained over the same two micro-batches the
-    stateful router replays must be bit-identical per event: same seq,
-    same partition, same bucket — including the NULL-key group, an
-    unknown bucket, and the cross-batch continuation."""
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
-        route_batch_lifetime,
-    )
+def next_partition_model(batches):
+    """``Bucket.nextPartition`` in plain Python: one lifetime counter
+    per group (the NULL-key group and unknown buckets included) and
+    ``partition = lo + n % size``, NULL outside the layout. Returns
+    ``({event_id: (key, bucket, partition, seq)}, counters)``."""
+    counters = collections.Counter()
+    out = {}
+    for rows in batches:
+        for event_id, _ts, _user, key in sorted(rows):
+            bucket = None if key is None else key.split(CFG.delimiter)[0].strip()
+            n = counters[bucket]
+            counters[bucket] += 1
+            lo_size = LAYOUT.get(bucket)
+            partition = None if lo_size is None else lo_size[0] + n % lo_size[1]
+            out[event_id] = (key, bucket, partition, n)
+    return out, dict(counters)
 
-    src, chk = dirs
+
+def test_lifetime_batch_matches_reference_model(spark):
+    """route_batch_lifetime chained over two batches must equal the
+    plain-Python counter model per event: same seq, same partition,
+    same bucket — including the NULL-key group, an unknown bucket, and
+    the cross-batch continuation."""
     base = dt.datetime(2024, 1, 1)
 
     def rows(n0, n):
@@ -324,59 +202,29 @@ def test_lifetime_batch_matches_stateful_router(spark, dirs):
             out.append((i, base + dt.timedelta(seconds=i), 1, key))
         return out
 
-    b0 = spark.createDataFrame(rows(0, 13), SCHEMA)
-    b1 = spark.createDataFrame(rows(13, 11), SCHEMA)
-
-    # streaming truth: two real micro-batches through the state store
-    b0.coalesce(1).write.mode("append").parquet(src)
-    source = (
-        spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", "1").parquet(src)
-    )
-    routed = route_stream_stateful(source, CFG, 10, order_col="event_id")
-    q = (
-        routed.writeStream.format("memory")
-        .queryName("lifetime_truth")
-        .outputMode("append")
-        .option("checkpointLocation", chk)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        b1.coalesce(1).write.mode("append").parquet(src)
-        q.processAllAvailable()
-        truth = {
-            r["event_id"]: (r["key"], r["bucket"], r["partition"], r["seq"])
-            for r in spark.table("lifetime_truth").collect()
-        }
-    finally:
-        q.stop()
-
-    r0, counters = route_batch_lifetime(b0, CFG, 10)
-    got = {
-        r["event_id"]: (r["key"], r["bucket"], r["partition"], r["seq"])
-        for r in r0.collect()
-    }
-    r1, counters = route_batch_lifetime(b1, CFG, 10, counters)
-    got.update(
-        {
-            r["event_id"]: (r["key"], r["bucket"], r["partition"], r["seq"])
-            for r in r1.collect()
-        }
-    )
-    assert got == truth
+    batches = [rows(0, 13), rows(13, 11)]
+    got = {}
+    counters = None
+    for batch in batches:
+        routed, counters = route_batch_lifetime(
+            spark.createDataFrame(batch, SCHEMA), CFG, 10, counters
+        )
+        got.update(
+            {
+                r["event_id"]: (r["key"], r["bucket"], r["partition"], r["seq"])
+                for r in routed.collect()
+            }
+        )
+    expect, expect_counters = next_partition_model(batches)
+    assert got == expect
     # the advanced counters equal the per-group row totals
-    assert counters["Platinum"] + counters["Gold"] + counters["Silver"] + counters[
-        None
-    ] == 24
+    assert counters == expect_counters
+    assert sum(counters.values()) == 24
 
 
 def test_lifetime_starved_bucket_parity(spark):
     """A bucket with 0 partitions must route to -1 (reference
     fall-through, Bucket.nextPartition returning -1)."""
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
-        route_batch_lifetime,
-    )
-
     cfg = BucketPriorityConfig(
         topic="events", buckets=["Big", "Tiny"], allocation=[99, 1]
     )
@@ -390,67 +238,138 @@ def test_lifetime_starved_bucket_parity(spark):
     assert counters == {"Big": 1, "Tiny": 2}
 
 
-def test_lifetime_foreach_batch_restart_continuity(spark, dirs):
-    """Mirror of test_counter_survives_restart_across_many_batches for
-    the foreachBatch path: 6 micro-batches, stop, 5 more from the same
-    checkpoint + counter dir — seq must be the unbroken global arrival
-    order and partition = seq % 7 (Platinum lo=0 size=7)."""
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
-        lifetime_foreach_batch,
-    )
-
-    src, chk = dirs
-    out = tempfile.mkdtemp(prefix="peps-lifetime-out-")
-    state = tempfile.mkdtemp(prefix="peps-lifetime-state-")
+def test_lifetime_foreach_batch_restart_continuity(spark, dirs, tmp_path):
+    """6 micro-batches, stop, 5 more from the same checkpoint + counter
+    dir — seq must be the unbroken global arrival order and partition =
+    seq % 7 (Platinum lo=0 size=7)."""
+    out = str(tmp_path / "out")
     per_batch = 4
 
     def sink(batch_df, batch_id):
         batch_df.write.mode("append").parquet(out)
 
     def run(n_batches, first_batch):
-        source = (
-            spark.readStream.schema(SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-        )
-        q = (
-            source.writeStream.foreachBatch(
-                lifetime_foreach_batch(
-                    CFG, 10, sink, state_dir=state, order_col="event_id"
-                )
-            )
-            .option("checkpointLocation", chk)
-            .start()
-        )
+        q, _ = start_lifetime(spark, dirs, sink)
         try:
             for b in range(first_batch, first_batch + n_batches):
-                chunk(spark, src, b * 100, per_batch)
+                chunk(spark, dirs[0], b * 100, per_batch)
                 q.processAllAvailable()
         finally:
             q.stop()
 
-    try:
-        run(6, 0)
-        run(5, 6)
-        combined = {
-            r["event_id"]: (r["seq"], r["partition"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert len(combined) == 11 * per_batch
-        by_arrival = sorted(combined)
-        seqs = [combined[e][0] for e in by_arrival]
-        assert seqs == list(range(11 * per_batch))
-        assert all(combined[e][1] == combined[e][0] % 7 for e in by_arrival)
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(state, ignore_errors=True)
+    run(6, 0)
+    run(5, 6)
+    combined = {
+        r["event_id"]: (r["seq"], r["partition"])
+        for r in spark.read.parquet(out).collect()
+    }
+    assert len(combined) == 11 * per_batch
+    by_arrival = sorted(combined)
+    seqs = [combined[e][0] for e in by_arrival]
+    assert seqs == list(range(11 * per_batch))
+    assert all(combined[e][1] == combined[e][0] % 7 for e in by_arrival)
+
+
+# ---------------------------------------------------------------------------
+# Sink crash between the write and the offset commit: the query restarts
+# from its checkpoint, Structured Streaming replays the same batch id, and
+# the output must equal a no-fault run exactly once.
+# ---------------------------------------------------------------------------
+
+
+def crash_once_after_write(sink, crash_at, attempts):
+    """Wrap a ``foreachBatch`` sink: the first attempt of batch
+    ``crash_at`` raises right after the inner write, like a driver that
+    dies before the offset commit. ``attempts[b]`` records the rows each
+    attempt of batch ``b`` wrote."""
+
+    def write(batch_df, batch_id):
+        sink(batch_df, batch_id)
+        attempts.setdefault(batch_id, []).append(
+            {r["event_id"]: tuple(r) for r in batch_df.collect()}
+        )
+        if batch_id == crash_at and len(attempts[batch_id]) == 1:
+            raise RuntimeError("injected crash between sink write and commit")
+
+    return write
+
+
+def drain_files(spark, src, chk, foreach):
+    """Drain every drop in ``src`` (one file per micro-batch) through
+    ``foreach``, restarting from the same checkpoint after a failed
+    micro-batch. Returns the number of restarts."""
+    for restarts in range(2):
+        q = (
+            spark.readStream.schema(SCHEMA)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+            .writeStream.foreachBatch(foreach)
+            .option("checkpointLocation", chk)
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            return restarts
+        except StreamingQueryException:
+            pass
+        finally:
+            q.stop()
+    raise AssertionError("the restarted query failed again")
+
+
+def crash_and_compare(spark, dirs, tmp_path, make_write):
+    """Drain three mixed Platinum/Gold micro-batches through
+    ``make_write(sink, state_dir)`` twice: once with the sink crashing
+    after batch 1's first write and the query restarted from the same
+    checkpoint, once with no fault. The replayed batch must route
+    identically and the two outputs must match row for row. Returns the
+    crashed run's output, sorted by event_id."""
+    src, chk, state = dirs
+    for b in range(3):
+        chunk(spark, src, b * 100, 6, ("Platinum", "Gold"))
+    out, clean = str(tmp_path / "out"), str(tmp_path / "clean")
+    attempts = {}
+    faulty = crash_once_after_write(idempotent_parquet_sink(out), 1, attempts)
+    assert drain_files(spark, src, chk, make_write(faulty, state)) == 1
+    no_fault = make_write(idempotent_parquet_sink(clean), str(tmp_path / "state"))
+    assert drain_files(spark, src, str(tmp_path / "chk"), no_fault) == 0
+
+    assert len(attempts[1]) == 2 and attempts[1][0] == attempts[1][1]
+    got = sorted(read_idempotent_output(spark, out).collect())
+    assert got == sorted(read_idempotent_output(spark, clean).collect())
+    assert len(got) == 18
+    return got
+
+
+def test_lifetime_sink_crash_restart_is_exactly_once(spark, dirs, tmp_path):
+    got = crash_and_compare(
+        spark,
+        dirs,
+        tmp_path,
+        lambda sink, state: lifetime_foreach_batch(
+            CFG, 10, sink, state_dir=state, order_col="event_id"
+        ),
+    )
+    per_bucket = collections.defaultdict(list)
+    for r in got:  # arrival order
+        per_bucket[r["bucket"]].append(r["seq"])
+    for seqs in per_bucket.values():
+        assert seqs == list(range(len(seqs)))  # no gap, no repeat
+    assert load_counters(dirs[2], 2) == {b: len(s) for b, s in per_bucket.items()}
+
+
+def test_routed_foreach_batch_sink_crash_replays_identically(spark, dirs, tmp_path):
+    crash_and_compare(
+        spark,
+        dirs,
+        tmp_path,
+        lambda sink, _state: routed_foreach_batch(
+            CFG, 10, sink, order_col="event_id"
+        ),
+    )
 
 
 def test_lifetime_missing_state_raises(spark):
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
-        load_counters,
-    )
-
     assert load_counters("/nonexistent-peps-state", -1) == {}
     with pytest.raises(RuntimeError, match="counter state for batch 4"):
         load_counters("/nonexistent-peps-state", 4)

@@ -292,13 +292,6 @@ GROW_PROBED = [
     # rollup joins the grow set for its third-decade point — events
     # grow N× through the exact router + two broadcast layout joins.
     "layout_rebalance_impact",
-    # round 12 (VERDICT r11 item 2): the transformWithState router —
-    # one ValueState counter per bucket serializes each bucket into a
-    # single task per batch BY DESIGN (the reference's shared
-    # AtomicInteger, Bucket.java:14); this probe quantifies the
-    # trade-off the stateful.py docstring promises vs the stateless
-    # modes (route_events_exact's plan) as events grow N×.
-    "stream_route_tws",
     # round 13 (VERDICT r12 item 1): the parallel lifetime router —
     # counter-block reservation + distributed zip-with-index must
     # track route_events_exact's 4-5x band at 100x where the
