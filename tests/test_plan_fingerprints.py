@@ -47,7 +47,7 @@ def test_no_new_exchanges(name, spark, sf_dir, queries):
     # so without this, each fingerprint depends on which queries were
     # built before it (test order, -k selections, the gen tool's list
     # order...). Cleared, every count is the query's own plan in
-    # isolation — the same regime bench.py measures in.
+    # isolation.
     spark.catalog.clearCache()
     actual = plan_exchange_counts(queries[name](spark, sf_dir))
     assert actual["shuffle_exchanges"] <= expected["shuffle_exchanges"], (

@@ -11,7 +11,6 @@ import os
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -72,140 +71,6 @@ class TestMgCertifiedReadoutRunsOnce:
             (7, 300),
             (8, 250),
         ]
-
-
-class TestBenchReferenceMedian:
-    def test_per_query_median_across_runs(self):
-        import sys
-
-        sys.path.insert(0, REPO)
-        from tools.gen_bench_reference import build_reference
-
-        runs = [
-            {"sf": 0.1, "queries": {"a": 1.0, "b": 2.0}, "setup_floor_sec": 2.0},
-            {"sf": 0.1, "queries": {"a": 1.2, "b": 5.0}, "setup_floor_sec": 2.2},
-            {"sf": 0.1, "queries": {"a": 1.1, "b": 2.1}, "setup_floor_sec": 2.4},
-        ]
-        ref = build_reference("r12_solo", runs)
-        # the lucky/unlucky single draws (b: 5.0) don't leak into the
-        # reference — this is exactly the r11 false-flag mechanism
-        assert ref["queries"] == {"a": 1.1, "b": 2.1}
-        assert ref["setup_floor_sec"] == 2.2
-        assert ref["n_runs"] == 3
-
-    def test_sf_mismatch_refused(self):
-        import sys
-
-        sys.path.insert(0, REPO)
-        from tools.gen_bench_reference import build_reference
-
-        with pytest.raises(ValueError, match="disagree on sf"):
-            build_reference(
-                "r12",
-                [
-                    {"sf": 0.1, "queries": {"a": 1.0}},
-                    {"sf": 0.01, "queries": {"a": 0.1}},
-                ],
-            )
-
-    def test_committed_reference_is_multi_run(self):
-        # VERDICT r11 item 1 done-criterion: the committed series must
-        # come from a >=3-run median, not one solo draw.
-        ref = json.load(
-            open(os.path.join(REPO, "docs", "artifacts", "bench_reference.json"))
-        )
-        assert ref.get("n_runs", 1) >= 3, (
-            "bench_reference.json must be a per-query median across "
-            ">=3 solo runs (VERDICT r11 item 1)"
-        )
-
-
-class TestAdjudicatorRemeasureAndMarginals:
-    def _bench(self):
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "bench", os.path.join(REPO, "bench.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        return mod
-
-    def test_remeasure_rescues_false_drift(self):
-        # The r11 false alarm: one query's committed reference point is
-        # a lucky draw, its in-run spread never recovers, BUT a fresh
-        # solo re-measure does — the verdict must NOT be plan drift.
-        b = self._bench()
-        q = {f"s{i}": 1.0 for i in range(8)}
-        q["a"] = 2.0
-        now = {f"s{i}": 1.0 for i in range(8)}
-        now["a"] = 5.0
-        spreads = {f"s{i}": [0.95, 1.1] for i in range(8)}
-        spreads["a"] = [4.8, 5.5]
-        calls = []
-
-        def remeasure(name):
-            calls.append(name)
-            return [2.1, 2.3, 2.2]  # fresh solo reps DO recover
-
-        adj = b.adjudicate(
-            now, spreads, {"round": "rX", "queries": q}, remeasure=remeasure
-        )
-        assert calls == ["a"]
-        assert adj["verdict"] == "contention_suspected_plans_unchanged"
-        assert adj["divergent"]["a"]["remeasured"] == [2.1, 2.2, 2.3]
-
-    def test_remeasure_confirms_real_drift(self):
-        b = self._bench()
-        q = {f"s{i}": 1.0 for i in range(8)}
-        q["a"] = 2.0
-        now = {f"s{i}": 1.0 for i in range(8)}
-        now["a"] = 5.0
-        spreads = {f"s{i}": [0.95, 1.1] for i in range(8)}
-        spreads["a"] = [4.8, 5.5]
-        adj = b.adjudicate(
-            now,
-            spreads,
-            {"round": "rX", "queries": q},
-            remeasure=lambda n: [4.9, 5.1, 5.0],
-        )
-        assert adj["verdict"] == "plan_drift_suspected"
-
-    def test_stream_twin_compared_on_marginal(self):
-        # A twin whose raw median looks fine (floor dilution) but whose
-        # MARGINAL doubled must be flagged: 2.0 floor + 0.5 data -> 2.5
-        # ref; now 2.0 floor + 1.6 data -> 3.6 raw (1.44x raw, under
-        # the old 1.5x gate) but 3.2x on the marginal.
-        b = self._bench()
-        q = {f"s{i}": 1.0 for i in range(8)}
-        q["stream_t"] = 2.5
-        now = {f"s{i}": 1.0 for i in range(8)}
-        now["stream_t"] = 3.6
-        spreads = {f"s{i}": [0.95, 1.1] for i in range(8)}
-        spreads["stream_t"] = [3.5, 3.7]
-        adj = b.adjudicate(
-            now,
-            spreads,
-            {"round": "rX", "queries": q, "setup_floor_sec": 2.0},
-            floors=(2.0, 2.0),
-            stream_twins=frozenset({"stream_t"}),
-        )
-        assert "stream_t" in adj["divergent"]
-        d = adj["divergent"]["stream_t"]
-        assert d["marginal"] == 1.6 and d["ref_marginal"] == 0.5
-        # and without floors the same numbers pass silently — the
-        # masking this item exists to remove
-        adj_raw = b.adjudicate(
-            now, spreads, {"round": "rX", "queries": q}
-        )
-        assert "stream_t" not in adj_raw["divergent"]
-
-    def test_setup_floor_twin_runs(self, spark):
-        b = self._bench()
-        df = b.setup_floor_query(spark)
-        assert df.count() == 1  # one key, two merged one-row batches
-        row = df.collect()[0]
-        assert row["v_sum"] == 2
 
 
 class TestFactPartitionsFallback:

@@ -170,13 +170,13 @@ class TestAnnQuality:
 
 class TestIvfPartitionedLayout:
     def test_write_prunes_probed_cells(self, spark, sf_dir, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.bucketing import (
-            write_ivf_partitioned,
-        )
-
+        # One directory per IVF cell: the layout is the query-side cell
+        # function, so a probe of nprobe cells prunes to their files.
         emb = load_table(spark, sf_dir, "embeddings")
         path = str(tmp_path / "ivf_corpus")
-        write_ivf_partitioned(emb, path, num_cells=8)
+        S.with_ivf_cell(emb, num_cells=8, nprobe=1).write.partitionBy(
+            "ivf_cell"
+        ).parquet(path)
 
         corpus = spark.read.parquet(path)
         # every row landed in a cell directory, none lost

@@ -6,10 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.skew import salted_agg
-from prioritizing_event_processing_with_apache_kafka_spark.sources.bucketing import (
-    read_table,
-    write_bucketed,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
 
 
@@ -64,16 +60,19 @@ class TestBucketedJoin:
     def test_colocated_join_has_no_exchange(self, spark, sf_dir):
         orders = load_table(spark, sf_dir, "orders")
         lineitem = load_table(spark, sf_dir, "lineitem")
-        write_bucketed(orders, "orders_b", bucket_col="o_orderkey", num_buckets=4)
-        write_bucketed(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"),
-            "lineitem_b",
-            bucket_col="o_orderkey",
-            num_buckets=4,
-        )
+        # Spark's table bucketing (saveAsTable) on the join key: the
+        # bucketed scans satisfy the join's distribution from disk
+        # layout, which the merge operators' docs rely on.
+        for df, name in (
+            (orders, "orders_b"),
+            (lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b"),
+        ):
+            df.write.bucketBy(4, "o_orderkey").sortBy("o_orderkey").mode(
+                "overwrite"
+            ).format("parquet").saveAsTable(name)
         try:
-            joined = read_table(spark, "lineitem_b").join(
-                read_table(spark, "orders_b").hint("merge"), "o_orderkey"
+            joined = spark.table("lineitem_b").join(
+                spark.table("orders_b").hint("merge"), "o_orderkey"
             )
             plan = joined._jdf.queryExecution().executedPlan().toString()
             assert "SortMergeJoin" in plan

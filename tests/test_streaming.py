@@ -930,3 +930,98 @@ class TestAssignPartitionPruning:
             if q is not None:
                 q.stop()
             shutil.rmtree(topic_dir, ignore_errors=True)
+
+
+class TestConsumerCrashRestart:
+    """One Platinum file consumer, ``read_bucket_files(streaming=True)``
+    into ``foreachBatch(idempotent_parquet_sink)``. Its sink dies after
+    the write of batch 1 but before the offset commit; restarted from
+    the same checkpoint, Structured Streaming replays batch 1 under the
+    same id and the output must equal a no-fault run exactly once."""
+
+    SCHEMA = "event_id long, key string, partition int"
+    CFG = BucketPriorityConfig(
+        topic="events", buckets=["Platinum", "Gold"], allocation=[70, 30]
+    )
+
+    def _drop(self, spark, topic, d):
+        # 2 events on each of the topic's 10 partitions
+        rows = [
+            (d * 100 + p * 10 + i, f"k-{d}-{p}-{i}", p)
+            for p in range(10)
+            for i in range(2)
+        ]
+        spark.createDataFrame(rows, self.SCHEMA).write.partitionBy(
+            "partition"
+        ).mode("append").parquet(topic)
+
+    def _consume(self, spark, root, crash_at):
+        """Drop three batches into a fresh topic under ``root``, running
+        the consumer to completion after each drop, so each drop is one
+        micro-batch. A failed run restarts from the same checkpoint.
+        Returns ``(restarts, output path)``."""
+        from pyspark.errors import StreamingQueryException
+
+        from prioritizing_event_processing_with_apache_kafka_spark.sources.kafka import (
+            read_bucket_files,
+        )
+        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
+            idempotent_parquet_sink,
+        )
+
+        spec = {s.bucket: s for s in consume_plan(self.CFG, 10)}["Platinum"]
+        topic, chk, out = (f"{root}/{p}" for p in ("topic", "chk", "out"))
+        sink = idempotent_parquet_sink(out)
+        attempts: dict[int, int] = {}
+
+        def write(batch_df, batch_id):
+            sink(batch_df, batch_id)
+            attempts[batch_id] = attempts.get(batch_id, 0) + 1
+            if batch_id == crash_at and attempts[batch_id] == 1:
+                raise RuntimeError("injected crash between sink write and commit")
+
+        def run():
+            q = (
+                read_bucket_files(
+                    spark,
+                    spec,
+                    self.CFG,
+                    topic_path=topic,
+                    schema=self.SCHEMA,
+                    streaming=True,
+                )
+                .writeStream.foreachBatch(write)
+                .option("checkpointLocation", chk)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination(120)
+            finally:
+                q.stop()
+
+        restarts = 0
+        for d in range(3):
+            self._drop(spark, topic, d)
+            try:
+                run()
+            except StreamingQueryException:
+                restarts += 1
+                run()
+        assert sorted(attempts) == [0, 1, 2]
+        return restarts, out
+
+    def test_sink_crash_restart_is_exactly_once(self, spark, tmp_path):
+        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
+            read_idempotent_output,
+        )
+
+        restarts, out = self._consume(spark, tmp_path / "crash", crash_at=1)
+        assert restarts == 1
+        clean_restarts, clean = self._consume(spark, tmp_path / "clean", crash_at=None)
+        assert clean_restarts == 0
+
+        got = sorted(read_idempotent_output(spark, out).collect())
+        assert got == sorted(read_idempotent_output(spark, clean).collect())
+        assert len(got) == 3 * 7 * 2  # 3 drops x Platinum's 7 partitions x 2
+        assert {r["partition"] for r in got} == set(range(7))

@@ -2,9 +2,8 @@
 
 Usage: python tools/profile_query.py [sf_dir] name [name ...]
 
-Runs each query twice (cold, then warm after clearCache — same
-protocol as bench.py) on the bench session config and prints both
-timings plus the number of Spark jobs/stages the run scheduled, which
+Runs each query twice (cold, then warm after clearCache) on a
+``local[SPARK_GRAFT_CPUS]`` session and prints both timings plus the number of Spark jobs/stages the run scheduled, which
 is the first thing to look at when a small-input query is slow: at
 fixture scale, scheduling latency × stage count can dominate actual
 compute, and every avoidable shuffle costs a stage at 100 TB too.
