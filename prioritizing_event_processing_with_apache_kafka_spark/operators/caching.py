@@ -19,7 +19,7 @@ operators' laziness contract:
 Outside any scope, :func:`scoped_persist` degrades to a plain
 ``persist()`` — exactly the pre-existing behavior (documented in
 ``operators/dedup.py``: callers run ``spark.catalog.clearCache()``
-between queries, as ``bench.py`` does).
+between queries).
 
 Scopes nest (inner scopes release only their own frames) and the stack
 is thread-local, so concurrent streaming micro-batches on separate

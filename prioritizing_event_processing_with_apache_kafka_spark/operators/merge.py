@@ -23,8 +23,8 @@ Scale notes (100 TB):
   rows pass through untouched), and the update batch is typically
   tiny relative to the dimension — pass ``broadcast_updates=True``
   to pin the broadcast-hash plan and skip shuffling the dimension.
-- With the history/base bucketed by key at write time
-  (``sources/bucketing.py``), the remaining shuffle disappears and
+- With the history/base bucketed by key at write time (Spark's
+  ``DataFrameWriter.bucketBy``), the remaining shuffle disappears and
   the merge is a map-side join per bucket.
 
 The reference system (a Kafka partitioner/assignor,

@@ -10,7 +10,7 @@ Pareto/ABC censuses, Gini coefficients, and "top share" reports need.
 
 :func:`global_ordered_scan` computes the same numbers with the same
 two-pass trick the routing engine's exact round-robin uses
-(``operators/routing.py:_exact_global_sequence``), generalized from
+(``operators/routing.py:exact_sequence``), generalized from
 per-bucket to a single global ordering and extended from ranks to
 running sums:
 

@@ -7,7 +7,8 @@ The Spark-first re-expression of the reference's producer
 - **P2 topic guard**: records of other topics keep a NULL partition so
   the downstream Kafka sink's own partitioner decides — the analog of
   returning ``UNKNOWN_PARTITION`` (``BucketPriorityPartitioner.java:64-68``).
-- **P3 membership**: broadcast join against the tiny layout table;
+- **P3 membership**: broadcast join against the tiny layout table
+  (in exact mode the layout rides the offsets broadcast instead);
   unknown buckets get NULL partition (fall-through,
   ``BucketPriorityPartitioner.java:74``).
 - **P6 layout**: the pure-Python kernel's output becomes a
@@ -28,13 +29,15 @@ serialize the world):
 
 - ``mode="exact"`` — global per-bucket rank ordered by ``order_col``.
   Bit-reproducible round-robin (what the reference's unit tests
-  assert: exactly N/size records per partition). Computed *distributed*:
-  one range shuffle co-sorts ``(bucket, order)`` across all tasks, then
-  the global rank is reconstructed as ``per-(task, bucket) offset +
-  local index`` from a tiny (#tasks × #buckets)-row statistics table
-  that is broadcast back — full cluster parallelism, never one task
-  per bucket (a naive ``Window.partitionBy(bucket)`` would collapse a
-  100 TB batch into #buckets tasks).
+  assert: exactly N/size records per partition). Computed *distributed*
+  by :func:`exact_sequence`, the kernel the lifetime router
+  (``streaming/lifetime.py``) shares: one range shuffle co-sorts
+  ``(bucket, order)`` across all tasks, then the global rank is
+  reconstructed as ``per-(task, bucket) offset + local index`` from a
+  tiny (#tasks × #buckets)-row statistics table, collected once and
+  broadcast back — full cluster parallelism, never one task per bucket
+  (a naive ``Window.partitionBy(bucket)`` would collapse a 100 TB
+  batch into #buckets tasks).
 - ``mode="spread"`` (default) — per-Spark-partition round-robin using
   ``monotonically_increasing_id``: every task keeps its own dense
   counter, so records are spread uniformly over the bucket's partition
@@ -48,7 +51,7 @@ serialize the world):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.caching import (
@@ -103,84 +106,173 @@ def layout_table(
 _MID_LOCAL_MASK = (1 << 33) - 1
 
 
-def _exact_global_sequence(tagged: DataFrame, order_col: Column | str) -> DataFrame:
-    """Attach ``__peps_seq`` = 0-based global rank of each row within its
-    bucket, ordered by ``order_col`` — without serializing a bucket into
-    one task.
+def _range_partitions(df: DataFrame, *, target_mb: int = 32) -> int:
+    """Range-shuffle partition count for the exact sequence, sized from
+    the input's ESTIMATED bytes (optimizer stats — file sizes for a
+    file scan or file-source micro-batch; no job runs), ~``target_mb``
+    of decompressed data per sort partition assuming ~3x parquet
+    expansion, clamped to [1, 4096].
 
-    Distributed zip-with-index, DataFrame-native:
+    Sized from DATA, not core count: the rank shuffle's cost is
+    per-partition scheduling + sampling overhead at fixture scale and
+    sort-buffer pressure at 100 TB — a fixed core-count constant is
+    wrong at both ends. The rank arithmetic is partition-count-invariant
+    (global order across (pid, local id) is what defines the sequence),
+    so this only moves overhead, never results."""
+    try:
+        nbytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return df.sparkSession.sparkContext.defaultParallelism
+    if nbytes >= 1 << 60:
+        # Stats unavailable: Spark reports the spark.sql.defaultSizeInBytes
+        # sentinel (Long.MaxValue) for plans without size estimates (e.g.
+        # non-file micro-batch sources). Trusting it would clamp to 4096
+        # range partitions; fall back to the scheduler default instead.
+        return df.sparkSession.sparkContext.defaultParallelism
+    return max(1, min(4096, -(-nbytes * 3 // (target_mb << 20))))
 
-    1. ``repartitionByRange(bucket, order)`` + local sort: after the one
-       range shuffle, rows of a bucket are globally ordered *across*
-       task ids (task *i*'s rows all precede task *i+1*'s).
-    2. ``monotonically_increasing_id`` gives ``(task_id, local_index)``.
-       The frame is persisted: the id is tied to the physical layout, so
-       the statistics pass and the final join must read the same
-       materialization.
-    3. A tiny aggregate (#tasks × #buckets rows, map-side combined)
-       yields per-(task, bucket) row counts and min local index; a
-       cumulative sum over task id turns counts into bucket-rank
-       offsets. Broadcast back, ``rank = offset + local - min_local``.
 
-    The result is invariant to where the range partitioner happens to
-    place split points, so it is bit-identical to
-    ``row_number() over (partition by bucket order by order_col) - 1``
-    whenever the ordering key is unique within the bucket.
+def exact_sequence(
+    tagged: DataFrame,
+    order_col: Column | str,
+    base_counters: dict[str | None, int],
+    config: BucketPriorityConfig,
+    num_partitions: int,
+) -> tuple[DataFrame, dict[str | None, int]]:
+    """The one exact-sequence kernel: ``route(mode="exact")`` runs it
+    with ``base_counters={}``, the lifetime router
+    (``streaming/lifetime.py``) with the counters persisted after the
+    previous micro-batch.
 
-    Cache lifetime: the persisted midframe is keyed by logical-plan
-    equality, so repeated batch queries over the same input+config
-    share ONE cache entry (they rebuild the identical plan), and
-    distinct configs add one entry each — bounded by the number of
-    distinct routing configs in the session, evicted LRU. Callers with
-    a bounded batch lifetime (foreachBatch) release it eagerly via the
-    ``_peps_exact_cache`` handle on the returned frame.
+    ``tagged`` carries the bucket in ``__peps_bucket``. Returns
+    ``(sequenced, advanced_counters)``: ``sequenced`` gains
+    ``__peps_seq`` = ``base_counters[bucket]`` (0 when missing) + the
+    0-based rank of the row within its bucket, ordered by
+    ``order_col``, and the bucket's layout columns
+    ``__peps_layout_{bucket,partition_lo,bucket_size}`` (layout bucket
+    NULL when the bucket is not in the layout, the NULL bucket
+    included). The NULL bucket gets a counter of its own.
+
+    Distributed zip-with-index, DataFrame-native — never one task per
+    bucket:
+
+    1. **rank** — a range shuffle on ``(bucket, order)`` + local sort
+       puts each bucket's rows in global order across task ids (task
+       *i*'s rows all precede task *i+1*'s);
+       ``monotonically_increasing_id`` gives ``(task id, local index)``.
+       A batch that fits one range partition takes ``coalesce(1)``
+       instead: the same single sorted partition without the range
+       sampling job and exchange. The frame is persisted — the id is
+       tied to the physical layout, so the stats pass and the final
+       join must read the same materialization.
+    2. **reserve** — ONE collect of a tiny aggregate (#tasks × #buckets
+       rows, map-side combined) gives per-(task, bucket) row counts and
+       min local index. On the driver, walking tasks in order turns the
+       counts into offsets and advances each bucket's counter: bucket
+       *b* reserves the block ``[base, base + n)``.
+    3. **assign** — the offsets, with the layout folded onto each row,
+       are broadcast back as ONE table:
+       ``seq = offset + local - min_local``.
+
+    This runs the stats job when called. The result is invariant to
+    where the range partitioner places split points, so it equals
+    ``base + row_number() over (partition by bucket order by
+    order_col) - 1`` whenever the ordering key is unique within the
+    bucket.
+
+    Cache lifetime: ``sequenced`` carries the persisted midframe as
+    ``_peps_exact_cache``; callers with a bounded batch lifetime
+    (foreachBatch) unpersist it eagerly, others leave it to LRU.
     """
+    spark = tagged.sparkSession
     order = F.col(order_col) if isinstance(order_col, str) else order_col
-    srt = (
-        tagged.repartitionByRange(F.col("__peps_bucket"), order)
-        .sortWithinPartitions(F.col("__peps_bucket"), order)
-        .withColumn("__peps_mid", F.monotonically_increasing_id())
+    bucket = F.col("__peps_bucket")
+    nparts = _range_partitions(tagged)
+    gathered = (
+        tagged.coalesce(1)
+        if nparts == 1
+        else tagged.repartitionByRange(nparts, bucket, order)
     )
-    srt = scoped_persist(srt)
+    srt = scoped_persist(
+        gathered.sortWithinPartitions(bucket, order).withColumn(
+            "__peps_mid", F.monotonically_increasing_id()
+        )
+    )
     pid = F.shiftrightunsigned(F.col("__peps_mid"), 33)
     local = F.col("__peps_mid").bitwiseAND(F.lit(_MID_LOCAL_MASK))
     stats = (
-        srt.where(F.col("__peps_bucket").isNotNull())
-        .groupBy(pid.alias("__peps_pid"), F.col("__peps_bucket"))
+        srt.groupBy(pid.alias("__peps_pid"), bucket)
         .agg(
             F.count(F.lit(1)).alias("__peps_cnt"),
             F.min(local).alias("__peps_lo"),
         )
+        .collect()
     )
-    cum = (
-        Window.partitionBy("__peps_bucket")
-        .orderBy("__peps_pid")
-        .rowsBetween(Window.unboundedPreceding, -1)
+    layout = {
+        r.bucket: (r.partition_lo, r.size)
+        for r in compute_layout(
+            num_partitions, config.buckets_with_allocation(), topic=config.topic
+        )
+    }
+    counters = dict(base_counters)
+    offset_rows = []
+    for row in sorted(
+        stats,
+        key=lambda r: ((r["__peps_bucket"] is not None, r["__peps_bucket"]), r["__peps_pid"]),
+    ):
+        b = row["__peps_bucket"]
+        base = counters.get(b, 0)
+        lo, size = layout.get(b, (None, None))
+        offset_rows.append(
+            (row["__peps_pid"], b, base, row["__peps_lo"], b if b in layout else None, lo, size)
+        )
+        counters[b] = base + row["__peps_cnt"]
+    # One parallelize slice: the rows are consumed only as a broadcast
+    # build, and the default slicing would run one near-empty Python
+    # deserializer task per core.
+    offsets = spark.createDataFrame(
+        spark.sparkContext.parallelize(offset_rows, 1),
+        "__peps_pid long, __peps_bucket string, __peps_base long, __peps_lo long, "
+        "__peps_layout_bucket string, __peps_layout_partition_lo int, "
+        "__peps_layout_bucket_size int",
     )
-    offsets = stats.select(
-        "__peps_pid",
-        "__peps_bucket",
-        F.coalesce(F.sum("__peps_cnt").over(cum), F.lit(0)).alias("__peps_off"),
-        "__peps_lo",
-    )
-    joined = srt.withColumn("__peps_pid", pid).join(
-        F.broadcast(offsets), ["__peps_pid", "__peps_bucket"], "left"
+    srtp = srt.withColumn("__peps_pid", pid)
+    # eqNullSafe: the NULL-bucket group must match its offsets row too.
+    joined = (
+        srtp.join(
+            F.broadcast(offsets),
+            srtp["__peps_bucket"].eqNullSafe(offsets["__peps_bucket"])
+            & (srtp["__peps_pid"] == offsets["__peps_pid"]),
+            "left",
+        )
+        .drop(offsets["__peps_bucket"])
+        .drop(offsets["__peps_pid"])
     )
     out = joined.withColumn(
         "__peps_seq",
-        (F.col("__peps_off") + local.cast("long") - F.col("__peps_lo")).cast("long"),
-    ).drop("__peps_mid", "__peps_pid", "__peps_off", "__peps_lo")
-    # Hand the persisted midframe to the caller so bounded-lifetime uses
-    # (per-micro-batch routing) can unpersist eagerly.
+        (F.col("__peps_base") + local.cast("long") - F.col("__peps_lo")).cast("long"),
+    ).drop("__peps_mid", "__peps_pid", "__peps_base", "__peps_lo")
     out._peps_exact_cache = srt  # type: ignore[attr-defined]
-    return out
+    return out, counters
+
+
+def partition_column(seq: Column) -> Column:
+    """``partition = partition_lo + pmod(seq, bucket_size)`` over the
+    ``__peps_layout_*`` columns, exactly as ``Bucket.nextPartition``
+    computes it: bucket not in the layout → NULL, starved bucket → -1."""
+    size = F.col("__peps_layout_bucket_size")
+    return (
+        F.when(F.col("__peps_layout_bucket").isNull(), F.lit(None).cast("int"))
+        .when(size == 0, F.lit(-1))
+        .otherwise((F.col("__peps_layout_partition_lo") + F.pmod(seq, size)).cast("int"))
+    )
 
 
 def _sequence_column(mode: str, order_col: Column | str | None) -> Column | None:
     if mode == "exact":
         if order_col is None:
             raise ValueError("mode='exact' requires order_col (a deterministic ordering)")
-        return F.col("__peps_seq").cast("long")
+        return F.col("__peps_seq")
     if mode == "spread":
         if order_col is not None:
             # Round-robin driven by an existing monotonic sequence (the
@@ -245,9 +337,15 @@ def route(
 
     The layout join is an explicit ``broadcast`` of a ≤#buckets-row
     table: at any scale the fact side is never shuffled for routing.
+
+    ``mode="exact"`` builds eagerly: the call itself runs the small
+    stats job of :func:`exact_sequence` (one collect of #tasks ×
+    #buckets rows) and persists the sorted input, whose handle the
+    result carries as ``_peps_exact_cache``.
     """
-    spark = df.sparkSession
-    layout = layout_table(spark, config, num_partitions)
+    seq = _sequence_column(mode, order_col)
+    if seq_col is not None and mode != "exact":
+        raise ValueError("seq_col requires mode='exact' (no rank elsewhere)")
 
     # P1 type guard: the reference only parses `key instanceof String`
     # (BucketPriorityPartitioner.java:69) — any other key type falls
@@ -271,35 +369,29 @@ def route(
         # P2: bucket logic only applies to the configured topic.
         bucket = F.when(~is_foreign_topic, bucket)
     routed = df.withColumn("__peps_bucket", bucket)
-    exact_cache = None
     if mode == "exact":
-        if order_col is None:
-            raise ValueError("mode='exact' requires order_col (a deterministic ordering)")
-        routed = _exact_global_sequence(routed, order_col)
+        # The kernel's offsets broadcast already carries the layout.
+        routed, _counters = exact_sequence(routed, order_col, {}, config, num_partitions)
         exact_cache = routed._peps_exact_cache  # type: ignore[attr-defined]
+    else:
+        exact_cache = None
+        # Prefix every layout column so the join can never collide with
+        # (or later silently drop) same-named columns on the user's
+        # DataFrame.
+        layout = layout_table(df.sparkSession, config, num_partitions)
+        prefixed = layout.select(
+            *(F.col(c).alias(f"__peps_layout_{c}") for c in layout.columns)
+        )
+        routed = routed.join(
+            F.broadcast(prefixed),
+            routed["__peps_bucket"] == F.col("__peps_layout_bucket"),
+            "left",
+        )
 
-    # Prefix every layout column so the join can never collide with (or
-    # later silently drop) same-named columns on the user's DataFrame.
-    prefixed = layout.select(
-        *(F.col(c).alias(f"__peps_layout_{c}") for c in layout.columns)
-    )
-    routed = routed.join(
-        F.broadcast(prefixed),
-        routed["__peps_bucket"] == F.col("__peps_layout_bucket"),
-        "left",
-    )
-
-    seq = _sequence_column(mode, order_col)
     if seq is None:  # hash mode
         seq = F.xxhash64(F.col(key_col).cast("string"))
     size = F.col("__peps_layout_bucket_size")
-    partition = (
-        F.when(F.col("__peps_layout_bucket").isNull(), F.lit(None).cast("int"))
-        .when(size == 0, F.lit(-1))
-        .otherwise(
-            (F.col("__peps_layout_partition_lo") + F.pmod(seq, size)).cast("int")
-        )
-    )
+    partition = partition_column(seq)
     status = (
         F.when(is_foreign_topic, F.lit("bypassed"))
         .when(F.col("__peps_layout_bucket").isNull(), F.lit("unroutable"))
@@ -312,21 +404,27 @@ def route(
     )
 
     if seq_col is not None:
-        if mode != "exact":
-            raise ValueError("seq_col requires mode='exact' (no rank elsewhere)")
-        routed = routed.withColumn(seq_col, F.col("__peps_seq").cast("long"))
+        # The kernel counts the NULL bucket too; route() shows no rank
+        # for bypassed or unparseable keys.
+        routed = routed.withColumn(
+            seq_col, F.when(F.col("__peps_bucket").isNotNull(), F.col("__peps_seq"))
+        )
     out = (
         routed.withColumn("partition", partition)
         .withColumn("route_status", status)
         .withColumn("bucket", F.col("__peps_bucket"))
-        .drop("__peps_bucket", "__peps_seq", *prefixed.columns)
+        .drop(
+            "__peps_bucket",
+            "__peps_seq",
+            *(f"__peps_layout_{c}" for c in LAYOUT_SCHEMA.names),
+        )
     )
     if config.on_unroutable == "discard":
         out = out.filter(F.col("route_status") != "unroutable")
     if exact_cache is not None:
-        # Expose the midframe persisted by _exact_global_sequence so
-        # bounded-lifetime callers (per-micro-batch routing) can release
-        # it eagerly instead of waiting for LRU eviction.
+        # Expose the persisted midframe so bounded-lifetime callers
+        # (per-micro-batch routing) can release it eagerly instead of
+        # waiting for LRU eviction.
         out._peps_exact_cache = exact_cache  # type: ignore[attr-defined]
     return out
 

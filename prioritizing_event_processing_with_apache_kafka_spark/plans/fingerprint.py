@@ -398,11 +398,12 @@ def streaming_core_queries():
         # Mirror q_stream_route_lifetime's steady state: batch 2 (the
         # post-midpoint events) routed from a non-zero counter base.
         # The contract is AT MOST one range exchange (the distributed
-        # zip-with-index; a batch sized to one partition takes the
-        # r14 coalesce shortcut instead) + ONE broadcast join (offsets
-        # with the layout folded on) — a per-bucket window/funnel
-        # (#buckets reducers) or a second fact scan sneaking in fails
-        # the pin.
+        # zip-with-index of operators/routing.py:exact_sequence, the
+        # kernel route(mode="exact") shares; a batch sized to one
+        # partition takes its coalesce shortcut instead) + ONE
+        # broadcast join (offsets with the layout folded on) — a
+        # per-bucket window/funnel (#buckets reducers) or a second
+        # fact scan sneaking in fails the pin.
         from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
             EVENTS_CONFIG,
             EVENTS_NUM_PARTITIONS,

@@ -76,8 +76,8 @@ def compact_parquet(
     """Rewrite ``in_path`` into right-sized parquet files at
     ``out_path``; returns the number of output files written.
 
-    Hive-partitioned input (``key=value`` directory levels, e.g.
-    ``write_ivf_partitioned``'s ``ivf_cell=N`` layout) keeps its
+    Hive-partitioned input (``key=value`` directory levels, e.g. an
+    ``ivf_cell=N`` layout written with ``partitionBy``) keeps its
     partitioning: the discovered partition columns are re-applied
     with ``partitionBy`` on the rewrite, so the partition-pruning
     layout the directory structure encodes survives compaction

@@ -293,6 +293,21 @@ class TestExactModeDistributed:
     the heavy side's sequence survives many input partitions."""
 
     def test_matches_window_row_number(self, spark):
+        self._check_matches_window_row_number(spark)
+
+    def test_matches_window_row_number_forced_ranges(self, spark, exact_ranges, aqe):
+        self._check_matches_window_row_number(spark)
+
+    def test_exact_counts_across_many_partitions(self, spark):
+        self._check_exact_counts_across_many_partitions(spark)
+
+    def test_exact_counts_across_many_partitions_forced_ranges(
+        self, spark, exact_ranges, aqe
+    ):
+        self._check_exact_counts_across_many_partitions(spark)
+
+    @staticmethod
+    def _check_matches_window_row_number(spark):
         from pyspark.sql import Window
 
         cfg = BucketPriorityConfig(**CFG_3B)
@@ -315,7 +330,8 @@ class TestExactModeDistributed:
             expect = lo + r["seq"] % size
             assert got[r["record_id"]][1] == expect, r
 
-    def test_exact_counts_across_many_partitions(self, spark):
+    @staticmethod
+    def _check_exact_counts_across_many_partitions(spark):
         # 960 records, one bucket of 4 partitions over 8 → exactly 240
         # per partition, regardless of how the input was partitioned.
         cfg = BucketPriorityConfig(topic="orders", buckets=["B1"], allocation=[100])
@@ -333,25 +349,39 @@ class TestExactModeProperty:
     partitionings must all reproduce the pure-Python reference
     computation (global rank by record_id within bucket)."""
 
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
+    def _random_configs(test):
+        from hypothesis import HealthCheck, given, settings
+        from hypothesis import strategies as st
 
-    @settings(
-        max_examples=6,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(
-        nparts=st.integers(2, 24),
-        alloc=st.sampled_from(
-            [(100,), (50, 50), (70, 30), (50, 30, 20), (55, 40, 5), (40, 30, 20, 10)]
-        ),
-        nrows=st.integers(1, 223),
-        nparts_in=st.integers(1, 7),
-    )
+        return settings(
+            max_examples=6,
+            deadline=None,
+            suppress_health_check=[HealthCheck.function_scoped_fixture],
+        )(
+            given(
+                nparts=st.integers(2, 24),
+                alloc=st.sampled_from(
+                    [(100,), (50, 50), (70, 30), (50, 30, 20), (55, 40, 5), (40, 30, 20, 10)]
+                ),
+                nrows=st.integers(1, 223),
+                nparts_in=st.integers(1, 7),
+            )(test)
+        )
+
+    @_random_configs
     def test_random_configs_match_pure_python_reference(
         self, spark, nparts, alloc, nrows, nparts_in
     ):
+        self._check_random_config(spark, nparts, alloc, nrows, nparts_in)
+
+    @_random_configs
+    def test_random_configs_match_pure_python_reference_forced_ranges(
+        self, spark, exact_ranges, aqe, nparts, alloc, nrows, nparts_in
+    ):
+        self._check_random_config(spark, nparts, alloc, nrows, nparts_in)
+
+    @staticmethod
+    def _check_random_config(spark, nparts, alloc, nrows, nparts_in):
         from hypothesis import assume
 
         from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout

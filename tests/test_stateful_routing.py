@@ -15,6 +15,7 @@ import pytest
 from pyspark.errors import StreamingQueryException
 
 from prioritizing_event_processing_with_apache_kafka_spark import BucketPriorityConfig
+from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import route
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime import (
     lifetime_foreach_batch,
     load_counters,
@@ -188,6 +189,16 @@ def test_lifetime_batch_matches_reference_model(spark):
     plain-Python counter model per event: same seq, same partition,
     same bucket — including the NULL-key group, an unknown bucket, and
     the cross-batch continuation."""
+    _check_lifetime_batch_matches_reference_model(spark)
+
+
+def test_lifetime_batch_matches_reference_model_forced_ranges(spark, exact_ranges, aqe):
+    """The same check with the kernel's range-partition count forced,
+    under AQE on and off."""
+    _check_lifetime_batch_matches_reference_model(spark)
+
+
+def _check_lifetime_batch_matches_reference_model(spark):
     base = dt.datetime(2024, 1, 1)
 
     def rows(n0, n):
@@ -220,6 +231,31 @@ def test_lifetime_batch_matches_reference_model(spark):
     # the advanced counters equal the per-group row totals
     assert counters == expect_counters
     assert sum(counters.values()) == 24
+
+
+def test_exact_routers_write_no_session_conf(spark, monkeypatch):
+    """Neither exact router may write a session conf: concurrent
+    foreachBatch queries share the session, and two interleaved
+    set/restore pairs leave the session with one query's temporary
+    value for good."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    calls = []
+    real_set = RuntimeConfig.set
+
+    def record(self, key, value):
+        calls.append((key, value))
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    df = spark.createDataFrame(
+        [(i, ["Platinum", "Gold"][i % 2] + f"-{i}") for i in range(20)],
+        "event_id long, key string",
+    )
+    route(df, CFG, 10, order_col="event_id", mode="exact").collect()
+    routed, _counters = route_batch_lifetime(df, CFG, 10, {"Gold": 3})
+    routed.collect()
+    assert calls == []
 
 
 def test_lifetime_starved_bucket_parity(spark):

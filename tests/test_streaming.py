@@ -632,21 +632,26 @@ class TestIdempotentSink:
         b0 = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, v string")
         b1 = spark.createDataFrame([(4, "d"), (5, "e")], "id long, v string")
 
-        write(b0, 0)
-        write(b1, 1)
-        # crash-recovery replay: batch 0 is delivered again (engine replays
-        # the same data for the same batch_id) — output must not grow
-        write(b0, 0)
+        # The sink's per-write dynamic overwrite must hold whatever the
+        # session says: under a static session mode, a replay that fell
+        # back to it would truncate the whole path, batch 1 included.
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "static")
+        try:
+            write(b0, 0)
+            write(b1, 1)
+            # crash-recovery replay: batch 0 is delivered again (engine
+            # replays the same data for the same batch_id) — output must
+            # not grow, and batch 1's rows must survive
+            write(b0, 0)
+        finally:
+            spark.conf.set(key, prev)
 
         got = read_idempotent_output(spark, out)
         assert got.count() == 5
         assert sorted(r.id for r in got.collect()) == [1, 2, 3, 4, 5]
         assert got.columns == ["id", "v"]
-        # the dynamic-overwrite conf was restored after each write
-        assert (
-            spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-            == "static"
-        )
 
     def test_partial_batch_rewrite_is_replaced(self, spark, stream_dir):
         from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
