@@ -87,7 +87,6 @@ _DRIVER_HEAD = [
     "rolling_active_users",
     "source_lang_fd",
     "source_overlap",
-    "source_vocab_drift",
     "supplier_ship_sla",
     "user_churn_census",
     "user_decayed_value",

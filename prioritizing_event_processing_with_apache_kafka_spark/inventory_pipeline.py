@@ -1,17 +1,16 @@
-"""Query inventory, part 2: training-data pipeline operators.
+"""Query inventory, part 2: corpus, embedding and event-analytics queries.
 
-Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), embedding
-similarity (exact top-k, within-label near-dup, LSH ANN) and text
-analysis (token stats, quality, language-ID, fingerprint) — each over
-the driver's ``documents`` / ``embeddings`` fixtures, with DuckDB
-oracles wherever the operator is SQL-expressible.
+Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash) and its graph
+closures, term statistics, embedding clustering and PCA, sampling,
+streaming rollups and keyed time-series features — each over the
+fixture tables, with DuckDB oracles wherever the operator is
+SQL-expressible.
 
 The probabilistic near-dup operators (MinHash, SimHash) *verify* their
 candidates with the exact n-gram Jaccard before reporting, so their
 output contract equals the ground-truth pair set (the corpus's planted
 near-dups all sit at Jaccard ≥ 0.89, far above the banding recall
-knee) — making even the sketch-based operators oracle-checkable. The
-LSH ANN query is approximate by design → rows-only check.
+knee) — making even the sketch-based operators oracle-checkable.
 """
 
 from __future__ import annotations
@@ -26,11 +25,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.caching imp
 )
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators import dedup as D
-from prioritizing_event_processing_with_apache_kafka_spark.operators import lm as LM
-from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-    similarity as S,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators import text as TX
 from prioritizing_event_processing_with_apache_kafka_spark.operators import (
     timeseries as TS,
 )
@@ -274,241 +268,8 @@ def q_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Embedding similarity
-# ---------------------------------------------------------------------------
-
-_SQL_DOT = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(generate_series(1, len({a})), i -> {a}[i]::DOUBLE * {b}[i]::DOUBLE)), "
-    "(acc, v) -> acc + v)"
-)
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"{_SQL_DOT.format(a=a, b=b)} / "
-        f"(sqrt({_SQL_DOT.format(a=a, b=a)}) * sqrt({_SQL_DOT.format(a=b, b=b)}))"
-    )
-
-
-def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Deliberately NOT spread() (r13 experiment): at fixture scale the
-    # corpus × 5-query fold count is tiny (~10k dot products) and the
-    # injected round-robin exchange measured strictly slower
-    # (1.21 s -> 1.52 s A/B); at real scale the scan is already wide.
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.cosine_topk(emb, queries, k=5)
-
-
-SQL_EMBEDDING_TOPK = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qvec FROM embeddings WHERE vec_id < 5
-), scored AS (
-  SELECT q.query_id, e.vec_id,
-         ROUND({_sql_cosine('q.qvec', 'e.embedding')}, 6) AS cos_sim
-  FROM embeddings e CROSS JOIN q
-  WHERE e.vec_id <> q.query_id
-), ranked AS (
-  SELECT query_id, vec_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(rank AS INTEGER) AS rank, cos_sim FROM ranked WHERE rank <= 5
-"""
-
-
-def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Within-label near-duplicate pairs by exact cosine ≥ 0.4 — the
-    blocked (label-partitioned) variant of all-pairs similarity."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    a = emb.select(
-        F.col("label"), F.col("vec_id").alias("x"), F.col("embedding").alias("va")
-    )
-    b = emb.select(
-        F.col("label"), F.col("vec_id").alias("y"), F.col("embedding").alias("vb")
-    )
-    return (
-        a.join(b, "label")
-        .filter(F.col("x") < F.col("y"))
-        .withColumn("cos_sim", F.round(S.cosine("va", "vb"), 6))
-        .filter(F.col("cos_sim") >= 0.4)
-        .select("label", "x", "y", "cos_sim")
-    )
-
-
-SQL_EMBEDDING_NEARDUP = f"""
-SELECT a.label, a.vec_id AS x, b.vec_id AS y,
-       ROUND({_sql_cosine('a.embedding', 'b.embedding')}, 6) AS cos_sim
-FROM embeddings a JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE ROUND({_sql_cosine('a.embedding', 'b.embedding')}, 6) >= 0.4
-"""
-
-
-def _with_recall_vs_exact(
-    ann: DataFrame, exact: DataFrame, *, k: int
-) -> DataFrame:
-    """Attach per-query ``recall_vs_exact`` (|ANN top-k ∩ exact top-k| / k)
-    to an ANN result — the self-certifying quality figure for queries
-    whose values can't have a SQL oracle (approximate by design). The
-    exact side is the same small query set, so the extra cost is one
-    more broadcast-scored corpus scan, not a new shape."""
-    hits = (
-        ann.select("query_id", "vec_id")
-        .join(exact.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi")
-        .groupBy("query_id")
-        .agg((F.count(F.lit(1)).cast("double") / k).alias("recall_vs_exact"))
-    )
-    return ann.join(hits, "query_id", "left").withColumn(
-        "recall_vs_exact", F.coalesce("recall_vs_exact", F.lit(0.0))
-    )
-
-
-def q_embedding_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF (inverted-file) approximate top-k with multi-probe — each
-    row carries its query's measured ``recall_vs_exact`` against the
-    exact brute-force top-k computed in the same query, and the local
-    gate (tools/check_oracle.py) enforces MEAN recall@5 ≥ 0.8 as a
-    hard pass/fail. Config note: this synthetic corpus's true
-    neighbors sit near-orthogonal (cos 0.25-0.42), the adversarial
-    regime for IVF — true neighbors land ~uniformly across cells, so
-    recall ≈ nprobe/num_cells and hitting 0.8 needs probing most
-    cells (16 cells / 12 probes → 0.92 both sfs, measured). Real
-    embedding corpora cluster, which is what makes
-    nprobe/num_cells of a few percent sufficient at 100 TB; the knob
-    trades scan fraction for recall either way."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = S.ivf_ann_topk(emb, queries, k=5, num_cells=16, nprobe=12)
-    return _with_recall_vs_exact(ann, S.cosine_topk(emb, queries, k=5), k=5)
-
-
-def q_embedding_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN with exact re-ranking (r10) — the
-    quantization-family member the int8 path doesn't cover: per-
-    subspace codebooks trained in-plan (all m subspaces in the same
-    Lloyd's passes), corpus encoded to m sub-centroid ids (a ~51×
-    footprint cut at m=16 vs the fp64 vectors), queries scored against
-    every code via the broadcast ADC lookup table, and the k·rerank
-    shortlist re-scored with exact cosine — the production two-stage
-    shape (codes in memory, full vectors only for the shortlist).
-    Each row carries its query's measured ``recall_vs_exact`` against
-    the exact brute-force top-k computed in the same query; the local
-    gate enforces MEAN recall@5 ≥ 0.8 (measured 1.00 at both sfs with
-    m=16/ksub=32/rerank=16 on this adversarial near-orthogonal corpus;
-    ADC-only recall is 0.64-0.72 here, which is WHY the re-rank stage
-    exists). Machine-audited, rows-only for the driver."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = S.pq_ann_topk(
-        emb, queries, k=5, m=16, ksub=32, n_iter=3, rerank=16
-    )
-    return _with_recall_vs_exact(ann, S.cosine_topk(emb, queries, k=5), k=5)
-
-
-def q_embedding_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-table hyperplane-LSH approximate top-k (recall < 1 by
-    design) — rows-only check; each row carries its query's measured
-    ``recall_vs_exact`` against the exact top-k computed in the same
-    query (4 planes × 8 tables → 0.84 at sf0.01 / 0.88 at sf0.1 on
-    this corpus, whose true neighbors sit near-orthogonal at cos
-    0.25-0.42 — the hard regime for hyperplane LSH; deterministic
-    seeded planes make the figure reproducible; ≥ 0.8 floor asserted
-    in ``tests/test_sinks_and_ann.py``)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    ann = S.lsh_ann_topk(emb, queries, k=5, num_planes=4, num_tables=8)
-    return _with_recall_vs_exact(ann, S.cosine_topk(emb, queries, k=5), k=5)
-
-
-# ---------------------------------------------------------------------------
 # Text analysis
 # ---------------------------------------------------------------------------
-
-
-def q_text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = TX.token_counts(load_table(spark, sf_dir, "documents"))
-    return docs.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_tokens").alias("sum_tokens"),
-        (F.sum("n_tokens").cast("double") / F.count(F.lit(1))).alias("avg_tokens"),
-        F.sum(F.length("text")).alias("sum_chars"),
-        F.sum("n_tokens_re").alias("sum_tokens_re"),
-    )
-
-
-SQL_TEXT_TOKEN_STATS = """
-SELECT lang, COUNT(*) AS n_docs,
-       CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS sum_tokens,
-       CAST(SUM(len(string_split(text, ' '))) AS DOUBLE) / COUNT(*) AS avg_tokens,
-       CAST(SUM(length(text)) AS BIGINT) AS sum_chars,
-       CAST(SUM(len(regexp_extract_all(text, '[a-z0-9]+'))) AS BIGINT) AS sum_tokens_re
-FROM documents GROUP BY lang
-"""
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = TX.quality_features(load_table(spark, sf_dir, "documents"))
-    return docs.select(
-        "doc_id", "n_chars_m", "n_tokens", "mean_word_len", "stopword_ratio",
-        "alnum_ratio", "digit_ratio",
-    )
-
-
-_SQL_STOPLIST = "('the', 'a', 'of', 'to', 'and')"
-
-SQL_TEXT_QUALITY = f"""
-SELECT doc_id,
-       length(text) AS n_chars_m,
-       len(string_split(text, ' ')) AS n_tokens,
-       CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-         / len(string_split(text, ' ')) AS mean_word_len,
-       CAST(len(list_filter(string_split(text, ' '), t -> t IN {_SQL_STOPLIST})) AS DOUBLE)
-         / len(string_split(text, ' ')) AS stopword_ratio,
-       CAST(length(text) - length(regexp_replace(text, '[a-z0-9]', '', 'g')) AS DOUBLE)
-         / length(text) AS alnum_ratio,
-       CAST(length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS DOUBLE)
-         / length(text) AS digit_ratio
-FROM documents
-"""
-
-
-def q_lang_id_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = TX.language_guess(load_table(spark, sf_dir, "documents"))
-    return docs.groupBy("lang", "lang_pred").agg(F.count(F.lit(1)).alias("n_docs"))
-
-
-SQL_LANG_ID_EVAL = f"""
-SELECT lang,
-       CASE WHEN len(list_filter(string_split(text, ' '), t -> t IN {_SQL_STOPLIST})) >= 2
-            THEN 'en' ELSE 'und' END AS lang_pred,
-       COUNT(*) AS n_docs
-FROM documents GROUP BY 1, 2
-"""
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = TX.fingerprint(load_table(spark, sf_dir, "documents"))
-    return docs.select("doc_id", "fingerprint")
-
-
-SQL_DOC_FINGERPRINT = f"""
-SELECT doc_id,
-       list_reduce(
-         list_prepend(CAST(0 AS BIGINT),
-           list_transform(string_split(text, ' '),
-                          t -> CAST(length(t) * {TX.FP_MULT} + ascii(t) AS BIGINT))),
-         (acc, v) -> (acc * {TX.FP_MULT} + v) % {TX.FP_MOD}) AS fingerprint
-FROM documents
-"""
 
 
 def q_term_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -685,35 +446,6 @@ _SQL_KMEANS_CTES = f"""cent0 AS (
 SQL_EMBEDDING_KMEANS = f"""
 WITH {_SQL_KMEANS_CTES}
 SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, d2 FROM a1
-"""
-
-
-def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup: k-means the embedding space, then exact cosine near-dup
-    pairs within each cluster only. The declared query runs the
-    SCALE-SAFE configuration ``k="auto"`` — k = max(8, ceil(n/5000)) —
-    which pins the average cluster size (and so the Σ cluster² pair
-    cost) as the corpus grows; a fixed k is quadratic under growth
-    (measured 7.2× wall at 10× volume before this change). At every
-    fixture scale (n ≤ 2000) auto-k deterministically resolves to 8,
-    so the unrolled k=8 DuckDB k-means oracle remains bit-exact; the
-    oracle is valid while n ≤ 40 000 (above that auto-k grows past 8
-    by design). Fixed-k behaviour stays covered by unit tests."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return S.semantic_neardup_pairs(
-        emb, k="auto", n_iter=2, threshold=0.4
-    ).withColumn("cluster", F.col("cluster").cast("int"))
-
-
-SQL_SEMANTIC_DEDUP = f"""
-WITH {_SQL_KMEANS_CTES}
-SELECT CAST(ax.cluster AS INTEGER) AS cluster, ax.vec_id AS x, ay.vec_id AS y,
-       ROUND({_sql_cosine('ex.embedding', 'ey.embedding')}, 6) AS cos_sim
-FROM a1 ax
-JOIN a1 ay ON ax.cluster = ay.cluster AND ax.vec_id < ay.vec_id
-JOIN embeddings ex ON ex.vec_id = ax.vec_id
-JOIN embeddings ey ON ey.vec_id = ay.vec_id
-WHERE ROUND({_sql_cosine('ex.embedding', 'ey.embedding')}, 6) >= 0.4
 """
 
 
@@ -923,35 +655,6 @@ FROM sel
 """
 
 
-def q_nb_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability table for the NB classifier — the threshold-picking
-    step of a quality/lang filter: bucket the exact integer scores
-    (5e6-micros ≈ 5-log2 wide bins) and report per-bucket volume and
-    accuracy. Composes the already-oracled classifier query; buckets
-    via double FLOOR on exactly-representable operands so both engines
-    bin identically."""
-    pred = q_nb_lang_classifier(spark, sf_dir)
-    bucket = F.floor(
-        F.col("score_micros").cast("double") / F.lit(5_000_000.0)
-    ).cast("bigint")
-    return (
-        pred.withColumn("score_bucket", bucket)
-        .groupBy("score_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.col("correct").cast("bigint")).alias("n_correct"),
-            (
-                F.sum(F.col("correct").cast("bigint")).cast("double")
-                / F.count(F.lit(1))
-            ).alias("accuracy"),
-        )
-    )
-
-
-# SQL_NB_CALIBRATION is defined after SQL_NB_LANG_CLASSIFIER below
-# (it embeds that query as a CTE).
-
-
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic stratified sampling: keep all errors, half the
     purchases, 10% of the rest — membership decided by a pure-arithmetic
@@ -1115,9 +818,8 @@ WHERE CAST(len(list_intersect(nx.shingles, oy.shingles)) AS DOUBLE)
 
 
 def q_dedup_incremental_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STEADY-STATE contract of incremental ingestion dedup
-    (``streaming/ingest.py``): in production the history's signature
-    store already exists — persisted by every prior batch — so a new
+    """The STEADY-STATE contract of incremental ingestion dedup: in
+    production the history's signature store already exists — persisted by every prior batch — so a new
     batch pays only sign-batch + probe-store + exact-verify. This twin
     materializes the store to parquet once per (fixture, mtime) and
     reads it back, so repeated runs measure the per-batch probe cost
@@ -1227,187 +929,6 @@ FROM sp GROUP BY span
 ORDER BY n_docs DESC, n_occurrences DESC, span ASC
 LIMIT 20
 """
-
-
-def q_text_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-frequency quality signal (exact-arithmetic perplexity
-    stand-in): per-doc mean corpus frequency of its bigrams and the
-    rare-bigram fraction."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    return TX.corpus_bigram_stats(docs, rare_threshold=2)
-
-
-SQL_TEXT_BIGRAM_QUALITY = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), bg AS (
-  SELECT doc_id,
-         unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                               i -> t[i] || ' ' || t[i+1])) AS b
-  FROM toks
-), f AS (
-  SELECT b, COUNT(*) AS c FROM bg GROUP BY b
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-       CAST(SUM(c) AS DOUBLE) / COUNT(*) AS avg_bigram_freq,
-       CAST(SUM(CASE WHEN c <= 2 THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-         AS rare_bigram_ratio
-FROM bg JOIN f USING (b) GROUP BY doc_id
-"""
-
-
-def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style repetition ratios per document (duplicate-excess
-    over tokens/bigrams/trigrams) — zero-shuffle quality features."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    return TX.repetition_stats(docs).select(
-        "doc_id", "n_tokens", "dup_token_ratio", "dup_bigram_ratio",
-        "dup_trigram_ratio",
-    )
-
-
-SQL_TEXT_REPETITION = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), g AS (
-  SELECT doc_id, t,
-         list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                        i -> t[i] || ' ' || t[i+1]) AS bg,
-         list_transform(generate_series(1, greatest(len(t) - 2, 0)),
-                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2]) AS tg
-  FROM toks
-)
-SELECT doc_id, len(t) AS n_tokens,
-       CASE WHEN len(t) > 0
-            THEN CAST(len(t) - len(list_distinct(t)) AS DOUBLE) / len(t)
-            ELSE 0.0 END AS dup_token_ratio,
-       CASE WHEN len(bg) > 0
-            THEN CAST(len(bg) - len(list_distinct(bg)) AS DOUBLE) / len(bg)
-            ELSE 0.0 END AS dup_bigram_ratio,
-       CASE WHEN len(tg) > 0
-            THEN CAST(len(tg) - len(list_distinct(tg)) AS DOUBLE) / len(tg)
-            ELSE 0.0 END AS dup_trigram_ratio
-FROM g
-"""
-
-
-def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end training-data curation funnel, one query: per-stage
-    surviving-document counts through quality filter → language filter →
-    exact dedup → near-dup drop → decontamination. Every stage is one of
-    the already-oracle-checked operators composed sequentially — the
-    100 TB pipeline story in a single DataFrame."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    s1 = (
-        TX.quality_features(docs)
-        .filter((F.col("n_tokens") >= 20) & (F.col("alnum_ratio") >= 0.75))
-        .select("doc_id", "text")
-    )
-    s2 = (
-        TX.language_guess(s1)
-        .filter(F.col("lang_pred") == "en")
-        .select("doc_id", "text")
-    )
-    s2 = scoped_persist(s2)
-    s3 = scoped_persist(s2.groupBy("text").agg(F.min("doc_id").alias("doc_id")))
-    # Shingle the surviving corpus ONCE; near-dup and decontamination
-    # both reuse this frame (s4 ⊂ s3, so its shingles are a filter of
-    # sh3, never a re-tokenization).
-    sh3 = scoped_persist(D.with_shingles(s3, k=4))
-    pairs = D.ngram_jaccard_pairs(s3, k=4, threshold=0.5, shingled=sh3)
-    dropped = pairs.select(F.col("y").alias("doc_id")).distinct()
-    s4 = scoped_persist(s3.join(dropped, "doc_id", "left_anti"))
-    bench = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 50 == 0)
-        .select(F.col("doc_id").alias("bench_id"), "text")
-    )
-    sh4 = sh3.withColumnRenamed("shingles", "__sh").join(
-        dropped, "doc_id", "left_anti"
-    )
-    cont = D.contamination_pairs(s4, bench, k=4, threshold=0.6, corpus_shingled=sh4)
-    s5 = s4.join(cont.select("doc_id").distinct(), "doc_id", "left_anti")
-
-    def stage(name: str, df: DataFrame) -> DataFrame:
-        return df.agg(F.count(F.lit(1)).alias("n_docs")).select(
-            F.lit(name).alias("stage"), "n_docs"
-        )
-
-    return (
-        stage("0_ingest", docs)
-        .unionByName(stage("1_quality", s1))
-        .unionByName(stage("2_language", s2))
-        .unionByName(stage("3_exact_dedup", s3))
-        .unionByName(stage("4_near_dedup", s4))
-        .unionByName(stage("5_decontaminated", s5))
-    )
-
-
-def _sql_curation_funnel() -> str:
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.text import (
-        STOPWORDS,
-    )
-
-    stoplist = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
-    return f"""
-WITH s1 AS (
-  SELECT doc_id, text FROM documents
-  WHERE len(string_split(text, ' ')) >= 20
-    AND CAST(length(text) - length(regexp_replace(text, '[a-z0-9]', '', 'g')) AS DOUBLE)
-        / length(text) >= 0.75
-), s2 AS (
-  SELECT doc_id, text FROM s1
-  WHERE len(list_filter(string_split(text, ' '), t -> t IN {stoplist})) >= 2
-), s3 AS (
-  SELECT MIN(doc_id) AS doc_id, text FROM s2 GROUP BY text
-), sh3 AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text, ' ')) - 3, 1)),
-           i -> array_to_string(string_split(text, ' ')[i:i+3], ' '))) AS shingles
-  FROM s3
-), ex3 AS (
-  SELECT doc_id, unnest(shingles) AS s FROM sh3
-), neardup_y AS (
-  SELECT DISTINCT b.doc_id AS y
-  FROM ex3 a JOIN ex3 b ON a.s = b.s AND a.doc_id < b.doc_id
-  JOIN sh3 sx ON sx.doc_id = a.doc_id
-  JOIN sh3 sy ON sy.doc_id = b.doc_id
-  WHERE CAST(len(list_intersect(sx.shingles, sy.shingles)) AS DOUBLE)
-        / (len(sx.shingles) + len(sy.shingles) - len(list_intersect(sx.shingles, sy.shingles))) >= 0.5
-), s4 AS (
-  SELECT doc_id, text FROM s3 WHERE doc_id NOT IN (SELECT y FROM neardup_y)
-), shb AS (
-  SELECT doc_id AS bench_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text, ' ')) - 3, 1)),
-           i -> array_to_string(string_split(text, ' ')[i:i+3], ' '))) AS shingles
-  FROM documents WHERE doc_id % 50 = 0
-), sh4 AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text, ' ')) - 3, 1)),
-           i -> array_to_string(string_split(text, ' ')[i:i+3], ' '))) AS shingles
-  FROM s4
-), contaminated AS (
-  SELECT DISTINCT c.doc_id
-  FROM (SELECT doc_id, len(shingles) AS n_doc, unnest(shingles) AS s FROM sh4) c
-  JOIN (SELECT bench_id, unnest(shingles) AS s FROM shb) b USING (s)
-  GROUP BY c.doc_id, b.bench_id, c.n_doc
-  HAVING ROUND(CAST(COUNT(*) AS DOUBLE) / c.n_doc, 6) >= 0.6
-), s5 AS (
-  SELECT doc_id FROM s4 WHERE doc_id NOT IN (SELECT doc_id FROM contaminated)
-)
-SELECT '0_ingest' AS stage, COUNT(*) AS n_docs FROM documents
-UNION ALL SELECT '1_quality', COUNT(*) FROM s1
-UNION ALL SELECT '2_language', COUNT(*) FROM s2
-UNION ALL SELECT '3_exact_dedup', COUNT(*) FROM s3
-UNION ALL SELECT '4_near_dedup', COUNT(*) FROM s4
-UNION ALL SELECT '5_decontaminated', COUNT(*) FROM s5
-"""
-
-
-SQL_CURATION_FUNNEL = _sql_curation_funnel()
 
 
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1738,406 +1259,6 @@ SQL_TABLE_PROFILE = " UNION ALL ".join(
 )
 
 
-def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window token chunking (16-token windows, stride 8 → 8
-    tokens of overlap): the context-window splitter before packing."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    return TX.chunk_documents(docs, chunk_size=16, stride=8)
-
-
-SQL_DOC_CHUNKS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), n AS (
-  SELECT doc_id, t, 1 + (greatest(len(t) - 16, 0) + 7) // 8 AS nc FROM toks
-), ex AS (
-  SELECT doc_id, t, unnest(generate_series(0, nc - 1)) AS i FROM n
-)
-SELECT doc_id, CAST(i AS INT) AS chunk_id,
-       array_to_string(t[i*8+1 : i*8+16], ' ') AS chunk_text,
-       CAST(len(t[i*8+1 : i*8+16]) AS INT) AS n_chunk_tokens
-FROM ex
-"""
-
-
-def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 corpus tokens with cumulative coverage — the tokenizer-
-    vocabulary sizing query."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("text")
-    return TX.vocab_coverage(docs, top_k=100)
-
-
-SQL_VOCAB_COVERAGE = """
-WITH freq AS (
-  SELECT t AS token, COUNT(*) AS occurrences
-  FROM (SELECT unnest(string_split(text, ' ')) AS t FROM documents)
-  GROUP BY 1
-), tot AS (
-  SELECT CAST(SUM(occurrences) AS DOUBLE) AS total FROM freq
-), r AS (
-  SELECT token, occurrences,
-         ROW_NUMBER() OVER (ORDER BY occurrences DESC, token ASC) AS vocab_rank,
-         SUM(occurrences) OVER (ORDER BY occurrences DESC, token ASC
-                                ROWS UNBOUNDED PRECEDING) AS cum
-  FROM freq
-)
-SELECT CAST(vocab_rank AS INT) AS vocab_rank, token, occurrences,
-       ROUND(CAST(cum AS DOUBLE) / (SELECT total FROM tot), 6) AS coverage
-FROM r WHERE vocab_rank <= 100
-"""
-
-
-def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrubbing proved on every row: the fixture corpus carries no
-    PII, so each document is deterministically augmented with a planted
-    email, IPv4, and SSN-shaped id derived from ``doc_id``, then
-    scrubbed — the oracle replays the same augmentation and regexes, so
-    redacted text and per-class counts are compared bit-exact across
-    the whole corpus."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    did = F.col("doc_id")
-    aug = F.concat_ws(
-        " ",
-        F.col("text"),
-        F.concat(F.lit("reach me at user"), did.cast("string"), F.lit("@example.com")),
-        F.concat(
-            F.lit("host 10.0."),
-            (did % 250).cast("string"),
-            F.lit("."),
-            ((did * 7) % 250).cast("string"),
-        ),
-        F.concat(
-            F.lit("ssn 123-45-"),
-            F.lpad((did % 10000).cast("string"), 4, "0"),
-        ),
-    )
-    return TX.redact_pii(
-        docs.withColumn("text_aug", aug).select("doc_id", "text_aug"),
-        text_col="text_aug",
-    ).select("doc_id", "n_email", "n_ssn", "n_ipv4", "redacted")
-
-
-SQL_PII_REDACT = r"""
-WITH aug AS (
-  SELECT doc_id,
-         text || ' reach me at user' || doc_id || '@example.com' ||
-         ' host 10.0.' || (doc_id % 250) || '.' || ((doc_id * 7) % 250) ||
-         ' ssn 123-45-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-  FROM documents
-)
-SELECT doc_id,
-  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS INT) AS n_email,
-  CAST(len(regexp_extract_all(t, '\b\d{3}-\d{2}-\d{4}\b')) AS INT) AS n_ssn,
-  CAST(len(regexp_extract_all(t, '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b')) AS INT) AS n_ipv4,
-  regexp_replace(regexp_replace(regexp_replace(t,
-      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-      '\b\d{3}-\d{2}-\d{4}\b', '<SSN>', 'g'),
-      '\b\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}\b', '<IP>', 'g') AS redacted
-FROM aug
-"""
-
-
-_SQL_QUANTIZE_CTE = """
-WITH s AS (
-  SELECT vec_id,
-         CASE WHEN list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) = 0.0
-              THEN 0.0
-              ELSE 127.0 / list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) END
-           AS q_scale,
-         embedding
-  FROM embeddings
-), qq AS (
-  SELECT vec_id, q_scale,
-         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * q_scale) AS TINYINT)) AS q
-  FROM s
-)
-"""
-
-
-def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 quantization audit: per-vector scale plus exact integer
-    summaries (sum, L1, squared norm) of the quantized code — the
-    integer outputs make the whole quantization arithmetic
-    oracle-checkable without comparing raw arrays."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = S.quantize_vectors(emb)
-    return q.select(
-        "vec_id",
-        "q_scale",
-        F.expr("aggregate(qvec, 0L, (acc, v) -> acc + v)").alias("q_sum"),
-        F.expr("aggregate(qvec, 0L, (acc, v) -> acc + abs(v))").alias("q_l1"),
-        F.expr("aggregate(qvec, 0L, (acc, v) -> acc + CAST(v AS BIGINT) * v)").alias(
-            "q_sq"
-        ),
-    )
-
-
-SQL_EMBEDDING_QUANTIZE = (
-    _SQL_QUANTIZE_CTE
-    + """
-SELECT vec_id, q_scale,
-       CAST(list_sum(q) AS BIGINT) AS q_sum,
-       CAST(list_sum(list_transform(q, x -> abs(x))) AS BIGINT) AS q_l1,
-       CAST(list_sum(list_transform(q, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS q_sq
-FROM qq
-"""
-)
-
-
-def q_embedding_ann_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-k in int8-quantized space (scales cancel in the cosine).
-    Deterministically approximate — the integer ranking is reproducible
-    bit-for-bit, so unlike LSH/IVF it gets a full value oracle; recall
-    vs the exact fp ranking is asserted in tests."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return S.quantized_ann_topk(emb, queries, k=5)
-
-
-_SQL_INT_DOT = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "list_transform(generate_series(1, len({a})), i -> CAST({a}[i] AS BIGINT) * {b}[i])), "
-    "(acc, v) -> acc + v)"
-)
-
-SQL_EMBEDDING_ANN_INT8 = (
-    _SQL_QUANTIZE_CTE
-    + f"""
-, n AS (
-  SELECT vec_id, q,
-         CAST(list_sum(list_transform(q, x -> CAST(x AS BIGINT) * x)) AS BIGINT) AS n2
-  FROM qq
-), qset AS (
-  SELECT vec_id AS query_id, q AS qv, n2 AS qn2 FROM n WHERE vec_id < 5
-), scored AS (
-  SELECT qset.query_id, n.vec_id,
-         ROUND(CAST({_SQL_INT_DOT.format(a='n.q', b='qset.qv')} AS DOUBLE)
-               / sqrt(CAST(n.n2 AS DOUBLE) * qn2), 6) AS qcos_sim
-  FROM n CROSS JOIN qset
-  WHERE n.vec_id <> qset.query_id AND n.n2 > 0 AND qset.qn2 > 0
-), ranked AS (
-  SELECT query_id, vec_id, qcos_sim,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY qcos_sim DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT query_id, vec_id, CAST(rank AS INTEGER) AS rank, qcos_sim
-FROM ranked WHERE rank <= 5
-"""
-)
-
-
-# ---------------------------------------------------------------------------
-# Statistical LM scoring / importance weights (operators/lm.py)
-# ---------------------------------------------------------------------------
-
-# (doc_id, w1, w2) bigram-occurrence stream — shared by both LM oracles.
-_SQL_BIGRAMS_TMPL = """
-  {name} AS (
-    SELECT doc_id, s.w1 AS w1, s.w2 AS w2
-    FROM (
-      SELECT doc_id,
-             unnest(list_transform(generate_series(1, len(t) - 1),
-                    i -> struct_pack(w1 := t[i], w2 := t[i + 1]))) AS s
-      FROM {toks} WHERE len(t) >= 2
-    )
-  )
-"""
-
-
-def q_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-fit bigram-LM quality score per document (perplexity
-    proxy: mean log2 of add-one-smoothed bigram probability)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return LM.bigram_lm_score(docs)
-
-
-SQL_LM_DOC_SCORE = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-),
-{_SQL_BIGRAMS_TMPL.format(name="bgf", toks="toks")},
-cbg AS (SELECT w1, w2, COUNT(*) AS cbg FROM bgf GROUP BY 1, 2),
-cw1 AS (SELECT w1, COUNT(*) AS cw1 FROM bgf GROUP BY 1),
-v AS (
-  SELECT COUNT(DISTINCT tok) AS v
-  FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-),
-lp AS (
-  SELECT b.doc_id,
-         CAST(CAST(round(log2(CAST(cbg + 1 AS DOUBLE) / (cw1 + v)), 6)
-                   AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS lpm
-  FROM bgf b JOIN cbg USING (w1, w2) JOIN cw1 USING (w1) CROSS JOIN v
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-       CAST(CAST(SUM(lpm) AS BIGINT) AS DOUBLE)
-         / (COUNT(*) * 1000000) AS lm_score
-FROM lp GROUP BY doc_id
-"""
-
-
-def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR importance weights: how target-like (target = the ``src0``
-    source, standing in for an in-domain sample) is each corpus
-    document, as a bigram-LM log-likelihood ratio."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    target = docs.filter(F.col("source") == "src0")
-    return LM.dsir_importance(
-        docs, target, target_ids=target.select("doc_id")
-    )
-
-
-SQL_DSIR_WEIGHTS = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-),
-ttoks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents WHERE source = 'src0'
-),
-{_SQL_BIGRAMS_TMPL.format(name="bgc", toks="toks")},
-{_SQL_BIGRAMS_TMPL.format(name="bgt", toks="ttoks")},
-cc AS (SELECT w1, w2, COUNT(*) AS cc FROM bgc GROUP BY 1, 2),
-ct AS (SELECT w1, w2, COUNT(*) AS ct FROM bgt GROUP BY 1, 2),
-b AS (
-  SELECT COUNT(*) AS b
-  FROM (SELECT w1, w2 FROM cc UNION SELECT w1, w2 FROM ct)
-),
-nc AS (SELECT COUNT(*) AS nc FROM bgc),
-nt AS (SELECT COUNT(*) AS nt FROM bgt),
-lr AS (
-  SELECT g.doc_id,
-         CAST(CAST(round(log2(CAST(COALESCE(ct, 0) + 1 AS DOUBLE) / (nt + b)), 6)
-                   AS DECIMAL(28,6)) * 1000000 AS BIGINT)
-         - CAST(CAST(round(log2(CAST(cc + 1 AS DOUBLE) / (nc + b)), 6)
-                     AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS lrm
-  FROM bgc g
-  JOIN cc USING (w1, w2)
-  LEFT JOIN ct USING (w1, w2)
-  CROSS JOIN b CROSS JOIN nc CROSS JOIN nt
-)
-SELECT doc_id, COUNT(*) AS n_bigrams,
-       CAST(CAST(SUM(lrm) AS BIGINT) AS DOUBLE)
-         / (COUNT(*) * 1000000) AS dsir_logratio
-FROM lr GROUP BY doc_id
-"""
-
-
-def q_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial naive-Bayes language classifier, trained AND
-    applied distributively (``operators/nbayes.py``) — the relational
-    stand-in for the fasttext-style lang-ID/quality classifiers of
-    CCNet/GPT-3-era curation stacks. Train: vocab capped at the top-V
-    corpus tokens (V=1000; the knob that keeps the model a broadcast
-    at any corpus size), two map-side-combinable counts, a dense
-    (vocab x label) likelihood grid on the integer-micros log2
-    lattice. Apply: token stream x broadcast grid, one (doc, label,
-    int64) shuffle, map-side ``min(struct)`` argmax. Scores are exact
-    integer sums, so the WHOLE pipeline — including the learned model
-    — is hash-oracled against DuckDB."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-        nbayes as NB,
-    )
-
-    # Persisted: the corpus frame feeds FOUR subtrees of one plan (the
-    # vocab aggregate, the count build, the scoring token stream, and
-    # the actual-label join) — without the cache each re-scans and
-    # re-spreads the source.
-    docs = scoped_persist(spread(load_table(spark, sf_dir, "documents")))
-    priors, grid = NB.nb_train(docs, label_col="lang", vocab_size=1000)
-    pred = NB.nb_classify(docs, priors, grid, label_col="lang")
-    return pred.join(docs.select("doc_id", "lang"), "doc_id").select(
-        "doc_id",
-        F.col("lang").alias("actual_lang"),
-        "pred_lang",
-        "score_micros",
-        (F.col("pred_lang") == F.col("lang")).alias("correct"),
-    )
-
-
-SQL_NB_LANG_CLASSIFIER = """
-WITH tok AS (
-  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t FROM documents
-),
-vocab AS (
-  SELECT t FROM (
-    SELECT t, COUNT(*) AS c FROM tok GROUP BY t
-    ORDER BY c DESC, t ASC LIMIT 1000
-  )
-),
-vtok AS (SELECT tok.doc_id, tok.lang, tok.t FROM tok JOIN vocab USING (t)),
-cnt AS (SELECT t, lang, COUNT(*) AS cnt FROM vtok GROUP BY 1, 2),
--- label dimension from the CORPUS labels, not the count table: a
--- label with zero in-vocab tokens must still get smoothed 1/(0+V)
--- likelihoods (mirrors nbayes.py's label_support fix)
-tot AS (
-  SELECT l.lang, CAST(COALESCE(SUM(c.cnt), 0) AS BIGINT) AS tot
-  FROM (SELECT DISTINCT lang FROM documents) l
-  LEFT JOIN cnt c ON c.lang = l.lang
-  GROUP BY 1
-),
-v AS (SELECT COUNT(DISTINCT t) AS v FROM cnt),
-labels AS (SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1),
-n AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS n_total FROM labels),
-priors AS (
-  SELECT lang,
-         CAST(CAST(round(log2(CAST(n_docs AS DOUBLE) / n_total), 6)
-                   AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS prior_micros
-  FROM labels CROSS JOIN n
-),
-grid AS (
-  SELECT vt.t, tt.lang,
-         CAST(CAST(round(log2(CAST(COALESCE(c.cnt, 0) + 1 AS DOUBLE)
-                              / (tt.tot + v.v)), 6)
-                   AS DECIMAL(28,6)) * 1000000 AS BIGINT) AS ll
-  FROM (SELECT DISTINCT t FROM cnt) vt
-  CROSS JOIN tot tt
-  LEFT JOIN cnt c ON c.t = vt.t AND c.lang = tt.lang
-  CROSS JOIN v
-),
-occ AS (
-  SELECT dt.doc_id, g.lang, CAST(SUM(g.ll) AS BIGINT) AS tok_sum
-  FROM (SELECT doc_id, t FROM tok) dt JOIN grid g ON dt.t = g.t
-  GROUP BY 1, 2
-),
-scored AS (
-  SELECT d.doc_id, p.lang, p.prior_micros + COALESCE(o.tok_sum, 0) AS score
-  FROM (SELECT doc_id FROM documents) d
-  CROSS JOIN priors p
-  LEFT JOIN occ o ON o.doc_id = d.doc_id AND o.lang = p.lang
-),
-best AS (
-  SELECT doc_id, lang AS pred_lang, score,
-         ROW_NUMBER() OVER (
-           PARTITION BY doc_id ORDER BY score DESC, lang ASC
-         ) AS rn
-  FROM scored
-)
-SELECT b.doc_id,
-       d.lang AS actual_lang,
-       b.pred_lang,
-       CAST(b.score AS BIGINT) AS score_micros,
-       b.pred_lang = d.lang AS correct
-FROM best b JOIN documents d USING (doc_id)
-WHERE rn = 1
-"""
-
-
-SQL_NB_CALIBRATION = f"""
-WITH nb AS (
-{SQL_NB_LANG_CLASSIFIER}
-)
-SELECT CAST(FLOOR(CAST(score_micros AS DOUBLE) / 5000000.0) AS BIGINT)
-         AS score_bucket,
-       COUNT(*) AS n_docs,
-       CAST(SUM(CASE WHEN correct THEN 1 ELSE 0 END) AS BIGINT) AS n_correct,
-       CAST(SUM(CASE WHEN correct THEN 1 ELSE 0 END) AS DOUBLE) / COUNT(*)
-         AS accuracy
-FROM nb GROUP BY 1
-"""
-
-
 # ---------------------------------------------------------------------------
 # Keyed time-series features (operators/timeseries.py)
 # ---------------------------------------------------------------------------
@@ -2322,30 +1443,6 @@ WITH toks AS (
 {_SQL_PR_ITER.format(out="it2", prev="it1")},
 {_SQL_PR_ITER.format(out="it3", prev="it2")}
 SELECT node, ROUND(rank, 6) AS rank FROM it3
-"""
-
-
-def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 adjacent-character pairs within tokens — BPE tokenizer
-    training's first merge iteration, as a corpus query."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return TX.bpe_pair_counts(docs, top_k=50)
-
-
-SQL_BPE_MERGE_PAIRS = """
-WITH toks AS (
-  SELECT unnest(string_split(text, ' ')) AS t FROM documents
-), pairs AS (
-  SELECT unnest(list_transform(generate_series(1, len(t) - 1),
-                i -> substring(t, i, 2))) AS pair
-  FROM toks WHERE len(t) >= 2
-), counted AS (
-  SELECT pair, COUNT(*) AS occurrences FROM pairs GROUP BY pair
-  ORDER BY occurrences DESC, pair ASC LIMIT 50
-)
-SELECT CAST(ROW_NUMBER() OVER (ORDER BY occurrences DESC, pair ASC) AS INT) AS pair_rank,
-       pair, occurrences
-FROM counted
 """
 
 
@@ -3927,49 +3024,6 @@ SELECT lang, doc_id, source, n_chars FROM ranked WHERE rn <= 20
 
 
 SQL_DOCUMENTS_WEIGHTED_SAMPLE = _sql_documents_weighted_sample()
-
-
-def q_source_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Early-vs-late top-20 vocabulary overlap per source
-    (``text.py:vocab_drift``) — the drift monitor for a continuously
-    ingested corpus; top-k sets meet in a membership-flag aggregate,
-    never a self-join. Hash-oracled."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return TX.vocab_drift(docs, top_k=20)
-
-
-SQL_SOURCE_VOCAB_DRIFT = """
-WITH bounds AS (
-  SELECT source, (MIN(doc_id) + MAX(doc_id)) // 2 AS mid
-  FROM documents GROUP BY 1
-), halves AS (
-  SELECT source, half, term FROM (
-    SELECT d.source,
-           CASE WHEN d.doc_id <= b.mid THEN 'early' ELSE 'late' END AS half,
-           lower(unnest(string_split(d.text, ' '))) AS term
-    FROM documents d JOIN bounds b USING (source)
-  ) WHERE term <> ''
-), counts AS (
-  SELECT source, half, term, COUNT(*) AS cnt FROM halves GROUP BY 1, 2, 3
-), tops AS (
-  SELECT source, half, term,
-         ROW_NUMBER() OVER (PARTITION BY source, half
-                            ORDER BY cnt DESC, term) AS rn
-  FROM counts
-), flags AS (
-  SELECT source, term,
-         MAX(CASE WHEN half = 'early' THEN 1 ELSE 0 END) AS e,
-         MAX(CASE WHEN half = 'late' THEN 1 ELSE 0 END) AS l
-  FROM tops WHERE rn <= 20 GROUP BY 1, 2
-)
-SELECT source,
-       CAST(SUM(e) AS BIGINT) AS n_early,
-       CAST(SUM(l) AS BIGINT) AS n_late,
-       CAST(SUM(e * l) AS BIGINT) AS overlap,
-       CAST(SUM(e * l) * 1000000 // (SUM(e) + SUM(l) - SUM(e * l))
-            AS BIGINT) AS jaccard_ppm
-FROM flags GROUP BY 1
-"""
 
 
 def q_events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -7103,27 +6157,15 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_minhash_oph": q_dedup_minhash_oph,
     "dedup_simhash": q_dedup_simhash,
     "simhash_recall_audit": q_simhash_recall_audit,
-    "embedding_topk": q_embedding_topk,
-    "embedding_neardup": q_embedding_neardup,
-    "embedding_ann_lsh": q_embedding_ann_lsh,
-    "embedding_ann_ivf": q_embedding_ann_ivf,
-    "embedding_ann_pq": q_embedding_ann_pq,
-    "text_token_stats": q_text_token_stats,
-    "text_quality": q_text_quality,
-    "lang_id_eval": q_lang_id_eval,
-    "doc_fingerprint": q_doc_fingerprint,
     "term_doc_frequency": q_term_doc_frequency,
     "tfidf_top_terms": q_tfidf_top_terms,
     "embedding_label_centroids": q_embedding_label_centroids,
     "embedding_kmeans": q_embedding_kmeans,
-    "semantic_dedup": q_semantic_dedup,
     "kmeans_pruned_agreement": q_kmeans_pruned_agreement,
     "embedding_pca_audit": q_embedding_pca_audit,
-    "nb_lang_classifier": q_nb_lang_classifier,
     "leakage_safe_split": q_leakage_safe_split,
     "label_propagation": q_label_propagation,
     "dedup_keep_canonical": q_dedup_keep_canonical,
-    "nb_calibration": q_nb_calibration,
     "user_value_pareto": q_user_value_pareto,
     "customer_lorenz_deciles": q_customer_lorenz_deciles,
     "orders_pit_fx_enrich": q_orders_pit_fx_enrich,
@@ -7142,7 +6184,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "neardup_bfs_hops": q_neardup_bfs_hops,
     "corpus_pack_stats": q_corpus_pack_stats,
     "documents_weighted_sample": q_documents_weighted_sample,
-    "source_vocab_drift": q_source_vocab_drift,
     "events_k_anonymity": q_events_k_anonymity,
     "events_m4_downsample": q_events_m4_downsample,
     "events_hourly_acf": q_events_hourly_acf,
@@ -7182,25 +6223,14 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_incremental": q_dedup_incremental,
     "span_dedup": q_span_dedup,
     "boilerplate_spans": q_boilerplate_spans,
-    "text_repetition": q_text_repetition,
-    "text_bigram_quality": q_text_bigram_quality,
-    "curation_funnel": q_curation_funnel,
     "reservoir_sample": q_reservoir_sample,
     "dataset_split": q_dataset_split,
     "doc_packing": q_doc_packing,
     "table_profile": q_table_profile,
-    "doc_chunks": q_doc_chunks,
-    "vocab_coverage": q_vocab_coverage,
-    "pii_redact": q_pii_redact,
-    "embedding_quantize": q_embedding_quantize,
-    "embedding_ann_int8": q_embedding_ann_int8,
-    "lm_doc_score": q_lm_doc_score,
-    "dsir_weights": q_dsir_weights,
     "user_value_ewma": q_user_value_ewma,
     "bucket_hourly_anomaly": q_bucket_hourly_anomaly,
     "source_dup_profile": q_source_dup_profile,
     "corpus_diff_status": q_corpus_diff_status,
-    "bpe_merge_pairs": q_bpe_merge_pairs,
     "dedup_pagerank": q_dedup_pagerank,
     "salted_segment_revenue": q_salted_segment_revenue,
     # Appended round 5 (keep ordering of earlier entries stable).
@@ -7246,15 +6276,7 @@ PIPELINE_ORACLES: dict[str, str] = {
     "dedup_minhash_lsh": SQL_NGRAM_JACCARD,
     "dedup_minhash_oph": SQL_NGRAM_JACCARD,
     "dedup_simhash": SQL_NGRAM_JACCARD,
-    "embedding_topk": SQL_EMBEDDING_TOPK,
-    "embedding_neardup": SQL_EMBEDDING_NEARDUP,
     "embedding_kmeans": SQL_EMBEDDING_KMEANS,
-    "semantic_dedup": SQL_SEMANTIC_DEDUP,
-    # embedding_ann_lsh: approximate by design → rows-only
-    "text_token_stats": SQL_TEXT_TOKEN_STATS,
-    "text_quality": SQL_TEXT_QUALITY,
-    "lang_id_eval": SQL_LANG_ID_EVAL,
-    "doc_fingerprint": SQL_DOC_FINGERPRINT,
     "term_doc_frequency": SQL_TERM_DOC_FREQUENCY,
     "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
     "embedding_label_centroids": SQL_EMBEDDING_LABEL_CENTROIDS,
@@ -7262,7 +6284,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "neardup_bfs_hops": SQL_NEARDUP_BFS_HOPS,
     "corpus_pack_stats": SQL_CORPUS_PACK_STATS,
     "documents_weighted_sample": SQL_DOCUMENTS_WEIGHTED_SAMPLE,
-    "source_vocab_drift": SQL_SOURCE_VOCAB_DRIFT,
     "events_k_anonymity": SQL_EVENTS_K_ANONYMITY,
     "events_m4_downsample": SQL_EVENTS_M4_DOWNSAMPLE,
     "events_hourly_acf": SQL_EVENTS_HOURLY_ACF,
@@ -7320,30 +6341,17 @@ PIPELINE_ORACLES: dict[str, str] = {
     "dedup_incremental": SQL_DEDUP_INCREMENTAL,
     "span_dedup": SQL_SPAN_DEDUP,
     "boilerplate_spans": SQL_BOILERPLATE_SPANS,
-    "text_repetition": SQL_TEXT_REPETITION,
-    "text_bigram_quality": SQL_TEXT_BIGRAM_QUALITY,
-    "curation_funnel": SQL_CURATION_FUNNEL,
     "reservoir_sample": SQL_RESERVOIR_SAMPLE,
     "dataset_split": SQL_DATASET_SPLIT,
     "doc_packing": SQL_DOC_PACKING,
     "table_profile": SQL_TABLE_PROFILE,
-    "doc_chunks": SQL_DOC_CHUNKS,
-    "vocab_coverage": SQL_VOCAB_COVERAGE,
-    "pii_redact": SQL_PII_REDACT,
-    "embedding_quantize": SQL_EMBEDDING_QUANTIZE,
-    "embedding_ann_int8": SQL_EMBEDDING_ANN_INT8,
-    "lm_doc_score": SQL_LM_DOC_SCORE,
-    "nb_lang_classifier": SQL_NB_LANG_CLASSIFIER,
     "leakage_safe_split": SQL_LEAKAGE_SAFE_SPLIT,
     "label_propagation": SQL_LABEL_PROPAGATION,
     "dedup_keep_canonical": SQL_DEDUP_KEEP_CANONICAL,
-    "nb_calibration": SQL_NB_CALIBRATION,
-    "dsir_weights": SQL_DSIR_WEIGHTS,
     "user_value_ewma": SQL_USER_VALUE_EWMA,
     "bucket_hourly_anomaly": SQL_BUCKET_HOURLY_ANOMALY,
     "source_dup_profile": SQL_SOURCE_DUP_PROFILE,
     "corpus_diff_status": SQL_CORPUS_DIFF_STATUS,
-    "bpe_merge_pairs": SQL_BPE_MERGE_PAIRS,
     "dedup_pagerank": SQL_DEDUP_PAGERANK,
     "salted_segment_revenue": SQL_SALTED_SEGMENT_REVENUE,
     "dedup_incremental_steady": SQL_DEDUP_INCREMENTAL,

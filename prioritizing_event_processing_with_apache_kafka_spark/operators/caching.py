@@ -1,6 +1,6 @@
 """Scoped persist tracking — deterministic unpersist for operator caches.
 
-The near-dup / similarity operators ``persist()`` shared subtrees
+The near-dup and clustering operators ``persist()`` shared subtrees
 (tokenized shingles, banded signatures, cluster members) because one
 query plan references them from 2-3 places; without the cache the
 dominant lambda work re-runs per reference. The frames are bounded and

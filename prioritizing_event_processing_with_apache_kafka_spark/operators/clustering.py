@@ -5,8 +5,8 @@ is pure Catalyst work:
 
 - **Assignment** is a broadcast nested-loop join of the corpus against
   the k-row centroid frame (k is tiny; the corpus is never shuffled),
-  squared-L2 scored with the same sequential-fold array arithmetic the
-  similarity operators use (bit-reproducible, oracle-checkable), argmin
+  squared-L2 scored with sequential-fold array arithmetic
+  (bit-reproducible, oracle-checkable), argmin
   by a map-side-combinable ``min_by`` aggregate — the shuffle carries
   one candidate row per vector per task, never the n×k scored rows a
   window-rank plan would sort.
@@ -175,9 +175,9 @@ def _assign_pruned(
     group's centroids (n × k/groups on average) — O(n·√k) total with
     ``groups ≈ √k`` instead of exact assignment's O(n·k).
 
-    This is the IVF coarse-quantizer idea applied to the assignment
-    stage itself (same shape as ``similarity.py::ivf_ann_topk``'s
-    cell routing). Approximate by construction: a vector whose true
+    This is the IVF coarse-quantizer idea (route each vector to its
+    nearest cell, score only that cell) applied to the assignment
+    stage itself. Approximate by construction: a vector whose true
     nearest centroid lives in a *different* group than its nearest
     group mean is assigned to a second-best cluster — the standard
     IVF recall trade, bounded in practice because centroids near a
@@ -261,9 +261,8 @@ def kmeans_assignments(
 
     ``assignment="exact"`` (default) scores every vector against every
     centroid — n × k distance evaluations per iteration, the right
-    plan while k is small. With auto-sized k (k ∝ n, see
-    ``similarity.py::semantic_neardup_pairs``) that stage turns
-    quadratic around n ≈ 10⁷ vectors (``docs/SCALE.md`` round-6
+    plan while k is small. With k sized in proportion to n that stage
+    turns quadratic around n ≈ 10⁷ vectors (``docs/SCALE.md`` round-6
     note); ``assignment="pruned"`` swaps in the two-level
     coarse-quantized assignment (``groups`` group means, default
     ``max(2, isqrt(k))``) for O(n·√k) per iteration — approximate at group

@@ -13,7 +13,7 @@ shard layout. This module answers them with one window and one
 aggregate — no data movement beyond a single hash-shard shuffle.
 
 Everything is integer arithmetic on token counts (whitespace tokens,
-the repo-wide convention shared with ``operators/text.py``), so the
+the repo-wide convention: ``split(text, ' ')``), so the
 query carrying it is hash-oracled bit-exact against DuckDB replaying
 the identical prefix sums.
 

@@ -6,8 +6,7 @@ front of embedding-space curation: the SemDeDup recipe (Abbas et al.,
 deduplication") clusters in a normalized/reduced embedding space, and
 IVF/OPQ-style ANN indexes routinely train their coarse quantizers on
 PCA-rotated (often whitened) vectors. This module supplies that step
-for the `clustering.py` / `similarity.py` operators without leaving
-the DataFrame API.
+for the `clustering.py` operators without leaving the DataFrame API.
 
 Plan shape (the d ≪ n regime — the only one that exists for embedding
 tables: d is 64–4096 while n is billions):

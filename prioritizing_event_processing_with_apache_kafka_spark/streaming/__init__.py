@@ -10,10 +10,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.streaming.route_strea
     route_stream,
     routed_foreach_batch,
 )
-from prioritizing_event_processing_with_apache_kafka_spark.streaming.ingest import (
-    dedup_ingest_batch,
-    dedup_ingest_foreach_batch,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
     scd2_apply_batch,
     scd2_current,
@@ -40,8 +36,6 @@ __all__ = [
     "route_stream",
     "idempotent_parquet_sink",
     "read_idempotent_output",
-    "dedup_ingest_batch",
-    "dedup_ingest_foreach_batch",
     "scd2_apply_batch",
     "scd2_current",
     "scd2_foreach_batch",

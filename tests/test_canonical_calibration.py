@@ -1,6 +1,6 @@
-"""Invariant tests for the dedup canonical-survivor selection and the
-NB calibration table (hash parity vs DuckDB is covered by the oracle
-harness; these pin the structural guarantees on the fixture)."""
+"""Invariant tests for the dedup canonical-survivor selection (hash
+parity vs DuckDB is covered by the oracle harness; these pin the
+structural guarantees on the fixture)."""
 
 from __future__ import annotations
 
@@ -10,8 +10,6 @@ from tests.conftest import SF_DIR
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
     q_dedup_keep_canonical,
-    q_nb_calibration,
-    q_nb_lang_classifier,
 )
 
 
@@ -50,23 +48,3 @@ class TestKeepCanonical:
         assert out.filter(F.col("n_members") > 1).count() > 0
 
 
-class TestNbCalibration:
-    def test_buckets_reaggregate_the_classifier_output(self, spark):
-        import math
-
-        pred = q_nb_lang_classifier(spark, SF_DIR).collect()
-        want: dict[int, list[int]] = {}
-        for r in pred:
-            b = math.floor(r.score_micros / 5_000_000.0)
-            n, c = want.get(b, (0, 0))
-            want[b] = (n + 1, c + (1 if r.correct else 0))
-        got = {
-            r.score_bucket: (r.n_docs, r.n_correct)
-            for r in q_nb_calibration(spark, SF_DIR).collect()
-        }
-        assert got == want
-
-    def test_accuracy_is_ratio(self, spark):
-        for r in q_nb_calibration(spark, SF_DIR).collect():
-            assert abs(r.accuracy - r.n_correct / r.n_docs) < 1e-12
-            assert 0.0 <= r.accuracy <= 1.0

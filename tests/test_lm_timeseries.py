@@ -1,80 +1,15 @@
-"""Unit tests for the bigram-LM scoring, DSIR importance, EWMA and
-rolling z-score operators (sf-fixture parity is covered by the oracle
-harness; these pin the semantics on hand-computable corpora)."""
+"""Unit tests for the EWMA and rolling z-score operators (sf-fixture
+parity is covered by the oracle harness; these pin the semantics on
+hand-computable series)."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.lm import (
-    bigram_lm_score,
-    bigram_rows,
-    dsir_importance,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     rolling_zscore,
     windowed_ewma,
 )
-
-
-class TestBigramLm:
-    def test_bigram_rows_occurrences_not_distinct(self, spark):
-        df = spark.createDataFrame(
-            [(0, "a b a b"), (1, "x")], "doc_id long, text string"
-        )
-        rows = [(r.doc_id, r.w1, r.w2) for r in bigram_rows(df).collect()]
-        # doc 0: (a,b), (b,a), (a,b) — the repeat is kept; doc 1: none
-        assert sorted(rows) == [(0, "a", "b"), (0, "a", "b"), (0, "b", "a")]
-
-    def test_known_corpus_score(self, spark):
-        df = spark.createDataFrame(
-            [(0, "a b a b"), (1, "a b c")], "doc_id long, text string"
-        )
-        out = {r.doc_id: r for r in bigram_lm_score(df).collect()}
-        # C(a,b)=3 C(b,a)=1 C(b,c)=1; C(a·)=3 C(b·)=2; V=3
-        p_ab, p_ba, p_bc = 4 / 6, 2 / 5, 2 / 5
-        lp = lambda p: round(math.log2(p), 6)
-        assert out[0].n_bigrams == 3
-        assert out[0].lm_score == pytest.approx(
-            round((2 * lp(p_ab) + lp(p_ba)) / 3, 6), abs=2e-6
-        )
-        assert out[1].n_bigrams == 2
-        assert out[1].lm_score == pytest.approx(
-            round((lp(p_ab) + lp(p_bc)) / 2, 6), abs=2e-6
-        )
-
-    def test_corpus_typical_text_scores_higher(self, spark):
-        rows = [(i, "the cat sat on the mat") for i in range(20)]
-        rows.append((99, "zq xj vv qk wm pl"))
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {r.doc_id: r.lm_score for r in bigram_lm_score(df).collect()}
-        assert out[0] > out[99]
-
-    def test_short_docs_emit_no_row(self, spark):
-        df = spark.createDataFrame(
-            [(0, "single"), (1, "two tokens")], "doc_id long, text string"
-        )
-        out = bigram_lm_score(df).collect()
-        assert [r.doc_id for r in out] == [1]
-
-
-class TestDsir:
-    def test_target_like_docs_weigh_higher(self, spark):
-        corpus = spark.createDataFrame(
-            [(i, "alpha beta gamma delta") for i in range(5)]
-            + [(10 + i, "red green blue cyan") for i in range(5)],
-            "doc_id long, text string",
-        )
-        target = corpus.filter(F.col("doc_id") < 5)
-        out = {r.doc_id: r.dsir_logratio for r in dsir_importance(corpus, target).collect()}
-        # every target-like doc outweighs every off-domain doc
-        assert min(out[i] for i in range(5)) > max(out[10 + i] for i in range(5))
-        # and the off-domain docs sit below zero (less target-like than
-        # corpus-typical)
-        assert all(out[10 + i] < 0 for i in range(5))
 
 
 class TestEwma:
@@ -163,29 +98,3 @@ class TestRollingZscore:
         assert out[3].zscore is None and not out[3].anomalous
 
 
-class TestBpePairs:
-    def test_known_pair_counts(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.text import (
-            bpe_pair_counts,
-        )
-
-        df = spark.createDataFrame(
-            [(0, "abab ab x")], "doc_id long, text string"
-        )
-        out = {r.pair: (r.pair_rank, r.occurrences) for r in bpe_pair_counts(df).collect()}
-        # "abab": ab, ba, ab ; "ab": ab ; "x": too short → none
-        assert out["ab"] == (1, 3)
-        assert out["ba"] == (2, 1)
-        assert "x" not in out and len(out) == 2
-
-    def test_top_k_bound(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.text import (
-            bpe_pair_counts,
-        )
-
-        df = spark.createDataFrame(
-            [(0, "abcdefghijklmnop qrstuvwxyz")], "doc_id long, text string"
-        )
-        out = bpe_pair_counts(df, top_k=5).collect()
-        assert len(out) == 5
-        assert [r.pair_rank for r in out] == [1, 2, 3, 4, 5]

@@ -1,167 +1,8 @@
-"""Naive-Bayes classifier (`operators/nbayes.py`): exact agreement
-with a hand-rolled single-node reference on the same integer-micros
-lattice, tie-breaks, the OOV prior fallback, and the vocab cap."""
+"""Leakage-safe train/val/test split (`q_leakage_safe_split`): every
+near-duplicate pair lands in one split, and every document is assigned
+exactly once."""
 
 from __future__ import annotations
-
-import math
-
-import pytest
-
-from prioritizing_event_processing_with_apache_kafka_spark.operators import nbayes as NB
-
-DOCS = [
-    (0, "spam spam ham", "s"),
-    (1, "spam spam spam eggs", "s"),
-    (2, "ham ham eggs", "h"),
-    (3, "ham eggs eggs toast", "h"),
-    (4, "toast toast ham", "h"),
-]
-
-
-def _micros(x: float) -> int:
-    return int(round(round(math.log2(x), 6) * 1_000_000))
-
-
-def _reference_scores(docs, vocab_size=1000):
-    """Pure-Python NB on the identical lattice/conventions."""
-    toks = [(i, lbl, t) for i, text, lbl in docs for t in text.split(" ")]
-    freq: dict[str, int] = {}
-    for _, _, t in toks:
-        freq[t] = freq.get(t, 0) + 1
-    vocab = set(
-        t
-        for t, _ in sorted(freq.items(), key=lambda kv: (-kv[1], kv[0]))[
-            :vocab_size
-        ]
-    )
-    vtoks = [(i, lbl, t) for i, lbl, t in toks if t in vocab]
-    labels = sorted({lbl for _, _, lbl in docs})
-    n_docs = {lbl: sum(1 for _, _, l2 in docs if l2 == lbl) for lbl in labels}
-    prior = {
-        lbl: _micros(n_docs[lbl] / len(docs)) for lbl in labels
-    }
-    cnt = {}
-    tot = {lbl: 0 for lbl in labels}
-    for _, lbl, t in vtoks:
-        cnt[(t, lbl)] = cnt.get((t, lbl), 0) + 1
-        tot[lbl] += 1
-    v = len({t for _, _, t in vtoks})
-    ll = {
-        (t, lbl): _micros((cnt.get((t, lbl), 0) + 1) / (tot[lbl] + v))
-        for t in vocab
-        for lbl in labels
-    }
-    out = {}
-    for i, text, _ in docs:
-        scores = {
-            lbl: prior[lbl]
-            + sum(ll[(t, lbl)] for t in text.split(" ") if t in vocab)
-            for lbl in labels
-        }
-        best = min(scores.items(), key=lambda kv: (-kv[1], kv[0]))
-        out[i] = best
-    return out
-
-
-def _run(spark, docs, vocab_size=1000):
-    df = spark.createDataFrame(
-        docs, "doc_id: long, text: string, lang: string"
-    )
-    priors, grid = NB.nb_train(
-        df, label_col="lang", vocab_size=vocab_size
-    )
-    got = NB.nb_classify(df, priors, grid, label_col="lang").collect()
-    return {r["doc_id"]: (r["pred_lang"], r["score_micros"]) for r in got}
-
-
-def test_matches_lattice_reference(spark):
-    got = _run(spark, DOCS)
-    want = _reference_scores(DOCS)
-    assert got == want
-    # sanity: the obvious labels win on this corpus
-    assert got[1][0] == "s" and got[3][0] == "h"
-
-
-def test_tie_breaks_to_smallest_label(spark):
-    # perfectly symmetric two-doc corpus: every score ties, so every
-    # prediction must fall to the lexicographically smaller label
-    docs = [(0, "x y", "a"), (1, "x y", "b")]
-    got = _run(spark, docs)
-    want = _reference_scores(docs)
-    assert got == want
-    assert all(pred == "a" for pred, _ in got.values())
-
-
-def test_oov_only_doc_falls_back_to_prior(spark):
-    # doc 9's tokens are outside the top-2 vocab -> scored on priors
-    # alone -> majority label wins
-    docs = DOCS + [(9, "zzz qqq", "s")]
-    got = _run(spark, docs, vocab_size=2)
-    want = _reference_scores(docs, vocab_size=2)
-    assert got == want
-    prior_h = _micros(3 / 6)
-    assert got[9] == ("h", prior_h)
-
-
-def test_label_with_no_invocab_tokens_gets_smoothed_grid(spark):
-    """Regression (hypothesis-found): a label whose every token falls
-    outside the vocab cap must still appear in the likelihood grid with
-    smoothed 1/(0+V) entries — deriving the grid's label dimension from
-    the count table silently dropped it, scoring it prior-only (an
-    implicit likelihood of 1 per token, a huge unearned advantage)."""
-    # vocab (top-2) = {a, b}; label p's only token 'c' is out-of-vocab
-    docs = [(0, "a b", "q"), (1, "c", "p")]
-    got = _run(spark, docs, vocab_size=2)
-    want = _reference_scores(docs, vocab_size=2)
-    assert got == want
-    # doc 0 scores p via prior + 2 smoothed zero-count lookups, NOT
-    # prior alone: 3×(-1e6), tying q, tie broken to 'p'
-    assert got[0] == ("p", -3_000_000)
-
-
-def test_vocab_cap_is_deterministic(spark):
-    got = _run(spark, DOCS, vocab_size=1)
-    assert got == _reference_scores(DOCS, vocab_size=1)
-
-
-def test_vocab_size_validation(spark):
-    df = spark.createDataFrame(
-        DOCS, "doc_id: long, text: string, lang: string"
-    )
-    with pytest.raises(ValueError, match="vocab_size must be >= 1"):
-        NB.nb_train(df, label_col="lang", vocab_size=0)
-
-
-def test_property_matches_reference_on_random_corpora(spark):
-    """Hypothesis: on arbitrary small corpora (random token streams,
-    random labels, random vocab caps) the distributed NB agrees
-    EXACTLY — prediction and integer score — with the single-node
-    lattice reference."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    token = st.sampled_from(["a", "b", "c", "dd", "ee", "zz"])
-    doc = st.builds(
-        lambda toks, lbl: (toks, lbl),
-        st.lists(token, min_size=1, max_size=6),
-        st.sampled_from(["p", "q", "r"]),
-    )
-    corpus = st.lists(doc, min_size=2, max_size=8)
-
-    @settings(
-        max_examples=8,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(corpus, st.integers(min_value=1, max_value=8))
-    def run(c, vocab_size):
-        docs = [(i, " ".join(toks), lbl) for i, (toks, lbl) in enumerate(c)]
-        assert _run(spark, docs, vocab_size) == _reference_scores(
-            docs, vocab_size
-        )
-
-    run()
 
 
 def test_leakage_safe_split_invariant(spark):

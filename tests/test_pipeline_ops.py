@@ -1,4 +1,5 @@
-"""Pipeline-operator tests: dedup, similarity, text.
+"""Pipeline-operator tests: dedup, decontamination, k-means, mixture
+sampling and cache scopes.
 
 Small in-memory corpora with known structure; the sf-fixture parity is
 covered by the oracle harness (tools/check_oracle.py), so these tests
@@ -12,10 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators import dedup as D
-from prioritizing_event_processing_with_apache_kafka_spark.operators import (
-    similarity as S,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators import text as TX
 
 
 @pytest.fixture(scope="module")
@@ -108,53 +105,6 @@ class TestNearDupPairs:
             ).collect()
         }
         assert pairs == {(100, 101)}
-
-
-class TestSimilarity:
-    def test_cosine_identity_and_orthogonal(self, spark):
-        df = spark.createDataFrame(
-            [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0])],
-            "vec_id long, embedding array<float>",
-        )
-        q = df.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = {r["vec_id"]: (r["rank"], r["cos_sim"]) for r in S.cosine_topk(df, q, k=2).collect()}
-        assert out[2] == (1, 1.0)
-        assert out[1] == (2, 0.0)
-
-    def test_lsh_bucket_deterministic(self, spark):
-        df = spark.createDataFrame(
-            [(i, [float(i + j) for j in range(64)]) for i in range(4)],
-            "vec_id long, embedding array<float>",
-        )
-        b1 = {r["vec_id"]: r["lsh_bucket"] for r in S.with_lsh_bucket(df).collect()}
-        b2 = {r["vec_id"]: r["lsh_bucket"] for r in S.with_lsh_bucket(df).collect()}
-        assert b1 == b2
-        assert all(0 <= v < 256 for v in b1.values())
-
-
-class TestText:
-    def test_token_counts(self, spark):
-        df = spark.createDataFrame([(0, "a bb ccc")], "doc_id long, text string")
-        row = TX.token_counts(df).first()
-        assert row["n_tokens"] == 3 and row["n_tokens_re"] == 3
-
-    def test_quality_features(self, spark):
-        df = spark.createDataFrame([(0, "the cat the dog")], "doc_id long, text string")
-        row = TX.quality_features(df).first()
-        assert row["n_tokens"] == 4
-        assert row["stopword_ratio"] == 0.5
-        assert row["mean_word_len"] == 3.0
-
-    def test_fingerprint_order_sensitive(self, spark):
-        df = spark.createDataFrame(
-            [(0, "alpha beta"), (1, "beta alpha"), (2, "alpha beta")],
-            "doc_id long, text string",
-        )
-        fp = {r["doc_id"]: r["fingerprint"] for r in TX.fingerprint(df).collect()}
-        assert fp[0] == fp[2]
-        assert fp[0] != fp[1]
 
 
 class TestKmeans:
@@ -569,104 +519,6 @@ class TestSpanDedup:
         assert all(r.n_removed == 0 for r in out.collect())
 
 
-class TestRepetitionStats:
-    def test_ratios_on_crafted_docs(self, spark):
-        rows = [
-            (0, "a a a a"),          # all one token
-            (1, "a b c d"),          # no repetition
-            (2, "a b a b a"),        # bigrams: ab ba ab ba -> 2 dup of 4
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {r.doc_id: r for r in TX.repetition_stats(df).collect()}
-        assert out[0].dup_token_ratio == pytest.approx(3 / 4)
-        assert out[0].dup_bigram_ratio == pytest.approx(2 / 3)
-        assert out[1].dup_token_ratio == 0.0
-        assert out[1].dup_trigram_ratio == 0.0
-        assert out[2].dup_bigram_ratio == pytest.approx(2 / 4)
-        assert out[2].dup_trigram_ratio == pytest.approx(1 / 3)
-
-    def test_short_doc_has_zero_ngram_ratios(self, spark):
-        df = spark.createDataFrame([(0, "solo")], "doc_id long, text string")
-        r = TX.repetition_stats(df).collect()[0]
-        assert r.n_tokens == 1
-        assert r.dup_bigram_ratio == 0.0 and r.dup_trigram_ratio == 0.0
-
-
-class TestSemanticDedup:
-    def test_within_cluster_pairs_found_cross_cluster_missed(self, spark):
-        # Two tight blobs pointing in near-orthogonal directions; the
-        # pair structure inside each blob is cosine ~1, across blobs ~0.
-        rows = []
-        for i in range(10):
-            base = [1.0, 0.0, 0.0, 0.0] if i % 2 == 0 else [0.0, 1.0, 0.0, 0.0]
-            rows.append((i, [c + 0.001 * i for c in base]))
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        pairs = S.semantic_neardup_pairs(df, k=2, n_iter=2, threshold=0.9).collect()
-        got = {(r.x, r.y) for r in pairs}
-        # every same-blob pair is reported…
-        expected = {
-            (x, y) for x in range(10) for y in range(10)
-            if x < y and x % 2 == y % 2
-        }
-        assert got == expected
-        # …and each reported pair carries one cluster id per blob
-        clusters = {r.x % 2: r.cluster for r in pairs}
-        assert len(set(clusters.values())) == 2
-
-    def test_pairs_are_subset_of_all_pairs_truth(self, spark):
-        import itertools
-        rows = [
-            (i, [float(i % 4 == j) + 0.05 * i for j in range(4)]) for i in range(12)
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        sem = {
-            (r.x, r.y): r.cos_sim
-            for r in S.semantic_neardup_pairs(
-                df, k=4, n_iter=2, threshold=0.8
-            ).collect()
-        }
-        # brute-force truth set at the same threshold
-        vecs = dict(rows)
-        def cos(a, b):
-            d = sum(x * y for x, y in zip(a, b))
-            na = sum(x * x for x in a) ** 0.5
-            nb = sum(x * x for x in b) ** 0.5
-            return d / (na * nb)
-        truth = {
-            (x, y)
-            for x, y in itertools.combinations(range(12), 2)
-            if round(cos(vecs[x], vecs[y]), 6) >= 0.8
-        }
-        assert set(sem) <= truth  # precision is exact: no false pairs
-        assert len(sem) > 0
-
-    def test_auto_k_resolves_and_keeps_exact_precision(self, spark):
-        # 60 vectors in two near-orthogonal blobs; target_cluster_size=30
-        # -> k = max(8, ceil(60/30)) = 8. Auto-k must resolve the
-        # sentinel to an int k-means, and the SemDeDup contract must
-        # hold: precision is exact (no cross-blob pair can score
-        # cosine >= 0.9), pairs are non-empty, recall is bounded by
-        # co-clustering (k=8 may split a blob into sub-clusters, so
-        # equality with the full same-blob truth set is NOT asserted).
-        rows = []
-        for i in range(60):
-            base = [1.0, 0.0, 0.0, 0.0] if i % 2 == 0 else [0.0, 1.0, 0.0, 0.0]
-            rows.append((i, [c + 0.0005 * i for c in base]))
-        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        pairs = S.semantic_neardup_pairs(
-            df, k="auto", n_iter=2, threshold=0.9, target_cluster_size=30
-        ).collect()
-        got = {(r.x, r.y) for r in pairs}
-        same_blob = {
-            (x, y) for x in range(60) for y in range(60)
-            if x < y and x % 2 == y % 2
-        }
-        assert got and got <= same_blob
-        # auto-k actually spreads the space: more than the 2 natural
-        # blobs' worth of cluster ids appear (k=8 was honored).
-        assert len({r.cluster for r in pairs}) > 2
-
-
 class TestIncrementalDedup:
     def test_new_batch_matches_history_via_signature_store(self, spark):
         history = spark.createDataFrame(
@@ -715,24 +567,6 @@ class TestSpanFrequencies:
         }
         assert out["a b"] == (2, 3)  # twice in doc 0, once in doc 1
         assert out["c d"] == (1, 1)
-
-
-class TestCorpusBigramStats:
-    def test_freqs_and_rare_ratio(self, spark):
-        rows = [
-            (0, "x y x y"),     # bigrams: "x y"(corpus c=3), "y x"(1), "x y"
-            (1, "x y z w"),     # bigrams: "x y", "y z"(1), "z w"(1)
-        ]
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = {
-            r.doc_id: r
-            for r in TX.corpus_bigram_stats(df, rare_threshold=1).collect()
-        }
-        assert out[0].n_bigrams == 3
-        assert out[0].avg_bigram_freq == pytest.approx((3 + 1 + 3) / 3)
-        assert out[0].rare_bigram_ratio == pytest.approx(1 / 3)
-        assert out[1].avg_bigram_freq == pytest.approx((3 + 1 + 1) / 3)
-        assert out[1].rare_bigram_ratio == pytest.approx(2 / 3)
 
 
 class TestMixtureSample:
@@ -788,110 +622,6 @@ class TestMixtureSample:
             )
 
 
-class TestChunking:
-    def test_overlap_and_coverage(self, spark):
-        text = " ".join(f"t{i}" for i in range(20))
-        df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-        out = (
-            TX.chunk_documents(df, chunk_size=8, stride=4)
-            .orderBy("chunk_id")
-            .collect()
-        )
-        # 20 tokens, window 8, stride 4 → 1 + ceil(12/4) = 4 chunks
-        assert [r.chunk_id for r in out] == [0, 1, 2, 3]
-        assert out[0].chunk_text.split(" ") == [f"t{i}" for i in range(8)]
-        # consecutive chunks overlap by chunk_size - stride = 4 tokens
-        assert out[1].chunk_text.split(" ")[:4] == out[0].chunk_text.split(" ")[4:]
-        # last chunk is the tail, shorter but non-empty
-        assert out[3].chunk_text.split(" ") == [f"t{i}" for i in range(12, 20)]
-        assert [r.n_chunk_tokens for r in out] == [8, 8, 8, 8]
-
-    def test_short_doc_single_chunk(self, spark):
-        df = spark.createDataFrame([(0, "a b c")], "doc_id long, text string")
-        out = TX.chunk_documents(df, chunk_size=8, stride=4).collect()
-        assert len(out) == 1
-        assert out[0].chunk_text == "a b c"
-        assert out[0].n_chunk_tokens == 3
-
-    def test_bad_params_rejected(self, spark):
-        df = spark.createDataFrame([(0, "a")], "doc_id long, text string")
-        with pytest.raises(ValueError):
-            TX.chunk_documents(df, chunk_size=0)
-        with pytest.raises(ValueError):
-            TX.chunk_documents(df, stride=0)
-
-
-class TestVocabCoverage:
-    def test_ranking_and_cumulative_coverage(self, spark):
-        df = spark.createDataFrame(
-            [(0, "a a a b"), (1, "a b c d")], "doc_id long, text string"
-        )
-        out = {r.token: r for r in TX.vocab_coverage(df, top_k=10).collect()}
-        assert out["a"].vocab_rank == 1 and out["a"].occurrences == 4
-        assert out["a"].coverage == 0.5
-        # b (2) then c, d (1 each, tie broken by token asc)
-        assert out["b"].vocab_rank == 2 and out["c"].vocab_rank == 3
-        assert out["d"].coverage == 1.0
-
-    def test_top_k_truncates(self, spark):
-        df = spark.createDataFrame([(0, "a b c d e")], "doc_id long, text string")
-        assert TX.vocab_coverage(df, top_k=2).count() == 2
-
-
-class TestPiiRedaction:
-    def test_each_class_redacted_and_counted(self, spark):
-        df = spark.createDataFrame(
-            [
-                (0, "mail bob.smith+x@corp.example.org now"),
-                (1, "server at 192.168.001.1 port open"),
-                (2, "id 123-45-6789 on file"),
-                (3, "clean text no pii"),
-                (4, "two mails a@b.io c@d.net and 1.2.3.4"),
-            ],
-            "doc_id long, text string",
-        )
-        out = {r.doc_id: r for r in TX.redact_pii(df).collect()}
-        assert out[0].redacted == "mail <EMAIL> now" and out[0].n_email == 1
-        assert out[1].redacted == "server at <IP> port open" and out[1].n_ipv4 == 1
-        assert out[2].redacted == "id <SSN> on file" and out[2].n_ssn == 1
-        assert out[3].redacted == "clean text no pii"
-        assert (out[3].n_email, out[3].n_ssn, out[3].n_ipv4) == (0, 0, 0)
-        assert out[4].redacted == "two mails <EMAIL> <EMAIL> and <IP>"
-        assert out[4].n_email == 2 and out[4].n_ipv4 == 1
-
-
-class TestQuantization:
-    def test_quantize_known_vector(self, spark):
-        df = spark.createDataFrame(
-            [(0, [1.0, -2.0, 4.0]), (1, [0.0, 0.0, 0.0])],
-            "vec_id long, embedding array<float>",
-        )
-        out = {r.vec_id: r for r in S.quantize_vectors(df).collect()}
-        # scale = 127/4 = 31.75 → round(1*31.75)=32, round(-2*31.75)=-64
-        assert out[0].qvec == [32, -64, 127]
-        assert out[0].q_scale == pytest.approx(31.75)
-        # zero vector: scale 0, all-zero code, no NaN
-        assert out[1].q_scale == 0.0 and out[1].qvec == [0, 0, 0]
-
-    def test_int8_topk_recall_vs_exact(self, spark, sf_dir):
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = {
-            (r.query_id, r.vec_id)
-            for r in S.cosine_topk(emb, queries, k=5).collect()
-        }
-        quant = {
-            (r.query_id, r.vec_id)
-            for r in S.quantized_ann_topk(emb, queries, k=5).collect()
-        }
-        recall = len(exact & quant) / len(exact)
-        # int8 error is tiny relative to neighbor gaps; near-perfect
-        # overlap expected, floor documents the contract
-        assert recall >= 0.8, f"int8 recall collapsed: {recall}"
-
-
 class TestCacheScope:
     def test_scope_releases_operator_caches(self, spark, docs):
         from prioritizing_event_processing_with_apache_kafka_spark.operators.caching import (
@@ -939,23 +669,3 @@ class TestCacheScope:
         # callers clearCache between queries)
         assert len(spark.sparkContext._jsc.getPersistentRDDs()) > 0
         spark.catalog.clearCache()
-
-
-class TestZeroNormAnnGuard:
-    def test_zero_vector_never_ranks(self, spark):
-        rows = [
-            (0, [1.0, 0.0, 0.0]),
-            (1, [0.9, 0.1, 0.0]),
-            (2, [0.0, 0.0, 0.0]),  # zero vector: NaN score unguarded
-            (3, [0.5, 0.5, 0.0]),
-        ]
-        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-        queries = emb.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = S.quantized_ann_topk(emb, queries, k=3).collect()
-        ids = [r.vec_id for r in out]
-        assert 2 not in ids, "zero vector must be dropped, not ranked"
-        # Spark sorts NaN largest — without the guard vec 2 ranks #1
-        assert ids == [1, 3]
-        assert all(not (r.qcos_sim != r.qcos_sim) for r in out)  # no NaN

@@ -39,8 +39,17 @@ def queries():
 
 
 @pytest.mark.parametrize("name", sorted(FINGERPRINTS))
-def test_no_new_exchanges(name, spark, sf_dir, queries):
+def test_no_new_exchanges(name, spark, sf_dir, queries, monkeypatch):
     expected = FINGERPRINTS[name]
+    # Same forcing as tools/gen_plan_fingerprints.py: fixture-sized
+    # inputs size the exact-sequence kernel to one range partition,
+    # whose coalesce(1) path would hide every shuffle downstream of an
+    # exact route. Pinning the count to shuffle.partitions keeps the
+    # at-scale shape under the guard.
+    from prioritizing_event_processing_with_apache_kafka_spark.operators import routing
+
+    ranges = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    monkeypatch.setattr(routing, "_range_partitions", lambda df, **_: ranges)
     # Isolate the build: queries persist shared subtrees as a side
     # effect of being CONSTRUCTED, and the CacheManager substitutes a
     # live cache into every later plan that embeds the same subtree —
@@ -82,9 +91,11 @@ def test_fingerprints_cover_zero_shuffle_pipelines(queries):
     """The map-only pipelines must stay map-only: their committed
     fingerprint is zero shuffles, so any future groupBy/join sneaking
     in fails test_no_new_exchanges. This meta-test just pins that the
-    zero-entries exist (the guard above does the real work)."""
+    zero-entries exist (the guard above does the real work).
+    ``error_purchase_interval`` joins its two filtered scans by
+    broadcast, so neither side is shuffled."""
     for name in (
         "bucket_extract",
-        "doc_fingerprint",
+        "error_purchase_interval",
     ):
         assert FINGERPRINTS[name]["shuffle_exchanges"] == 0

@@ -106,22 +106,6 @@ class TestZscoreOverflow:
             assert scored[h] == pytest.approx(expected, abs=1e-5), scored
 
 
-class TestAnnDimGuard:
-    def test_wrong_dim_raises_instead_of_collapsing(self, spark):
-        from py4j.protocol import Py4JJavaError
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.similarity import (
-            with_lsh_bucket,
-        )
-
-        df = spark.createDataFrame(
-            [(1, [1.0] * 128)], "vec_id long, embedding array<double>"
-        )
-        with pytest.raises(Exception) as ei:
-            with_lsh_bucket(df, num_planes=4, dim=64).collect()
-        assert "dim 64" in str(ei.value)
-
-
 class TestCompactionKeepsPartitions:
     def test_hive_layout_survives_compaction(self, spark, tmp_path):
         from prioritizing_event_processing_with_apache_kafka_spark.sources.compaction import (
@@ -142,21 +126,6 @@ class TestCompactionKeepsPartitions:
         back = spark.read.parquet(out)
         assert back.count() == 1_000
         assert back.filter(F.col("cell") == 2).count() == 250
-
-
-class TestEmptyDocQuality:
-    def test_empty_document_yields_null_ratios_not_error(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.text import (
-            quality_features,
-        )
-
-        df = spark.createDataFrame(
-            [(0, ""), (1, "the cat")], "doc_id long, text string"
-        )
-        rows = {r["doc_id"]: r for r in quality_features(df).collect()}
-        assert rows[0]["alnum_ratio"] is None
-        assert rows[0]["digit_ratio"] is None
-        assert rows[1]["alnum_ratio"] == pytest.approx(6 / 7)
 
 
 class TestIncrementalStoreValidation:

@@ -1,5 +1,5 @@
 """Round-8 batch-3 operator semantics: sequence packing, weighted
-sampling, k-anonymity, M4 downsampling, vocabulary drift (fixture
+sampling, k-anonymity and M4 downsampling (fixture
 parity is covered by the oracle harness; these pin hand-computable
 cases and the properties the oracles can't express)."""
 
@@ -17,9 +17,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.quality imp
 from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
     hash_u31,
     weighted_hash_sample,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators.text import (
-    vocab_drift,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     m4_downsample,
@@ -240,43 +237,3 @@ class TestM4Downsample:
             )
 
 
-class TestVocabDrift:
-    def test_identical_halves_full_overlap(self, spark):
-        # ids 0..3, mid=(0+3)//2=1 → early {0,1}, late {2,3}; same text
-        # in both halves → overlap = vocabulary, jaccard 1e6.
-        df = spark.createDataFrame(
-            [(i, "alpha beta gamma", "s1") for i in range(4)],
-            "doc_id long, text string, source string",
-        )
-        row = vocab_drift(df, top_k=5).first()
-        assert row["n_early"] == 3 and row["n_late"] == 3
-        assert row["overlap"] == 3
-        assert row["jaccard_ppm"] == 1_000_000
-
-    def test_disjoint_halves_zero_overlap(self, spark):
-        df = spark.createDataFrame(
-            [(0, "aa bb", "s1"), (1, "aa bb", "s1"),
-             (2, "cc dd", "s1"), (3, "cc dd", "s1")],
-            "doc_id long, text string, source string",
-        )
-        row = vocab_drift(df, top_k=5).first()
-        assert row["overlap"] == 0 and row["jaccard_ppm"] == 0
-
-    def test_top_k_is_count_then_term_ordered(self, spark):
-        # early: zz×3, aa×1, bb×1 — with top_k=2 the set is {zz, aa}
-        # (count desc, then term asc breaks the aa/bb tie).
-        df = spark.createDataFrame(
-            [(0, "zz zz zz aa bb", "s1"), (9, "zz aa cc", "s1")],
-            "doc_id long, text string, source string",
-        )
-        row = vocab_drift(df, top_k=2).first()
-        # early top2 {zz, aa}; late top2 of zz,aa,cc (all ×1) → {aa, cc}
-        assert row["overlap"] == 1  # aa
-        assert row["n_early"] == 2 and row["n_late"] == 2
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame(
-            [(0, "x", "s")], "doc_id long, text string, source string"
-        )
-        with pytest.raises(ValueError, match="top_k"):
-            vocab_drift(df, top_k=0)

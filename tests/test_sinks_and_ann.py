@@ -1,17 +1,12 @@
-"""Kafka sink-frame contract + ANN quality checks."""
+"""Kafka sink-frame contract."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark import BucketPriorityConfig
 from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import route
-from prioritizing_event_processing_with_apache_kafka_spark.operators import similarity as S
 from prioritizing_event_processing_with_apache_kafka_spark.sources.kafka import (
     kafka_sink_frame,
 )
-from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
 
 
 class TestKafkaSinkFrame:
@@ -39,207 +34,3 @@ class TestKafkaSinkFrame:
         assert len(out) == 1 and out[0]["partition"] is None
 
 
-class TestAnnQuality:
-    def test_ivf_recall_vs_exact(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = {
-            (r["query_id"], r["vec_id"])
-            for r in S.cosine_topk(emb, queries, k=5).collect()
-        }
-        ivf = {
-            (r["query_id"], r["vec_id"])
-            for r in S.ivf_ann_topk(emb, queries, k=5, num_cells=8, nprobe=2).collect()
-        }
-        assert len(ivf) == 25  # full result set (5 queries × k=5)
-        recall = len(exact & ivf) / len(exact)
-        assert recall >= 0.4, f"ivf recall collapsed: {recall}"
-
-    def test_pq_recall_vs_exact(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = {
-            (r["query_id"], r["vec_id"])
-            for r in S.cosine_topk(emb, queries, k=5).collect()
-        }
-        pq = {
-            (r["query_id"], r["vec_id"])
-            for r in S.pq_ann_topk(
-                emb, queries, k=5, m=16, ksub=32, n_iter=2, rerank=16
-            ).collect()
-        }
-        assert len(pq) == 25
-        recall = len(exact & pq) / len(exact)
-        assert recall >= 0.8, f"pq recall collapsed: {recall}"
-
-    def test_pq_codes_cover_corpus_and_are_bounded(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        codes, books = S.pq_train_encode(emb, m=8, ksub=4, n_iter=1)
-        n = emb.count()
-        rows = codes.groupBy("__j").count().collect()
-        # every vector gets exactly one code per subspace
-        assert {r["count"] for r in rows} == {n}
-        assert codes.filter(
-            (F.col("__cid") < 0) | (F.col("__cid") >= 4)
-        ).count() == 0
-        # codebooks: m x ksub entries of the subvector width
-        assert books.count() == 8 * 4
-        widths = books.select(F.size("__cvec").alias("w")).distinct().collect()
-        assert [r["w"] for r in widths] == [8]  # dim 64 / m 8
-
-    def test_pq_deterministic(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 3).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        run = lambda: sorted(  # noqa: E731
-            map(
-                tuple,
-                S.pq_ann_topk(
-                    emb, queries, k=3, m=8, ksub=8, n_iter=2, rerank=4
-                ).collect(),
-            )
-        )
-        assert run() == run()
-
-    def test_pq_validates_params(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        with pytest.raises(ValueError, match="divisible"):
-            S.pq_train_encode(emb, m=7)
-        with pytest.raises(ValueError, match=">= 1"):
-            S.pq_train_encode(emb, m=8, ksub=0)
-
-    def test_ivf_cells_cover_corpus(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        cells = S.with_ivf_cell(emb, num_cells=8)
-        counts = cells.groupBy("ivf_cell").count().collect()
-        assert sum(r["count"] for r in counts) == emb.count()
-        assert all(0 <= r["ivf_cell"] < 8 for r in counts)
-
-    def test_lsh_recall_vs_exact(self, spark, sf_dir):
-        # Multi-table hyperplane LSH. This corpus is a hard case — the
-        # true top-5 neighbors sit at cos 0.25-0.42 (near-orthogonal),
-        # where per-plane collision probability is only ~0.6 — so the
-        # recall floor documents the measured behavior of 4 planes × 8
-        # tables (deterministic seeded planes → deterministic recall:
-        # 0.84 at sf0.01, 0.88 at sf0.1). Single-table 8-plane LSH
-        # scores ~0.0-0.04 here, which is why the multi-table variant
-        # exists.
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = {
-            (r["query_id"], r["vec_id"])
-            for r in S.cosine_topk(emb, queries, k=5).collect()
-        }
-        ann = {
-            (r["query_id"], r["vec_id"])
-            for r in S.lsh_ann_topk(
-                emb, queries, k=5, num_planes=4, num_tables=8
-            ).collect()
-        }
-        recall = len(exact & ann) / len(exact)
-        assert recall >= 0.8, f"lsh recall below documented floor: {recall}"
-
-    def test_lsh_multi_table_improves_recall(self, spark, sf_dir):
-        emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(F.col("vec_id") < 5).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        exact = {
-            (r["query_id"], r["vec_id"])
-            for r in S.cosine_topk(emb, queries, k=5).collect()
-        }
-
-        def recall(num_tables):
-            ann = {
-                (r["query_id"], r["vec_id"])
-                for r in S.lsh_ann_topk(
-                    emb, queries, k=5, num_planes=4, num_tables=num_tables
-                ).collect()
-            }
-            return len(exact & ann) / len(exact)
-
-        assert recall(8) >= recall(1)
-
-
-class TestIvfPartitionedLayout:
-    def test_write_prunes_probed_cells(self, spark, sf_dir, tmp_path):
-        # One directory per IVF cell: the layout is the query-side cell
-        # function, so a probe of nprobe cells prunes to their files.
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = str(tmp_path / "ivf_corpus")
-        S.with_ivf_cell(emb, num_cells=8, nprobe=1).write.partitionBy(
-            "ivf_cell"
-        ).parquet(path)
-
-        corpus = spark.read.parquet(path)
-        # every row landed in a cell directory, none lost
-        assert corpus.count() == emb.count()
-        probed = corpus.filter(F.col("ivf_cell").isin([1, 3]))
-        plan = probed._jdf.queryExecution().executedPlan().toString()
-        # partition pruning: the probe filter appears as a PartitionFilter
-        # on the scan, not a post-scan Filter over all cells
-        assert "PartitionFilters" in plan and "ivf_cell" in plan.split("PartitionFilters", 1)[1][:200]
-        # and the pruned scan returns exactly the two cells' rows
-        expected = (
-            S.with_ivf_cell(emb, num_cells=8)
-            .filter(F.col("ivf_cell").isin([1, 3]))
-            .count()
-        )
-        assert probed.count() == expected
-
-
-class TestZeroNormGuard:
-    """A zero vector cosines to 0/0 = NaN, and Spark sorts NaN above
-    every real double — ungated, one all-zero corpus row would rank #1
-    for every query. Every similarity path must drop zero-norm rows."""
-
-    def _corpus(self, spark, dim=4):
-        rows = [
-            (0, [1.0] + [0.0] * (dim - 1)),
-            (1, [0.9, 0.1] + [0.0] * (dim - 2)),
-            (2, [0.0, 1.0] + [0.0] * (dim - 2)),
-            (99, [0.0] * dim),  # the zero vector
-        ]
-        return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    def test_exact_topk_never_ranks_zero_vector(self, spark):
-        corpus = self._corpus(spark)
-        queries = corpus.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        out = S.cosine_topk(corpus, queries, k=10).collect()
-        assert out, "non-degenerate neighbors must survive the guard"
-        assert all(r["vec_id"] != 99 for r in out)
-        assert all(r["cos_sim"] == r["cos_sim"] for r in out)  # no NaN
-
-    def test_exact_topk_zero_query_yields_nothing(self, spark):
-        corpus = self._corpus(spark)
-        queries = corpus.filter(F.col("vec_id") == 99).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        assert S.cosine_topk(corpus, queries, k=10).count() == 0
-
-    def test_lsh_and_ivf_never_rank_zero_vector(self, spark):
-        corpus = self._corpus(spark)
-        queries = corpus.filter(F.col("vec_id") == 0).select(
-            F.col("vec_id").alias("query_id"), "embedding"
-        )
-        for out in (
-            S.lsh_ann_topk(corpus, queries, k=10, dim=4, num_planes=2),
-            S.ivf_ann_topk(corpus, queries, k=10, dim=4, num_cells=2),
-        ):
-            assert all(r["vec_id"] != 99 for r in out.collect())
-
-    def test_semdedup_pairs_exclude_zero_vector(self, spark):
-        pairs = S.semantic_neardup_pairs(
-            self._corpus(spark), k=2, n_iter=1, threshold=0.0
-        ).collect()
-        assert pairs
-        assert all(r["x"] != 99 and r["y"] != 99 for r in pairs)

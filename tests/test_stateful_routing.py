@@ -22,6 +22,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.streaming.lifetime im
     route_batch_lifetime,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.route_stream import (
+    route_stream,
     routed_foreach_batch,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.sinks import (
@@ -330,16 +331,21 @@ def crash_once_after_write(sink, crash_at, attempts):
     return write
 
 
-def drain_files(spark, src, chk, foreach):
+def drain_files(spark, src, chk, foreach, transform=None):
     """Drain every drop in ``src`` (one file per micro-batch) through
     ``foreach``, restarting from the same checkpoint after a failed
-    micro-batch. Returns the number of restarts."""
+    micro-batch. ``transform``, if given, maps the source stream before
+    the sink. Returns the number of restarts."""
     for restarts in range(2):
-        q = (
+        stream = (
             spark.readStream.schema(SCHEMA)
             .option("maxFilesPerTrigger", "1")
             .parquet(src)
-            .writeStream.foreachBatch(foreach)
+        )
+        if transform is not None:
+            stream = transform(stream)
+        q = (
+            stream.writeStream.foreachBatch(foreach)
             .option("checkpointLocation", chk)
             .start()
         )
@@ -353,22 +359,23 @@ def drain_files(spark, src, chk, foreach):
     raise AssertionError("the restarted query failed again")
 
 
-def crash_and_compare(spark, dirs, tmp_path, make_write):
+def crash_and_compare(spark, dirs, tmp_path, make_write, transform=None):
     """Drain three mixed Platinum/Gold micro-batches through
     ``make_write(sink, state_dir)`` twice: once with the sink crashing
     after batch 1's first write and the query restarted from the same
-    checkpoint, once with no fault. The replayed batch must route
-    identically and the two outputs must match row for row. Returns the
-    crashed run's output, sorted by event_id."""
+    checkpoint, once with no fault. ``transform`` maps the source
+    stream in both runs (see ``drain_files``). The replayed batch must
+    route identically and the two outputs must match row for row.
+    Returns the crashed run's output, sorted by event_id."""
     src, chk, state = dirs
     for b in range(3):
         chunk(spark, src, b * 100, 6, ("Platinum", "Gold"))
     out, clean = str(tmp_path / "out"), str(tmp_path / "clean")
     attempts = {}
     faulty = crash_once_after_write(idempotent_parquet_sink(out), 1, attempts)
-    assert drain_files(spark, src, chk, make_write(faulty, state)) == 1
+    assert drain_files(spark, src, chk, make_write(faulty, state), transform) == 1
     no_fault = make_write(idempotent_parquet_sink(clean), str(tmp_path / "state"))
-    assert drain_files(spark, src, str(tmp_path / "chk"), no_fault) == 0
+    assert drain_files(spark, src, str(tmp_path / "chk"), no_fault, transform) == 0
 
     assert len(attempts[1]) == 2 and attempts[1][0] == attempts[1][1]
     got = sorted(read_idempotent_output(spark, out).collect())
@@ -403,6 +410,28 @@ def test_routed_foreach_batch_sink_crash_replays_identically(spark, dirs, tmp_pa
             CFG, 10, sink, order_col="event_id"
         ),
     )
+
+
+def test_route_stream_sink_crash_restart_is_exactly_once(spark, dirs, tmp_path):
+    """The stateless streaming router, restarted from its checkpoint
+    after a sink crash, writes every event exactly once, on the same
+    partition as a no-fault run: ``spread`` routes by the event's own
+    sequence column, so the replayed batch routes identically."""
+    got = crash_and_compare(
+        spark,
+        dirs,
+        tmp_path,
+        lambda sink, _state: sink,
+        transform=lambda stream: route_stream(
+            stream, CFG, 10, mode="spread", seq_col="event_id"
+        ),
+    )
+    assert [r["event_id"] for r in got] == sorted(
+        b * 100 + i for b in range(3) for i in range(6)
+    )
+    for r in got:
+        lo, size = LAYOUT[r["bucket"]]
+        assert lo <= r["partition"] < lo + size
 
 
 def test_lifetime_missing_state_raises(spark):

@@ -696,117 +696,6 @@ class TestIdempotentSink:
         assert "__batch_id" not in got.columns
 
 
-class TestDedupIngest:
-    """Streaming corpus intake with incremental near-dup filtering:
-    each batch dedupes against all prior batches via the signature
-    store, never by re-reading historical text wholesale."""
-
-    DOCS = {
-        0: "the quick brown fox jumps over the lazy dog",
-        1: "completely different content with other words here",
-        2: "one two three four five six seven eight nine ten",
-        3: "pack my box with five dozen brown liquor jugs today",
-    }
-
-    def test_batches_dedupe_against_history(self, spark, stream_dir):
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
-            dedup_ingest_batch,
-        )
-
-        corpus = f"{stream_dir}/corpus"
-        store = f"{stream_dir}/store"
-
-        def batch(rows):
-            return spark.createDataFrame(rows, "doc_id long, text string")
-
-        # batch 0: two distinct docs plus a within-batch exact dup
-        n0 = dedup_ingest_batch(
-            batch([(0, self.DOCS[0]), (1, self.DOCS[1]), (2, self.DOCS[0])]),
-            corpus_path=corpus, store_path=store,
-        )
-        assert n0 == 2  # doc 2 dropped inside the batch
-        # batch 1: one dup of history, one new doc
-        n1 = dedup_ingest_batch(
-            batch([(10, self.DOCS[0]), (11, self.DOCS[2])]),
-            corpus_path=corpus, store_path=store,
-        )
-        assert n1 == 1  # doc 10 caught via the signature store
-        # batch 2: dups of both earlier batches, one new doc
-        n2 = dedup_ingest_batch(
-            batch([(20, self.DOCS[1]), (21, self.DOCS[2]), (22, self.DOCS[3])]),
-            corpus_path=corpus, store_path=store,
-        )
-        assert n2 == 1
-
-        final = spark.read.parquet(corpus)
-        assert sorted(r.doc_id for r in final.collect()) == [0, 1, 11, 22]
-        sigs = spark.read.parquet(store)
-        assert sorted(r.doc_id for r in sigs.collect()) == [0, 1, 11, 22]
-        assert sigs.columns == ["doc_id", "minhash", "sig_version"]
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-            SIGNATURE_STORE_VERSION,
-        )
-
-        assert {r.sig_version for r in sigs.collect()} == {SIGNATURE_STORE_VERSION}
-
-    def test_foreach_batch_end_to_end(self, spark, stream_dir):
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
-            dedup_ingest_foreach_batch,
-        )
-
-        src = f"{stream_dir}/src"
-        corpus = f"{stream_dir}/corpus2"
-        store = f"{stream_dir}/store2"
-        ckpt = f"{stream_dir}/ckpt2"
-
-        docs = spark.createDataFrame(
-            [(0, self.DOCS[0]), (1, self.DOCS[1]), (2, self.DOCS[0])],
-            "doc_id long, text string",
-        )
-        docs.coalesce(1).write.parquet(f"{src}/chunk=0")
-        source = spark.readStream.schema("doc_id long, text string").parquet(
-            f"{src}/chunk=*"
-        )
-        q = (
-            source.writeStream.foreachBatch(
-                dedup_ingest_foreach_batch(corpus_path=corpus, store_path=store)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        assert sorted(
-            r.doc_id for r in spark.read.parquet(corpus).collect()
-        ) == [0, 1]
-
-    def test_replayed_batch_id_is_idempotent(self, spark, stream_dir):
-        # foreachBatch is at-least-once: the same batch_id re-delivered
-        # after a crash must REPLACE its own output, not append a second
-        # copy (corpus) or leave its signatures missing (store).
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming import (
-            dedup_ingest_batch,
-        )
-
-        corpus = f"{stream_dir}/corpus3"
-        store = f"{stream_dir}/store3"
-        b = spark.createDataFrame(
-            [(0, self.DOCS[0]), (1, self.DOCS[1])], "doc_id long, text string"
-        )
-        for _ in range(2):  # deliver batch 0 twice
-            n = dedup_ingest_batch(
-                b, corpus_path=corpus, store_path=store, batch_id=0
-            )
-        # replay dedups against its own first delivery's store, so the
-        # second pass reports 0 survivors but the output stays complete
-        assert n == 0
-        docs = spark.read.parquet(corpus)
-        assert sorted(r.doc_id for r in docs.collect()) == [0, 1]
-        sigs = spark.read.parquet(store)
-        assert sorted(r.doc_id for r in sigs.collect()) == [0, 1]
-
-
 class TestAssignPartitionPruning:
     """VERDICT r7 item 5: prove the assign-JSON contract end to end as
     far as the sandbox allows — a bucket query over a multi-partition

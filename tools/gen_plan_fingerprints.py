@@ -2,7 +2,11 @@
 
 Builds each guarded query's DataFrame with the SAME session config as
 tests/conftest.py (local[4], shuffle.partitions=4, AQE on, sf0.001)
-and records its exchange counts. Run after any deliberate plan change;
+and records its exchange counts. The exact-sequence kernel's
+range-partition count is forced to shuffle.partitions, as in
+tests/test_plan_fingerprints.py: sized from sf0.001 data it would take
+its one-partition ``coalesce(1)`` path and hide every shuffle
+downstream of an exact route. Run after any deliberate plan change;
 commit the updated JSON together with the code that changed the plan.
 
 Usage: python tools/gen_plan_fingerprints.py
@@ -33,9 +37,6 @@ GUARDED = [
     "conversion_funnel",
     "dedup_exact",
     "dedup_minhash_lsh",
-    "embedding_topk",
-    "text_token_stats",
-    "doc_fingerprint",
     "events_asof_last_purchase",
     "heavy_hitter_users",
     "decontamination_bloom",
@@ -45,22 +46,10 @@ GUARDED = [
     # round 6: the min-struct argmin k-means plan (one tiny-row
     # exchange per assignment instead of a full scored-row sort)
     "embedding_kmeans",
-    "semantic_dedup",
-    # round 7: the exact-lattice LM scores (bigint micros sums) and
-    # the two new audit queries (exact+pruned assignment / simhash
-    # truth+found in one plan — growth here doubles real scans)
-    "lm_doc_score",
-    "dsir_weights",
+    # round 7: the two audit queries (exact+pruned assignment /
+    # simhash truth+found in one plan — growth here doubles real scans)
     "kmeans_pruned_agreement",
     "simhash_recall_audit",
-    # round 7: NB classifier — broadcast model grid + one
-    # (doc,label,int64) shuffle + min(struct) argmax; a window-sort
-    # or a non-broadcast grid join would show up here. Baseline moved
-    # 31/11 -> 33/12 with the zero-support-label fix (the grid's label
-    # dimension now left-joins label_docs so absent labels keep their
-    # smoothed entries — one more tiny aggregate + broadcast, priced
-    # and deliberate).
-    "nb_lang_classifier",
     # round 7, second batch: the drain schedule must stay one range
     # shuffle (riding the exact router's exchange) + one broadcast map
     # join; the gap fill must stay one per-key exchange + a tiny
@@ -69,11 +58,9 @@ GUARDED = [
     # localCheckpoints, so the returned plan is just checkpoint scans.
     "priority_drain_schedule",
     "ts_gap_fill",
-    # round 7, third batch: the calibration table must stay the NB
-    # plan + one more hash aggregate. dedup_keep_canonical is excluded
-    # like label_propagation: connected_components checkpoints
-    # internally, so the returned plan is mostly checkpoint scans.
-    "nb_calibration",
+    # dedup_keep_canonical is excluded like label_propagation:
+    # connected_components checkpoints internally, so the returned
+    # plan is mostly checkpoint scans.
     # round 7, fifth batch: the constraint audit must stay ONE
     # aggregation pass over the fact scan plus one anti-join (a second
     # fact scan per check is exactly the regression this guard
@@ -145,7 +132,6 @@ GUARDED = [
     "error_purchase_interval",
     "dedup_edit_distance",
     "span_dedup",
-    "text_repetition",
     "dedup_incremental",
     "dedup_incremental_steady",
     "user_value_ewma",
@@ -178,11 +164,9 @@ GUARDED = [
     # must keep the threshold shape (weight-sum agg + broadcast join +
     # survivor window — a full-stratum window funnel is the
     # regression); k-anonymity is two hash aggregates; M4 is ONE
-    # partial-agg exchange; vocab drift is explode-agg + vocab-sized
-    # window/aggregates.
+    # partial-agg exchange.
     "corpus_pack_stats",
     "documents_weighted_sample",
-    "source_vocab_drift",
     "events_k_anonymity",
     "events_m4_downsample",
     # round 8 fourth batch: ACF must stay bin-agg + one series window
@@ -332,6 +316,11 @@ def main() -> int:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
+
+    from prioritizing_event_processing_with_apache_kafka_spark.operators import routing
+
+    range_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    routing._range_partitions = lambda df, **_: range_partitions
 
     import __spark_entry__ as entrymod
 
