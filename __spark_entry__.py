@@ -61,7 +61,6 @@ _DRIVER_HEAD = [
     "stream_route_lifetime",
     "customer_rfm",
     "documents_weighted_sample",
-    "effective_corpus_size",
     "embedding_outlier_audit",
     "embedding_quantile_norm",
     "erasure_cascade",
@@ -79,8 +78,6 @@ _DRIVER_HEAD = [
     "layout_rebalance_impact",
     "lineitem_benford",
     "nation_trade_matrix",
-    "neardup_bfs_hops",
-    "neardup_kcore",
     "order_status_reconciliation",
     "orders_dup_screen",
     "orders_winsorized",

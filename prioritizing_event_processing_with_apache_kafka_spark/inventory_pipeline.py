@@ -1,10 +1,9 @@
 """Query inventory, part 2: corpus, embedding and event-analytics queries.
 
-Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash) and its graph
-closures, term statistics, embedding clustering and PCA, sampling,
-streaming rollups and keyed time-series features — each over the
-fixture tables, with DuckDB oracles wherever the operator is
-SQL-expressible.
+Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), term
+statistics, embedding clustering, sampling, streaming rollups and keyed
+time-series features — each over the fixture tables, with DuckDB
+oracles wherever the operator is SQL-expressible.
 
 The probabilistic near-dup operators (MinHash, SimHash) *verify* their
 candidates with the exact n-gram Jaccard before reporting, so their
@@ -91,88 +90,6 @@ JOIN sh sx ON sx.doc_id = c.x
 JOIN sh sy ON sy.doc_id = c.y
 WHERE CAST(len(list_intersect(sx.shingles, sy.shingles)) AS DOUBLE)
       / (len(sx.shingles) + len(sy.shingles) - len(list_intersect(sx.shingles, sy.shingles))) >= 0.5
-"""
-
-
-# Shared closure fragments over the ground-truth pairs. Four oracles
-# need the undirected edge list and three need the full component
-# closure; keeping ONE copy of each means a parameter retune (k,
-# threshold) or a closure change edits one fragment instead of
-# silently drifting four oracles apart. The Spark-side single source
-# is `_doc_components` below.
-SQL_NEARDUP_EDGE_CTES = f"""pairs AS (
-  {SQL_NGRAM_JACCARD}
-),
-edges AS (
-  SELECT x AS a, y AS b FROM pairs
-  UNION
-  SELECT y AS a, x AS b FROM pairs
-)"""
-
-SQL_NEARDUP_COMPONENT_CTES = (
-    SQL_NEARDUP_EDGE_CTES
-    + """,
-reach AS (
-  SELECT DISTINCT a AS node, a AS r FROM edges
-  UNION
-  SELECT e.a AS node, reach.r FROM edges e JOIN reach ON reach.node = e.b
-),
-comp AS (
-  SELECT node AS doc_id, MIN(r) AS component FROM reach GROUP BY node
-)"""
-)
-
-
-def _doc_components(docs: DataFrame) -> DataFrame:
-    """(doc_id, component) closure over the canonical near-dup pairs
-    (k=4, Jaccard >= 0.5) — the single Spark-side source for every
-    query that clusters the corpus (components, leakage-safe split,
-    canonical selection)."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        connected_components,
-    )
-
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return connected_components(pairs, src="x", dst="y").select(
-        F.col("node").alias("doc_id"), "component"
-    )
-
-
-def q_neardup_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blast radius over the near-dup graph: minimum hop distance from
-    the seed set (``doc_id % 29 == 0`` — the "known bad" quarantine
-    list) to every document within 4 hops of it, over the canonical
-    exact-Jaccard edge list (``operators/graph.py:bfs_hops`` — bounded
-    BFS as frontier⋈edges hash joins, each round shuffling only the
-    frontier). The DuckDB oracle replays it with a bounded recursive
-    CTE, so an iterative distributed traversal is hash-proved equal to
-    the declarative fixpoint — the same discipline as
-    ``dedup_components``."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        bfs_hops,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    seeds = docs.filter(F.col("doc_id") % 29 == 0).select(
-        F.col("doc_id").alias("node")
-    )
-    return bfs_hops(pairs, seeds, max_hops=4).select(
-        F.col("node").alias("doc_id"), F.col("hop").cast("int").alias("hop")
-    )
-
-
-SQL_NEARDUP_BFS_HOPS = f"""
-WITH RECURSIVE {SQL_NEARDUP_EDGE_CTES},
-bfs AS (
-  SELECT doc_id AS node, 0 AS hop FROM documents WHERE doc_id % 29 = 0
-  UNION
-  SELECT e.b AS node, bfs.hop + 1 AS hop
-  FROM bfs JOIN edges e ON e.a = bfs.node
-  WHERE bfs.hop < 4
-)
-SELECT CAST(node AS BIGINT) AS doc_id, CAST(MIN(hop) AS INTEGER) AS hop
-FROM bfs GROUP BY 1
 """
 
 
@@ -513,146 +430,9 @@ def q_kmeans_pruned_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_embedding_pca_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Machine-audited gate for the distributed PCA/whitening operator
-    (``operators/pca.py`` — the SemDeDup-paper preprocessing step:
-    covariance moments aggregated map-side, d×d eigh on the driver,
-    projection in native Column expressions). Fits ``p=4`` whitened
-    components on the embeddings table, projects every vector, and
-    reports one row of properties a CORRECT whitened PCA must satisfy
-    on any data, checked entirely in-plan from the projected output:
-
-    - ``max_abs_mean`` — projected components are centered: worst
-      |mean| over the p components (audited ≤ 1e-4; the only noise is
-      the 6-decimal rounding of projected values);
-    - ``min_comp_var`` / ``max_comp_var`` — whitening makes every
-      component's population variance 1 (audited within [0.98, 1.02]);
-    - ``max_offdiag_corr`` — PCA diagonalizes the sample covariance,
-      so distinct components are uncorrelated: worst |Pearson corr|
-      over the p(p−1)/2 pairs (audited ≤ 0.02);
-    - ``evr_margin`` — explained-variance ratio minus p/d, audited
-      ≥ −1e-6: the top-p eigenvalues can never explain LESS variance
-      than p isotropic directions, so a negative margin means the
-      eigensolver or the moment aggregation broke.
-
-    Enforced via the SELF_AUDITS registry in ``tools/check_oracle.py``
-    (same machinery as the ANN recall / pruned-k-means gates); not
-    SQL-oracled — DuckDB has no eigensolver, and the audit IS the
-    spec."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators import pca
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    p = 4
-    model = pca.fit_pca(emb, n_components=p, whiten=True)
-    proj = pca.project_embeddings(emb, model).select(
-        *[F.col("pca")[i].alias(f"c{i}") for i in range(p)]
-    )
-    pairs = [(i, j) for i in range(p) for j in range(i + 1, p)]
-    return proj.agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.round(
-            F.greatest(*[F.abs(F.avg(f"c{i}")) for i in range(p)]), 6
-        ).alias("max_abs_mean"),
-        F.round(
-            F.least(*[F.var_pop(f"c{i}") for i in range(p)]), 6
-        ).alias("min_comp_var"),
-        F.round(
-            F.greatest(*[F.var_pop(f"c{i}") for i in range(p)]), 6
-        ).alias("max_comp_var"),
-        F.round(
-            F.greatest(
-                *[F.abs(F.corr(f"c{i}", f"c{j}")) for i, j in pairs]
-            ),
-            6,
-        ).alias("max_offdiag_corr"),
-        F.round(
-            F.lit(model.explained_variance_ratio - p / model.dim), 6
-        ).alias("evr_margin"),
-    )
-
-
 # ---------------------------------------------------------------------------
 # Dedup clustering, sampling, profiling
 # ---------------------------------------------------------------------------
-
-
-def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup *clusters* from near-dup *pairs*: connected components
-    over the exact-Jaccard edge list (``operators/graph.py``, iterated
-    min-label propagation + pointer jumping — every step a hash join,
-    O(log diameter) rounds). Component id = min doc_id of the cluster.
-    The DuckDB oracle computes the same closure with a recursive CTE —
-    an iterative distributed algorithm proved bit-equal to the
-    declarative fixpoint."""
-    docs = load_table(spark, sf_dir, "documents")
-    return _doc_components(docs)
-
-
-SQL_DEDUP_COMPONENTS = f"""
-WITH RECURSIVE {SQL_NEARDUP_COMPONENT_CTES}
-SELECT doc_id, component FROM comp
-"""
-
-
-def q_dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup pipeline's OUTPUT step: which document survives each
-    near-dup cluster. Components come from the exact-Jaccard closure
-    (singletons fall back to their own doc_id); the canonical member is
-    the byte-longest text (NULL text sorts last), ties to the smallest
-    doc_id — the "keep longest" heuristic curation stacks default to. Selection is a map-side
-    ``min(struct)`` argmax per group joined back to the members (no
-    window sort over the corpus); every stage is the already-measured
-    pair/CC machinery plus one hash join."""
-    docs = load_table(spark, sf_dir, "documents")
-    comp = _doc_components(docs)
-    # BYTE length on both engines (octet_length / strlen): Spark's
-    # length() counts code points while DuckDB's counts grapheme
-    # clusters, which diverges on non-ASCII text; bytes are identical
-    # everywhere. NULL text coalesces to -1 so it sorts LAST under
-    # "longest wins" in both engines (Spark's min(struct) would
-    # otherwise put the NULL first and elect the empty doc canonical).
-    members = (
-        docs.select(
-            "doc_id",
-            F.coalesce(F.octet_length("text"), F.lit(-1)).alias("__len"),
-        )
-        .join(comp, "doc_id", "left")
-        .withColumn("group_key", F.coalesce(F.col("component"), F.col("doc_id")))
-    )
-    canon = members.groupBy("group_key").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.min(
-            F.struct((-F.col("__len")).alias("nl"), F.col("doc_id").alias("d"))
-        ).alias("__c"),
-    )
-    return members.join(canon, "group_key").select(
-        "doc_id",
-        "group_key",
-        "n_members",
-        F.col("__c.d").alias("canonical_doc_id"),
-        (F.col("doc_id") == F.col("__c.d")).alias("is_canonical"),
-    )
-
-
-SQL_DEDUP_KEEP_CANONICAL = f"""
-WITH RECURSIVE {SQL_NEARDUP_COMPONENT_CTES},
-m AS (
-  SELECT d.doc_id, COALESCE(c.component, d.doc_id) AS group_key,
-         COALESCE(strlen(d.text), -1) AS len
-  FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-),
-sel AS (
-  SELECT m.*,
-         FIRST_VALUE(doc_id) OVER (PARTITION BY group_key
-                                   ORDER BY len DESC, doc_id ASC)
-           AS canonical_doc_id,
-         COUNT(*) OVER (PARTITION BY group_key) AS n_members
-  FROM m
-)
-SELECT doc_id, group_key, CAST(n_members AS BIGINT) AS n_members,
-       canonical_doc_id, doc_id = canonical_doc_id AS is_canonical
-FROM sel
-"""
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1058,137 +838,6 @@ FROM documents GROUP BY 1, 2
 SQL_DATASET_SPLIT = _sql_dataset_split()
 
 
-def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup-AWARE train/val/test split — the leakage guard a plain
-    hash split lacks: two near-duplicate documents split independently
-    can land train/test and leak evaluation data (the failure mode
-    decontamination papers warn about INSIDE a single corpus). Here
-    the split key is the near-dup connected component (singletons fall
-    back to their own doc_id), so every member of a duplicate cluster
-    lands in the SAME split by construction — leakage is structurally
-    impossible, not statistically unlikely.
-
-    Composition of three already-oracled primitives, all reused at
-    their declared parameters: ``ngram_jaccard_pairs`` (k=4, 0.5) →
-    ``connected_components`` (min-label propagation + pointer jumping,
-    O(log diameter) hash-join rounds) → ``hash_coin`` on the group
-    key (engine-replayable arithmetic, no RNG state). At 100 TB the
-    pair/CC stages are the documented blocked/bounded machinery and
-    the split itself is a map-side expression — nothing new shuffles.
-    The DuckDB oracle replays the closure with a recursive CTE and
-    the identical coin arithmetic."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_coin,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    comp = _doc_components(docs)
-    grouped = (
-        docs.select("doc_id", "lang")
-        .join(comp, "doc_id", "left")
-        .withColumn(
-            "group_key",
-            F.coalesce(F.col("component"), F.col("doc_id")),
-        )
-    )
-    coin = hash_coin(F.col("group_key"))
-    split = (
-        F.when(coin < 0.8, F.lit("train"))
-        .when(coin < 0.9, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return grouped.select("doc_id", "group_key", split.alias("split"))
-
-
-def _sql_leakage_safe_split() -> str:
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_coin_sql,
-    )
-
-    coin = hash_coin_sql("COALESCE(c.component, d.doc_id)")
-    return f"""
-WITH RECURSIVE {SQL_NEARDUP_COMPONENT_CTES}
-SELECT d.doc_id,
-       COALESCE(c.component, d.doc_id) AS group_key,
-       CASE WHEN {coin} < 0.8 THEN 'train'
-            WHEN {coin} < 0.9 THEN 'val'
-            ELSE 'test' END AS split
-FROM documents d LEFT JOIN comp c ON c.doc_id = d.doc_id
-"""
-
-
-SQL_LEAKAGE_SAFE_SPLIT = _sql_leakage_safe_split()
-
-
-def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-supervised label spreading over the near-dup graph: every
-    fifth document keeps its ``lang`` as a seed label, two majority-vote
-    rounds spread it to unlabeled near-duplicates
-    (``operators/graph.py:label_propagation``) — the weak-supervision
-    step that turns a small labeled set into corpus-scale labels.
-    Deterministic by construction (vote counts are integers, ties break
-    to the smallest label), so the DuckDB oracle unrolls the same two
-    rounds as CTEs and must match hash-exact. Unreached documents come
-    back with NULL label — the caller's defaulting decision, surfaced
-    rather than hidden."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        label_propagation,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    seeds = docs.filter(F.col("doc_id") % 5 == 0).select(
-        F.col("doc_id").alias("node"), F.col("lang").alias("label")
-    )
-    labels = label_propagation(pairs, seeds, rounds=2)
-    return (
-        docs.select("doc_id")
-        .join(labels.withColumnRenamed("node", "doc_id"), "doc_id", "left")
-        .select("doc_id", "label", "round_assigned")
-    )
-
-
-SQL_LABEL_PROPAGATION = f"""
-WITH {SQL_NEARDUP_EDGE_CTES},
-l0 AS (
-  SELECT doc_id AS node, lang AS label, 0 AS round_assigned
-  FROM documents WHERE doc_id % 5 = 0
-),
-v1 AS (
-  SELECT e.a AS node, l.label, COUNT(*) AS nv
-  FROM edges e JOIN l0 l ON l.node = e.b
-  WHERE e.a NOT IN (SELECT node FROM l0)
-  GROUP BY 1, 2
-),
-w1 AS (
-  SELECT node, label, 1 AS round_assigned FROM (
-    SELECT node, label,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY nv DESC, label ASC) AS rn
-    FROM v1
-  ) WHERE rn = 1
-),
-l1 AS (SELECT * FROM l0 UNION ALL SELECT * FROM w1),
-v2 AS (
-  SELECT e.a AS node, l.label, COUNT(*) AS nv
-  FROM edges e JOIN l1 l ON l.node = e.b
-  WHERE e.a NOT IN (SELECT node FROM l1)
-  GROUP BY 1, 2
-),
-w2 AS (
-  SELECT node, label, 2 AS round_assigned FROM (
-    SELECT node, label,
-           ROW_NUMBER() OVER (PARTITION BY node
-                              ORDER BY nv DESC, label ASC) AS rn
-    FROM v2
-  ) WHERE rn = 1
-),
-l2 AS (SELECT * FROM l1 UNION ALL SELECT * FROM w2)
-SELECT d.doc_id, l.label, l.round_assigned
-FROM documents d LEFT JOIN l2 l ON l.node = d.doc_id
-"""
-
-
 def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for pretraining batches: documents stream into
     fixed-capacity packs (1024 whitespace tokens) in doc_id order,
@@ -1379,73 +1028,6 @@ GROUP BY c.c_mktsegment
 """
 
 
-def q_dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank centrality over the near-dup graph: which document is
-    the hub its cluster duplicates? Fixed 3 iterations so DuckDB can
-    unroll the same computation as CTEs — the third iterative operator
-    (after connected components and k-means) with a full value oracle."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        pagerank,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    # The symmetrizing union inside pagerank() references the pair
-    # frame twice — persist so the shingle self-join runs once.
-    pairs = scoped_persist(D.ngram_jaccard_pairs(docs, k=4, threshold=0.5))
-    return pagerank(pairs, n_iter=3)
-
-
-_SQL_PR_ITER = """
-{out} AS (
-  SELECT e.b AS node,
-         (CAST(1.0 AS DOUBLE) - 0.85) / nn.n
-         + 0.85 * CAST(SUM(CAST(round(r.rank / d.outdeg, 12) AS DECIMAL(28,12))) AS DOUBLE)
-           AS rank
-  FROM {prev} r
-  JOIN deg d USING (node)
-  JOIN edges e ON e.a = r.node
-  CROSS JOIN nn
-  GROUP BY e.b, nn.n
-)"""
-
-SQL_DEDUP_PAGERANK = f"""
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(generate_series(1, greatest(len(tokens) - 3, 1)),
-                       i -> array_to_string(tokens[i:i+3], ' '))) AS shingles
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS s FROM sh
-), cand AS (
-  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-), pairs AS (
-  SELECT c.x, c.y
-  FROM cand c
-  JOIN sh sx ON sx.doc_id = c.x
-  JOIN sh sy ON sy.doc_id = c.y
-  WHERE CAST(len(list_intersect(sx.shingles, sy.shingles)) AS DOUBLE)
-        / (len(sx.shingles) + len(sy.shingles) - len(list_intersect(sx.shingles, sy.shingles))) >= 0.5
-), edges AS (
-  SELECT x AS a, y AS b FROM pairs UNION SELECT y, x FROM pairs
-), nodes AS (
-  SELECT DISTINCT a AS node FROM edges
-), nn AS (
-  SELECT COUNT(*) AS n FROM nodes
-), deg AS (
-  SELECT a AS node, COUNT(*) AS outdeg FROM edges GROUP BY a
-), r0 AS (
-  SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS rank FROM nodes CROSS JOIN nn
-),
-{_SQL_PR_ITER.format(out="it1", prev="r0")},
-{_SQL_PR_ITER.format(out="it2", prev="it1")},
-{_SQL_PR_ITER.format(out="it3", prev="it2")}
-SELECT node, ROUND(rank, 6) AS rank FROM it3
-"""
-
-
 # ---------------------------------------------------------------------------
 # Per-source curation profile
 # ---------------------------------------------------------------------------
@@ -1499,48 +1081,6 @@ SELECT source, n_docs, n_unique_texts,
        ROUND(CAST(sum_tokens AS DOUBLE) / n_docs, 6) AS avg_tokens,
        ROUND(CAST(n_en AS DOUBLE) / n_docs, 6) AS en_share
 FROM agg
-"""
-
-
-def q_corpus_diff_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-version delta (operators/diffing.py): two corpus
-    versions carved deterministically from the fixture — v1 drops
-    ``doc_id % 7 == 0`` (those are *added* in v2) and appends an
-    edit marker to ``doc_id % 11 == 0`` texts (*changed*); v2 drops
-    ``doc_id % 13 == 0`` (*removed*). The diff reduces each side to
-    (key, xxhash64(text)) and full-outer joins 16-byte rows — the
-    oracle replays the same status logic by direct text comparison,
-    so a hash-collision bug or join-type slip would hash-mismatch."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.diffing import (
-        corpus_diff_summary,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    old = docs.filter(F.col("doc_id") % 7 != 0).withColumn(
-        "text",
-        F.when(
-            F.col("doc_id") % 11 == 0, F.concat(F.col("text"), F.lit(" [v1]"))
-        ).otherwise(F.col("text")),
-    )
-    new = docs.filter(F.col("doc_id") % 13 != 0)
-    return corpus_diff_summary(old, new)
-
-
-SQL_CORPUS_DIFF_STATUS = """
-WITH old AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 11 = 0 THEN text || ' [v1]' ELSE text END AS text
-  FROM documents WHERE doc_id % 7 <> 0
-), new AS (
-  SELECT doc_id, text FROM documents WHERE doc_id % 13 <> 0
-)
-SELECT CASE WHEN o.doc_id IS NULL THEN 'added'
-            WHEN n.doc_id IS NULL THEN 'removed'
-            WHEN o.text <> n.text THEN 'changed'
-            ELSE 'unchanged' END AS status,
-       COUNT(*) AS n_docs
-FROM old o FULL OUTER JOIN new n ON o.doc_id = n.doc_id
-GROUP BY 1
 """
 
 
@@ -2071,46 +1611,6 @@ UNION ALL SELECT 'orphan_custkey', orphan_custkey, orphan_custkey <= 0 FROM r
 """
 
 
-def q_dedup_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document triangle participation over the canonical near-dup
-    graph (k=4, Jaccard >= 0.5) — the local-clustering signal that
-    separates genuine duplicate CLIQUES (members close triangles) from
-    chain-shaped transitive false positives (members do not). A curation
-    pipeline uses it to decide where single-survivor collapse is safe.
-    Ordered wedge join (``operators/graph.py:triangle_participation``):
-    each triangle a<b<c found exactly once, two hash joins over the
-    edge list, never the node list."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        triangle_participation,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return (
-        triangle_participation(pairs)
-        .withColumnRenamed("node", "doc_id")
-        .select("doc_id", "triangles")
-    )
-
-
-SQL_DEDUP_TRIANGLE_COUNT = f"""
-WITH pairs AS ({SQL_NGRAM_JACCARD}),
-tri AS (
-  SELECT p1.x AS a, p1.y AS b, p2.y AS c
-  FROM pairs p1
-  JOIN pairs p2 ON p2.x = p1.y
-  JOIN pairs p3 ON p3.x = p1.x AND p3.y = p2.y
-),
-corners AS (
-  SELECT a AS doc_id FROM tri
-  UNION ALL SELECT b FROM tri
-  UNION ALL SELECT c FROM tri
-)
-SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS triangles
-FROM corners GROUP BY doc_id
-"""
-
-
 def q_event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types per user
     (``operators/sequence.py:transition_matrix``) — the behavior-model
@@ -2628,37 +2128,6 @@ FROM per_session GROUP BY 1
 """
 
 
-def q_corpus_merkle_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Anti-entropy bucket digests over the documents corpus
-    (``operators/diffing.py:merkle_bucket_checksums``) — the Merkle
-    leaf table two replicas exchange to find which key ranges need
-    re-sync, 64 rows regardless of corpus size. The checksum is a
-    commutative sum of truncated md5 digests mod 1e9+7, so it reduces
-    map-side and is engine-portable; the oracle recomputes every
-    digest in DuckDB and must land on the identical 64 integers."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.diffing import (
-        merkle_bucket_checksums,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    return merkle_bucket_checksums(
-        docs,
-        key_col="doc_id",
-        content_cols=("text", "lang", "source"),
-        num_buckets=64,
-    )
-
-
-SQL_CORPUS_MERKLE_BUCKETS = """
-SELECT CAST(doc_id % 64 AS BIGINT) AS bucket,
-       CAST(COUNT(*) AS BIGINT) AS n_rows,
-       CAST(SUM(CAST(('0x' || substr(
-                md5(concat_ws('|', CAST(doc_id AS VARCHAR), text, lang, source)),
-                1, 14)) AS BIGINT) % 1000000007) % 1000000007 AS BIGINT) AS checksum
-FROM documents GROUP BY 1
-"""
-
-
 def q_lineitem_numeric_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Pearson matrix over lineitem's four numeric measures
     (``operators/sampling.py:pairwise_pearson``) — the one-scan
@@ -2778,37 +2247,6 @@ WITH touched AS (
 SELECT attributed_to, n_purchases,
        CAST((n_purchases * 1000000) // SUM(n_purchases) OVER () AS BIGINT) AS share_ppm
 FROM c
-"""
-
-
-def q_neardup_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embeddedness of every near-dup pair — common-neighbor counts
-    over the canonical graph (``operators/graph.py:
-    common_neighbor_counts``): pairs sharing many mutual near-dups are
-    cluster cores, zero-embedded pairs are fragile bridges a curation
-    pass should re-verify before single-survivor collapse. Same
-    wedge-join skeleton as the triangle count, grouped per edge."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        common_neighbor_counts,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return common_neighbor_counts(pairs).select(
-        F.col("x"), F.col("y"), "common_neighbors"
-    )
-
-
-SQL_NEARDUP_COMMON_NEIGHBORS = f"""
-WITH {SQL_NEARDUP_EDGE_CTES},
-wedges AS (
-  SELECT e1.a AS x, e2.a AS y, CAST(COUNT(*) AS BIGINT) AS cn
-  FROM edges e1 JOIN edges e2 ON e1.b = e2.b AND e1.a < e2.a
-  GROUP BY 1, 2
-)
-SELECT p.x, p.y,
-       CAST(COALESCE(w.cn, 0) AS BIGINT) AS common_neighbors
-FROM pairs p LEFT JOIN wedges w ON w.x = p.x AND w.y = p.y
 """
 
 
@@ -2936,52 +2374,7 @@ JOIN tot ty ON ty.doc_id = p.y
 # ---------------------------------------------------------------------------
 
 # --------------------------------------------------------------------------
-# Round-8 third batch: corpus packing, weighted sampling, vocabulary drift,
-# k-anonymity, M4 downsampling — five operator families a production
-# training-data platform runs that the suite did not yet cover.
-
-
-def q_corpus_pack_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Concat-then-chunk shard planning (``operators/packing.py``):
-    per hash-shard, how many seq_len=512 training sequences the corpus
-    yields, how many documents straddle a sequence boundary, tail
-    padding waste, and fill ratio — all prefix-sum integer arithmetic
-    on whitespace token counts, hash-oracled bit-exact."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.packing import (
-        pack_stats,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return pack_stats(docs, n_shards=8, seq_len=512)
-
-
-SQL_CORPUS_PACK_STATS = """
-WITH d AS (
-  SELECT CAST(doc_id % 8 AS INTEGER) AS shard, doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
-  FROM documents
-), spans AS (
-  SELECT shard, tok,
-         SUM(tok) OVER (PARTITION BY shard ORDER BY doc_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e
-  FROM d
-), agg AS (
-  SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_docs,
-         CAST(SUM(tok) AS BIGINT) AS total_tokens,
-         CAST(COALESCE(SUM(CASE WHEN tok > 0
-                                 AND (e - tok) // 512 < (e - 1) // 512
-                                THEN 1 END), 0) AS BIGINT) AS boundary_docs
-  FROM spans GROUP BY 1
-)
-SELECT shard, n_docs, total_tokens,
-       CAST((total_tokens + 511) // 512 AS BIGINT) AS n_sequences,
-       boundary_docs,
-       CAST((512 - total_tokens % 512) % 512 AS BIGINT) AS tail_waste,
-       CAST(CASE WHEN total_tokens > 0 THEN
-              total_tokens * 1000000 // (((total_tokens + 511) // 512) * 512)
-            END AS BIGINT) AS fill_ppm
-FROM agg
-"""
+# Round-8 third batch: weighted sampling, k-anonymity, M4 downsampling.
 
 
 def q_documents_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3309,55 +2702,8 @@ WHERE s.d2_micros * 1000000 // m.mean_d2_micros >= 1050000
 
 
 # --------------------------------------------------------------------------
-# Round-8 fifth batch: k-core nucleus, source provenance census, decile
-# drift, erasure cascade.
-
-
-def q_neardup_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core of the canonical near-dup graph
-    (``operators/graph.py:kcore``): the template-farm nucleus — nodes
-    keeping >= 2 in-set neighbors after iterative peeling. Every peel
-    round is a semi-join + aggregate sized by the shrinking subgraph.
-    The DuckDB oracle unrolls four peel rounds; valid while the fixture
-    converges within that depth (measured: 1 round at sf0.01 and
-    sf0.1; the engine raises ConvergenceError past 20 rounds, so a
-    deeper fixture fails loud on both sides)."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        kcore,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return kcore(pairs, k=2).select(
-        F.col("node").alias("doc_id"), "core_degree"
-    )
-
-
-SQL_NEARDUP_KCORE = f"""
-WITH {SQL_NEARDUP_EDGE_CTES},
-a0 AS (SELECT DISTINCT a AS node FROM edges),
-a1 AS (
-  SELECT e.a AS node, COUNT(*) AS d FROM edges e
-  JOIN a0 x ON x.node = e.a JOIN a0 y ON y.node = e.b
-  GROUP BY 1 HAVING COUNT(*) >= 2
-),
-a2 AS (
-  SELECT e.a AS node, COUNT(*) AS d FROM edges e
-  JOIN a1 x ON x.node = e.a JOIN a1 y ON y.node = e.b
-  GROUP BY 1 HAVING COUNT(*) >= 2
-),
-a3 AS (
-  SELECT e.a AS node, COUNT(*) AS d FROM edges e
-  JOIN a2 x ON x.node = e.a JOIN a2 y ON y.node = e.b
-  GROUP BY 1 HAVING COUNT(*) >= 2
-),
-a4 AS (
-  SELECT e.a AS node, COUNT(*) AS d FROM edges e
-  JOIN a3 x ON x.node = e.a JOIN a3 y ON y.node = e.b
-  GROUP BY 1 HAVING COUNT(*) >= 2
-)
-SELECT node AS doc_id, CAST(d AS BIGINT) AS core_degree FROM a4
-"""
+# Round-8 fifth batch: source provenance census, decile drift, erasure
+# cascade.
 
 
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3658,8 +3004,7 @@ FROM f
 
 
 # --------------------------------------------------------------------------
-# Round-8 eighth batch: RFM segmentation, dedup-aware corpus size, supplier
-# ship-SLA watch.
+# Round-8 eighth batch: RFM segmentation, supplier ship-SLA watch.
 
 
 def q_customer_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3811,61 +3156,6 @@ FROM scored GROUP BY 1, 2, 3
 """
 
 
-def q_effective_corpus_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dedup-aware corpus sizing — the number a pretraining-data plan
-    actually budgets on: raw token count, the CANONICAL count (tokens
-    surviving near-dup collapse: per cluster, the kept copy's tokens;
-    singletons keep their own), and the uniform-reweighting count
-    (Σ cluster_tokens DIV cluster_size — the effective mass when every
-    near-dup cluster is down-weighted to one copy's worth). Reuses the
-    canonical exact-Jaccard closure; one join + one fold past it.
-    Hash-oracled via the shared recursive-CTE closure."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("__tok"),
-    )
-    comp = _doc_components(docs)
-    clustered = toks.join(comp, "doc_id", "left").withColumn(
-        "__comp", F.coalesce(F.col("component"), F.col("doc_id"))
-    )
-    per_cluster = clustered.groupBy("__comp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__sz"),
-        F.sum("__tok").cast("bigint").alias("__ct"),
-        F.max("__tok").cast("bigint").alias("__keep"),
-    )
-    return per_cluster.agg(
-        F.sum("__sz").cast("bigint").alias("n_docs"),
-        F.count(F.lit(1)).cast("bigint").alias("n_clusters"),
-        F.sum("__ct").cast("bigint").alias("raw_tokens"),
-        F.sum("__keep").cast("bigint").alias("canonical_tokens"),
-        F.sum(F.expr("__ct DIV __sz")).cast("bigint").alias("reweighted_tokens"),
-    )
-
-
-SQL_EFFECTIVE_CORPUS_SIZE = f"""
-WITH RECURSIVE {SQL_NEARDUP_COMPONENT_CTES},
-toks AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS tok
-  FROM documents
-), clustered AS (
-  SELECT t.doc_id, t.tok, COALESCE(c.component, t.doc_id) AS comp
-  FROM toks t LEFT JOIN comp c ON c.doc_id = t.doc_id
-), per_cluster AS (
-  SELECT comp, CAST(COUNT(*) AS BIGINT) AS sz,
-         CAST(SUM(tok) AS BIGINT) AS ct,
-         CAST(MAX(tok) AS BIGINT) AS keep
-  FROM clustered GROUP BY 1
-)
-SELECT CAST(SUM(sz) AS BIGINT) AS n_docs,
-       CAST(COUNT(*) AS BIGINT) AS n_clusters,
-       CAST(SUM(ct) AS BIGINT) AS raw_tokens,
-       CAST(SUM(keep) AS BIGINT) AS canonical_tokens,
-       CAST(SUM(ct // sz) AS BIGINT) AS reweighted_tokens
-FROM per_cluster
-"""
-
-
 def _table_bytes(spark: SparkSession, sf_dir: str, table: str) -> int:
     """On-disk parquet bytes for one table — the size signal behind
     per-query partition sizing (:func:`_fact_partitions`) and
@@ -4014,8 +3304,7 @@ def q_supplier_ship_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # base is SUPPLIER-sized (one row per supplier) and needed twice
     # (the fleet-wide share and the final projection). Persist + fetch
-    # the ONE fleet scalar driver-side (the same convergence-scalar
-    # discipline the graph operators use): a lazy second consumer —
+    # the ONE fleet scalar driver-side: a lazy second consumer —
     # even broadcast-joined — launches a concurrent job that RACES the
     # main plan into the unmaterialized cache and re-runs the 205-task
     # fact stages (measured at 300x: 183 s vs 80 s).
@@ -6162,10 +5451,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "embedding_label_centroids": q_embedding_label_centroids,
     "embedding_kmeans": q_embedding_kmeans,
     "kmeans_pruned_agreement": q_kmeans_pruned_agreement,
-    "embedding_pca_audit": q_embedding_pca_audit,
-    "leakage_safe_split": q_leakage_safe_split,
-    "label_propagation": q_label_propagation,
-    "dedup_keep_canonical": q_dedup_keep_canonical,
     "user_value_pareto": q_user_value_pareto,
     "customer_lorenz_deciles": q_customer_lorenz_deciles,
     "orders_pit_fx_enrich": q_orders_pit_fx_enrich,
@@ -6180,9 +5465,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "part_supplier_degree": q_part_supplier_degree,
     "lineitem_bloom_prefilter": q_lineitem_bloom_prefilter,
     "cohort_ltv_curve": q_cohort_ltv_curve,
-    "dedup_components": q_dedup_components,
-    "neardup_bfs_hops": q_neardup_bfs_hops,
-    "corpus_pack_stats": q_corpus_pack_stats,
     "documents_weighted_sample": q_documents_weighted_sample,
     "events_k_anonymity": q_events_k_anonymity,
     "events_m4_downsample": q_events_m4_downsample,
@@ -6190,12 +5472,10 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lineitem_benford": q_lineitem_benford,
     "orders_winsorized": q_orders_winsorized,
     "embedding_outlier_audit": q_embedding_outlier_audit,
-    "neardup_kcore": q_neardup_kcore,
     "source_overlap": q_source_overlap,
     "events_decile_drift": q_events_decile_drift,
     "erasure_cascade": q_erasure_cascade,
     "customer_rfm": q_customer_rfm,
-    "effective_corpus_size": q_effective_corpus_size,
     "supplier_ship_sla": q_supplier_ship_sla,
     "source_lang_fd": q_source_lang_fd,
     "lang_charclass_profile": q_lang_charclass_profile,
@@ -6230,8 +5510,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "user_value_ewma": q_user_value_ewma,
     "bucket_hourly_anomaly": q_bucket_hourly_anomaly,
     "source_dup_profile": q_source_dup_profile,
-    "corpus_diff_status": q_corpus_diff_status,
-    "dedup_pagerank": q_dedup_pagerank,
     "salted_segment_revenue": q_salted_segment_revenue,
     # Appended round 5 (keep ordering of earlier entries stable).
     "dedup_incremental_steady": q_dedup_incremental_steady,
@@ -6242,7 +5520,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_locf_fill": q_stream_locf_fill,
     # Appended round 7, session 4.
     "data_quality_audit": q_data_quality_audit,
-    "dedup_triangle_count": q_dedup_triangle_count,
     "event_transition_matrix": q_event_transition_matrix,
     "rolling_value_median": q_rolling_value_median,
     "user_time_weighted_value": q_user_time_weighted_value,
@@ -6256,11 +5533,9 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_transition_counts": q_stream_transition_counts,
     "user_value_trend": q_user_value_trend,
     "top_session_paths": q_top_session_paths,
-    "corpus_merkle_buckets": q_corpus_merkle_buckets,
     # Appended round 7, session 4 (batch 8).
     "lineitem_numeric_corr": q_lineitem_numeric_corr,
     "purchase_attribution": q_purchase_attribution,
-    "neardup_common_neighbors": q_neardup_common_neighbors,
     "priority_mix_shift": q_priority_mix_shift,
     # Appended round 7, session 4 (batch 9).
     "dedup_prefix_filter": q_dedup_prefix_filter,
@@ -6280,9 +5555,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "term_doc_frequency": SQL_TERM_DOC_FREQUENCY,
     "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
     "embedding_label_centroids": SQL_EMBEDDING_LABEL_CENTROIDS,
-    "dedup_components": SQL_DEDUP_COMPONENTS,
-    "neardup_bfs_hops": SQL_NEARDUP_BFS_HOPS,
-    "corpus_pack_stats": SQL_CORPUS_PACK_STATS,
     "documents_weighted_sample": SQL_DOCUMENTS_WEIGHTED_SAMPLE,
     "events_k_anonymity": SQL_EVENTS_K_ANONYMITY,
     "events_m4_downsample": SQL_EVENTS_M4_DOWNSAMPLE,
@@ -6290,7 +5562,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "lineitem_benford": SQL_LINEITEM_BENFORD,
     "orders_winsorized": SQL_ORDERS_WINSORIZED,
     "embedding_outlier_audit": SQL_EMBEDDING_OUTLIER_AUDIT,
-    "neardup_kcore": SQL_NEARDUP_KCORE,
     "source_overlap": SQL_SOURCE_OVERLAP,
     "events_decile_drift": SQL_EVENTS_DECILE_DRIFT,
     "erasure_cascade": SQL_ERASURE_CASCADE,
@@ -6311,7 +5582,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "part_supplier_degree": SQL_PART_SUPPLIER_DEGREE,
     "lineitem_bloom_prefilter": SQL_LINEITEM_BLOOM_PREFILTER,
     "cohort_ltv_curve": SQL_COHORT_LTV_CURVE,
-    "effective_corpus_size": SQL_EFFECTIVE_CORPUS_SIZE,
     "supplier_ship_sla": SQL_SUPPLIER_SHIP_SLA,
     "source_lang_fd": SQL_SOURCE_LANG_FD,
     "lang_charclass_profile": SQL_LANG_CHARCLASS_PROFILE,
@@ -6345,14 +5615,9 @@ PIPELINE_ORACLES: dict[str, str] = {
     "dataset_split": SQL_DATASET_SPLIT,
     "doc_packing": SQL_DOC_PACKING,
     "table_profile": SQL_TABLE_PROFILE,
-    "leakage_safe_split": SQL_LEAKAGE_SAFE_SPLIT,
-    "label_propagation": SQL_LABEL_PROPAGATION,
-    "dedup_keep_canonical": SQL_DEDUP_KEEP_CANONICAL,
     "user_value_ewma": SQL_USER_VALUE_EWMA,
     "bucket_hourly_anomaly": SQL_BUCKET_HOURLY_ANOMALY,
     "source_dup_profile": SQL_SOURCE_DUP_PROFILE,
-    "corpus_diff_status": SQL_CORPUS_DIFF_STATUS,
-    "dedup_pagerank": SQL_DEDUP_PAGERANK,
     "salted_segment_revenue": SQL_SALTED_SEGMENT_REVENUE,
     "dedup_incremental_steady": SQL_DEDUP_INCREMENTAL,
     "changelog_compaction": SQL_CHANGELOG_COMPACTION,
@@ -6361,7 +5626,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "scd2_stream_history": SQL_SCD2_STREAM_HISTORY,
     "stream_locf_fill": SQL_STREAM_LOCF_FILL,
     "data_quality_audit": SQL_DATA_QUALITY_AUDIT,
-    "dedup_triangle_count": SQL_DEDUP_TRIANGLE_COUNT,
     "event_transition_matrix": SQL_EVENT_TRANSITION_MATRIX,
     "rolling_value_median": SQL_ROLLING_VALUE_MEDIAN,
     "user_time_weighted_value": SQL_USER_TIME_WEIGHTED_VALUE,
@@ -6376,10 +5640,8 @@ PIPELINE_ORACLES: dict[str, str] = {
     "stream_transition_counts": SQL_EVENT_TRANSITION_MATRIX,
     "user_value_trend": SQL_USER_VALUE_TREND,
     "top_session_paths": SQL_TOP_SESSION_PATHS,
-    "corpus_merkle_buckets": SQL_CORPUS_MERKLE_BUCKETS,
     "lineitem_numeric_corr": SQL_LINEITEM_NUMERIC_CORR,
     "purchase_attribution": SQL_PURCHASE_ATTRIBUTION,
-    "neardup_common_neighbors": SQL_NEARDUP_COMMON_NEIGHBORS,
     "priority_mix_shift": SQL_PRIORITY_MIX_SHIFT,
     # Prefix filtering SHARES the ground truth's oracle — output
     # equality at the hash level IS the no-lost-recall proof.

@@ -40,7 +40,7 @@ Semantics ported (cites into /root/reference):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from itertools import cycle
 
 from prioritizing_event_processing_with_apache_kafka_spark.plans.config import (

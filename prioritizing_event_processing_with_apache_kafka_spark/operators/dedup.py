@@ -475,8 +475,8 @@ def bloom_contamination_pairs(
 
     One deliberate driver scalar: the bitmap needs literal sizing, so
     the benchmark's distinct-shingle count is computed first (a job
-    over the SMALL side only — same pattern as the k-means/graph
-    per-round scalars, not a corpus collect).
+    over the SMALL side only — same pattern as the k-means per-round
+    scalars, not a corpus collect).
 
     Returns ``(id_col, bench_id_col, n_shared, containment)`` — the
     same contract as :func:`contamination_pairs`.
@@ -817,8 +817,7 @@ def token_multiset_jaccard(
     """
     # The pair list feeds both the shared-min join and the final
     # assembly; persisting it keeps an expensive upstream generator
-    # (the shingle join) from running twice — the same lesson
-    # common_neighbor_counts learned at 100x.
+    # (the shingle join) from running twice.
     pairs = scoped_persist(pairs.select("x", "y"))
     counts = scoped_persist(
         df.select(

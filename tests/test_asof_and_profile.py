@@ -1,5 +1,5 @@
-"""Unit tests for the as-of join, binned range join, connected
-components, deterministic sampling, and single-scan profiling."""
+"""Unit tests for the as-of join, binned range join, deterministic
+sampling, and single-scan profiling."""
 
 from __future__ import annotations
 
@@ -9,9 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.asof import asof_join
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    connected_components,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.rangejoin import (
     bin_range_join,
 )
@@ -129,60 +126,6 @@ def test_bin_range_join_matches_naive(spark, sf_dir):
         fast.select("iid", "event_id").sort("iid", "event_id").collect()
         == naive.select("iid", "event_id").sort("iid", "event_id").collect()
     )
-
-
-def test_connected_components_shapes(spark):
-    # chain 1-2-3-4, triangle 10-11-12 (+ redundant edge), pair 20-21
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
-        ["x", "y"],
-    )
-    comp = {
-        r["node"]: r["component"]
-        for r in connected_components(edges).collect()
-    }
-    assert comp == {
-        1: 1, 2: 1, 3: 1, 4: 1,
-        10: 10, 11: 10, 12: 10,
-        20: 20, 21: 20,
-    }
-
-
-def test_connected_components_long_path_converges(spark):
-    n = 40  # path graph: worst diameter per node count
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n)], ["x", "y"])
-    comp = connected_components(edges)
-    assert comp.select("component").distinct().collect()[0][0] == 0
-    assert comp.count() == n + 1
-
-
-def test_connected_components_raises_without_fixpoint(spark):
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        ConvergenceError,
-    )
-
-    # A 40-edge path cannot fully collapse in 1 round even with
-    # pointer jumping; silent partial labels would be wrong components.
-    edges = spark.createDataFrame([(i, i + 1) for i in range(40)], ["x", "y"])
-    with pytest.raises(ConvergenceError, match="fixpoint"):
-        connected_components(edges, max_rounds=1)
-    # Explicit opt-in returns the partial labels instead.
-    partial = connected_components(edges, max_rounds=1, on_max_rounds="ignore")
-    assert partial.count() == 41
-    assert partial.select("component").distinct().count() > 1
-
-
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], ["x", "y"]
-    )
-    comp = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            edges, checkpoint_dir=str(tmp_path / "ckpt")
-        ).collect()
-    }
-    assert comp == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
 def test_hash_sample_partitioning_invariant(spark, sf_dir):
@@ -319,35 +262,3 @@ def test_asof_unknown_tie_column_raises(spark):
     right = spark.createDataFrame([("a", _ts(0), 1.0)], "sym string, ts timestamp, px double")
     with pytest.raises(ValueError, match="right_tie"):
         asof_join(left, right, on="sym", right_cols=["px"], right_tie="nope")
-
-
-def test_pagerank_star_graph(spark):
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        pagerank,
-    )
-
-    edges = spark.createDataFrame([(0, 1), (0, 2), (0, 3)], ["x", "y"])
-    out = {r.node: r.rank for r in pagerank(edges, n_iter=1).collect()}
-    # N=4, r0=0.25; hub receives all three leaf masses, leaves 1/3 of
-    # the hub's — hand-computed: hub 0.675, each leaf 0.108333
-    assert out[0] == pytest.approx(0.675, abs=1e-6)
-    for leaf in (1, 2, 3):
-        assert out[leaf] == pytest.approx(0.108333, abs=1e-6)
-    assert sum(out.values()) == pytest.approx(1.0, abs=1e-5)
-
-
-def test_pagerank_symmetry_and_mass(spark):
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-        pagerank,
-    )
-
-    # path 1-2-3 (middle node better connected) + isolated pair: the
-    # symmetric positions tie exactly, the middle node dominates.
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], ["x", "y"]
-    )
-    out = {r.node: r.rank for r in pagerank(edges, n_iter=3).collect()}
-    assert out[1] == out[3]
-    assert out[10] == out[11]
-    assert out[2] > out[1]  # the hub of the path outranks its ends
-    assert sum(out.values()) == pytest.approx(1.0, abs=1e-5)

@@ -1,17 +1,16 @@
 """Round-7 seventh-batch operators: streaming transition counts,
-grouped OLS trend, session paths, Merkle bucket checksums.
+grouped OLS trend, session paths.
 
 The streaming module is exercised directly at the apply_batch level
 (boundary recovery, state carry, exactly-once replay) the same way
 ``tests/test_locf_stream.py`` drives LOCF; the arithmetic operators
 get goldens plus hypothesis properties against independent references
-(Fraction-exact OLS, hashlib digests, dict-replay transitions over
+(Fraction-exact OLS, dict-replay transitions over
 arbitrary time-respecting splits).
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import tempfile
 from datetime import datetime
@@ -19,9 +18,6 @@ from fractions import Fraction
 
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.diffing import (
-    merkle_bucket_checksums,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.sequence import (
     session_paths,
 )
@@ -311,44 +307,3 @@ class TestSessionPaths:
         )
         got = {r["path"]: r["n_sessions"] for r in session_paths(df).collect()}
         assert got == {"a>b": 2}
-
-
-class TestMerkleBuckets:
-    @staticmethod
-    def _py_checksum(rows, num_buckets=4):
-        P = 1_000_000_007
-        out = {}
-        for doc_id, text in rows:
-            s = f"{doc_id}|{text}"
-            d = int(hashlib.md5(s.encode()).hexdigest()[:14], 16) % P
-            b = doc_id % num_buckets
-            n, c = out.get(b, (0, 0))
-            out[b] = (n + 1, (c + d) % P)
-        return out
-
-    def test_matches_hashlib_replay(self, spark):
-        rows = [(i, f"doc number {i} body") for i in range(20)]
-        df = spark.createDataFrame(rows, "doc_id bigint, text string")
-        got = {
-            r["bucket"]: (r["n_rows"], r["checksum"])
-            for r in merkle_bucket_checksums(
-                df, key_col="doc_id", content_cols=("text",), num_buckets=4
-            ).collect()
-        }
-        assert got == self._py_checksum(rows)
-
-    def test_single_char_flip_changes_checksum(self, spark):
-        rows = [(i, f"payload {i}") for i in range(8)]
-        tampered = [(i, t if i != 5 else t + "!") for i, t in rows]
-        a = merkle_bucket_checksums(
-            spark.createDataFrame(rows, "doc_id bigint, text string"),
-            key_col="doc_id", content_cols=("text",), num_buckets=4,
-        )
-        b = merkle_bucket_checksums(
-            spark.createDataFrame(tampered, "doc_id bigint, text string"),
-            key_col="doc_id", content_cols=("text",), num_buckets=4,
-        )
-        ga = {r["bucket"]: r["checksum"] for r in a.collect()}
-        gb = {r["bucket"]: r["checksum"] for r in b.collect()}
-        diff = {k for k in ga if ga[k] != gb[k]}
-        assert diff == {5 % 4}

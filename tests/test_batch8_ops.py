@@ -1,5 +1,5 @@
-"""Round-7 eighth-batch operators: pairwise Pearson, last-touch
-attribution, common-neighbor embeddedness."""
+"""Round-7 eighth-batch operators: pairwise Pearson and last-touch
+attribution."""
 
 from __future__ import annotations
 
@@ -8,9 +8,6 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    common_neighbor_counts,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
     pairwise_pearson,
 )
@@ -127,23 +124,3 @@ class TestPurchaseAttribution:
             (3, _t(2), 1, "purchase", 0.0),
         ]
         assert self._attr(spark, rows) == {"view"}
-
-
-class TestCommonNeighborCounts:
-    def test_clique_chain_and_bridge(self, spark):
-        # 4-clique: each edge has 2 common neighbors; chain 10-11-12:
-        # edge (10,11) and (11,12) have 0; planted pair (20,21) alone.
-        clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-        chain = [(10, 11), (11, 12)]
-        lone = [(20, 21)]
-        pairs = spark.createDataFrame(
-            clique + chain + lone, "x bigint, y bigint"
-        )
-        got = {
-            (r["x"], r["y"]): r["common_neighbors"]
-            for r in common_neighbor_counts(pairs).collect()
-        }
-        assert all(got[e] == 2 for e in clique)
-        assert got[(10, 11)] == 0 and got[(11, 12)] == 0
-        assert got[(20, 21)] == 0
-        assert len(got) == len(clique) + len(chain) + len(lone)

@@ -1,6 +1,5 @@
-"""Unit tests for gap-fill interpolation and semi-supervised label
-propagation (fixture parity is covered by the oracle harness; these pin
-the semantics on hand-computable inputs)."""
+"""Unit tests for gap-fill interpolation (fixture parity is covered by
+the oracle harness; these pin the semantics on hand-computable inputs)."""
 
 from __future__ import annotations
 
@@ -8,9 +7,6 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    label_propagation,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     gap_fill_interpolate,
 )
@@ -76,72 +72,3 @@ class TestGapFill:
 
 EDGES = "x long, y long"
 SEEDS = "node long, label string"
-
-
-class TestLabelPropagation:
-    def test_majority_vote_and_tiebreak(self, spark):
-        # node 10 has labeled neighbors en, en, fr -> en (majority);
-        # node 20 has de, fr (tie) -> de (smallest label).
-        edges = spark.createDataFrame(
-            [(10, 1), (10, 2), (10, 3), (20, 4), (20, 5)], EDGES
-        )
-        seeds = spark.createDataFrame(
-            [(1, "en"), (2, "en"), (3, "fr"), (4, "de"), (5, "fr")], SEEDS
-        )
-        out = {
-            r.node: (r.label, r.round_assigned)
-            for r in label_propagation(edges, seeds, rounds=1).collect()
-        }
-        assert out[10] == ("en", 1)
-        assert out[20] == ("de", 1)
-
-    def test_second_round_spreads_from_first(self, spark):
-        # chain: seed 1 -- 2 -- 3; round 1 labels 2, round 2 labels 3.
-        edges = spark.createDataFrame([(1, 2), (2, 3)], EDGES)
-        seeds = spark.createDataFrame([(1, "en")], SEEDS)
-        out = {
-            r.node: (r.label, r.round_assigned)
-            for r in label_propagation(edges, seeds, rounds=2).collect()
-        }
-        assert out == {1: ("en", 0), 2: ("en", 1), 3: ("en", 2)}
-
-    def test_seeds_are_immutable(self, spark):
-        # seed 1 (en) is surrounded by fr seeds; it must keep en.
-        edges = spark.createDataFrame([(1, 2), (1, 3)], EDGES)
-        seeds = spark.createDataFrame(
-            [(1, "en"), (2, "fr"), (3, "fr")], SEEDS
-        )
-        out = {
-            r.node: r.label
-            for r in label_propagation(edges, seeds, rounds=2).collect()
-        }
-        assert out[1] == "en"
-
-    def test_unreached_nodes_absent(self, spark):
-        # 4--5 is a separate unlabeled component: no row comes back.
-        edges = spark.createDataFrame([(1, 2), (4, 5)], EDGES)
-        seeds = spark.createDataFrame([(1, "en")], SEEDS)
-        nodes = {r.node for r in label_propagation(edges, seeds, rounds=2).collect()}
-        assert nodes == {1, 2}
-
-    def test_null_label_seeds_dropped(self, spark):
-        # A NULL-label seed carries nothing to spread; letting it
-        # through would win every struct-min tie and poison rounds.
-        edges = spark.createDataFrame([(1, 2)], EDGES)
-        seeds = spark.createDataFrame([(1, None), (2, "en")], SEEDS)
-        out = {
-            r.node: (r.label, r.round_assigned)
-            for r in label_propagation(edges, seeds, rounds=1).collect()
-        }
-        # node 1 is NOT an immutable NULL seed — it gets labeled from 2.
-        assert out == {2: ("en", 0), 1: ("en", 1)}
-
-    def test_isolated_seed_kept(self, spark):
-        edges = spark.createDataFrame([(4, 5)], EDGES)
-        seeds = spark.createDataFrame([(9, "en"), (4, "fr")], SEEDS)
-        out = {
-            r.node: (r.label, r.round_assigned)
-            for r in label_propagation(edges, seeds, rounds=1).collect()
-        }
-        assert out[9] == ("en", 0)
-        assert out[5] == ("fr", 1)

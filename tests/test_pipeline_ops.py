@@ -630,7 +630,7 @@ class TestCacheScope:
 
         spark.catalog.clearCache()
         # Snapshot first: localCheckpoint()-ed RDDs from earlier tests
-        # (graph fixpoints) sit in getPersistentRDDs but NOT in the
+        # (streaming result reads) sit in getPersistentRDDs but NOT in the
         # catalog cache, so clearCache can't drop them and GC timing
         # decides when they vanish. The scope's contract is that it
         # releases what IT registered — assert against the baseline,

@@ -4,8 +4,7 @@ operators, each checked against an INDEPENDENT single-node reference
 that caught the NB dense-grid bug, applied to the new surface:
 
 - drain schedule: closed-form tick vs an actual poll-loop simulation;
-- gap fill: Spark windows vs a pure-Python per-key interpolation;
-- label propagation: distributed vote rounds vs a dict-based replay.
+- gap fill: Spark windows vs a pure-Python per-key interpolation.
 """
 
 from __future__ import annotations
@@ -17,9 +16,6 @@ from pyspark.sql import functions as F
 from prioritizing_event_processing_with_apache_kafka_spark.operators.drain import (
     consumer_map_table,
     drain_schedule,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    label_propagation,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     gap_fill_interpolate,
@@ -148,67 +144,5 @@ def test_property_gap_fill_matches_python_reference(spark):
                     )
                     want[(k, ts)] = (0, round(filled, 6), True)
         assert got == want
-
-    run()
-
-
-def test_property_label_propagation_matches_dict_replay(spark):
-    """Random small graphs + seed subsets: the distributed vote rounds
-    must agree with a per-round dict replay (majority, ties to the
-    smallest label, labeled nodes immutable)."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    edges_s = st.lists(
-        st.tuples(
-            st.integers(min_value=0, max_value=9),
-            st.integers(min_value=0, max_value=9),
-        ).filter(lambda e: e[0] != e[1]),
-        min_size=1,
-        max_size=12,
-    )
-    seeds_s = st.dictionaries(
-        st.integers(min_value=0, max_value=9),
-        st.sampled_from(["en", "fr", "de"]),
-        min_size=1,
-        max_size=5,
-    )
-    rounds_s = st.integers(min_value=1, max_value=3)
-
-    @settings(
-        max_examples=8,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    @given(edges_s, seeds_s, rounds_s)
-    def run(edge_list, seed_map, rounds):
-        edges = spark.createDataFrame(edge_list, "x long, y long")
-        seeds = spark.createDataFrame(
-            list(seed_map.items()), "node long, label string"
-        )
-        got = {
-            r.node: (r.label, r.round_assigned)
-            for r in label_propagation(edges, seeds, rounds=rounds).collect()
-        }
-        adj: dict[int, set[int]] = {}
-        for a, b in edge_list:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-        labels = {n: (l, 0) for n, l in seed_map.items()}
-        for r in range(1, rounds + 1):
-            new = {}
-            for n, nbrs in adj.items():
-                if n in labels:
-                    continue
-                votes: dict[str, int] = {}
-                for m in nbrs:
-                    if m in labels:
-                        lab = labels[m][0]
-                        votes[lab] = votes.get(lab, 0) + 1
-                if votes:
-                    best = min(votes.items(), key=lambda kv: (-kv[1], kv[0]))
-                    new[n] = (best[0], r)
-            labels.update(new)
-        assert got == labels
 
     run()

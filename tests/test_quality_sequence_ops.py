@@ -1,5 +1,5 @@
-"""Round-7 fifth-batch operators: constraint audit, triangle
-participation, transition matrix, rolling median, time-weighted mean.
+"""Round-7 fifth-batch operators: constraint audit, transition matrix,
+rolling median, time-weighted mean.
 
 Each checked two ways: a hand-computed golden on a planted fixture,
 and (for the arithmetic-heavy ones) a hypothesis property against an
@@ -13,9 +13,6 @@ import datetime as dt
 
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    triangle_participation,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     Check,
     constraint_audit,
@@ -132,27 +129,6 @@ class TestConstraintAudit:
         )
         rows = {r["check"]: r["observed"] for r in out.collect()}
         assert rows == {"null_fk": 0, "amount_sum_micros": 0}
-
-
-class TestTriangleParticipation:
-    def test_clique_and_chain(self, spark):
-        # 1-2-3-4 clique (4 triangles, each corner in 3) plus a chain
-        # 10-11-12-13 (zero triangles) plus one extra triangle 5-6-7.
-        clique = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-        chain = [(10, 11), (11, 12), (12, 13)]
-        tri = [(5, 6), (5, 7), (6, 7)]
-        pairs = spark.createDataFrame(
-            clique + chain + tri, "x bigint, y bigint"
-        )
-        got = {
-            r["node"]: r["triangles"]
-            for r in triangle_participation(pairs).collect()
-        }
-        assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 1, 6: 1, 7: 1}
-
-    def test_no_triangles_empty(self, spark):
-        pairs = spark.createDataFrame([(1, 2), (2, 3)], "x bigint, y bigint")
-        assert triangle_participation(pairs).count() == 0
 
 
 class TestTransitionMatrix:

@@ -1,16 +1,13 @@
-"""Round-8 batch-3 operator semantics: sequence packing, weighted
-sampling, k-anonymity and M4 downsampling (fixture
-parity is covered by the oracle harness; these pin hand-computable
-cases and the properties the oracles can't express)."""
+"""Round-8 batch-3 operator semantics: weighted sampling, k-anonymity
+and M4 downsampling (fixture parity is covered by the oracle harness;
+these pin hand-computable cases and the properties the oracles can't
+express)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.packing import (
-    pack_stats,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     k_anonymity_audit,
 )
@@ -21,49 +18,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling im
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     m4_downsample,
 )
-
-
-class TestPackStats:
-    def test_hand_computed_single_shard(self, spark):
-        # One shard, seq_len 4. Docs (id, tokens): (0,3),(8,2),(16,4)
-        # stream: [0,3) [3,5) [5,9); boundaries at 4, 8:
-        #   doc0 [0,3) within seq0; doc8 [3,5) crosses 4; doc16 [5,9)
-        #   crosses 8. total=9, n_seq=3, tail_waste=3, fill=9e6//12
-        df = spark.createDataFrame(
-            [(0, "a b c"), (8, "d e"), (16, "f g h i")],
-            "doc_id long, text string",
-        )
-        row = pack_stats(df, n_shards=8, seq_len=4).filter("shard = 0").first()
-        assert row["n_docs"] == 3
-        assert row["total_tokens"] == 9
-        assert row["n_sequences"] == 3
-        assert row["boundary_docs"] == 2
-        assert row["tail_waste"] == 3
-        assert row["fill_ppm"] == 9 * 1_000_000 // 12
-
-    def test_exact_fit_has_no_waste(self, spark):
-        df = spark.createDataFrame(
-            [(0, "a b c d"), (8, "e f g h")], "doc_id long, text string"
-        )
-        row = pack_stats(df, n_shards=8, seq_len=4).filter("shard = 0").first()
-        assert row["tail_waste"] == 0
-        assert row["boundary_docs"] == 0
-        assert row["fill_ppm"] == 1_000_000
-
-    def test_sharding_is_id_mod(self, spark):
-        df = spark.createDataFrame(
-            [(i, "x") for i in range(16)], "doc_id long, text string"
-        )
-        out = pack_stats(df, n_shards=8, seq_len=4)
-        assert out.count() == 8
-        assert out.agg(F.sum("n_docs")).first()[0] == 16
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame([(0, "x")], "doc_id long, text string")
-        with pytest.raises(ValueError, match="n_shards"):
-            pack_stats(df, n_shards=0)
-        with pytest.raises(ValueError, match="seq_len"):
-            pack_stats(df, seq_len=0)
 
 
 class TestWeightedHashSample:
@@ -235,5 +189,3 @@ class TestM4Downsample:
             m4_downsample(
                 df, series_col="s", ts_col="ts", value_col="v", bin_minutes=0
             )
-
-

@@ -1,71 +1,18 @@
-"""Round-8 batch-5 operator semantics: k-core peeling, source overlap
-census, decile drift (fixture parity is covered by the oracle harness;
-these pin hand-computable cases and the properties the oracles can't
-express — peel cascades deeper than the oracle unroll, convergence
-failure, per-group fence isolation)."""
+"""Round-8 batch-5 operator semantics: source overlap census and decile
+drift (fixture parity is covered by the oracle harness; these pin
+hand-computable cases and the properties the oracles can't express —
+per-group fence isolation)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
     source_overlap_matrix,
 )
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    ConvergenceError,
-    kcore,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     decile_drift,
 )
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "x long, y long")
-
-
-class TestKcore:
-    def test_triangle_plus_tail(self, spark):
-        # Triangle 1-2-3 plus a tail 3-4: 4 has degree 1 and peels;
-        # after the peel 1,2,3 all keep degree 2.
-        out = kcore(_edges(spark, [(1, 2), (2, 3), (1, 3), (3, 4)]), k=2)
-        rows = {r["node"]: r["core_degree"] for r in out.collect()}
-        assert rows == {1: 2, 2: 2, 3: 2}
-
-    def test_cascading_peel(self, spark):
-        # Path 1-2-3-4-5 with k=2: endpoints peel, exposing new
-        # endpoints — cascades to an empty core (deeper than one
-        # round, the case the unrolled oracle depth must cover).
-        out = kcore(_edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5)]), k=2)
-        assert out.count() == 0
-
-    def test_k1_keeps_everything_with_an_edge(self, spark):
-        out = kcore(_edges(spark, [(1, 2), (3, 4)]), k=1)
-        assert out.count() == 4
-
-    def test_two_cliques_both_survive(self, spark):
-        tri1 = [(1, 2), (2, 3), (1, 3)]
-        tri2 = [(7, 8), (8, 9), (7, 9)]
-        out = kcore(_edges(spark, tri1 + tri2 + [(3, 7)]), k=2)
-        assert out.count() == 6
-
-    def test_convergence_error(self, spark):
-        # A 6-path with k=2 peels one endpoint pair per round — more
-        # rounds than max_rounds=1 allows.
-        with pytest.raises(ConvergenceError):
-            kcore(
-                _edges(spark, [(i, i + 1) for i in range(1, 7)]),
-                k=2,
-                max_rounds=1,
-            )
-
-    def test_validation(self, spark):
-        e = _edges(spark, [(1, 2)])
-        with pytest.raises(ValueError, match="k must"):
-            kcore(e, k=0)
-        with pytest.raises(ValueError, match="max_rounds"):
-            kcore(e, k=2, max_rounds=0)
 
 
 class TestSourceOverlapMatrix:

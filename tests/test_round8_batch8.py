@@ -1,6 +1,6 @@
-"""Round-8 batch-8 query semantics: RFM quintile scoring, dedup-aware
-corpus sizing, ship-SLA flags (fixture parity is covered by the oracle
-harness; these pin hand-computable scoring edges)."""
+"""Round-8 batch-8 query semantics: RFM quintile scoring and ship-SLA
+flags (fixture parity is covered by the oracle harness; these pin
+hand-computable scoring edges)."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
     q_customer_rfm,
-    q_effective_corpus_size,
     q_supplier_ship_sla,
 )
 
@@ -39,25 +38,6 @@ class TestCustomerRfm:
             "'/root/testdata/sf0.001/orders.parquet'"
         ).fetchone()[0]
         assert total == expected
-
-
-class TestEffectiveCorpusSize:
-    def test_invariants(self, spark):
-        r = q_effective_corpus_size(spark, "/root/testdata/sf0.001").first()
-        # reweighted <= canonical <= raw; clusters <= docs; all positive.
-        assert 0 < r["reweighted_tokens"] <= r["canonical_tokens"] <= r["raw_tokens"]
-        assert 0 < r["n_clusters"] <= r["n_docs"]
-
-    def test_no_dups_means_all_equal(self, spark):
-        # At sf0.001 if every doc is its own cluster the three counts
-        # coincide; otherwise canonical < raw strictly. Either way the
-        # relation n_docs - n_clusters = extra copies holds.
-        r = q_effective_corpus_size(spark, "/root/testdata/sf0.001").first()
-        extra = r["n_docs"] - r["n_clusters"]
-        if extra == 0:
-            assert r["canonical_tokens"] == r["raw_tokens"]
-        else:
-            assert r["canonical_tokens"] < r["raw_tokens"]
 
 
 class TestSupplierShipSla:

@@ -1,5 +1,5 @@
-"""Round-8 operator semantics: histogram-lattice exact percentiles/MAD,
-bounded BFS, and the layout-rebalance arithmetic (fixture parity is
+"""Round-8 operator semantics: histogram-lattice exact percentiles/MAD
+and the layout-rebalance arithmetic (fixture parity is
 covered by the oracle harness; these pin hand-computable cases)."""
 
 from __future__ import annotations
@@ -7,9 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.graph import (
-    bfs_hops,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.sketches import (
     exact_group_mad,
     exact_group_percentiles,
@@ -97,56 +94,6 @@ class TestExactGroupMad:
         assert r1["mad"] == 1.0
         assert r2["mad"] <= 2.0  # barely moves
         assert r2["n_outliers"] == 1
-
-
-class TestBfsHops:
-    def _edges(self, spark, pairs):
-        return spark.createDataFrame(pairs, "x long, y long")
-
-    def _seeds(self, spark, ids):
-        return spark.createDataFrame([(i,) for i in ids], "node long")
-
-    def test_min_hop_on_diamond(self, spark):
-        # 0-1, 0-2, 1-3, 2-3, 3-4: from seed {0}: 1@1, 2@1, 3@2, 4@3
-        edges = self._edges(spark, [(0, 1), (0, 2), (1, 3), (2, 3), (3, 4)])
-        out = {
-            r["node"]: r["hop"]
-            for r in bfs_hops(edges, self._seeds(spark, [0])).collect()
-        }
-        assert out == {0: 0, 1: 1, 2: 1, 3: 2, 4: 3}
-
-    def test_undirected_and_multi_seed(self, spark):
-        edges = self._edges(spark, [(5, 4), (3, 4), (10, 11)])
-        out = {
-            r["node"]: r["hop"]
-            for r in bfs_hops(edges, self._seeds(spark, [5, 11])).collect()
-        }
-        # 5->4->3 one direction, 11->10 the other (edges are symmetric)
-        assert out == {5: 0, 11: 0, 4: 1, 10: 1, 3: 2}
-
-    def test_max_hops_bounds_reach(self, spark):
-        chain = self._edges(spark, [(i, i + 1) for i in range(6)])
-        out = {
-            r["node"]: r["hop"]
-            for r in bfs_hops(chain, self._seeds(spark, [0]), max_hops=2).collect()
-        }
-        assert out == {0: 0, 1: 1, 2: 2}
-
-    def test_isolated_seed_reports_hop_zero(self, spark):
-        edges = self._edges(spark, [(1, 2)])
-        out = {
-            r["node"]: r["hop"]
-            for r in bfs_hops(edges, self._seeds(spark, [99])).collect()
-        }
-        assert out == {99: 0}
-
-    def test_invalid_max_hops(self, spark):
-        with pytest.raises(ValueError, match="max_hops"):
-            bfs_hops(
-                self._edges(spark, [(1, 2)]),
-                self._seeds(spark, [1]),
-                max_hops=-1,
-            )
 
 
 class TestLayoutRebalance:

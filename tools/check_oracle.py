@@ -318,18 +318,6 @@ SELF_AUDITS = {
         _audit_abs_max(["inertia_ratio", "inertia_ratio_full"], 1.10)(pdf)
         + _audit_min("min_excess_d2", -1e-9)(pdf)
     ),
-    # Whitened-PCA invariants, checked in-plan from the projected
-    # vectors: centered (only 6-decimal rounding noise), unit
-    # population variance per component, pairwise decorrelation, and
-    # the structural evr >= p/d floor (top-p eigenvalues cannot
-    # explain less than p isotropic directions).
-    "embedding_pca_audit": lambda pdf: (
-        _audit_abs_max("max_abs_mean", 1e-4)(pdf)
-        + _audit_min("min_comp_var", 0.98)(pdf)
-        + _audit_abs_max("max_comp_var", 1.02)(pdf)
-        + _audit_abs_max("max_offdiag_corr", 0.02)(pdf)
-        + _audit_min("evr_margin", -1e-6)(pdf)
-    ),
     # SimHash's probabilistic (7,16] hamming band, priced as a bound:
     # recall vs the in-plan exact Jaccard truth >= 0.99 (fixtures
     # measure 1.0; the 10x replica 0.9953), and zero extra pairs

@@ -53,22 +53,16 @@ GUARDED = [
     # round 7, second batch: the drain schedule must stay one range
     # shuffle (riding the exact router's exchange) + one broadcast map
     # join; the gap fill must stay one per-key exchange + a tiny
-    # min/max spine side. label_propagation is excluded like the
-    # streaming replays: its per-round work hides behind eager
-    # localCheckpoints, so the returned plan is just checkpoint scans.
+    # min/max spine side.
     "priority_drain_schedule",
     "ts_gap_fill",
-    # dedup_keep_canonical is excluded like label_propagation:
-    # connected_components checkpoints internally, so the returned
-    # plan is mostly checkpoint scans.
     # round 7, fifth batch: the constraint audit must stay ONE
     # aggregation pass over the fact scan plus one anti-join (a second
     # fact scan per check is exactly the regression this guard
     # exists for); the transition matrix one window exchange + one
     # tiny hash aggregate; rolling median one window exchange; TWAP
     # one window exchange whose partitioning the follow-up groupBy
-    # reuses. dedup_triangle_count is excluded: it rides the persisted
-    # ngram-pairs subtree whose cached scans dominate the plan text.
+    # reuses.
     "data_quality_audit",
     "event_transition_matrix",
     "rolling_value_median",
@@ -82,8 +76,8 @@ GUARDED = [
     # same key; CUSUM one hourly-rollup exchange + one window sort
     # (reference level is a whole-partition window, NOT a second fact
     # aggregation); the sweep line one union-agg + one window + argmax.
-    # doc_containment is excluded like dedup_triangle_count: it rides
-    # the persisted shingle subtree whose cached scans dominate.
+    # doc_containment is excluded: it rides the persisted shingle
+    # subtree whose cached scans dominate the plan text.
     "route_rendezvous",
     "copurchase_lift",
     "bucket_key_concentration",
@@ -92,18 +86,15 @@ GUARDED = [
     # round 7, seventh batch: the OLS trend must stay one window
     # exchange + one same-key groupBy (a second fact scan for the
     # per-key epoch min is the regression); the session path census
-    # one key exchange + two hash aggs; the Merkle digest ONE hash
-    # aggregate over a single scan. stream_transition_counts is
+    # one key exchange + two hash aggs. stream_transition_counts is
     # excluded like stream_locf_fill: its plan is a read of the
     # effectful store, not the streaming computation.
     "user_value_trend",
     "top_session_paths",
-    "corpus_merkle_buckets",
     # round 7, eighth batch: the Pearson matrix must stay ONE wide
     # aggregation pass over a single scan (a per-pair scan is the
     # regression); attribution one key window + a tiny share agg;
-    # mix-shift one scan + a 5-row window. neardup_common_neighbors
-    # is excluded (persisted shingle subtree, like the triangle count).
+    # mix-shift one scan + a 5-row window.
     "lineitem_numeric_corr",
     "purchase_attribution",
     "priority_mix_shift",
@@ -155,17 +146,12 @@ GUARDED = [
     # two histogram windows + broadcast joins (a raw-row sort is the
     # regression); the rebalance impact rides the exact routing plan
     # plus TWO broadcast layout joins and one per-bucket aggregate.
-    # neardup_bfs_hops is excluded like dedup_triangle_count (persisted
-    # shingle subtree + per-round localCheckpoints dominate the text).
     "bucket_value_mad",
     "layout_rebalance_impact",
-    # round 8 third batch: packing must stay ONE shard-key exchange
-    # (window + agg reuse the same partitioning); the weighted sample
-    # must keep the threshold shape (weight-sum agg + broadcast join +
-    # survivor window — a full-stratum window funnel is the
-    # regression); k-anonymity is two hash aggregates; M4 is ONE
-    # partial-agg exchange.
-    "corpus_pack_stats",
+    # round 8 third batch: the weighted sample must keep the threshold
+    # shape (weight-sum agg + broadcast join + survivor window — a
+    # full-stratum window funnel is the regression); k-anonymity is
+    # two hash aggregates; M4 is ONE partial-agg exchange.
     "documents_weighted_sample",
     "events_k_anonymity",
     "events_m4_downsample",
@@ -179,13 +165,11 @@ GUARDED = [
     "lineitem_benford",
     "orders_winsorized",
     "embedding_outlier_audit",
-    # round 8 fifth batch. k-core is data-dependently iterative
-    # (localCheckpoint rounds truncate the visible plan), so it is NOT
-    # pinned — its scale guard is the probe + convergence exception.
-    # source_overlap must keep the pair list broadcast-joined to the
-    # doc projection; decile drift is the fence subtree + TWO
-    # broadcasts onto the fact scan (fences, mids) + one group window;
-    # erasure is three semi-join/fold pairs with broadcast cohorts.
+    # round 8 fifth batch: source_overlap must keep the pair list
+    # broadcast-joined to the doc projection; decile drift is the
+    # fence subtree + TWO broadcasts onto the fact scan (fences, mids)
+    # + one group window; erasure is three semi-join/fold pairs with
+    # broadcast cohorts.
     "source_overlap",
     "events_decile_drift",
     "erasure_cascade",
@@ -200,8 +184,6 @@ GUARDED = [
     # round 8 eighth batch: RFM must stay per-customer agg + histogram
     # fences + broadcasts (a global sort is the regression); the SLA
     # watch one fact join + supplier-keyed agg + histogram subtree.
-    # effective_corpus_size is excluded (rides the checkpointed CC
-    # closure, like dedup_keep_canonical).
     "customer_rfm",
     "supplier_ship_sla",
     # round 8 ninth batch: each is one-or-two map-combined aggregates
@@ -243,16 +225,6 @@ GUARDED = [
     "nation_trade_matrix",
     "events_peak_census",
     "user_decayed_value",
-    # round 9: the last two bench headliners without pins (VERDICT r8
-    # item 5). Both ride a checkpointed CC closure, so the visible
-    # plan is the POST-closure shape — checkpoint scans + the final
-    # join/aggregate stages. That is still a real guard: a fact
-    # re-scan, a new window funnel, or a broadcast->shuffle flip in
-    # the post-closure stages changes the counts. (The closures'
-    # per-round work is separately guarded by the 100x probes and the
-    # convergence exceptions in operators/graph.py.)
-    "effective_corpus_size",
-    "neardup_kcore",
     # round 9 first batch: Pareto/Lorenz ride the distributed ordered
     # scan (an unpartitioned-window regression would change the
     # shape); the PIT enrich must keep its dimension BROADCAST onto
