@@ -83,7 +83,6 @@ _DRIVER_HEAD = [
     "orders_winsorized",
     "rolling_active_users",
     "source_lang_fd",
-    "source_overlap",
     "supplier_ship_sla",
     "user_churn_census",
     "user_decayed_value",

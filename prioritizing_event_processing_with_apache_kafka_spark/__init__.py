@@ -8,8 +8,7 @@ a Kafka client extension — producer `Partitioner` + consumer
 - ``plans``      — pure-Python bucket layout kernel + config validation
                    (bit-exact with the reference's sizing/rounding rules).
 - ``operators``  — DataFrame-native routing, assignment and drain
-                   scheduling, plus sketch, dedup and analytics
-                   operators.
+                   scheduling, plus sketch and analytics operators.
 - ``sources``    — fixture-table loaders and Kafka source/sink option
                    builders (per-bucket ``assign`` partition pruning).
 - ``functions``  — reusable native Column expression builders.

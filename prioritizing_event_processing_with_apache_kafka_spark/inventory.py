@@ -2118,9 +2118,10 @@ SQL_BUCKET_QUIET_HOURS = f"""
 ), spine AS (
   SELECT make_timestamp(epoch_us(b.lo) + g.i * 3600000000) AS hour_ts
   -- static-series cap: 10,000 hours ~ 416 days; the fixtures span
-  -- 719 hours (measured), same convention as SQL_SPAN_DEDUP's 300-span
-  -- cap. A corpus past the cap would truncate the oracle's spine, not
-  -- the Spark side's unbounded sequence().
+  -- 719 hours (measured). DuckDB's table-function generate_series
+  -- can't take lateral column bounds, hence a static series with a
+  -- WHERE guard. A corpus past the cap would truncate the oracle's
+  -- spine, not the Spark side's unbounded sequence().
   FROM bounds b CROSS JOIN generate_series(0, 9999) AS g(i)
   WHERE make_timestamp(epoch_us(b.lo) + g.i * 3600000000) <= b.hi
 ), grid AS (

@@ -1,17 +1,9 @@
 """Query inventory, part 2: corpus, embedding and event-analytics queries.
 
-Dedup (exact / n-gram Jaccard / MinHash-LSH / SimHash), term
-statistics, embedding clustering, sampling, streaming rollups and keyed
-time-series features — each over the fixture tables, with DuckDB
+Term statistics, embedding clustering, sampling, streaming rollups and
+keyed time-series features — each over the fixture tables, with DuckDB
 oracles wherever the operator is SQL-expressible.
-
-The probabilistic near-dup operators (MinHash, SimHash) *verify* their
-candidates with the exact n-gram Jaccard before reporting, so their
-output contract equals the ground-truth pair set (the corpus's planted
-near-dups all sit at Jaccard ≥ 0.89, far above the banding recall
-knee) — making even the sketch-based operators oracle-checkable.
 """
-
 from __future__ import annotations
 
 from collections.abc import Callable
@@ -23,7 +15,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.caching imp
     scoped_persist,
 )
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators import dedup as D
 from prioritizing_event_processing_with_apache_kafka_spark.operators import (
     timeseries as TS,
 )
@@ -43,145 +34,6 @@ from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import
 )
 
 __all__ = ["PIPELINE_QUERIES", "PIPELINE_ORACLES"]
-
-
-# ---------------------------------------------------------------------------
-# Dedup
-# ---------------------------------------------------------------------------
-
-
-def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    return D.exact_dedup(docs, "text", "doc_id")
-
-
-SQL_DEDUP_EXACT = """
-SELECT MIN(doc_id) AS doc_id_keep, COUNT(*) AS n_copies
-FROM documents GROUP BY text
-"""
-
-# Shared shingling fragment: 4-token distinct shingles per document —
-# the single source for every shingle-based oracle (Jaccard ground
-# truth below, containment). Mirrors operators/dedup.py:with_shingles.
-_SQL_SHINGLE_CTES = """toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(generate_series(1, greatest(len(tokens) - 3, 1)),
-                       i -> array_to_string(tokens[i:i+3], ' '))) AS shingles
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS s FROM sh
-)"""
-
-# Ground-truth near-dup SQL: 4-token shingles, shared-shingle candidates,
-# exact Jaccard >= 0.5. Also serves as the oracle for the MinHash and
-# SimHash operators (their verified output equals the truth set).
-SQL_NGRAM_JACCARD = f"""
-WITH {_SQL_SHINGLE_CTES}, cand AS (
-  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-)
-SELECT c.x, c.y,
-       CAST(len(list_intersect(sx.shingles, sy.shingles)) AS DOUBLE)
-       / (len(sx.shingles) + len(sy.shingles) - len(list_intersect(sx.shingles, sy.shingles))) AS jaccard
-FROM cand c
-JOIN sh sx ON sx.doc_id = c.x
-JOIN sh sy ON sy.doc_id = c.y
-WHERE CAST(len(list_intersect(sx.shingles, sy.shingles)) AS DOUBLE)
-      / (len(sx.shingles) + len(sy.shingles) - len(list_intersect(sx.shingles, sy.shingles))) >= 0.5
-"""
-
-
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-
-
-def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # 32 hashes / 8 bands (r=4): detection probability at the corpus's
-    # planted similarity floor (s=0.89) is 1 - (1-0.89^4)^8 ≈ 0.9996 —
-    # verified truth-set-equal at sf0.01 AND sf0.1 — at a quarter of the
-    # 128/32 default's grid cost. Raise toward the default for corpora
-    # with near-dups close to the 0.5 threshold.
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.minhash_lsh_pairs(docs, k=4, num_hashes=32, bands=8, threshold=0.5)
-
-
-def q_dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-permutation MinHash: signature from a single hash pass
-    (32 bins), candidates exact-verified — output equals the
-    ground-truth pair set, so it shares the n-gram Jaccard oracle."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.oph_minhash_pairs(docs, k=4, bins=32, threshold=0.5)
-
-
-def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The corpus's ground-truth pairs (Jaccard >= 0.5) sit at measured
-    # hamming <= 8 at sf0.01 and <= 12 at sf0.1 — beyond the 8-chunk
-    # pigeonhole's guaranteed radius of 7, so probabilistic capture of
-    # the (7, 16] band is opted into explicitly. Miss probability for a
-    # pair needs all 8 chunks hit by <= 16 scattered errors (tiny;
-    # empirically zero here: truth-set-equal at both SFs). The
-    # alternative — 16x4-bit chunks for a guaranteed radius of 15 —
-    # buckets the corpus into 16 values per chunk position and goes
-    # quadratic, the wrong trade at 100 TB.
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.simhash_pairs(
-        docs, k=4, max_hamming=16, jaccard_threshold=0.5,
-        allow_probabilistic_radius=True,
-    )
-
-
-def q_simhash_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Machine-enforced recall gate for the probabilistic band of
-    ``dedup_simhash``. The declared simhash query is truth-set-equal at
-    every fixture scale (hash-oracled against the exact Jaccard truth),
-    but its (7, 16] hamming capture is probabilistic by construction —
-    at 10× volume it measures 2548/2560 pairs (99.53% recall, the
-    priced trade in ``simhash_pairs``'s docstring). This query makes
-    that price a BOUND instead of prose: it computes the exact truth
-    set (``ngram_jaccard_pairs`` — shared-shingle candidates, nothing
-    quadratic) and the simhash pairs IN THE SAME PLAN, and reports one
-    row:
-
-    - ``n_truth`` / ``n_found`` — exact pair count and how many the
-      simhash pipeline recovered;
-    - ``recall`` — audited ≥ 0.99 (SELF_AUDITS in
-      ``tools/check_oracle.py``);
-    - ``n_extra`` — audited == 0: simhash output is Jaccard-verified
-      with the SAME shingle definition and threshold as the truth set,
-      so any extra pair means the verify stage broke, not the data.
-    """
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    found = D.simhash_pairs(
-        docs, k=4, max_hamming=16, jaccard_threshold=0.5,
-        allow_probabilistic_radius=True,
-    ).select("x", "y")
-    truth = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5).select("x", "y")
-    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
-    n_found = truth.join(found, ["x", "y"], "left_semi").agg(
-        F.count(F.lit(1)).alias("n_found")
-    )
-    n_extra = found.join(truth, ["x", "y"], "left_anti").agg(
-        F.count(F.lit(1)).alias("n_extra")
-    )
-    return (
-        n_truth.join(n_found)
-        .join(n_extra)
-        .select(
-            "n_truth",
-            "n_found",
-            F.when(F.col("n_truth") == 0, F.lit(1.0))
-            .otherwise(
-                F.round(
-                    F.col("n_found").cast("double") / F.col("n_truth"), 6
-                )
-            )
-            .alias("recall"),
-            "n_extra",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -519,247 +371,6 @@ WHERE {coin} < rate
 
 
 SQL_MIXTURE_SAMPLE = _sql_mixture_sample()
-
-
-def q_dedup_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-level near-dup pairs: Levenshtein ≤ 50 over
-    shared-shingle candidates (banded DP via the threshold variant)."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return D.edit_distance_pairs(docs, k=4, max_distance=50)
-
-
-SQL_DEDUP_EDIT_DISTANCE = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(generate_series(1, greatest(len(tokens) - 3, 1)),
-                       i -> array_to_string(tokens[i:i+3], ' '))) AS shingles
-  FROM toks
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS s FROM sh
-), cand AS (
-  SELECT DISTINCT a.doc_id AS x, b.doc_id AS y
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-)
-SELECT cand.x, cand.y, levenshtein(dx.text, dy.text) AS edit_distance
-FROM cand
-JOIN documents dx ON dx.doc_id = cand.x
-JOIN documents dy ON dy.doc_id = cand.y
-WHERE levenshtein(dx.text, dy.text) <= 50
-"""
-
-
-def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingestion dedup: every 10th document plays the
-    incoming batch, the rest the already-indexed history. This twin
-    deliberately replays the store BUILD every run (its worst case);
-    one shingle-hash pass over the history feeds both the signature
-    store and the exact verification (candidate-filtered by
-    semi-join). Oracle = exact cross-set Jaccard ≥ 0.5 (the banded
-    search recalls the full truth set on these fixtures, as with the
-    batch MinHash operators)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    new_batch = docs.filter(F.col("doc_id") % 10 == 0)
-    history = docs.filter(F.col("doc_id") % 10 != 0)
-    # r14: store build + probe share one shingle-hash pass over the
-    # history (the rebuild worst case this twin deliberately replays);
-    # the steady twin keeps the persisted-store production shape.
-    return D.incremental_minhash_with_store(
-        new_batch, history, k=4, num_hashes=32, bands=8, threshold=0.5
-    )
-
-
-SQL_DEDUP_INCREMENTAL = """
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(
-           generate_series(1, greatest(len(string_split(text, ' ')) - 3, 1)),
-           i -> array_to_string(string_split(text, ' ')[i:i+3], ' '))) AS shingles
-  FROM documents
-), ex AS (
-  SELECT doc_id, unnest(shingles) AS s FROM sh
-), cand AS (
-  SELECT DISTINCT a.doc_id AS new_id, b.doc_id AS old_id
-  FROM ex a JOIN ex b ON a.s = b.s
-  WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0
-)
-SELECT cand.new_id, cand.old_id,
-       CAST(len(list_intersect(nx.shingles, oy.shingles)) AS DOUBLE)
-         / (len(nx.shingles) + len(oy.shingles)
-            - len(list_intersect(nx.shingles, oy.shingles))) AS jaccard
-FROM cand
-JOIN sh nx ON nx.doc_id = cand.new_id
-JOIN sh oy ON oy.doc_id = cand.old_id
-WHERE CAST(len(list_intersect(nx.shingles, oy.shingles)) AS DOUBLE)
-        / (len(nx.shingles) + len(oy.shingles)
-           - len(list_intersect(nx.shingles, oy.shingles))) >= 0.5
-"""
-
-
-def q_dedup_incremental_steady(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The STEADY-STATE contract of incremental ingestion dedup: in
-    production the history's signature store already exists — persisted by every prior batch — so a new
-    batch pays only sign-batch + probe-store + exact-verify. This twin
-    materializes the store to parquet once per (fixture, mtime) and
-    reads it back, so repeated runs measure the per-batch probe cost
-    rather than the store build ``dedup_incremental`` deliberately
-    replays (its worst-case number). Results are identical: same
-    split, same candidate generation, same truth set and oracle."""
-    import hashlib
-    import os
-    import tempfile
-
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    new_batch = docs.filter(F.col("doc_id") % 10 == 0)
-    history = docs.filter(F.col("doc_id") % 10 != 0)
-
-    # Tag includes the signature parameters AND a code-version token:
-    # a store built by older signature code (or different k/num_hashes)
-    # would band-mismatch every probe with nothing pointing at the
-    # stale cache (the scale-probe replica learned the same lesson).
-    sig_params = "k=4:num_hashes=32:sigstore-v3"
-    src = f"{sf_dir.rstrip('/')}/documents.parquet"
-    stat = os.stat(src)
-    tag = hashlib.md5(
-        f"{src}:{stat.st_mtime_ns}:{stat.st_size}:{sig_params}".encode()
-    ).hexdigest()[:12]
-    store_path = os.path.join(tempfile.gettempdir(), f"peps-sigstore-{tag}")
-    if not os.path.exists(os.path.join(store_path, "_SUCCESS")):
-        # Build in a private dir, publish by atomic rename: a second
-        # session racing the build either wins the rename or reads the
-        # winner's complete store — never a half-written directory.
-        import shutil
-
-        tmp_path = f"{store_path}.tmp-{os.getpid()}"
-        D.with_minhash_signature(history, k=4, num_hashes=32).select(
-            "doc_id", "minhash"
-        ).write.mode("overwrite").parquet(tmp_path)
-        try:
-            os.rename(tmp_path, store_path)
-        except OSError:
-            shutil.rmtree(tmp_path, ignore_errors=True)
-            # a failed rename is only benign if a COMPLETE store won
-            # the race; a _SUCCESS-less directory at store_path (tmp
-            # reaper, crashed writer) must not be read silently
-            if not os.path.exists(os.path.join(store_path, "_SUCCESS")):
-                raise RuntimeError(
-                    f"signature store at {store_path} exists but is "
-                    "incomplete (no _SUCCESS marker); remove it and retry"
-                )
-    store = spark.read.parquet(store_path)
-    return D.incremental_minhash_pairs(
-        new_batch, store, history, k=4, num_hashes=32, bands=8, threshold=0.5
-    )
-
-
-def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document duplicate-span removal: 10-token spans seen in
-    more than one document are stripped from every document (planted
-    exact/near duplicates in the fixture lose their repeated spans)."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    return D.remove_duplicate_spans(docs, span_tokens=10, max_docs=1)
-
-
-# Static series + WHERE guard: DuckDB's table-function generate_series
-# can't take lateral column bounds. 300 spans covers 3000 tokens; the
-# fixture maxes out well under that.
-SQL_SPAN_DEDUP = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sp AS (
-  SELECT doc_id, i AS pos, array_to_string(t[(i*10+1):(i*10+10)], ' ') AS span
-  FROM toks, generate_series(0, 299) s(i)
-  WHERE i * 10 < len(t)
-), freq AS (
-  SELECT span, COUNT(DISTINCT doc_id) AS nd FROM sp GROUP BY span
-)
-SELECT sp.doc_id,
-       coalesce(string_agg(CASE WHEN nd <= 1 THEN span END, ' ' ORDER BY pos), '')
-         AS clean_text,
-       COUNT(*) AS n_spans,
-       CAST(SUM(CASE WHEN nd <= 1 THEN 0 ELSE 1 END) AS BIGINT) AS n_removed
-FROM sp JOIN freq USING (span)
-GROUP BY sp.doc_id
-"""
-
-
-def q_boilerplate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate audit: the 20 most-shared 10-token spans (by distinct
-    documents, then occurrences) — the report you read before choosing
-    a span-removal threshold."""
-    docs = spread(load_table(spark, sf_dir, "documents")).select("doc_id", "text")
-    freq = D.span_frequencies(docs, span_tokens=10)
-    return freq.orderBy(
-        F.desc("n_docs"), F.desc("n_occurrences"), F.asc("span")
-    ).limit(20)
-
-
-SQL_BOILERPLATE_SPANS = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS t FROM documents
-), sp AS (
-  SELECT doc_id, array_to_string(t[(i*10+1):(i*10+10)], ' ') AS span
-  FROM toks, generate_series(0, 299) s(i)
-  WHERE i * 10 < len(t)
-)
-SELECT span, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       CAST(COUNT(*) AS BIGINT) AS n_occurrences
-FROM sp GROUP BY span
-ORDER BY n_docs DESC, n_occurrences DESC, span ASC
-LIMIT 20
-"""
-
-
-def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/test decontamination: corpus docs whose 4-shingle
-    containment against a benchmark subset (every 50th doc stands in
-    for the eval set) reaches 0.6. Benchmark shingles broadcast; the
-    corpus is scanned once and never shuffled."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    benchmark = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return D.contamination_pairs(corpus, benchmark, k=4, threshold=0.6)
-
-
-def q_decontamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-prefiltered decontamination: identical answer to
-    ``decontamination`` (same split, same threshold — the shared oracle
-    pins the equality), but the corpus scan drops
-    definitely-not-benchmark shingles against a broadcast Bloom bitmap
-    BEFORE the exact membership join — the regime where the benchmark
-    suite's shingle set is too big to broadcast as a join hash table
-    but fits as filter bits."""
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    benchmark = docs.filter(F.col("doc_id") % 50 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 50 != 0)
-    return D.bloom_contamination_pairs(corpus, benchmark, k=4, threshold=0.6)
-
-
-SQL_DECONTAMINATION = """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS tokens FROM documents
-), sh AS (
-  SELECT doc_id,
-         list_distinct(list_transform(generate_series(1, greatest(len(tokens) - 3, 1)),
-                       i -> array_to_string(tokens[i:i+3], ' '))) AS shingles
-  FROM toks
-), bex AS (
-  SELECT doc_id AS bench_id, unnest(shingles) AS s FROM sh WHERE doc_id % 50 = 0
-), cex AS (
-  SELECT doc_id, len(shingles) AS n_doc, unnest(shingles) AS s
-  FROM sh WHERE doc_id % 50 <> 0
-)
-SELECT doc_id, bench_id, COUNT(*) AS n_shared,
-       ROUND(CAST(COUNT(*) AS DOUBLE) / n_doc, 6) AS containment
-FROM cex JOIN bex USING (s)
-GROUP BY doc_id, bench_id, n_doc
-HAVING ROUND(CAST(COUNT(*) AS DOUBLE) / n_doc, 6) >= 0.6
-"""
 
 
 def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1730,37 +1341,6 @@ FROM h GROUP BY user_id
 """
 
 
-def q_doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle containment pairs — the quote/excerpt
-    detector (``operators/dedup.py:ngram_containment_pairs``): a short
-    document embedded verbatim in a long one scores near 1e6 ppm here
-    while its symmetric Jaccard (dragged down by the union) can sit
-    far below the dedup threshold. Same sub-quadratic shingle-join
-    shape as the Jaccard ground truth; the score is pure BIGINT ppm
-    arithmetic, so the pair table hash-matches the oracle."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.ngram_containment_pairs(docs, k=4, threshold_ppm=800_000)
-
-
-SQL_DOC_CONTAINMENT = f"""
-WITH {_SQL_SHINGLE_CTES},
-inter AS (
-  SELECT a.doc_id AS x, b.doc_id AS y, CAST(COUNT(*) AS BIGINT) AS inter_shingles
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT i.x, i.y, i.inter_shingles,
-       CAST(LEAST(len(sx.shingles), len(sy.shingles)) AS BIGINT) AS min_shingles,
-       CAST(i.inter_shingles * 1000000
-            // LEAST(len(sx.shingles), len(sy.shingles)) AS BIGINT) AS containment_ppm
-FROM inter i
-JOIN sh sx ON sx.doc_id = i.x
-JOIN sh sy ON sy.doc_id = i.y
-WHERE i.inter_shingles * 1000000
-      // LEAST(len(sx.shingles), len(sy.shingles)) >= 800000
-"""
-
-
 def q_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent part pairs across order baskets with integer-ppm lift
     (``operators/basket.py:cooccurrence_lift``) — the pair-counting
@@ -2306,69 +1886,6 @@ FROM sh
 """
 
 
-def q_dedup_prefix_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Jaccard pairs via PREFIX FILTERING (the PPJoin/AllPairs
-    candidate rule, ``operators/dedup.py:prefix_filter_jaccard_pairs``)
-    — the scale path for the ground-truth join when the shingle
-    frequency distribution has a hot tail: only each document's
-    ``|d| − ⌈t·|d|⌉ + 1`` globally-rarest shingles enter the candidate
-    join, provably without losing any pair at J ≥ t. Output is
-    bit-identical to ``dedup_ngram_jaccard``, so it SHARES that
-    query's oracle — the hash equality IS the recall proof."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.prefix_filter_jaccard_pairs(docs, k=4, threshold=0.5)
-
-
-def q_dedup_multiset_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted (multiset) token Jaccard refinement over the canonical
-    candidate pairs (``operators/dedup.py:token_multiset_jaccard``):
-    Σmin/Σmax over token COUNTS, the score that separates repetition
-    structure from vocabulary overlap. Integer-ppm lattice; the
-    per-pair token join runs only on the pruned candidate set."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return D.token_multiset_jaccard(docs, pairs)
-
-
-SQL_DEDUP_MULTISET_JACCARD = f"""
-WITH pairs AS MATERIALIZED ({SQL_NGRAM_JACCARD}),
-pd AS MATERIALIZED (
-  SELECT DISTINCT doc_id FROM (
-    SELECT x AS doc_id FROM pairs UNION ALL SELECT y AS doc_id FROM pairs
-  )
-),
-tc AS MATERIALIZED (
-  -- candidate-scoped: only documents that appear in a candidate pair
-  -- get their token multiset expanded. The final result only ever
-  -- reads tc rows for pair members, so this is a pure pruning (same
-  -- answer) that keeps the token join bounded by the PAIR count, not
-  -- the corpus size — at a 10x replica the unscoped expansion spilled
-  -- DuckDB's temp disk while changing nothing about the output.
-  SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c FROM (
-    SELECT d.doc_id, unnest(string_split(d.text, ' ')) AS tok
-    FROM documents d JOIN pd USING (doc_id)
-  ) GROUP BY 1, 2
-), tot AS (
-  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS T FROM tc GROUP BY 1
-), sm AS (
-  SELECT p.x, p.y, CAST(SUM(LEAST(a.c, b.c)) AS BIGINT) AS smin
-  FROM pairs p
-  JOIN tc a ON a.doc_id = p.x
-  JOIN tc b ON b.doc_id = p.y AND b.tok = a.tok
-  GROUP BY 1, 2
-)
-SELECT p.x, p.y,
-       CAST(COALESCE(s.smin, 0) AS BIGINT) AS shared_min,
-       CAST(tx.T + ty.T - COALESCE(s.smin, 0) AS BIGINT) AS union_max,
-       CAST((COALESCE(s.smin, 0) * 1000000)
-            // (tx.T + ty.T - COALESCE(s.smin, 0)) AS BIGINT) AS wjaccard_ppm
-FROM pairs p
-LEFT JOIN sm s ON s.x = p.x AND s.y = p.y
-JOIN tot tx ON tx.doc_id = p.x
-JOIN tot ty ON ty.doc_id = p.y
-"""
-
-
 # ---------------------------------------------------------------------------
 # Registry
 # ---------------------------------------------------------------------------
@@ -2702,36 +2219,7 @@ WHERE s.d2_micros * 1000000 // m.mean_d2_micros >= 1050000
 
 
 # --------------------------------------------------------------------------
-# Round-8 fifth batch: source provenance census, decile drift, erasure
-# cascade.
-
-
-def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source duplication census
-    (``dedup.py:source_overlap_matrix``) over the canonical exact-
-    Jaccard pair list: per unordered source pair, how many near-dup
-    pairs span it and their mean Jaccard (ppm) — the feed-level
-    down-weighting signal. Hash-oracled."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.ngram_jaccard_pairs(docs, k=4, threshold=0.5)
-    return D.source_overlap_matrix(pairs, docs)
-
-
-SQL_SOURCE_OVERLAP = f"""
-WITH pairs AS (
-  {SQL_NGRAM_JACCARD}
-), tagged AS (
-  SELECT LEAST(dx.source, dy.source) AS source_a,
-         GREATEST(dx.source, dy.source) AS source_b,
-         CAST(FLOOR(p.jaccard * 1000000.0) AS BIGINT) AS jppm
-  FROM pairs p
-  JOIN documents dx ON dx.doc_id = p.x
-  JOIN documents dy ON dy.doc_id = p.y
-)
-SELECT source_a, source_b, CAST(COUNT(*) AS BIGINT) AS n_pairs,
-       CAST(SUM(jppm) // COUNT(*) AS BIGINT) AS mean_jaccard_ppm
-FROM tagged GROUP BY 1, 2
-"""
+# Round-8 fifth batch: decile drift, erasure cascade.
 
 
 def q_events_decile_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5440,12 +4928,6 @@ FROM cells
 
 
 PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact": q_dedup_exact,
-    "dedup_ngram_jaccard": q_dedup_ngram_jaccard,
-    "dedup_minhash_lsh": q_dedup_minhash_lsh,
-    "dedup_minhash_oph": q_dedup_minhash_oph,
-    "dedup_simhash": q_dedup_simhash,
-    "simhash_recall_audit": q_simhash_recall_audit,
     "term_doc_frequency": q_term_doc_frequency,
     "tfidf_top_terms": q_tfidf_top_terms,
     "embedding_label_centroids": q_embedding_label_centroids,
@@ -5472,7 +4954,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lineitem_benford": q_lineitem_benford,
     "orders_winsorized": q_orders_winsorized,
     "embedding_outlier_audit": q_embedding_outlier_audit,
-    "source_overlap": q_source_overlap,
     "events_decile_drift": q_events_decile_drift,
     "erasure_cascade": q_erasure_cascade,
     "customer_rfm": q_customer_rfm,
@@ -5497,12 +4978,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "events_ab_test": q_events_ab_test,
     "stratified_sample": q_stratified_sample,
     "mixture_sample": q_mixture_sample,
-    "dedup_edit_distance": q_dedup_edit_distance,
-    "decontamination": q_decontamination,
-    "decontamination_bloom": q_decontamination_bloom,
-    "dedup_incremental": q_dedup_incremental,
-    "span_dedup": q_span_dedup,
-    "boilerplate_spans": q_boilerplate_spans,
     "reservoir_sample": q_reservoir_sample,
     "dataset_split": q_dataset_split,
     "doc_packing": q_doc_packing,
@@ -5512,7 +4987,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "source_dup_profile": q_source_dup_profile,
     "salted_segment_revenue": q_salted_segment_revenue,
     # Appended round 5 (keep ordering of earlier entries stable).
-    "dedup_incremental_steady": q_dedup_incremental_steady,
     "changelog_compaction": q_changelog_compaction,
     "scd2_customer_segments": q_scd2_customer_segments,
     "events_tier_at_time": q_events_tier_at_time,
@@ -5524,7 +4998,6 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rolling_value_median": q_rolling_value_median,
     "user_time_weighted_value": q_user_time_weighted_value,
     # Appended round 7, session 4 (batch 6).
-    "doc_containment": q_doc_containment,
     "copurchase_lift": q_copurchase_lift,
     "bucket_key_concentration": q_bucket_key_concentration,
     "bucket_cusum_alarm": q_bucket_cusum_alarm,
@@ -5537,20 +5010,12 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "lineitem_numeric_corr": q_lineitem_numeric_corr,
     "purchase_attribution": q_purchase_attribution,
     "priority_mix_shift": q_priority_mix_shift,
-    # Appended round 7, session 4 (batch 9).
-    "dedup_prefix_filter": q_dedup_prefix_filter,
-    "dedup_multiset_jaccard": q_dedup_multiset_jaccard,
 }
 
 PIPELINE_ORACLES: dict[str, str] = {
     "user_value_pareto": SQL_USER_VALUE_PARETO,
     "customer_lorenz_deciles": SQL_CUSTOMER_LORENZ_DECILES,
     "orders_pit_fx_enrich": SQL_ORDERS_PIT_FX_ENRICH,
-    "dedup_exact": SQL_DEDUP_EXACT,
-    "dedup_ngram_jaccard": SQL_NGRAM_JACCARD,
-    "dedup_minhash_lsh": SQL_NGRAM_JACCARD,
-    "dedup_minhash_oph": SQL_NGRAM_JACCARD,
-    "dedup_simhash": SQL_NGRAM_JACCARD,
     "embedding_kmeans": SQL_EMBEDDING_KMEANS,
     "term_doc_frequency": SQL_TERM_DOC_FREQUENCY,
     "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
@@ -5562,7 +5027,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "lineitem_benford": SQL_LINEITEM_BENFORD,
     "orders_winsorized": SQL_ORDERS_WINSORIZED,
     "embedding_outlier_audit": SQL_EMBEDDING_OUTLIER_AUDIT,
-    "source_overlap": SQL_SOURCE_OVERLAP,
     "events_decile_drift": SQL_EVENTS_DECILE_DRIFT,
     "erasure_cascade": SQL_ERASURE_CASCADE,
     "customer_rfm": SQL_CUSTOMER_RFM,
@@ -5605,12 +5069,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "events_ab_test": SQL_EVENTS_AB_TEST,
     "stratified_sample": SQL_STRATIFIED_SAMPLE,
     "mixture_sample": SQL_MIXTURE_SAMPLE,
-    "dedup_edit_distance": SQL_DEDUP_EDIT_DISTANCE,
-    "decontamination": SQL_DECONTAMINATION,
-    "decontamination_bloom": SQL_DECONTAMINATION,
-    "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-    "span_dedup": SQL_SPAN_DEDUP,
-    "boilerplate_spans": SQL_BOILERPLATE_SPANS,
     "reservoir_sample": SQL_RESERVOIR_SAMPLE,
     "dataset_split": SQL_DATASET_SPLIT,
     "doc_packing": SQL_DOC_PACKING,
@@ -5619,7 +5077,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "bucket_hourly_anomaly": SQL_BUCKET_HOURLY_ANOMALY,
     "source_dup_profile": SQL_SOURCE_DUP_PROFILE,
     "salted_segment_revenue": SQL_SALTED_SEGMENT_REVENUE,
-    "dedup_incremental_steady": SQL_DEDUP_INCREMENTAL,
     "changelog_compaction": SQL_CHANGELOG_COMPACTION,
     "scd2_customer_segments": SQL_SCD2_CUSTOMER_SEGMENTS,
     "events_tier_at_time": SQL_EVENTS_TIER_AT_TIME,
@@ -5629,7 +5086,6 @@ PIPELINE_ORACLES: dict[str, str] = {
     "event_transition_matrix": SQL_EVENT_TRANSITION_MATRIX,
     "rolling_value_median": SQL_ROLLING_VALUE_MEDIAN,
     "user_time_weighted_value": SQL_USER_TIME_WEIGHTED_VALUE,
-    "doc_containment": SQL_DOC_CONTAINMENT,
     "copurchase_lift": SQL_COPURCHASE_LIFT,
     "bucket_key_concentration": SQL_BUCKET_KEY_CONCENTRATION,
     "bucket_cusum_alarm": SQL_BUCKET_CUSUM_ALARM,
@@ -5643,8 +5099,4 @@ PIPELINE_ORACLES: dict[str, str] = {
     "lineitem_numeric_corr": SQL_LINEITEM_NUMERIC_CORR,
     "purchase_attribution": SQL_PURCHASE_ATTRIBUTION,
     "priority_mix_shift": SQL_PRIORITY_MIX_SHIFT,
-    # Prefix filtering SHARES the ground truth's oracle — output
-    # equality at the hash level IS the no-lost-recall proof.
-    "dedup_prefix_filter": SQL_NGRAM_JACCARD,
-    "dedup_multiset_jaccard": SQL_DEDUP_MULTISET_JACCARD,
 }

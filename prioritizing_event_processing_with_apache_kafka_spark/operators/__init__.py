@@ -1,5 +1,5 @@
 """DataFrame-native operators: routing, assignment, drain scheduling,
-sketches, dedup and the other analytics operators."""
+sketches and the other analytics operators."""
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import (
     layout_table,

@@ -1,25 +1,24 @@
 """Scoped persist tracking — deterministic unpersist for operator caches.
 
-The near-dup and clustering operators ``persist()`` shared subtrees
-(tokenized shingles, banded signatures, cluster members) because one
-query plan references them from 2-3 places; without the cache the
-dominant lambda work re-runs per reference. The frames are bounded and
-LRU-evictable, but a *long-lived* session (an ingest service running
-thousands of dedup batches) shouldn't depend on LRU roulette — it wants
-each query's caches dropped the moment the query's action finishes.
+Operators ``persist()`` a subtree when one query plan reads it from
+2-3 places (the exact router's sorted midframe, k-means centroids,
+sketch histograms); without the cache the work re-runs per reference.
+The frames are bounded and LRU-evictable, but a *long-lived* session
+(a service routing thousands of batches) shouldn't depend on LRU
+roulette — it wants each query's caches dropped the moment the query's
+action finishes.
 
 :func:`cache_scope` gives callers that guarantee without changing the
 operators' laziness contract:
 
     with cache_scope():
-        pairs = minhash_lsh_pairs(docs)
-        pairs.write.parquet(out)          # action runs with caches live
+        routed = route(df, cfg, n, order_col="record_id", mode="exact")
+        routed.write.parquet(out)         # action runs with caches live
     # <- every frame persisted inside the scope is now unpersisted
 
 Outside any scope, :func:`scoped_persist` degrades to a plain
-``persist()`` — exactly the pre-existing behavior (documented in
-``operators/dedup.py``: callers run ``spark.catalog.clearCache()``
-between queries).
+``persist()``: callers run ``spark.catalog.clearCache()`` between
+queries.
 
 Scopes nest (inner scopes release only their own frames) and the stack
 is thread-local, so concurrent streaming micro-batches on separate

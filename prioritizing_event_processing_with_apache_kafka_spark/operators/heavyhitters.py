@@ -10,8 +10,7 @@ rows regardless of input cardinality, and MG summaries are mergeable
 summaries by adding counts, then subtracting the (capacity+1)-th
 largest count from all and keeping positives.
 
-Pipeline (candidate-generation + exact-verify, the same shape as the
-near-dup operators in ``dedup.py``):
+Pipeline (candidate generation, then exact verify):
 
 1. ``misra_gries_partial`` — one Arrow-batched ``mapInPandas`` pass
    produces one MG summary (≤ ``capacity`` rows) per input partition,

@@ -1,6 +1,5 @@
-"""Round-7 sixth-batch operators: rendezvous routing, shingle
-containment, co-occurrence lift, HHI concentration, CUSUM alarm,
-interval concurrency.
+"""Round-7 sixth-batch operators: rendezvous routing, co-occurrence
+lift, HHI concentration, CUSUM alarm, interval concurrency.
 
 Each checked against a hand-computed golden and, where the operator
 has a genuinely different independent derivation (CUSUM's closed form
@@ -15,13 +14,8 @@ import hashlib
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark.operators.basket import (
     cooccurrence_lift,
-)
-from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-    ngram_containment_pairs,
 )
 from prioritizing_event_processing_with_apache_kafka_spark.operators.rangejoin import (
     interval_concurrency_peak,
@@ -157,37 +151,6 @@ class TestCusumAlarm:
             assert got == _py_cusum(xs, k)
 
         run()
-
-
-class TestNgramContainment:
-    def test_excerpt_detected(self, spark):
-        long = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        excerpt = "gamma delta epsilon zeta eta"  # verbatim slice
-        other = "one two three four five six seven"
-        docs = spark.createDataFrame(
-            [(1, long), (2, excerpt), (3, other)], "doc_id bigint, text string"
-        )
-        rows = ngram_containment_pairs(docs, k=4, threshold_ppm=900_000).collect()
-        assert [(r["x"], r["y"]) for r in rows] == [(1, 2)]
-        r = rows[0]
-        # excerpt has 5 tokens -> 2 4-shingles, both inside the long doc
-        assert r["inter_shingles"] == 2
-        assert r["min_shingles"] == 2
-        assert r["containment_ppm"] == 1_000_000
-
-    def test_jaccard_would_miss_it(self, spark):
-        # sanity: the same pair sits FAR below a 0.5 Jaccard (2 shared
-        # of 7 long-side shingles) — the reason containment exists.
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-            ngram_jaccard_pairs,
-        )
-
-        long = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-        excerpt = "gamma delta epsilon zeta eta"
-        docs = spark.createDataFrame(
-            [(1, long), (2, excerpt)], "doc_id bigint, text string"
-        )
-        assert ngram_jaccard_pairs(docs, k=4, threshold=0.5).count() == 0
 
 
 class TestCooccurrenceLift:

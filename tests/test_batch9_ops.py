@@ -1,129 +1,6 @@
-"""Round-7 ninth-batch operators: prefix-filtered Jaccard, multiset
-Jaccard, drain-tick percentiles."""
+"""Round-7 ninth-batch operators: drain-tick percentiles."""
 
 from __future__ import annotations
-
-import pytest
-from pyspark.sql import functions as F
-
-from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-    ngram_jaccard_pairs,
-    prefix_filter_jaccard_pairs,
-    token_multiset_jaccard,
-)
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, "the quick brown fox jumps over the lazy cat"),  # near-dup of 0
-        (2, "completely different content with other words here"),
-        (3, "the quick brown fox jumps over the lazy dog"),  # exact dup of 0
-        (4, "one two three four"),
-    ]
-    return spark.createDataFrame(rows, "doc_id bigint, text string")
-
-
-class TestPrefixFilterJaccard:
-    def test_equals_ground_truth_on_fixture(self, spark, docs):
-        want = {
-            (r.x, r.y): r.jaccard
-            for r in ngram_jaccard_pairs(docs, k=4, threshold=0.5).collect()
-        }
-        got = {
-            (r.x, r.y): r.jaccard
-            for r in prefix_filter_jaccard_pairs(
-                docs, k=4, threshold=0.5
-            ).collect()
-        }
-        assert got == want and len(got) > 0
-
-    def test_property_no_lost_recall(self, spark):
-        from hypothesis import HealthCheck, given, settings
-        from hypothesis import strategies as st
-
-        words = st.sampled_from(
-            ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
-        )
-        texts = st.lists(
-            st.lists(words, min_size=4, max_size=12).map(" ".join),
-            min_size=2,
-            max_size=8,
-        )
-
-        @settings(
-            max_examples=8,
-            deadline=None,
-            suppress_health_check=[HealthCheck.function_scoped_fixture],
-        )
-        @given(texts, st.sampled_from([0.3, 0.5, 0.8]))
-        def run(bodies, t):
-            df = spark.createDataFrame(
-                list(enumerate(bodies)), "doc_id bigint, text string"
-            )
-            want = {
-                (r.x, r.y)
-                for r in ngram_jaccard_pairs(df, k=4, threshold=t).collect()
-            }
-            got = {
-                (r.x, r.y)
-                for r in prefix_filter_jaccard_pairs(
-                    df, k=4, threshold=t
-                ).collect()
-            }
-            assert got == want
-
-        run()
-
-    def test_hot_shingle_pruned_from_candidates(self, spark):
-        # every doc shares one boilerplate prefix (a hot shingle that
-        # share-any-shingle would turn into C(n,2) candidates); the
-        # docs are otherwise disjoint, so NO pair reaches J >= 0.5 and
-        # prefix filtering must (a) return the same empty answer and
-        # (b) generate strictly fewer candidates than all-pairs.
-        boiler = "terms of service apply here"
-        docs = spark.createDataFrame(
-            [(i, f"{boiler} unique{i} body{i} text{i} tail{i}") for i in range(8)],
-            "doc_id bigint, text string",
-        )
-        assert prefix_filter_jaccard_pairs(docs, k=4, threshold=0.5).count() == 0
-        assert ngram_jaccard_pairs(docs, k=4, threshold=0.5).count() == 0
-
-
-class TestTokenMultisetJaccard:
-    def _pairs(self, spark, xy):
-        return spark.createDataFrame(xy, "x bigint, y bigint")
-
-    def test_hand_computed(self, spark):
-        docs = spark.createDataFrame(
-            [
-                (1, "a a b c"),     # counts a:2 b:1 c:1, T=4
-                (2, "a b b d"),     # counts a:1 b:2 d:1, T=4
-            ],
-            "doc_id bigint, text string",
-        )
-        r = token_multiset_jaccard(docs, self._pairs(spark, [(1, 2)])).collect()[0]
-        # shared min: a->1, b->1 = 2; union max = 4 + 4 - 2 = 6
-        assert (r.shared_min, r.union_max, r.wjaccard_ppm) == (2, 6, 333_333)
-
-    def test_repetition_separates_where_set_jaccard_cannot(self, spark):
-        base = "one two three four five"
-        docs = spark.createDataFrame(
-            [(1, base), (2, base + " " + base)],
-            "doc_id bigint, text string",
-        )
-        r = token_multiset_jaccard(docs, self._pairs(spark, [(1, 2)])).collect()[0]
-        # sets are identical (J=1) but the multiset sees the doubling:
-        # min = 5, max = 10 -> 0.5
-        assert (r.shared_min, r.union_max, r.wjaccard_ppm) == (5, 10, 500_000)
-
-    def test_disjoint_pair_reports_zero(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "a b"), (2, "c d")], "doc_id bigint, text string"
-        )
-        r = token_multiset_jaccard(docs, self._pairs(spark, [(1, 2)])).collect()[0]
-        assert (r.shared_min, r.wjaccard_ppm) == (0, 0)
 
 
 class TestDrainTickPercentiles:

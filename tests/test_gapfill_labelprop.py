@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     gap_fill_interpolate,
 )

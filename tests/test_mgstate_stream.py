@@ -1,9 +1,10 @@
 """Streaming mergeable Misra-Gries state (streaming/mgstate.py): merge
 algebra, crash-replay idempotence, split invariance of the final
-answer, the truncation/decrement path at tiny capacity, and the MG
-completeness/weight invariants. The twin contract itself (fixture hash
-parity of `stream_heavy_hitters` vs the shared batch
-`heavy_hitter_users` oracle) is enforced by the oracle harness."""
+answer, the truncation/decrement path at tiny capacity, the MG
+completeness/weight invariants and the certified exact top-k readout.
+The twin contract itself (fixture hash parity of `stream_heavy_hitters`
+vs the shared batch `heavy_hitter_users` oracle) is enforced by the
+oracle harness."""
 
 from __future__ import annotations
 
@@ -141,3 +142,101 @@ class TestMgAlgebra:
                 _df(spark, [1]), state_path=store, key_col="k",
                 capacity=0, batch_id=0,
             )
+
+
+class TestMgExactTopkCertificate:
+    def test_fallback_recovers_decremented_heavy_hitter(self, spark, tmp_path):
+        # capacity=2 over 12 distinct keys: the summary decrements
+        # aggressively (err_bound > 0) and the candidates-only recount
+        # is NOT certifiably complete — the readout must fall back to
+        # the full exact recount and still return the true top-k.
+        from prioritizing_event_processing_with_apache_kafka_spark.streaming.mgstate import (
+            mg_apply_batch,
+            mg_exact_topk,
+            mg_state_meta,
+        )
+
+        rows = []
+        # near-uniform noise: keys 100..110, 5 each
+        for k in range(100, 111):
+            rows += [(k,)] * 5
+        # the true heavy hitter, only modestly above the noise floor
+        rows += [(7,)] * 8
+        src = spark.createDataFrame(rows, "user_id bigint")
+        state = str(tmp_path / "state")
+        mg_apply_batch(
+            src, state_path=state, key_col="user_id", capacity=2, batch_id=0
+        )
+        err = mg_state_meta(spark, state).collect()[0]["err_bound"]
+        assert err > 0, "fixture must exercise the decrement path"
+        got = mg_exact_topk(
+            spark, state, src, key_col="user_id", k=3
+        ).collect()
+        expect = (
+            src.groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"))
+            .orderBy(F.desc("n_events"), F.asc("user_id"))
+            .limit(3)
+            .collect()
+        )
+        assert [tuple(r) for r in got] == [tuple(r) for r in expect]
+
+    def test_certified_path_skips_full_recount(self, spark, tmp_path):
+        # capacity >= distinct keys: zero decrements, err_bound 0, the
+        # candidates-only recount is certified and must equal the exact
+        # answer without any fallback.
+        from prioritizing_event_processing_with_apache_kafka_spark.streaming.mgstate import (
+            mg_apply_batch,
+            mg_exact_topk,
+            mg_state_meta,
+        )
+
+        rows = [(k,) for k in (1, 1, 1, 2, 2, 3)]
+        src = spark.createDataFrame(rows, "user_id bigint")
+        state = str(tmp_path / "state")
+        mg_apply_batch(
+            src, state_path=state, key_col="user_id", capacity=64, batch_id=0
+        )
+        assert mg_state_meta(spark, state).collect()[0]["err_bound"] == 0
+        got = mg_exact_topk(spark, state, src, key_col="user_id", k=2).collect()
+        assert [(r["user_id"], r["n_events"]) for r in got] == [(1, 3), (2, 2)]
+
+
+class TestMgCertifiedReadoutRunsOnce:
+    def test_certified_head_is_local_relation(self, spark, tmp_path):
+        # When err_bound > 0 and the certificate passes,
+        # the collected head must be handed back as a local relation —
+        # NOT the uncollected `top` plan, whose materialization would
+        # re-run the candidate recount job a second time.
+        from prioritizing_event_processing_with_apache_kafka_spark.streaming.mgstate import (
+            mg_apply_batch,
+            mg_exact_topk,
+            mg_state_meta,
+        )
+
+        rows = []
+        for k in range(100, 112):  # 12 noise keys, 5 each
+            rows += [(k,)] * 5
+        rows += [(7,)] * 300  # heavy hitters far above any decrement total
+        rows += [(8,)] * 250
+        src = spark.createDataFrame(rows, "user_id bigint")
+        state = str(tmp_path / "state")
+        mg_apply_batch(
+            src, state_path=state, key_col="user_id", capacity=2, batch_id=0
+        )
+        err = mg_state_meta(spark, state).collect()[0]["err_bound"]
+        assert err > 0, "fixture must exercise the decrement path"
+        got = mg_exact_topk(spark, state, src, key_col="user_id", k=2)
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan or "LogicalRDD" in plan, (
+            "certified readout must be pre-collected driver-local data, "
+            f"got plan:\n{plan}"
+        )
+        for op in ("Join", "Aggregate", "Relation"):
+            assert op not in plan, (
+                f"certified readout re-plans the recount ({op}):\n{plan}"
+            )
+        assert [(r["user_id"], r["n_events"]) for r in got.collect()] == [
+            (7, 300),
+            (8, 250),
+        ]

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 
@@ -21,6 +22,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.plans.fingerprint imp
     streaming_core_queries,
 )
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FINGERPRINTS = json.load(
     open(os.path.join(os.path.dirname(__file__), "plan_fingerprints.json"))
 )
@@ -99,3 +101,37 @@ def test_fingerprints_cover_zero_shuffle_pipelines(queries):
         "error_purchase_interval",
     ):
         assert FINGERPRINTS[name]["shuffle_exchanges"] == 0
+
+
+class TestFingerprintCountDerived:
+    def test_coverage_fingerprint_count_matches_registry(self):
+        # A hand-written count once said "131 pinned" while the
+        # registry held 129. The count lives in docs/COVERAGE.md and is
+        # pinned here to len(tests/plan_fingerprints.json) so it can
+        # never drift from the registry again.
+        n = len(json.load(open(os.path.join(REPO, "tests", "plan_fingerprints.json"))))
+        text = open(os.path.join(REPO, "docs", "COVERAGE.md")).read()
+        m = re.search(r"(\d+) pinned plan fingerprints", text)
+        assert m, "COVERAGE.md fingerprint-count sentence not found"
+        assert int(m.group(1)) == n, (
+            f"COVERAGE.md says {m.group(1)} pinned fingerprints, "
+            f"tests/plan_fingerprints.json holds {n}"
+        )
+
+
+class TestFingerprintProseCounts:
+    def test_scale_md_fingerprint_counts_match_registry(self):
+        # SCALE.md once said "all 130 plan fingerprints" while the
+        # registry held 129. Every numeric "<N> plan fingerprints"
+        # mention in SCALE.md prose is pinned to
+        # len(tests/plan_fingerprints.json).
+        n = len(
+            json.load(open(os.path.join(REPO, "tests", "plan_fingerprints.json")))
+        )
+        text = open(os.path.join(REPO, "docs", "SCALE.md")).read()
+        mentions = [int(m) for m in re.findall(r"(\d+) plan\s+fingerprints", text)]
+        assert mentions, "SCALE.md fingerprint-count sentence not found"
+        wrong = [m for m in mentions if m != n]
+        assert not wrong, (
+            f"SCALE.md mentions fingerprint counts {wrong}, registry holds {n}"
+        )

@@ -9,10 +9,6 @@ that caught the NB dense-grid bug, applied to the new surface:
 
 from __future__ import annotations
 
-import math
-
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark.operators.drain import (
     consumer_map_table,
     drain_schedule,

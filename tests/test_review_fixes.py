@@ -128,27 +128,6 @@ class TestCompactionKeepsPartitions:
         assert back.filter(F.col("cell") == 2).count() == 250
 
 
-class TestIncrementalStoreValidation:
-    def test_mismatched_store_num_hashes_raises(self, spark):
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-            incremental_minhash_pairs,
-            with_minhash_signature,
-        )
-
-        docs = spark.createDataFrame(
-            [(0, "one two three four five six"), (1, "seven eight nine ten")],
-            "doc_id long, text string",
-        )
-        store = with_minhash_signature(docs, num_hashes=16).select(
-            "doc_id", "minhash"
-        )
-        with pytest.raises(Exception) as ei:
-            incremental_minhash_pairs(
-                docs, store, docs, num_hashes=32, bands=8
-            ).collect()
-        assert "num_hashes=32" in str(ei.value)
-
-
 class TestAsofNullHandling:
     def _frames(self, spark):
         left = spark.createDataFrame(

@@ -1,5 +1,4 @@
-"""Round-8 batch-5 operator semantics: source overlap census and decile
-drift (fixture parity is covered by the oracle harness; these pin
+"""Round-8 batch-5 operator semantics: decile drift (fixture parity is covered by the oracle harness; these pin
 hand-computable cases and the properties the oracles can't express —
 per-group fence isolation)."""
 
@@ -7,39 +6,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.dedup import (
-    source_overlap_matrix,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     decile_drift,
 )
-
-
-class TestSourceOverlapMatrix:
-    def test_unordered_fold_and_mean(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "A"), (2, "B"), (3, "A"), (4, "B")],
-            "doc_id long, source string",
-        )
-        # pairs (1,2) A-B j=0.5, (2,3) B-A j=0.7, (1,3) A-A j=1.0:
-        # A-B folds both directions: n=2, mean = (500000+700000) DIV 2.
-        pairs = spark.createDataFrame(
-            [(1, 2, 0.5), (2, 3, 0.7), (1, 3, 1.0)],
-            "x long, y long, jaccard double",
-        )
-        out = {
-            (r["source_a"], r["source_b"]): r
-            for r in source_overlap_matrix(pairs, docs).collect()
-        }
-        assert out[("A", "B")]["n_pairs"] == 2
-        assert out[("A", "B")]["mean_jaccard_ppm"] == 600_000
-        assert out[("A", "A")]["n_pairs"] == 1
-        assert out[("A", "A")]["mean_jaccard_ppm"] == 1_000_000
-
-    def test_empty_pairs(self, spark):
-        docs = spark.createDataFrame([(1, "A")], "doc_id long, source string")
-        pairs = spark.createDataFrame([], "x long, y long, jaccard double")
-        assert source_overlap_matrix(pairs, docs).count() == 0
 
 
 class TestDecileDrift:

@@ -5,7 +5,6 @@ covered by the oracle harness; these pin hand-computable cases)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.sketches import (
     exact_group_mad,

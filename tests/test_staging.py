@@ -1,13 +1,13 @@
-"""Round-13 fix: K-file parallel staging replays one file group per
-micro-batch."""
+"""Parallel K-file staging (streaming/staging.py): one file group per
+micro-batch, and the short-batch refusal."""
 
 from __future__ import annotations
 
 
 class TestParallelStaging:
     def test_k_file_groups_align_with_micro_batches(self, spark):
-        # files_per_batch=K staging (r13: the serial coalesce(1) write
-        # was 8.7 s of the 100x lifetime-probe wall) relies on the file
+        # files_per_batch=K staging (a serial coalesce(1) write was
+        # 8.7 s of a 100x lifetime-probe wall) relies on the file
         # source taking the K oldest unseen files per trigger. Three
         # 4-file groups must replay as exactly three micro-batches,
         # each holding one complete group.

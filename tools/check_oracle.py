@@ -4,11 +4,7 @@ Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB over the same parquet fixtures, then compares row count, column
 names and an order-insensitive value comparison. Usage:
 
-    python tools/check_oracle.py [--json OUT.json] [--banded] [sf_dir] [query ...]
-
-``--banded`` (replica-artifact runs only, NEVER fixtures): record the
-``BANDED_AT_SCALE`` queries as machine-audited via their paired audit
-twin instead of a hash row — see the registry comment below.
+    python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
 Exit code 0 iff every checked query matches. ``--json`` additionally
 writes a per-query record in the driver's CORRECTNESS format (the
@@ -318,29 +314,7 @@ SELF_AUDITS = {
         _audit_abs_max(["inertia_ratio", "inertia_ratio_full"], 1.10)(pdf)
         + _audit_min("min_excess_d2", -1e-9)(pdf)
     ),
-    # SimHash's probabilistic (7,16] hamming band, priced as a bound:
-    # recall vs the in-plan exact Jaccard truth >= 0.99 (fixtures
-    # measure 1.0; the 10x replica 0.9953), and zero extra pairs
-    # (found is Jaccard-verified with the same shingles/threshold, so
-    # found ⊆ truth structurally).
-    "simhash_recall_audit": lambda pdf: (
-        _audit_min("recall", 0.99)(pdf)
-        + _audit_abs_max("n_extra", 0)(pdf)
-    ),
 }
-
-
-# Queries whose SQL oracle is bit-exact on the pristine fixtures but
-# PROBABILISTIC on replicated/rescaled corpora — the documented band,
-# priced by a paired in-plan audit query. With ``--banded`` (replica
-# artifact runs ONLY; never fixtures), each listed query is recorded as
-# machine-audited via its twin instead of a doomed hash row: the twin
-# computes the exact truth set IN THE SAME PLAN and its SELF_AUDITS
-# entry enforces the recall/extra-pairs bound. dedup_simhash's (7,16]
-# hamming band is the one member: at 10x it recalls 2548/2560 exact
-# pairs (>= 0.99 bound, zero extra) — correct BY ITS CONTRACT, which
-# the audit checks and a raw hash row cannot express.
-BANDED_AT_SCALE = {"dedup_simhash": "simhash_recall_audit"}
 
 
 def main() -> int:
@@ -353,9 +327,6 @@ def main() -> int:
     types_only = "--types-only" in argv
     if types_only:
         argv.remove("--types-only")
-    banded = "--banded" in argv
-    if banded:
-        argv.remove("--banded")
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
 
@@ -438,31 +409,6 @@ def main() -> int:
                 "spark_rows": None, "oracle_rows": None,
                 "err": f"spark error: {exc}"[:500],
             }
-            continue
-        if banded and name in BANDED_AT_SCALE:
-            twin = BANDED_AT_SCALE[name]
-            try:
-                twin_pdf = queries[twin](spark, sf_dir).toPandas()
-                problems = SELF_AUDITS[twin](twin_pdf)
-            except Exception as exc:  # noqa: BLE001
-                problems = [f"banded audit error: {exc}"[:300]]
-            checked += 1
-            records[name] = {
-                "rows_match": None, "schema_match": None, "hash_match": None,
-                "spark_rows": len(spark_pdf), "oracle_rows": None,
-                "self_audit": "fail" if problems else "pass",
-                "banded_via": twin,
-                "err": "; ".join(problems)[:500] if problems else None,
-            }
-            if problems:
-                failures += 1
-                print(f"FAIL  {name} (banded audit via {twin}) "
-                      f"[{time.time()-t0:.1f}s]")
-                for p in problems:
-                    print(f"      {p}")
-            else:
-                print(f"ok    {name}: {len(spark_pdf)} rows (banded at scale; "
-                      f"audit {twin} enforced) [{time.time()-t0:.1f}s]")
             continue
         if name not in oracles:
             audit = SELF_AUDITS.get(name)

@@ -35,21 +35,17 @@ GUARDED = [
     "bucket_throughput_hourly",
     "sessionized_events",
     "conversion_funnel",
-    "dedup_exact",
-    "dedup_minhash_lsh",
     "events_asof_last_purchase",
     "heavy_hitter_users",
-    "decontamination_bloom",
     "changelog_compaction",
     "scd2_customer_segments",
     "events_tier_at_time",
     # round 6: the min-struct argmin k-means plan (one tiny-row
     # exchange per assignment instead of a full scored-row sort)
     "embedding_kmeans",
-    # round 7: the two audit queries (exact+pruned assignment /
-    # simhash truth+found in one plan — growth here doubles real scans)
+    # round 7: the k-means audit query (exact+pruned assignment in one
+    # plan — growth here doubles real scans)
     "kmeans_pruned_agreement",
-    "simhash_recall_audit",
     # round 7, second batch: the drain schedule must stay one range
     # shuffle (riding the exact router's exchange) + one broadcast map
     # join; the gap fill must stay one per-key exchange + a tiny
@@ -76,8 +72,6 @@ GUARDED = [
     # same key; CUSUM one hourly-rollup exchange + one window sort
     # (reference level is a whole-partition window, NOT a second fact
     # aggregation); the sweep line one union-agg + one window + argmax.
-    # doc_containment is excluded: it rides the persisted shingle
-    # subtree whose cached scans dominate the plan text.
     "route_rendezvous",
     "copurchase_lift",
     "bucket_key_concentration",
@@ -100,31 +94,21 @@ GUARDED = [
     "priority_mix_shift",
     # round 7, ninth batch: the percentile table rides the guarded
     # drain-schedule plan and must add only histogram-sized windows
-    # (a per-EVENT window sort is the regression). The two dedup
-    # refinements are excluded (persisted shingle subtrees).
+    # (a per-EVENT window sort is the regression).
     "drain_tick_percentiles",
     # round 8: close the bench-coverage gap (VERDICT r7 item 2) — every
     # remaining batch headline query gets a pinned exchange count.
     # route_distribution is the 12-row routed-partition census (rides
     # the exact router's range exchange + one tiny agg); the TPC-H q7/
     # q10 pair pins the broadcast-vs-shuffle join split; the sketch
-    # rollups (HLL/KLL) must stay ONE hash aggregate each; the dedup
-    # family rides persisted signature subtrees whose cached-scan text
-    # is deterministic under the fixed session config; the incremental
-    # pair pins the probe-plan shape (sign + band-join + semi-join
-    # fetch — a history re-scan sneaking in is the regression).
+    # rollups (HLL/KLL) must stay ONE hash aggregate each.
     "route_distribution",
     "user_event_gaps",
     "events_json_extract",
     "q7_nation_volume",
     "q10_returned_revenue",
-    "dedup_minhash_oph",
     "embedding_label_centroids",
     "error_purchase_interval",
-    "dedup_edit_distance",
-    "span_dedup",
-    "dedup_incremental",
-    "dedup_incremental_steady",
     "user_value_ewma",
     "bucket_hourly_anomaly",
     "stream_sessionized_users",
@@ -165,12 +149,9 @@ GUARDED = [
     "lineitem_benford",
     "orders_winsorized",
     "embedding_outlier_audit",
-    # round 8 fifth batch: source_overlap must keep the pair list
-    # broadcast-joined to the doc projection; decile drift is the
-    # fence subtree + TWO broadcasts onto the fact scan (fences, mids)
-    # + one group window; erasure is three semi-join/fold pairs with
-    # broadcast cohorts.
-    "source_overlap",
+    # round 8 fifth batch: decile drift is the fence subtree + TWO
+    # broadcasts onto the fact scan (fences, mids) + one group window;
+    # erasure is three semi-join/fold pairs with broadcast cohorts.
     "events_decile_drift",
     "erasure_cascade",
     # round 8 sixth batch: the exact sliding distinct must keep the
