@@ -60,9 +60,6 @@ _DRIVER_HEAD = [
     # tests/test_round10_fixes.py::test_driver_head_is_all_oracled).
     "stream_route_lifetime",
     "customer_rfm",
-    "documents_weighted_sample",
-    "embedding_outlier_audit",
-    "embedding_quantile_norm",
     "erasure_cascade",
     "events_ab_test",
     "events_decile_drift",
@@ -73,7 +70,6 @@ _DRIVER_HEAD = [
     "events_peak_census",
     "events_seasonal_backtest",
     "join_skew_diagnosis",
-    "lang_charclass_profile",
     "layout_autobroadcast_canary",
     "layout_rebalance_impact",
     "lineitem_benford",
@@ -82,7 +78,6 @@ _DRIVER_HEAD = [
     "orders_dup_screen",
     "orders_winsorized",
     "rolling_active_users",
-    "source_lang_fd",
     "supplier_ship_sla",
     "user_churn_census",
     "user_decayed_value",
@@ -100,7 +95,6 @@ _DRIVER_HEAD = [
     # (overflow) next-stalest oracled cohort — the r09/draws=1
     # remainder then the r09/draws=2 head — fronted next round per
     # the rotation policy.
-    "vocab_rank_census",
     "bucket_metric_unpivot",
     "copurchase_lift",
     "customer_revenue_gini",

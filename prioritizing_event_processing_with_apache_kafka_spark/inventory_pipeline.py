@@ -1,8 +1,8 @@
-"""Query inventory, part 2: corpus, embedding and event-analytics queries.
+"""Query inventory, part 2: event and relational analytics queries.
 
-Term statistics, embedding clustering, sampling, streaming rollups and
-keyed time-series features — each over the fixture tables, with DuckDB
-oracles wherever the operator is SQL-expressible.
+Sampling, profiling, streaming rollups and keyed time-series features —
+each over the fixture tables, with DuckDB oracles wherever the operator
+is SQL-expressible.
 """
 from __future__ import annotations
 
@@ -30,260 +30,13 @@ from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
 from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import (
     bucket_for_event_type,
     load_table,
-    spread,
 )
 
 __all__ = ["PIPELINE_QUERIES", "PIPELINE_ORACLES"]
 
 
 # ---------------------------------------------------------------------------
-# Text analysis
-# ---------------------------------------------------------------------------
-
-
-def q_term_doc_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 tokens by document frequency — the core of inverted-index
-    and IDF-table construction. Distinct-per-document via the shingle
-    alphabet trick (array_distinct before explode), deterministic
-    tie-break on the token."""
-    docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.select(
-            "doc_id",
-            F.explode(F.array_distinct(F.split("text", " "))).alias("token"),
-        )
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("doc_freq"))
-        .orderBy(F.desc("doc_freq"), F.asc("token"))
-        .limit(20)
-    )
-
-
-SQL_TERM_DOC_FREQUENCY = """
-SELECT token, COUNT(*) AS doc_freq
-FROM (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS token FROM documents)
-GROUP BY token
-ORDER BY doc_freq DESC, token ASC
-LIMIT 20
-"""
-
-
-def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF terms for the first ten documents — the relevance
-    core of a search index. One token explode feeds both the per-doc
-    term frequencies and the corpus document frequencies; the tiny
-    (term, df) table broadcasts back onto the tf rows, and scoring
-    rounds to 6 decimals so ln() last-ulp differences between engines
-    cannot show through."""
-    docs = load_table(spark, sf_dir, "documents")
-    tokens = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    tf = tokens.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = (
-        tokens.groupBy("term")
-        .agg(F.countDistinct("doc_id").alias("df"))
-    )
-    n_docs = docs.count()  # driver-side scalar: one tiny job, folded as a literal
-    scored = (
-        tf.join(F.broadcast(df_), "term")
-        .withColumn(
-            "tfidf",
-            F.round(
-                F.col("tf").cast("double")
-                * F.log(F.lit(float(n_docs)) / F.col("df").cast("double")),
-                6,
-            ),
-        )
-        .filter(F.col("doc_id") < 10)
-    )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 3)
-        .select("doc_id", "term", "tf", "df", "rank", "tfidf")
-    )
-
-
-SQL_TFIDF_TOP_TERMS = """
-WITH tokens AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-), tf AS (
-  SELECT doc_id, term, COUNT(*) AS tf FROM tokens GROUP BY 1, 2
-), df AS (
-  SELECT term, COUNT(DISTINCT doc_id) AS df FROM tokens GROUP BY 1
-), n AS (
-  SELECT COUNT(*) AS n_docs FROM documents
-), scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-         ROUND(CAST(tf.tf AS DOUBLE) * LN(CAST(n.n_docs AS DOUBLE) / CAST(df.df AS DOUBLE)), 6) AS tfidf
-  FROM tf JOIN df USING (term) CROSS JOIN n
-  WHERE tf.doc_id < 10
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS rank
-  FROM scored
-)
-SELECT doc_id, term, tf, df, CAST(rank AS INTEGER) AS rank, tfidf
-FROM ranked WHERE rank <= 3
-"""
-
-
-def q_embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label centroid components — the E-step building block of a
-    distributed k-means over the embedding table. posexplode turns the
-    vector column into (label, pos, value) rows so the mean is one hash
-    aggregate; rounded to 6 decimals so float summation order cannot
-    show through the oracle compare."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(
-            F.round(
-                F.sum(F.col("v").cast("double")) / F.count(F.lit(1)), 6
-            ).alias("centroid")
-        )
-        .orderBy("label", "pos")
-    )
-
-
-# DuckDB's generate_series cannot take a lateral column bound, so the
-# series is static (embeddings are 64-dim) with a length guard.
-SQL_EMBEDDING_LABEL_CENTROIDS = """
-SELECT label, CAST(g.i - 1 AS INTEGER) AS pos,
-       ROUND(SUM(CAST(embedding[g.i] AS DOUBLE)) / COUNT(*), 6) AS centroid
-FROM embeddings CROSS JOIN generate_series(1, 64) AS g(i)
-WHERE g.i <= len(embedding)
-GROUP BY 1, 2
-ORDER BY 1, 2
-"""
-
-
-def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two Lloyd's iterations of k=8 k-means over the embedding table —
-    the iterative-algorithm showcase, fully deterministic (seeded by the
-    first 8 vectors, rounded distances, cluster-id tie-breaks) and hence
-    oracle-checkable against an unrolled SQL trajectory."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.clustering import (
-        kmeans_assignments,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_assignments(emb, k=8, n_iter=2).withColumn(
-        "cluster", F.col("cluster").cast("int")
-    )
-
-
-_SQL_D2 = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(generate_series(1, len({a})), "
-    "i -> ({a}[i]::DOUBLE - {b}[i]::DOUBLE) * ({a}[i]::DOUBLE - {b}[i]::DOUBLE))), "
-    "(acc, v) -> acc + v)"
-)
-
-# Unrolled two-iteration Lloyd trajectory, shared by the k-means query
-# and the SemDeDup oracle (which needs the final assignment as a CTE).
-_SQL_KMEANS_CTES = f"""cent0 AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster,
-         list_transform(embedding, x -> x::DOUBLE) AS cvec
-  FROM (SELECT * FROM embeddings ORDER BY vec_id LIMIT 8)
-), s0 AS (
-  SELECT e.vec_id, e.embedding, c.cluster,
-         ROUND({_SQL_D2.format(a='e.embedding', b='c.cvec')}, 6) AS d2
-  FROM embeddings e CROSS JOIN cent0 c
-), a0 AS (
-  SELECT vec_id, embedding, cluster FROM (
-    SELECT s0.*, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-    FROM s0
-  ) WHERE rn = 1
-), cent1 AS (
-  SELECT cluster, list(c ORDER BY pos) AS cvec FROM (
-    SELECT cluster, g.i - 1 AS pos, ROUND(AVG(embedding[g.i]::DOUBLE), 6) AS c
-    FROM a0 CROSS JOIN generate_series(1, 64) AS g(i)
-    WHERE g.i <= len(embedding)
-    GROUP BY 1, 2
-  ) GROUP BY cluster
-), s1 AS (
-  SELECT e.vec_id, c.cluster,
-         ROUND({_SQL_D2.format(a='e.embedding', b='c.cvec')}, 6) AS d2
-  FROM embeddings e CROSS JOIN cent1 c
-), a1 AS (
-  SELECT vec_id, cluster, d2 FROM (
-    SELECT s1.*, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cluster) AS rn
-    FROM s1
-  ) WHERE rn = 1
-)"""
-
-SQL_EMBEDDING_KMEANS = f"""
-WITH {_SQL_KMEANS_CTES}
-SELECT vec_id, CAST(cluster AS INTEGER) AS cluster, d2 FROM a1
-"""
-
-
-def q_kmeans_pruned_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Machine-audited gate for the two-level (IVF-style) pruned
-    k-means assignment — the documented n ≳ 10⁷ configuration
-    (``clustering.py::_assign_pruned``). Runs the exact and the pruned
-    assignment against the IDENTICAL deterministic seed centroids
-    (``n_iter=1``, so no trajectory divergence) and reports, in one
-    row:
-
-    - ``agree_rate`` — fraction of vectors whose pruned cluster equals
-      the exact argmin (informational: near-tie flips are expected on
-      unstructured embeddings);
-    - ``inertia_ratio`` — Σ pruned d² / Σ exact d², the standard IVF
-      quality metric (audited ≤ 1.10; measured ≈ 1.03 on every
-      fixture);
-    - ``min_excess_d2`` — min(pruned d² − exact d²), audited ≥ −1e-9:
-      against the same centroids the pruned argmin scores a SUBSET of
-      clusters, so per-vector excess is structurally non-negative
-      (modulo 6-decimal rounding) — a violated bound means the router
-      broke, not that the data drifted;
-    - ``inertia_ratio_full`` — the same ratio after the full two-
-      iteration trajectory (each path updating its own centroids),
-      audited ≤ 1.10: end-to-end quantization cost of pruning.
-
-    Enforced via the SELF_AUDITS registry in ``tools/check_oracle.py``
-    (same machinery as the ANN recall gates); not SQL-oracled — the
-    pruned router is an engine-internal plan choice, and the audit IS
-    the spec."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.clustering import (
-        kmeans_assignments,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    k, groups = 16, 4
-
-    def pair(n_iter: int, tag: str):
-        ex = kmeans_assignments(emb, k=k, n_iter=n_iter, assignment="exact")
-        pr = kmeans_assignments(
-            emb, k=k, n_iter=n_iter, assignment="pruned", groups=groups
-        )
-        return ex.select(
-            "vec_id",
-            F.col("cluster").alias(f"ce_{tag}"),
-            F.col("d2").alias(f"de_{tag}"),
-        ).join(
-            pr.select(
-                "vec_id",
-                F.col("cluster").alias(f"cp_{tag}"),
-                F.col("d2").alias(f"dp_{tag}"),
-            ),
-            "vec_id",
-        )
-
-    j = pair(1, "s").join(pair(2, "f"), "vec_id")
-    return j.agg(
-        F.count(F.lit(1)).alias("n_vecs"),
-        F.round(
-            F.avg((F.col("cp_s") == F.col("ce_s")).cast("double")), 6
-        ).alias("agree_rate"),
-        F.round(F.sum("dp_s") / F.sum("de_s"), 6).alias("inertia_ratio"),
-        F.round(F.min(F.col("dp_s") - F.col("de_s")), 6).alias("min_excess_d2"),
-        F.round(F.sum("dp_f") / F.sum("de_f"), 6).alias("inertia_ratio_full"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Dedup clustering, sampling, profiling
+# Sampling, profiling
 # ---------------------------------------------------------------------------
 
 
@@ -330,49 +83,6 @@ WHERE {coin} < CASE event_type WHEN 'error' THEN 1.0
 SQL_STRATIFIED_SAMPLE = _sql_stratified_sample()
 
 
-def q_mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Largest deterministic sample hitting a 4:2:1 source mixture
-    (src0:src1:src2; other sources dropped) — per-source rates derived
-    from counts, broadcast onto one fact scan."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        mixture_sample,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    return mixture_sample(
-        docs, key="doc_id", strata_col="source",
-        weights={"src0": 4.0, "src1": 2.0, "src2": 1.0},
-    ).select("doc_id", "source")
-
-
-def _sql_mixture_sample() -> str:
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_coin_sql,
-    )
-
-    coin = hash_coin_sql("d.doc_id")
-    return f"""
-WITH counts AS (
-  SELECT source, COUNT(*) AS cnt,
-         CASE source WHEN 'src0' THEN 4.0 WHEN 'src1' THEN 2.0
-                     WHEN 'src2' THEN 1.0 END AS w
-  FROM documents GROUP BY source
-), included AS (
-  SELECT * FROM counts WHERE w IS NOT NULL
-), scl AS (
-  SELECT MIN(CAST(cnt AS DOUBLE) / w) AS scale FROM included
-), rates AS (
-  SELECT source, scale * w / CAST(cnt AS DOUBLE) AS rate FROM included, scl
-)
-SELECT d.doc_id, d.source
-FROM documents d JOIN rates USING (source)
-WHERE {coin} < rate
-"""
-
-
-SQL_MIXTURE_SAMPLE = _sql_mixture_sample()
-
-
 def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed reservoir: exactly 50 events per event_type, the 50
     smallest deterministic hash coins — count-derived broadcast
@@ -406,85 +116,6 @@ SELECT event_type, event_id, user_id FROM (
 
 
 SQL_RESERVOIR_SAMPLE = _sql_reservoir_sample()
-
-
-def q_dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split (80/10/10 by the hash coin):
-    membership is a pure function of doc_id — reproducible across runs,
-    engines, and partitionings, and auditable in SQL. Output: per
-    (split, lang) document counts."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_coin,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    coin = hash_coin("doc_id")
-    split = (
-        F.when(coin < 0.8, F.lit("train"))
-        .when(coin < 0.9, F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return (
-        docs.withColumn("split", split)
-        .groupBy("split", "lang")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-
-
-def _sql_dataset_split() -> str:
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_coin_sql,
-    )
-
-    coin = hash_coin_sql("doc_id")
-    return f"""
-SELECT CASE WHEN {coin} < 0.8 THEN 'train'
-            WHEN {coin} < 0.9 THEN 'val'
-            ELSE 'test' END AS split,
-       lang, COUNT(*) AS n_docs
-FROM documents GROUP BY 1, 2
-"""
-
-
-SQL_DATASET_SPLIT = _sql_dataset_split()
-
-
-def q_doc_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence packing for pretraining batches: documents stream into
-    fixed-capacity packs (1024 whitespace tokens) in doc_id order,
-    partitioned by language so the cumulative sum parallelizes across
-    langs. ``pack_id = floor((cumsum_tokens - n_tokens) / capacity)`` —
-    the boundary-agnostic packing used when sequences may split across
-    pack boundaries."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split(F.col("text"), " "))
-    cum = F.sum("n_tokens").over(
-        Window.partitionBy("lang")
-        .orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        docs.withColumn("n_tokens", n_tokens)
-        .withColumn(
-            "pack_id",
-            F.floor((cum - F.col("n_tokens")) / F.lit(1024)).cast("int"),
-        )
-        .select("lang", "doc_id", "n_tokens", "pack_id")
-    )
-
-
-SQL_DOC_PACKING = """
-SELECT lang, doc_id, n_tokens,
-       CAST(FLOOR((cum - n_tokens) / 1024.0) AS INTEGER) AS pack_id
-FROM (
-  SELECT lang, doc_id,
-         len(string_split(text, ' ')) AS n_tokens,
-         SUM(len(string_split(text, ' '))) OVER (
-           PARTITION BY lang ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-  FROM documents
-)
-"""
 
 
 def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -639,131 +270,6 @@ GROUP BY c.c_mktsegment
 """
 
 
-# ---------------------------------------------------------------------------
-# Per-source curation profile
-# ---------------------------------------------------------------------------
-
-
-def q_source_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source curation dashboard: volume, exact-duplicate rate,
-    token mass, English share — the first cut when deciding which
-    crawl sources to keep. One scan, one hash aggregate (the distinct
-    count is the only second pass — over the (source, text) pairs)."""
-    docs = load_table(spark, sf_dir, "documents")
-    n_docs = F.count(F.lit(1))
-    return (
-        docs.groupBy("source")
-        .agg(
-            n_docs.alias("n_docs"),
-            F.countDistinct("text").alias("n_unique_texts"),
-            F.sum(F.size(F.split(F.col("text"), " "))).alias("sum_tokens"),
-            F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).alias("__n_en"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_unique_texts",
-            F.round(
-                F.lit(1.0)
-                - F.col("n_unique_texts").cast("double") / F.col("n_docs"),
-                6,
-            ).alias("dup_rate"),
-            F.round(
-                F.col("sum_tokens").cast("double") / F.col("n_docs"), 6
-            ).alias("avg_tokens"),
-            F.round(F.col("__n_en").cast("double") / F.col("n_docs"), 6).alias(
-                "en_share"
-            ),
-        )
-    )
-
-
-SQL_SOURCE_DUP_PROFILE = """
-WITH agg AS (
-  SELECT source,
-         COUNT(*) AS n_docs,
-         COUNT(DISTINCT text) AS n_unique_texts,
-         SUM(len(string_split(text, ' '))) AS sum_tokens,
-         SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_en
-  FROM documents GROUP BY source
-)
-SELECT source, n_docs, n_unique_texts,
-       ROUND(1.0 - CAST(n_unique_texts AS DOUBLE) / n_docs, 6) AS dup_rate,
-       ROUND(CAST(sum_tokens AS DOUBLE) / n_docs, 6) AS avg_tokens,
-       ROUND(CAST(n_en AS DOUBLE) / n_docs, 6) AS en_share
-FROM agg
-"""
-
-
-def q_changelog_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merge-on-read changelog compaction (operators/merge.py):
-    latest-wins snapshot of the ``documents`` base plus a deterministic
-    changelog carved from the fixture — ``doc_id % 3 == 0`` gets a v1
-    text update, ``doc_id % 10 == 0`` a v2 tombstone (the tombstone
-    outranks the update for keys hit by both), and ``doc_id % 50 == 0``
-    spawns a brand-new key at v1. One map-side-combinable ``max_by``
-    aggregate — no window sort. The oracle replays the same changelog
-    with a ROW_NUMBER-over-version plan, so a version-ordering or
-    tombstone bug hash-mismatches."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.merge import (
-        changelog_latest_snapshot,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    updates = docs.filter(F.col("doc_id") % 3 == 0).select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(" [u1]")).alias("text"),
-        "source",
-        F.lit(1).alias("version"),
-        F.lit(False).alias("is_delete"),
-    )
-    deletes = docs.filter(F.col("doc_id") % 10 == 0).select(
-        "doc_id",
-        "text",
-        "source",
-        F.lit(2).alias("version"),
-        F.lit(True).alias("is_delete"),
-    )
-    # Synthetic insert keys live in the NEGATIVE key space: real
-    # doc_ids are non-negative at every scale/replica factor, so the
-    # inserts can never collide with a real key (a fixed +100000
-    # offset would collide once replicas push max(doc_id) past it,
-    # creating v1-vs-v1 ties that max_by breaks nondeterministically).
-    inserts = docs.filter(F.col("doc_id") % 50 == 0).select(
-        (-(F.col("doc_id") + 1)).alias("doc_id"),
-        F.concat(F.lit("new "), F.col("text")).alias("text"),
-        "source",
-        F.lit(1).alias("version"),
-        F.lit(False).alias("is_delete"),
-    )
-    changes = updates.unionByName(deletes).unionByName(inserts)
-    return changelog_latest_snapshot(
-        docs,
-        changes,
-        key_cols=["doc_id"],
-        version_col="version",
-        delete_col="is_delete",
-    )
-
-
-SQL_CHANGELOG_COMPACTION = """
-WITH all_rows AS (
-  SELECT doc_id, text, source, 0 AS version, FALSE AS is_delete FROM documents
-  UNION ALL
-  SELECT doc_id, text || ' [u1]', source, 1, FALSE FROM documents WHERE doc_id % 3 = 0
-  UNION ALL
-  SELECT doc_id, text, source, 2, TRUE FROM documents WHERE doc_id % 10 = 0
-  UNION ALL
-  SELECT -(doc_id + 1), 'new ' || text, source, 1, FALSE
-  FROM documents WHERE doc_id % 50 = 0
-), ranked AS (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY version DESC) AS rn
-  FROM all_rows
-)
-SELECT doc_id, text, source FROM ranked WHERE rn = 1 AND NOT is_delete
-"""
-
-
 def q_scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension merge (operators/merge.py): seed a history table
     from ``customer`` (every row open since 2024-01-01), then merge a
@@ -795,7 +301,7 @@ def q_scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("c_custkey") % 7 == 0) & (F.col("c_custkey") % 5 != 0)
     ).select("c_custkey", "c_mktsegment")
     # Brand-new keys in the negative key space — disjoint from real
-    # custkeys at any scale/replica factor (see changelog_compaction).
+    # custkeys at any scale/replica factor.
     fresh = cust.filter(F.col("c_custkey") % 97 == 0).select(
         (-(F.col("c_custkey") + 1)).alias("c_custkey"),
         F.lit("NEWSEG").alias("c_mktsegment"),
@@ -1891,49 +1397,7 @@ FROM sh
 # ---------------------------------------------------------------------------
 
 # --------------------------------------------------------------------------
-# Round-8 third batch: weighted sampling, k-anonymity, M4 downsampling.
-
-
-def q_documents_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-weighted corpus sampling: 20 documents per language,
-    selection probability rising with ``n_chars`` — the integer-lattice
-    Efraimidis–Spirakis variant (``sampling.py:weighted_hash_sample``,
-    score = hash_u31(doc_id) DIV weight, n smallest win). The engine
-    runs the scalable threshold plan (weight-sum aggregate → broadcast
-    threshold → rank the ~16n survivors); the oracle replays the naive
-    full window — hash equality proves the threshold plan selects the
-    exact same rows."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        weighted_hash_sample,
-    )
-
-    docs = spread(load_table(spark, sf_dir, "documents"))
-    return weighted_hash_sample(
-        docs, key="doc_id", weight_col="n_chars", strata_col="lang", n=20
-    ).select("lang", "doc_id", "source", "n_chars")
-
-
-def _sql_documents_weighted_sample() -> str:
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-        hash_u31_sql,
-    )
-
-    u = hash_u31_sql("doc_id")
-    return f"""
-WITH scored AS (
-  SELECT lang, doc_id, source, n_chars,
-         {u} // GREATEST(CAST(1 AS BIGINT), CAST(n_chars AS BIGINT)) AS s
-  FROM documents
-), ranked AS (
-  SELECT lang, doc_id, source, n_chars,
-         ROW_NUMBER() OVER (PARTITION BY lang ORDER BY s, doc_id) AS rn
-  FROM scored
-)
-SELECT lang, doc_id, source, n_chars FROM ranked WHERE rn <= 20
-"""
-
-
-SQL_DOCUMENTS_WEIGHTED_SAMPLE = _sql_documents_weighted_sample()
+# Round-8 third batch: k-anonymity, M4 downsampling.
 
 
 def q_events_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2024,8 +1488,7 @@ FROM w GROUP BY 1, 2
 
 
 # --------------------------------------------------------------------------
-# Round-8 fourth batch: autocorrelation, Benford screening, winsorization,
-# embedding outlier audit.
+# Round-8 fourth batch: autocorrelation, Benford screening, winsorization.
 
 
 def q_events_hourly_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2168,53 +1631,6 @@ SELECT o_orderpriority, CAST(COUNT(*) AS BIGINT) AS n,
        CAST(SUM(LEAST(GREATEST(vm, lo), hi)) // COUNT(*) AS BIGINT)
          AS wins_mean_micros
 FROM fact GROUP BY 1
-"""
-
-
-def q_embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Label-conditioned embedding outlier screen
-    (``clustering.py:label_centroid_audit``): vectors whose squared
-    distance to their own label centroid exceeds 1.05x the label mean
-    — the mislabeled-example sweep. Centroids and means broadcast;
-    no windows. Hash-oracled (component-mean centroids rounded to 6
-    decimals, d2 on the micros lattice)."""
-    from prioritizing_event_processing_with_apache_kafka_spark.operators.clustering import (
-        label_centroid_audit,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return label_centroid_audit(emb, ratio_threshold_ppm=1_050_000)
-
-
-_SQL_OUT_D2 = (
-    "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-    "list_transform(generate_series(1, len({a})), "
-    "i -> ({a}[i]::DOUBLE - {b}[i]::DOUBLE) * ({a}[i]::DOUBLE - {b}[i]::DOUBLE))), "
-    "(acc, x) -> acc + x)"
-)
-SQL_EMBEDDING_OUTLIER_AUDIT = f"""
-WITH cents AS (
-  SELECT label, list(c ORDER BY pos) AS cvec FROM (
-    SELECT label, g.i - 1 AS pos, ROUND(AVG(embedding[g.i]::DOUBLE), 6) AS c
-    FROM embeddings CROSS JOIN generate_series(1, 64) AS g(i)
-    WHERE g.i <= len(embedding)
-    GROUP BY 1, 2
-  ) GROUP BY label
-), scored AS (
-  SELECT e.label, e.vec_id,
-         CAST(FLOOR(ROUND({_SQL_OUT_D2.format(a='e.embedding', b='c.cvec')}, 6)
-                    * 1000000.0 + 0.5) AS BIGINT) AS d2_micros
-  FROM embeddings e JOIN cents c USING (label)
-), means AS (
-  SELECT label, CAST(SUM(d2_micros) // COUNT(*) AS BIGINT) AS mean_d2_micros
-  FROM scored GROUP BY 1
-)
-SELECT s.label, s.vec_id, s.d2_micros, m.mean_d2_micros,
-       CAST(CASE WHEN m.mean_d2_micros > 0
-                 THEN s.d2_micros * 1000000 // m.mean_d2_micros END
-            AS BIGINT) AS ratio_ppm
-FROM scored s JOIN means m USING (label)
-WHERE s.d2_micros * 1000000 // m.mean_d2_micros >= 1050000
 """
 
 
@@ -2853,147 +2269,7 @@ FROM base b JOIN p95 p USING (l_suppkey)
 
 
 # --------------------------------------------------------------------------
-# Round-8 ninth batch: conformance censuses (functional dependency, char
-# classes, cross-table status reconciliation).
-
-
-def q_source_lang_fd(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Functional-dependency conformance census for ``source → lang``
-    — the profiling question "does each feed speak one language?"
-    asked the scalable way: one (source, lang) aggregate (map-side
-    combined, the only row-scaled exchange), then per source the
-    distinct-lang count, the majority language (max-by on a struct,
-    ties to the lexicographically first), its share in ppm, and the
-    violation count (docs outside the majority). A source with
-    n_langs > 1 breaks the FD; the census quantifies by how much.
-    Hash-oracled."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = docs.groupBy("source", "lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
-    # majority = min_by over (-count, lang): max count, count ties to
-    # the lexicographically FIRST lang — identical ordering on both
-    # engines with no string-negation tricks.
-    return (
-        pairs.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_langs"),
-            F.sum("__n").cast("bigint").alias("n_docs"),
-            F.min_by(
-                F.col("lang"),
-                F.struct((-F.col("__n")).alias("a"), F.col("lang").alias("b")),
-            ).alias("majority_lang"),
-            F.max("__n").cast("bigint").alias("__mx"),
-        )
-        .select(
-            "source",
-            "n_langs",
-            "n_docs",
-            "majority_lang",
-            F.expr("__mx * 1000000 DIV n_docs").cast("bigint").alias(
-                "majority_ppm"
-            ),
-            (F.col("n_docs") - F.col("__mx")).cast("bigint").alias(
-                "violations"
-            ),
-        )
-    )
-
-
-SQL_SOURCE_LANG_FD = """
-WITH pairs AS (
-  SELECT source, lang, CAST(COUNT(*) AS BIGINT) AS n,
-         ROW_NUMBER() OVER (PARTITION BY source
-                            ORDER BY n DESC, lang) AS rn
-  FROM documents GROUP BY 1, 2
-)
-SELECT source,
-       CAST(COUNT(*) AS BIGINT) AS n_langs,
-       CAST(SUM(n) AS BIGINT) AS n_docs,
-       MAX(CASE WHEN rn = 1 THEN lang END) AS majority_lang,
-       CAST(MAX(n) * 1000000 // SUM(n) AS BIGINT) AS majority_ppm,
-       CAST(SUM(n) - MAX(n) AS BIGINT) AS violations
-FROM pairs GROUP BY 1
-"""
-
-
-def q_lang_charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-language character-class profile: letters / digits / spaces
-    / other, in exact ppm of total characters — the encoding-anomaly
-    and script-mix screen (a lang whose 'other' share jumps has a
-    mojibake or injection problem). One pass: per-doc class counts via
-    ``regexp_count`` equivalents (length arithmetic — no UDF), folded
-    in a single lang-keyed aggregate. Hash-oracled."""
-    docs = load_table(spark, sf_dir, "documents")
-    t = F.col("text")
-    total = F.length(t)
-    # translate() (per-char table lookup) instead of regexp_replace:
-    # identical semantics on both engines, ~an order of magnitude
-    # cheaper on a full-text scan (this op necessarily reads every
-    # character — the constant factor IS the scale story).
-    letters_alpha = "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ"
-    letters = total - F.length(F.translate(t, letters_alpha, ""))
-    digits = total - F.length(F.translate(t, "0123456789", ""))
-    spaces = total - F.length(F.translate(t, " ", ""))
-    per = docs.select(
-        "lang",
-        total.cast("long").alias("__t"),
-        letters.cast("long").alias("__l"),
-        digits.cast("long").alias("__d"),
-        spaces.cast("long").alias("__s"),
-    )
-    return (
-        per.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
-            F.sum("__t").cast("bigint").alias("n_chars"),
-            F.sum("__l").alias("__sl"),
-            F.sum("__d").alias("__sd"),
-            F.sum("__s").alias("__ss"),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_chars",
-            F.expr("__sl * 1000000 DIV n_chars").cast("bigint").alias(
-                "letter_ppm"
-            ),
-            F.expr("__sd * 1000000 DIV n_chars").cast("bigint").alias(
-                "digit_ppm"
-            ),
-            F.expr("__ss * 1000000 DIV n_chars").cast("bigint").alias(
-                "space_ppm"
-            ),
-            F.expr(
-                "(n_chars - __sl - __sd - __ss) * 1000000 DIV n_chars"
-            )
-            .cast("bigint")
-            .alias("other_ppm"),
-        )
-    )
-
-
-SQL_LANG_CHARCLASS_PROFILE = """
-WITH per AS (
-  SELECT lang, CAST(length(text) AS BIGINT) AS t,
-         CAST(length(text) - length(translate(text,
-           'abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ', ''))
-           AS BIGINT) AS l,
-         CAST(length(text) - length(translate(text, '0123456789', ''))
-           AS BIGINT) AS d,
-         CAST(length(text) - length(translate(text, ' ', ''))
-           AS BIGINT) AS s
-  FROM documents
-)
-SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       CAST(SUM(t) AS BIGINT) AS n_chars,
-       CAST(SUM(l) * 1000000 // SUM(t) AS BIGINT) AS letter_ppm,
-       CAST(SUM(d) * 1000000 // SUM(t) AS BIGINT) AS digit_ppm,
-       CAST(SUM(s) * 1000000 // SUM(t) AS BIGINT) AS space_ppm,
-       CAST((SUM(t) - SUM(l) - SUM(d) - SUM(s)) * 1000000 // SUM(t) AS BIGINT)
-         AS other_ppm
-FROM per GROUP BY 1
-"""
+# Round-8 ninth batch: cross-table status reconciliation.
 
 
 def q_order_status_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3052,8 +2328,7 @@ FROM joined GROUP BY 1, 2
 
 
 # --------------------------------------------------------------------------
-# Round-8 tenth batch: forecast backtest, churn census, embedding quantile
-# normalization audit.
+# Round-8 tenth batch: forecast backtest, churn census.
 
 
 def q_events_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3187,77 +2462,6 @@ SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_users,
        CAST(CASE WHEN SUM(e) > 0 THEN
               SUM(e * (1 - l)) * 1000000 // SUM(e) END AS BIGINT) AS churn_ppm
 FROM flags GROUP BY 1
-"""
-
-
-def q_embedding_quantile_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension quantile (rank) normalization audit — the feature
-    preprocessing that forces every embedding dimension onto the same
-    uniform scale: each value maps to ``rank·10⁶ DIV n`` (average rank
-    for ties, i.e. the mid-CDF), and the audit reports per dimension
-    the distinct-value count plus the min/max/mean of the normalized
-    column in ppm. A uniformizing transform has mean ≈ 500 000 by
-    construction — a dimension whose normalized mean drifts has heavy
-    ties (collapsed resolution). One posexplode pass into a
-    (dim, value) histogram — everything after is histogram-sized.
-    Hash-oracled."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    vals = emb.select(
-        F.posexplode("embedding").alias("dim", "__v")
-    ).select("dim", F.col("__v").cast("double").alias("__v"))
-    hist = vals.groupBy("dim", "__v").agg(
-        F.count(F.lit(1)).cast("bigint").alias("__c")
-    )
-    w = (
-        Window.partitionBy("dim")
-        .orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wd = Window.partitionBy("dim")
-    cdf = (
-        hist.withColumn("__cum", F.sum("__c").over(w))
-        .withColumn("__n", F.sum("__c").over(wd))
-        # mid-CDF rank ppm x2 to stay integral: (2*cum - c) / (2n)
-        .withColumn(
-            "__norm_ppm",
-            F.expr("(2 * __cum - __c) * 1000000 DIV (2 * __n)"),
-        )
-    )
-    return cdf.groupBy("dim").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct"),
-        F.max("__n").cast("bigint").alias("n_values"),
-        F.min("__norm_ppm").cast("bigint").alias("min_norm_ppm"),
-        F.max("__norm_ppm").cast("bigint").alias("max_norm_ppm"),
-        F.expr("sum(__norm_ppm * __c) DIV max(__n)")
-        .cast("bigint")
-        .alias("mean_norm_ppm"),
-    )
-
-
-SQL_EMBEDDING_QUANTILE_NORM = """
-WITH vals AS (
-  SELECT g.i - 1 AS dim, embedding[g.i]::DOUBLE AS v
-  FROM embeddings CROSS JOIN generate_series(1, 64) AS g(i)
-  WHERE g.i <= len(embedding)
-), hist AS (
-  SELECT dim, v, CAST(COUNT(*) AS BIGINT) AS c FROM vals GROUP BY 1, 2
-), cdf AS (
-  SELECT dim, c,
-         SUM(c) OVER (PARTITION BY dim ORDER BY v
-                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-         SUM(c) OVER (PARTITION BY dim) AS n
-  FROM hist
-), normed AS (
-  SELECT dim, c, n, (2 * cum - c) * 1000000 // (2 * n) AS norm_ppm
-  FROM cdf
-)
-SELECT CAST(dim AS INTEGER) AS dim,
-       CAST(COUNT(*) AS BIGINT) AS n_distinct,
-       CAST(MAX(n) AS BIGINT) AS n_values,
-       CAST(MIN(norm_ppm) AS BIGINT) AS min_norm_ppm,
-       CAST(MAX(norm_ppm) AS BIGINT) AS max_norm_ppm,
-       CAST(SUM(norm_ppm * c) // MAX(n) AS BIGINT) AS mean_norm_ppm
-FROM normed GROUP BY 1
 """
 
 
@@ -4326,143 +3530,6 @@ def q_stream_abc_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q_vocab_rank_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf rank-frequency census over the corpus vocabulary: term
-    occurrence counts ranked descending (ties by token), bucketed into
-    power-of-two rank bins ``floor(log2(rank))`` computed EXACTLY as
-    ``length(bin(rank)) - 1`` (a float log2 rounds 2³ down at the
-    boundary on some engines), each bin reporting its term count,
-    occurrence mass, and cumulative coverage ppm — the "how many terms
-    cover 90% of tokens" readout a tokenizer budget is sized from.
-    The vocabulary is corpus-scaled, so the global rank comes from the
-    distributed ordered scan, and everything after it is bin-sized
-    (≤ log₂|V| rows). Hash-oracled."""
-    docs = load_table(spark, sf_dir, "documents")
-    terms = (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__occ"))
-    )
-    return _vocab_census(terms)
-
-
-def _vocab_census(terms: DataFrame) -> DataFrame:
-    """Zipf rank-bin readout of a per-token ``(token, __occ)`` frame —
-    shared by the batch ``vocab_rank_census`` and its streaming rollup
-    twin, which is what lets the twin share the batch hash oracle."""
-    scanned = global_ordered_scan(
-        terms,
-        [F.col("__occ").desc(), F.col("token").asc()],
-        "__occ",
-        rank_col="__rank",
-        cum_col="__cum",
-        total_col="__tot",
-    )
-    return (
-        scanned.withColumn(
-            "rank_bin",
-            (F.length(F.bin(F.col("__rank"))) - F.lit(1)).cast("int"),
-        )
-        .groupBy("rank_bin")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_terms"),
-            F.sum("__occ").cast("bigint").alias("occurrences"),
-            F.expr(
-                "CAST(max(__cum) * 1000000 DIV max(__tot) AS BIGINT)"
-            ).alias("cum_coverage_ppm"),
-        )
-    )
-
-
-def q_stream_vocab_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming Zipf vocabulary census (r10) — the incremental twin
-    of ``vocab_rank_census``, extending the rollup-store family
-    (RFM/ABC/Lorenz) to a TEXT census whose key space is the
-    corpus-scaled VOCABULARY: a real two-batch availableNow file
-    stream over the documents table (split by ``doc_id % 2`` — the
-    merges are commutative, so ANY batch boundary yields the same
-    state) explodes each batch into tokens and maintains one mergeable
-    occurrence-count row per token (``streaming/rollup.py``); the
-    final state feeds the SAME rank-bin readout (``_vocab_census``,
-    i.e. the distributed global ordered scan), so this query SHARES
-    the batch hash oracle. State is vocabulary-sized — exactly the
-    footprint an incremental tokenizer-budget monitor needs — and no
-    window appears anywhere."""
-    import os
-    import shutil
-    import tempfile
-
-    from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
-        rollup_apply_batch,
-        rollup_state_result,
-    )
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    root = tempfile.mkdtemp(prefix="peps-vocab-stream-")
-    state_path = os.path.join(root, "state")
-    chk = os.path.join(root, "chk")
-    try:
-        src_dir, schema = _stage_two_batch_stream(
-            root,
-            [
-                docs.filter(F.col("doc_id") % 2 == 0),
-                docs.filter(F.col("doc_id") % 2 == 1),
-            ],
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src_dir)
-        )
-
-        def apply(batch, batch_id):
-            tokens = batch.select(
-                F.explode(F.split(F.col("text"), " ")).alias("token")
-            )
-            rollup_apply_batch(
-                tokens,
-                state_path=state_path,
-                key_col="token",
-                specs=[("__occ", "count", "1")],
-                batch_id=batch_id,
-            )
-
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", chk)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _vocab_census(
-            rollup_state_result(spark, state_path)
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-SQL_VOCAB_RANK_CENSUS = """
-WITH terms AS (
-  SELECT token, CAST(COUNT(*) AS BIGINT) AS occ
-  FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-  GROUP BY 1
-), ranked AS (
-  SELECT occ,
-         ROW_NUMBER() OVER (ORDER BY occ DESC, token) AS r,
-         SUM(occ) OVER (ORDER BY occ DESC, token
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-           AS cum,
-         SUM(occ) OVER () AS tot
-  FROM terms
-)
-SELECT CAST(LENGTH(bin(r)) - 1 AS INTEGER) AS rank_bin,
-       CAST(COUNT(*) AS BIGINT) AS n_terms,
-       CAST(SUM(occ) AS BIGINT) AS occurrences,
-       CAST(MAX(cum) * 1000000 // MAX(tot) AS BIGINT) AS cum_coverage_ppm
-FROM ranked GROUP BY 1
-"""
-
-
 def q_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min-Sketch frequency estimates for the exact top-20 users
     (``operators/sketches.py:cms_topk_audit``) — the mergeable
@@ -4928,42 +3995,30 @@ FROM cells
 
 
 PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "term_doc_frequency": q_term_doc_frequency,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "embedding_label_centroids": q_embedding_label_centroids,
-    "embedding_kmeans": q_embedding_kmeans,
-    "kmeans_pruned_agreement": q_kmeans_pruned_agreement,
     "user_value_pareto": q_user_value_pareto,
     "customer_lorenz_deciles": q_customer_lorenz_deciles,
     "orders_pit_fx_enrich": q_orders_pit_fx_enrich,
     "stream_rfm_incremental": q_stream_rfm_incremental,
     "stream_abc_incremental": q_stream_abc_incremental,
-    "vocab_rank_census": q_vocab_rank_census,
     "heavy_hitters_cms": q_heavy_hitters_cms,
     "stream_heavy_hitters": q_stream_heavy_hitters,
     "stream_lorenz_incremental": q_stream_lorenz_incremental,
-    "stream_vocab_incremental": q_stream_vocab_incremental,
     "customer_active_islands": q_customer_active_islands,
     "part_supplier_degree": q_part_supplier_degree,
     "lineitem_bloom_prefilter": q_lineitem_bloom_prefilter,
     "cohort_ltv_curve": q_cohort_ltv_curve,
-    "documents_weighted_sample": q_documents_weighted_sample,
     "events_k_anonymity": q_events_k_anonymity,
     "events_m4_downsample": q_events_m4_downsample,
     "events_hourly_acf": q_events_hourly_acf,
     "lineitem_benford": q_lineitem_benford,
     "orders_winsorized": q_orders_winsorized,
-    "embedding_outlier_audit": q_embedding_outlier_audit,
     "events_decile_drift": q_events_decile_drift,
     "erasure_cascade": q_erasure_cascade,
     "customer_rfm": q_customer_rfm,
     "supplier_ship_sla": q_supplier_ship_sla,
-    "source_lang_fd": q_source_lang_fd,
-    "lang_charclass_profile": q_lang_charclass_profile,
     "order_status_reconciliation": q_order_status_reconciliation,
     "events_seasonal_backtest": q_events_seasonal_backtest,
     "user_churn_census": q_user_churn_census,
-    "embedding_quantile_norm": q_embedding_quantile_norm,
     "part_abc_analysis": q_part_abc_analysis,
     "join_skew_diagnosis": q_join_skew_diagnosis,
     "orders_dup_screen": q_orders_dup_screen,
@@ -4977,17 +4032,12 @@ PIPELINE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "rolling_active_users_hll": q_rolling_active_users_hll,
     "events_ab_test": q_events_ab_test,
     "stratified_sample": q_stratified_sample,
-    "mixture_sample": q_mixture_sample,
     "reservoir_sample": q_reservoir_sample,
-    "dataset_split": q_dataset_split,
-    "doc_packing": q_doc_packing,
     "table_profile": q_table_profile,
     "user_value_ewma": q_user_value_ewma,
     "bucket_hourly_anomaly": q_bucket_hourly_anomaly,
-    "source_dup_profile": q_source_dup_profile,
     "salted_segment_revenue": q_salted_segment_revenue,
     # Appended round 5 (keep ordering of earlier entries stable).
-    "changelog_compaction": q_changelog_compaction,
     "scd2_customer_segments": q_scd2_customer_segments,
     "events_tier_at_time": q_events_tier_at_time,
     "scd2_stream_history": q_scd2_stream_history,
@@ -5016,17 +4066,11 @@ PIPELINE_ORACLES: dict[str, str] = {
     "user_value_pareto": SQL_USER_VALUE_PARETO,
     "customer_lorenz_deciles": SQL_CUSTOMER_LORENZ_DECILES,
     "orders_pit_fx_enrich": SQL_ORDERS_PIT_FX_ENRICH,
-    "embedding_kmeans": SQL_EMBEDDING_KMEANS,
-    "term_doc_frequency": SQL_TERM_DOC_FREQUENCY,
-    "tfidf_top_terms": SQL_TFIDF_TOP_TERMS,
-    "embedding_label_centroids": SQL_EMBEDDING_LABEL_CENTROIDS,
-    "documents_weighted_sample": SQL_DOCUMENTS_WEIGHTED_SAMPLE,
     "events_k_anonymity": SQL_EVENTS_K_ANONYMITY,
     "events_m4_downsample": SQL_EVENTS_M4_DOWNSAMPLE,
     "events_hourly_acf": SQL_EVENTS_HOURLY_ACF,
     "lineitem_benford": SQL_LINEITEM_BENFORD,
     "orders_winsorized": SQL_ORDERS_WINSORIZED,
-    "embedding_outlier_audit": SQL_EMBEDDING_OUTLIER_AUDIT,
     "events_decile_drift": SQL_EVENTS_DECILE_DRIFT,
     "erasure_cascade": SQL_ERASURE_CASCADE,
     "customer_rfm": SQL_CUSTOMER_RFM,
@@ -5035,24 +4079,19 @@ PIPELINE_ORACLES: dict[str, str] = {
     "stream_rfm_incremental": SQL_CUSTOMER_RFM,
     # streaming ABC twin shares the batch oracle, same contract
     "stream_abc_incremental": SQL_PART_ABC_ANALYSIS,
-    "vocab_rank_census": SQL_VOCAB_RANK_CENSUS,
     "heavy_hitters_cms": SQL_HEAVY_HITTERS_CMS,
     # streaming twins SHARE their batch oracles (commutative merges +
     # exact-verify / shared readout => bit-identical final frames)
     "stream_heavy_hitters": SQL_HEAVY_HITTER_USERS,
     "stream_lorenz_incremental": SQL_CUSTOMER_LORENZ_DECILES,
-    "stream_vocab_incremental": SQL_VOCAB_RANK_CENSUS,
     "customer_active_islands": SQL_CUSTOMER_ACTIVE_ISLANDS,
     "part_supplier_degree": SQL_PART_SUPPLIER_DEGREE,
     "lineitem_bloom_prefilter": SQL_LINEITEM_BLOOM_PREFILTER,
     "cohort_ltv_curve": SQL_COHORT_LTV_CURVE,
     "supplier_ship_sla": SQL_SUPPLIER_SHIP_SLA,
-    "source_lang_fd": SQL_SOURCE_LANG_FD,
-    "lang_charclass_profile": SQL_LANG_CHARCLASS_PROFILE,
     "order_status_reconciliation": SQL_ORDER_STATUS_RECONCILIATION,
     "events_seasonal_backtest": SQL_EVENTS_SEASONAL_BACKTEST,
     "user_churn_census": SQL_USER_CHURN_CENSUS,
-    "embedding_quantile_norm": SQL_EMBEDDING_QUANTILE_NORM,
     "part_abc_analysis": SQL_PART_ABC_ANALYSIS,
     "join_skew_diagnosis": SQL_JOIN_SKEW_DIAGNOSIS,
     "orders_dup_screen": SQL_ORDERS_DUP_SCREEN,
@@ -5068,16 +4107,11 @@ PIPELINE_ORACLES: dict[str, str] = {
     # computed in the same plan.
     "events_ab_test": SQL_EVENTS_AB_TEST,
     "stratified_sample": SQL_STRATIFIED_SAMPLE,
-    "mixture_sample": SQL_MIXTURE_SAMPLE,
     "reservoir_sample": SQL_RESERVOIR_SAMPLE,
-    "dataset_split": SQL_DATASET_SPLIT,
-    "doc_packing": SQL_DOC_PACKING,
     "table_profile": SQL_TABLE_PROFILE,
     "user_value_ewma": SQL_USER_VALUE_EWMA,
     "bucket_hourly_anomaly": SQL_BUCKET_HOURLY_ANOMALY,
-    "source_dup_profile": SQL_SOURCE_DUP_PROFILE,
     "salted_segment_revenue": SQL_SALTED_SEGMENT_REVENUE,
-    "changelog_compaction": SQL_CHANGELOG_COMPACTION,
     "scd2_customer_segments": SQL_SCD2_CUSTOMER_SEGMENTS,
     "events_tier_at_time": SQL_EVENTS_TIER_AT_TIME,
     "scd2_stream_history": SQL_SCD2_STREAM_HISTORY,

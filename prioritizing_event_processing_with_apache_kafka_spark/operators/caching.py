@@ -1,12 +1,12 @@
 """Scoped persist tracking — deterministic unpersist for operator caches.
 
 Operators ``persist()`` a subtree when one query plan reads it from
-2-3 places (the exact router's sorted midframe, k-means centroids,
-sketch histograms); without the cache the work re-runs per reference.
-The frames are bounded and LRU-evictable, but a *long-lived* session
-(a service routing thousands of batches) shouldn't depend on LRU
-roulette — it wants each query's caches dropped the moment the query's
-action finishes.
+2-3 places (the exact router's sorted midframe, sketch histograms);
+without the cache the work re-runs per reference. The frames are
+bounded and LRU-evictable, but a *long-lived* session (a service
+routing thousands of batches) shouldn't depend on LRU roulette — it
+wants each query's caches dropped the moment the query's action
+finishes.
 
 :func:`cache_scope` gives callers that guarantee without changing the
 operators' laziness contract:

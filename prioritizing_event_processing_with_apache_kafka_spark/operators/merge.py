@@ -1,35 +1,28 @@
-"""Upsert / merge operators: changelog compaction and SCD2 history.
+"""Upsert / merge operators: SCD2 history.
 
-Training corpora and the dimension tables around them are not static:
-crawls re-deliver documents, labels get corrected, customer/catalog
-dimensions drift. Lakehouse tables handle this with MERGE INTO; this
-module expresses the same two canonical merge shapes as pure
-DataFrame plans, so they run on any Spark without a table format:
+Customer and catalog dimensions drift. Lakehouse tables handle this
+with MERGE INTO; this module expresses the same merge as a pure
+DataFrame plan, so it runs on any Spark without a table format:
 
-- ``changelog_latest_snapshot`` — latest-wins compaction of a base
-  snapshot plus a stream of keyed upserts/deletes (the read path of
-  every merge-on-read table format).
 - ``scd2_merge`` — slowly-changing-dimension type 2: merge an update
   batch into a history table, closing changed rows (``valid_to``)
   and opening new current rows, no-op'ing identical ones.
+- ``scd2_point_in_time`` — the history's as-of read.
 
 Scale notes (100 TB):
 
-- Both operators are a single equi-shuffle on the key. Compaction is
-  one ``groupBy(key).agg(max_by(...))`` — map-side combinable, no
-  window sort, so a 1000-executor run shuffles one combined row per
-  key per map task, not the raw changelog.
+- The merge is a single equi-shuffle on the key.
 - SCD2's join touches only the OPEN slice of the history (closed
   rows pass through untouched), and the update batch is typically
   tiny relative to the dimension — pass ``broadcast_updates=True``
   to pin the broadcast-hash plan and skip shuffling the dimension.
-- With the history/base bucketed by key at write time (Spark's
+- With the history bucketed by key at write time (Spark's
   ``DataFrameWriter.bucketBy``), the remaining shuffle disappears and
   the merge is a map-side join per bucket.
 
 The reference system (a Kafka partitioner/assignor,
 BucketPriorityPartitioner.java) has no table maintenance surface;
-these are engine additions for the training-data-pipeline mandate.
+these are engine additions.
 """
 
 from __future__ import annotations
@@ -40,52 +33,7 @@ import operator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["changelog_latest_snapshot", "scd2_merge", "scd2_point_in_time"]
-
-
-def changelog_latest_snapshot(
-    base: DataFrame,
-    changes: DataFrame,
-    *,
-    key_cols: list[str],
-    version_col: str,
-    delete_col: str | None = None,
-    base_version: int = 0,
-) -> DataFrame:
-    """Latest-wins snapshot of ``base`` + ``changes``.
-
-    ``base`` is a snapshot (implicitly at ``base_version``);
-    ``changes`` carries ``version_col`` (higher wins per key) and
-    optionally a boolean ``delete_col`` tombstone. Returns the
-    compacted snapshot with ``base``'s columns: per key, the payload
-    of the highest version, with tombstoned keys dropped.
-
-    One shuffle: ``max_by`` over a struct is map-side combinable, so
-    each map task contributes one candidate row per key — the classic
-    window ``row_number() = 1`` plan would instead sort every version
-    of every key inside the shuffle. Ties on ``version_col`` are
-    broken arbitrarily; feed unique versions (e.g. a changelog
-    offset) per key.
-    """
-    payload_cols = [c for c in base.columns if c not in key_cols]
-    b = base.withColumn("__v", F.lit(base_version).cast("long")).withColumn(
-        "__del", F.lit(False)
-    )
-    if delete_col is None:
-        c = changes.withColumn("__del", F.lit(False))
-    else:
-        c = changes.withColumnRenamed(delete_col, "__del")
-    c = c.withColumn("__v", F.col(version_col).cast("long")).drop(version_col)
-    unioned = b.select(
-        *key_cols, "__v", "__del", *payload_cols
-    ).unionByName(c.select(*key_cols, "__v", "__del", *payload_cols))
-    packed = F.struct("__del", *payload_cols)
-    latest = unioned.groupBy(*key_cols).agg(
-        F.max_by(packed, F.col("__v")).alias("__p")
-    )
-    return latest.filter(~F.col("__p.__del")).select(
-        *key_cols, *[F.col(f"__p.{c}").alias(c) for c in payload_cols]
-    )
+__all__ = ["scd2_merge", "scd2_point_in_time"]
 
 
 def scd2_merge(
@@ -116,7 +64,7 @@ def scd2_merge(
     Open rows with no update, and all already-closed rows, pass
     through untouched. If ``updates`` may carry several rows per key,
     it is first collapsed to the latest by ``effective_col``
-    (latest-wins, same contract as ``changelog_latest_snapshot``).
+    (latest-wins).
 
     The plan joins only the OPEN slice of history against the batch —
     closed history is unioned back without touching the join. The

@@ -34,8 +34,6 @@ __all__ = [
     "hash_sample",
     "stratified_hash_sample",
     "reservoir_hash_sample",
-    "weighted_hash_sample",
-    "mixture_sample",
     "profile",
     "pairwise_pearson",
 ]
@@ -64,7 +62,7 @@ def hash_u31(key: str | Column, *, salt: int = 0) -> Column:
     """Deterministic uniform integer in [0, 2³¹) from an integer key
     column — the pre-division state of :func:`hash_coin`, exposed for
     operators that need an INTEGER lattice (cross-engine bit-exact
-    with no float in sight, e.g. :func:`weighted_hash_sample`).
+    with no float in sight).
 
     The key is first reduced with ``pmod`` (a plain ``%`` keeps the
     dividend's sign, so negative keys would yield negative coins that
@@ -78,16 +76,6 @@ def hash_u31(key: str | Column, *, salt: int = 0) -> Column:
         x = x.bitwiseXOR(F.lit(_salt_mix(salt)))
     x = (x * F.lit(_A) + F.lit(_C)) % F.lit(_M)
     x = (x * F.lit(_A) + F.lit(_C)) % F.lit(_M)
-    return x
-
-
-def hash_u31_sql(key_expr: str, *, salt: int = 0) -> str:
-    """The DuckDB/ANSI replay of :func:`hash_u31` (same bits)."""
-    x = f"(((CAST({key_expr} AS BIGINT) % {_M}) + {_M}) % {_M})"
-    if salt:
-        x = f"xor({x}, {_salt_mix(salt)})"
-    x = f"(({x} * {_A} + {_C}) % {_M})"
-    x = f"(({x} * {_A} + {_C}) % {_M})"
     return x
 
 
@@ -185,128 +173,6 @@ def reservoir_hash_sample(
         survivors.withColumn("__rs_rank", rank)
         .filter(F.col("__rs_rank") <= n)
         .drop("__rs_coin", "__rs_t", "__rs_rank")
-    )
-
-
-def weighted_hash_sample(
-    df: DataFrame,
-    *,
-    key: str,
-    weight_col: str,
-    strata_col: str,
-    n: int,
-    salt: int = 0,
-    oversample: float = 16.0,
-) -> DataFrame:
-    """``n`` rows per stratum sampled WITHOUT replacement with
-    probability increasing in ``weight_col`` — the integer-lattice
-    analog of Efraimidis–Spirakis A-ES weighted reservoir sampling,
-    deterministic and engine-replayable.
-
-    A-ES ranks rows by ``u^(1/w)`` (u uniform); floats there are not
-    bit-reproducible across engines, so this discretizes: each row
-    scores ``hash_u31(key) DIV w`` (``w = max(1, weight)``, pure
-    BIGINT arithmetic) and the n SMALLEST scores per stratum win.
-    ``P(score ≤ t) = min(1, (t+1)·w/2³¹)`` — selection probability
-    rises with weight exactly as A-ES intends, and the winner set is a
-    pure function of the keys: same rows on any engine, partitioning,
-    or run. Ties break on ``(score, key)``.
-
-    Scale shape mirrors :func:`reservoir_hash_sample`: a per-stratum
-    WEIGHT-SUM aggregate (map-side combined) derives the score
-    threshold ``t* = ceil(oversample·n·2³¹ / ΣW)`` whose expected
-    survivor count is ``oversample·n`` (rows with ``(t*+1)·w ≥ 2³¹``
-    survive with probability 1, which only helps); the fact scan keeps
-    only survivors (broadcast-joined threshold, no fact shuffle), and
-    the exact ``row_number`` rank runs on that small set. The result
-    equals the true n-smallest-scores sample unless the stratum's n-th
-    order statistic exceeds t* — a Chernoff tail below 1e-40 at the
-    default ``oversample=16``.
-    """
-    if n < 1:
-        raise ValueError("n must be >= 1")
-    w = F.greatest(F.lit(1).cast("long"), F.col(weight_col).cast("long"))
-    score = F.floor(hash_u31(key, salt=salt).cast("double") / w).cast("long")
-    wsums = df.groupBy(strata_col).agg(
-        F.sum(w).cast("long").alias("__ws_sum")
-    )
-    thresh = F.ceil(
-        F.lit(float(oversample) * n * _M) / F.col("__ws_sum").cast("double")
-    ).cast("long")
-    survivors = (
-        df.withColumn("__ws_score", score)
-        .join(
-            F.broadcast(wsums.select(strata_col, thresh.alias("__ws_t"))),
-            strata_col,
-        )
-        .filter(F.col("__ws_score") <= F.col("__ws_t"))
-    )
-    from pyspark.sql import Window
-
-    rank = F.row_number().over(
-        Window.partitionBy(strata_col).orderBy(
-            F.col("__ws_score").asc(), F.col(key).asc()
-        )
-    )
-    return (
-        survivors.withColumn("__ws_rank", rank)
-        .filter(F.col("__ws_rank") <= n)
-        .drop("__ws_score", "__ws_t", "__ws_rank")
-    )
-
-
-def mixture_sample(
-    df: DataFrame,
-    *,
-    key: str,
-    strata_col: str,
-    weights: dict[str, float],
-    salt: int = 0,
-) -> DataFrame:
-    """Largest deterministic sample matching a target mixture.
-
-    ``weights`` gives the desired *proportions* between strata (e.g.
-    ``{"web": 4, "books": 2, "code": 1}``); strata not listed are
-    dropped. The limiting stratum — the one with the least data
-    relative to its weight — is kept in full, and every other stratum
-    is hash-coin downsampled to ``scale·w_s / n_s`` where
-    ``scale = min_s(n_s / w_s)``, so expected sizes sit in exactly the
-    requested ratio and no stratum is oversampled (sampling without
-    replacement, no row duplicated).
-
-    Shape: two aggregates over the tiny (stratum, count) frame derive
-    the per-stratum rates, which broadcast back onto the single fact
-    scan as a filter — the same count-derived-threshold pattern as the
-    reservoir, no fact shuffle, reproducible on any engine via the
-    ``hash_coin`` replay.
-    """
-    if not weights:
-        raise ValueError("weights must name at least one stratum")
-    if any(w <= 0 for w in weights.values()):
-        raise ValueError("mixture weights must be positive")
-    w: Column = F.lit(None).cast("double")
-    for value, wt in weights.items():
-        w = F.when(F.col(strata_col) == F.lit(value), F.lit(float(wt))).otherwise(w)
-    counts = (
-        df.groupBy(strata_col)
-        .agg(F.count(F.lit(1)).alias("__mx_cnt"))
-        .withColumn("__mx_w", w)
-        .filter(F.col("__mx_w").isNotNull())
-    )
-    scale = counts.agg(
-        F.min(F.col("__mx_cnt").cast("double") / F.col("__mx_w")).alias("__mx_scale")
-    )
-    rates = counts.join(F.broadcast(scale), how="cross").select(
-        strata_col,
-        (
-            F.col("__mx_scale") * F.col("__mx_w")
-            / F.col("__mx_cnt").cast("double")
-        ).alias("__mx_rate"),
-    )
-    return (
-        df.join(F.broadcast(rates), strata_col)
-        .filter(hash_coin(key, salt=salt) < F.col("__mx_rate"))
-        .drop("__mx_rate")
     )
 
 

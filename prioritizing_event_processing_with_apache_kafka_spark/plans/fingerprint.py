@@ -301,43 +301,6 @@ def streaming_core_queries():
             .filter(F.col("mg_weight") > 0)
         )
 
-    def vocab_rollup_core(spark, sf_dir):
-        # Mirror q_stream_vocab_incremental's steady state: batch 1
-        # (odd doc_ids) exploded to tokens and merged into batch 0's
-        # committed per-token counts — one exploded map-combined
-        # aggregate + one key merge join; the ordered-scan readout is
-        # pinned by vocab_rank_census (shared _vocab_census).
-        from prioritizing_event_processing_with_apache_kafka_spark.streaming.rollup import (
-            _batch_agg,
-            _merge,
-        )
-
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text"
-        )
-        tok = lambda df: df.select(  # noqa: E731
-            F.explode(F.split(F.col("text"), " ")).alias("token")
-        )
-        specs = [("__occ", "count", "1")]
-        out_cols = [out for out, _k, _e in specs]
-        state = (
-            tok(docs.filter(F.col("doc_id") % 2 == 0))
-            .groupBy("token")
-            .agg(*[_batch_agg(k, e, out) for out, k, e in specs])
-            .select(
-                "token",
-                *[F.col(c).alias(f"__old_{c}") for c in out_cols],
-            )
-        )
-        batch_state = (
-            tok(docs.filter(F.col("doc_id") % 2 == 1))
-            .groupBy("token")
-            .agg(*[_batch_agg(k, e, f"__new_{out}") for out, k, e in specs])
-        )
-        return batch_state.join(state, "token", "full_outer").select(
-            "token", *[_merge(k, out) for out, k, _e in specs]
-        )
-
     def _transitions_batch_and_state(spark, sf_dir):
         # Mirror q_stream_transition_counts' steady state: the second
         # micro-batch (post-cutoff events) against the state the first
@@ -437,6 +400,5 @@ def streaming_core_queries():
         "stream_rfm_incremental__core": rfm_rollup_core,
         "stream_lorenz_incremental__core": lorenz_rollup_core,
         "stream_heavy_hitters__core": mg_merge_core,
-        "stream_vocab_incremental__core": vocab_rollup_core,
         "stream_route_lifetime__core": lifetime_route_core,
     }

@@ -1,8 +1,8 @@
 """Fixture-table loaders for the driver's synthetic TPC-H-ish corpus.
 
-Tables (one parquet file per table under ``/root/testdata/sf*/``):
-``region nation customer supplier part orders lineitem events
-documents embeddings`` — see /root/repo/TESTDATA.md.
+Tables (one parquet file per table under each scale-factor directory):
+``region nation customer supplier part orders lineitem events`` — see
+TESTDATA.md.
 
 ``with_routing_key`` applies the corpus rule from /root/repo/FIXTURES.md
 §6: each event gets a routing key ``<bucket>-<event_id>`` with the fixed
@@ -20,7 +20,6 @@ __all__ = [
     "TABLE_NAMES",
     "EVENT_TYPE_BUCKET",
     "load_table",
-    "load_tables",
     "normalize_event_ts",
     "smoke_check_tables",
     "spread",
@@ -36,8 +35,6 @@ TABLE_NAMES = (
     "orders",
     "lineitem",
     "events",
-    "documents",
-    "embeddings",
 )
 
 # FIXTURES.md §6: priority class per event type.
@@ -84,10 +81,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
         return normalize_event_ts(df)
     return spark.read.parquet(f"{sf_dir.rstrip('/')}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
 
 
 def smoke_check_tables(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> list[str]:

@@ -1,6 +1,6 @@
 """Micro-batch staging for the streaming twins' availableNow replays.
 
-Shared by every streaming twin (RFM/ABC/heavy-hitters/Lorenz/vocab,
+Shared by every streaming twin (RFM/ABC/heavy-hitters/Lorenz,
 and ``stream_route_lifetime``, which drives ``lifetime.py``, the
 package's one lifetime-exact router): a list of batch frames becomes
 single-file parquet drops with strictly increasing mtimes, so a

@@ -12,7 +12,6 @@ arbitrary time-respecting splits).
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime
 from fractions import Fraction
 
@@ -59,8 +58,8 @@ def _result(spark, root):
 
 
 class TestStreamingTransitions:
-    def test_boundary_transition_counted_once(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-trans-")
+    def test_boundary_transition_counted_once(self, spark, tmp_path):
+        root = str(tmp_path)
         # user 1: a,b in batch 0; c in batch 1 -> edges a>b, b>c
         _apply(spark, [(1, 1, "a", _t(0)), (2, 1, "b", _t(1))], root, 0)
         _apply(spark, [(3, 1, "c", _t(2))], root, 1)
@@ -69,16 +68,16 @@ class TestStreamingTransitions:
             ("b", "c"): (1, 1_000_000),
         }
 
-    def test_silent_batch_carries_state(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-trans-")
+    def test_silent_batch_carries_state(self, spark, tmp_path):
+        root = str(tmp_path)
         _apply(spark, [(1, 1, "a", _t(0))], root, 0)
         # batch 1 has only user 2 — user 1's last state must survive
         _apply(spark, [(2, 2, "x", _t(1))], root, 1)
         _apply(spark, [(3, 1, "b", _t(2))], root, 2)
         assert _result(spark, root) == {("a", "b"): (1, 1_000_000)}
 
-    def test_replayed_batch_is_exactly_once(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-trans-")
+    def test_replayed_batch_is_exactly_once(self, spark, tmp_path):
+        root = str(tmp_path)
         _apply(spark, [(1, 1, "a", _t(0)), (2, 1, "b", _t(1))], root, 0)
         _apply(spark, [(3, 1, "a", _t(2))], root, 1)
         once = _result(spark, root)
@@ -87,7 +86,7 @@ class TestStreamingTransitions:
         _apply(spark, [(3, 1, "a", _t(2))], root, 1)
         assert _result(spark, root) == once
 
-    def test_null_states_match_batch_operator(self, spark):
+    def test_null_states_match_batch_operator(self, spark, tmp_path):
         from prioritizing_event_processing_with_apache_kafka_spark.operators.sequence import (
             transition_matrix,
         )
@@ -99,7 +98,7 @@ class TestStreamingTransitions:
             (4, 2, "a", _t(3)), (5, 2, None, _t(4)),
         ]
         b1 = [(6, 1, "c", _t(5)), (7, 2, "b", _t(6))]
-        root = tempfile.mkdtemp(prefix="peps-trans-null-")
+        root = str(tmp_path)
         _apply(spark, b0, root, 0)
         _apply(spark, b1, root, 1)
         want = {
@@ -116,7 +115,7 @@ class TestStreamingTransitions:
             ("b", "c"): (1, 1_000_000),
         }
 
-    def test_property_matches_batch_operator_on_any_split(self, spark):
+    def test_property_matches_batch_operator_on_any_split(self, spark, tmp_path_factory):
         from hypothesis import HealthCheck, given, settings
         from hypothesis import strategies as st
 
@@ -143,7 +142,7 @@ class TestStreamingTransitions:
                     rows.append((eid, uid, s, _t(eid)))
                     eid += 1
             cut = min(cut, len(rows))
-            root = tempfile.mkdtemp(prefix="peps-trans-prop-")
+            root = str(tmp_path_factory.mktemp("peps-trans-prop"))
             # a time-respecting split: rows are globally time-ordered,
             # so any prefix/suffix cut respects each key's order; an
             # empty side still runs as a (legal) empty micro-batch

@@ -92,13 +92,14 @@ class TestSmokeGate:
 
     def test_broken_table_yields_one_line_diagnosis(self, spark, tmp_path):
         from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import (
+            TABLE_NAMES,
             smoke_check_tables,
         )
 
         # events present but corrupt; everything else missing.
         (tmp_path / "events.parquet").write_bytes(b"not parquet")
         problems = smoke_check_tables(spark, str(tmp_path))
-        assert len(problems) == 10
+        assert len(problems) == len(TABLE_NAMES)
         ev = [p for p in problems if p.startswith("events:")]
         assert len(ev) == 1 and "\n" not in ev[0]
-        assert sum(1 for p in problems if "missing" in p) == 9
+        assert sum(1 for p in problems if "missing" in p) == len(TABLE_NAMES) - 1

@@ -4,7 +4,6 @@ across batches, and exactly-once under foreachBatch replay."""
 from __future__ import annotations
 
 import os
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -42,8 +41,8 @@ def _apply(spark, batch, root, batch_id):
 
 
 class TestLocf:
-    def test_fill_crosses_batch_boundary(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+    def test_fill_crosses_batch_boundary(self, spark, tmp_path):
+        root = str(tmp_path)
         # batch 0: a reading (20) then a gap row; batch 1: only gap rows
         _apply(spark, _rows(spark, [
             (1, "a", _t(0), 20.0),
@@ -66,8 +65,8 @@ class TestLocf:
             5: (25.0, True),
         }
 
-    def test_rows_before_any_observation_stay_null(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+    def test_rows_before_any_observation_stay_null(self, spark, tmp_path):
+        root = str(tmp_path)
         _apply(spark, _rows(spark, [
             (1, "a", _t(0), 2.0),
             (2, "a", _t(1), 30.0),
@@ -78,8 +77,8 @@ class TestLocf:
         }
         assert got[1] is None and got[2] == 30.0
 
-    def test_keys_fill_independently(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+    def test_keys_fill_independently(self, spark, tmp_path):
+        root = str(tmp_path)
         _apply(spark, _rows(spark, [
             (1, "a", _t(0), 20.0),
             (2, "b", _t(1), 5.0),
@@ -92,8 +91,8 @@ class TestLocf:
         }
         assert got == {1: 20.0, 2: None, 3: 40.0, 4: 20.0}
 
-    def test_replayed_batch_is_exactly_once(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+    def test_replayed_batch_is_exactly_once(self, spark, tmp_path):
+        root = str(tmp_path)
         b0 = _rows(spark, [(1, "a", _t(0), 20.0), (2, "a", _t(1), 2.0)])
         b1 = _rows(spark, [(3, "a", _t(2), 3.0)])
         _apply(spark, b0, root, 0)
@@ -107,7 +106,7 @@ class TestLocf:
         got = {r.event_id: r.filled_value for r in out}
         assert got == {1: 20.0, 2: 20.0, 3: 20.0}
 
-    def test_non_double_observation_keeps_one_output_type(self, spark):
+    def test_non_double_observation_keeps_one_output_type(self, spark, tmp_path):
         # Regression (review-found): the batch-0 seed used a hardcoded
         # double cast, forking the output schema between batch 0 and
         # later batches for non-double observations.
@@ -116,7 +115,7 @@ class TestLocf:
             locf_apply_batch,
         )
 
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+        root = str(tmp_path)
         obs = F.when(F.col("value") >= 19.0, F.col("event_id"))  # long
         for i, rows in enumerate(
             [[(1, "a", _t(0), 20.0)], [(2, "a", _t(1), 1.0)]]
@@ -135,8 +134,8 @@ class TestLocf:
         got = {r.event_id: r.filled_value for r in res.collect()}
         assert got == {1: 1, 2: 1}
 
-    def test_batch_without_observations_carries_state(self, spark):
-        root = tempfile.mkdtemp(prefix="peps-locf-")
+    def test_batch_without_observations_carries_state(self, spark, tmp_path):
+        root = str(tmp_path)
         _apply(spark, _rows(spark, [(1, "a", _t(0), 20.0)]), root, 0)
         _apply(spark, _rows(spark, [(2, "a", _t(1), 1.0)]), root, 1)
         _apply(spark, _rows(spark, [(3, "a", _t(2), 2.0)]), root, 2)
@@ -146,7 +145,7 @@ class TestLocf:
         }
         assert got == {1: 20.0, 2: 20.0, 3: 20.0}
 
-    def test_null_keys_form_one_seeded_group(self, spark):
+    def test_null_keys_form_one_seeded_group(self, spark, tmp_path):
         import duckdb
 
         from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
@@ -155,7 +154,7 @@ class TestLocf:
 
         b0 = [(1, None, _t(0), 20.0), (2, "a", _t(1), 30.0), (3, None, _t(2), 1.0)]
         b1 = [(4, None, _t(3), 2.0), (5, "a", _t(4), 3.0)]
-        root = tempfile.mkdtemp(prefix="peps-locf-null-")
+        root = str(tmp_path)
         _apply(spark, _rows(spark, b0), root, 0)
         _apply(spark, _rows(spark, b1), root, 1)
         got = {

@@ -1,86 +1,15 @@
-"""Upsert/merge operators: changelog compaction and SCD2 history.
+"""Upsert/merge operators: SCD2 history.
 
 Covers the contracts that matter under re-delivery and ordering:
-tombstones outrank lower-versioned updates, multi-row update batches
-collapse latest-wins, SCD2 close/open/no-op classification, and
-idempotency of re-merging the same batch.
+multi-row update batches collapse latest-wins, SCD2 close/open/no-op
+classification, and idempotency of re-merging the same batch.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark.operators.merge import (
-    changelog_latest_snapshot,
     scd2_merge,
 )
-
-
-def _base(spark):
-    return spark.createDataFrame(
-        [(1, "alpha"), (2, "bravo"), (3, "charlie")],
-        "k long, text string",
-    )
-
-
-def test_compaction_latest_wins_and_tombstone(spark):
-    base = _base(spark)
-    changes = spark.createDataFrame(
-        [
-            (1, "alpha v1", 1, False),
-            (1, "alpha v2", 2, False),  # higher version wins
-            (2, None, 5, True),  # tombstone
-            (2, "bravo v1", 1, False),  # outranked by the tombstone
-            (4, "delta", 1, False),  # brand-new key
-        ],
-        "k long, text string, version long, is_delete boolean",
-    )
-    got = {
-        r["k"]: r["text"]
-        for r in changelog_latest_snapshot(
-            base, changes, key_cols=["k"], version_col="version",
-            delete_col="is_delete",
-        ).collect()
-    }
-    assert got == {1: "alpha v2", 3: "charlie", 4: "delta"}
-
-
-def test_compaction_tombstone_then_resurrect(spark):
-    """The reverse collision: a key tombstoned at a LOW version and
-    re-inserted at a higher one must resurrect — deletes are ordinary
-    versioned entries, not terminal states."""
-    base = _base(spark)
-    changes = spark.createDataFrame(
-        [
-            (1, None, 1, True),  # tombstone first...
-            (1, "alpha reborn", 2, False),  # ...then a higher-version insert
-            (3, None, 4, True),
-            (3, "charlie v3", 3, False),  # outranked: key stays deleted
-        ],
-        "k long, text string, version long, is_delete boolean",
-    )
-    got = {
-        r["k"]: r["text"]
-        for r in changelog_latest_snapshot(
-            base, changes, key_cols=["k"], version_col="version",
-            delete_col="is_delete",
-        ).collect()
-    }
-    assert got == {1: "alpha reborn", 2: "bravo"}
-
-
-def test_compaction_no_deletes_arg(spark):
-    base = _base(spark)
-    changes = spark.createDataFrame(
-        [(3, "charlie v1", 7)], "k long, text string, version long"
-    )
-    got = {
-        r["k"]: r["text"]
-        for r in changelog_latest_snapshot(
-            base, changes, key_cols=["k"], version_col="version"
-        ).collect()
-    }
-    assert got == {1: "alpha", 2: "bravo", 3: "charlie v1"}
 
 
 def _history(spark):
@@ -558,71 +487,3 @@ class TestPointInTimeProperties:
         run()
 
 
-class TestCompactionProperties:
-    """Brute-force cross-check: for ANY changelog, the distributed
-    max_by compaction equals a sequential dict replay."""
-
-    @staticmethod
-    def _reference(base_rows, change_rows):
-        state = {k: (0, text, False) for k, text in base_rows}
-        for k, text, version, is_delete in change_rows:
-            cur = state.get(k)
-            if cur is None or version > cur[0]:
-                state[k] = (version, text, is_delete)
-        return {
-            k: text for k, (v, text, dele) in state.items() if not dele
-        }
-
-    def test_random_changelogs(self, spark):
-        # Spark-backed property check: a handful of seeded random
-        # changelogs (per-example Spark jobs are too slow for
-        # hypothesis's default example counts; the layout kernel's
-        # pure-Python suites carry the 100s-of-examples load).
-        import random
-
-        from prioritizing_event_processing_with_apache_kafka_spark.operators.merge import (
-            changelog_latest_snapshot,
-        )
-
-        rng = random.Random(20260814)
-        for _ in range(6):
-            n_keys = rng.randint(1, 12)
-            base_rows = [
-                (k, f"base-{k}")
-                for k in range(n_keys)
-                if rng.random() < 0.7
-            ]
-            change_rows = []
-            version = 0
-            for _ in range(rng.randint(0, 25)):
-                version += 1  # unique versions, contract-conform
-                change_rows.append(
-                    (
-                        rng.randrange(n_keys + 3),  # some brand-new keys
-                        f"v{version}",
-                        version,
-                        rng.random() < 0.25,
-                    )
-                )
-            base = spark.createDataFrame(
-                base_rows or [(999_999, "sentinel")], "k long, text string"
-            )
-            changes = spark.createDataFrame(
-                change_rows or [(999_998, "noop", 1, True)],
-                "k long, text string, version long, is_delete boolean",
-            )
-            got = {
-                r["k"]: r["text"]
-                for r in changelog_latest_snapshot(
-                    base,
-                    changes,
-                    key_cols=["k"],
-                    version_col="version",
-                    delete_col="is_delete",
-                ).collect()
-            }
-            expected = self._reference(
-                base_rows or [(999_999, "sentinel")],
-                change_rows or [(999_998, "noop", 1, True)],
-            )
-            assert got == expected, (base_rows, change_rows)

@@ -1,6 +1,6 @@
 """Regression tests for the round-5 operator-review fixes: negative
 sampling keys, salt decorrelation, NULL-aware EWMA, overflow-safe
-z-score, ANN dim validation, and partition-preserving compaction."""
+z-score, and partition-preserving compaction."""
 
 from __future__ import annotations
 

@@ -42,7 +42,7 @@ def _state(spark, store):
 
 class TestStringKeyRollup:
     def test_token_counts_merge_across_batches(self, spark, tmp_path):
-        # the vocab twin's shape: STRING keys (tokens), count spec,
+        # STRING keys (tokens), count spec,
         # merges across two exploded batches == one global aggregate
         from pyspark.sql import functions as F
 

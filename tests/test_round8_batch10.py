@@ -1,13 +1,11 @@
-"""Round-8 batch-10 semantics: seasonal-naive backtest alignment,
-churn flag algebra, quantile-normalization invariants (fixture parity
-is covered by the oracle harness)."""
+"""Round-8 batch-10 semantics: seasonal-naive backtest alignment and
+churn flag algebra (fixture parity is covered by the oracle harness)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
-    q_embedding_quantile_norm,
     q_events_seasonal_backtest,
     q_user_churn_census,
 )
@@ -58,16 +56,3 @@ class TestUserChurnCensus:
                 )
 
 
-class TestEmbeddingQuantileNorm:
-    def test_uniformization_invariants(self, spark):
-        out = q_embedding_quantile_norm(spark, "/root/testdata/sf0.001")
-        rows = out.collect()
-        assert len(rows) == 64
-        for r in rows:
-            # mid-CDF normalization: min = c1*1e6/(2n) > 0, max < 1e6,
-            # and the weighted mean sits at 500000 +- rounding (exact
-            # 500000 when every value is distinct: sum of mid-ranks is
-            # n/2 by symmetry)
-            assert 0 < r["min_norm_ppm"] <= r["max_norm_ppm"] < 1_000_000
-            assert abs(r["mean_norm_ppm"] - 500_000) <= 1_000
-            assert r["n_distinct"] <= r["n_values"]

@@ -4,8 +4,6 @@ harness)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
     q_conversion_wilson_ci,
     q_customer_revenue_gini,

@@ -68,10 +68,6 @@ class TestUserDecayedValue:
         )
         import duckdb  # noqa: F401 — parity style with siblings
 
-        from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (  # noqa: E501
-            load_table,
-        )
-
         # drive the same expression pipeline via a temp substitution:
         # cheapest is to assert on the fixture that cohorts with all
         # recent events have retention near 1e6 — covered implicitly;

@@ -1,99 +1,17 @@
-"""Round-8 batch-3 operator semantics: weighted sampling, k-anonymity
-and M4 downsampling (fixture parity is covered by the oracle harness;
+"""Round-8 batch-3 operator semantics: k-anonymity and M4 downsampling (fixture parity is covered by the oracle harness;
 these pin hand-computable cases and the properties the oracles can't
 express)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     k_anonymity_audit,
 )
-from prioritizing_event_processing_with_apache_kafka_spark.operators.sampling import (
-    hash_u31,
-    weighted_hash_sample,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.timeseries import (
     m4_downsample,
 )
-
-
-class TestWeightedHashSample:
-    def _docs(self, spark, rows):
-        return spark.createDataFrame(rows, "k long, w long, g string")
-
-    def test_exactly_n_per_stratum_and_deterministic(self, spark):
-        rows = [(i, 1 + i % 7, "g%d" % (i % 3)) for i in range(300)]
-        df = self._docs(spark, rows)
-        out1 = weighted_hash_sample(
-            df, key="k", weight_col="w", strata_col="g", n=10
-        )
-        got1 = sorted((r["g"], r["k"]) for r in out1.collect())
-        assert len(got1) == 30
-        got2 = sorted(
-            (r["g"], r["k"])
-            for r in weighted_hash_sample(
-                df.repartition(7), key="k", weight_col="w", strata_col="g", n=10
-            ).collect()
-        )
-        assert got1 == got2  # partitioning-invariant
-
-    def test_threshold_plan_equals_naive_rank(self, spark):
-        # The scalable threshold path must select the exact rows the
-        # naive full window would (the oracle replays the naive form).
-        rows = [(i, 1 + (i * 13) % 50, "s") for i in range(500)]
-        df = self._docs(spark, rows)
-        out = sorted(
-            r["k"]
-            for r in weighted_hash_sample(
-                df, key="k", weight_col="w", strata_col="g", n=15
-            ).collect()
-        )
-        from pyspark.sql import Window
-
-        score = F.floor(
-            hash_u31("k").cast("double")
-            / F.greatest(F.lit(1).cast("long"), F.col("w"))
-        ).cast("long")
-        naive = sorted(
-            r["k"]
-            for r in df.withColumn("s", score)
-            .withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("g").orderBy("s", "k")
-                ),
-            )
-            .filter("rn <= 15")
-            .collect()
-        )
-        assert out == naive
-
-    def test_weight_monotonicity(self, spark):
-        # Two interleaved weight classes: heavy rows (w=1000) must be
-        # overrepresented vs light rows (w=1) in the winner set.
-        rows = [(i, 1000 if i % 2 == 0 else 1, "s") for i in range(2000)]
-        out = weighted_hash_sample(
-            self._docs(spark, rows), key="k", weight_col="w", strata_col="g", n=50
-        ).collect()
-        heavy = sum(1 for r in out if r["k"] % 2 == 0)
-        assert heavy >= 45  # p(heavy) ~ 1000/1001 per slot
-
-    def test_small_stratum_returns_all(self, spark):
-        out = weighted_hash_sample(
-            self._docs(spark, [(1, 5, "tiny"), (2, 5, "tiny")]),
-            key="k", weight_col="w", strata_col="g", n=10,
-        )
-        assert out.count() == 2
-
-    def test_validation(self, spark):
-        with pytest.raises(ValueError, match="n must be"):
-            weighted_hash_sample(
-                self._docs(spark, [(1, 1, "a")]),
-                key="k", weight_col="w", strata_col="g", n=0,
-            )
 
 
 class TestKAnonymityAudit:

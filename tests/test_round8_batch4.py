@@ -1,6 +1,5 @@
 """Round-8 batch-4 operator semantics: binned autocorrelation, Benford
-first-digit audit, winsorization, label-centroid embedding outliers
-(fixture parity is covered by the oracle harness; these pin
+first-digit audit and winsorization (fixture parity is covered by the oracle harness; these pin
 hand-computable cases and the properties the oracles can't express)."""
 
 from __future__ import annotations
@@ -8,9 +7,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from prioritizing_event_processing_with_apache_kafka_spark.operators.clustering import (
-    label_centroid_audit,
-)
 from prioritizing_event_processing_with_apache_kafka_spark.operators.quality import (
     BENFORD_PPM,
     benford_audit,
@@ -170,54 +166,3 @@ class TestWinsorizedStats:
             winsorized_stats(df, group_col="g", value_col="v", lo_p=50, hi_p=50)
 
 
-class TestLabelCentroidAudit:
-    def test_hand_case(self, spark):
-        # label A: (0,0),(2,0),(0,2),(10,10) -> centroid (3,3);
-        # d2 = 18, 10, 10, 98; mean_d2_micros = 34e6;
-        # only the last exceeds 2x: ratio = 98e12 DIV 34e6 = 2882352.
-        rows = [
-            (1, [0.0, 0.0], 0),
-            (2, [2.0, 0.0], 0),
-            (3, [0.0, 2.0], 0),
-            (4, [10.0, 10.0], 0),
-        ]
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        )
-        out = label_centroid_audit(df, ratio_threshold_ppm=2_000_000).collect()
-        assert len(out) == 1
-        r = out[0]
-        assert r["vec_id"] == 4
-        assert r["d2_micros"] == 98_000_000
-        assert r["mean_d2_micros"] == 34_000_000
-        assert r["ratio_ppm"] == 98_000_000 * 1_000_000 // 34_000_000
-
-    def test_per_label_isolation(self, spark):
-        # Two labels with identical geometry: the outlier flags once per
-        # label — means never mix across labels.
-        rows = []
-        vid = 0
-        for lab in (0, 1):
-            for vec in ([0.0, 0.0], [2.0, 0.0], [0.0, 2.0], [10.0, 10.0]):
-                vid += 1
-                rows.append((vid, vec, lab))
-        df = spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>, label int"
-        )
-        out = label_centroid_audit(df, ratio_threshold_ppm=2_000_000)
-        assert out.count() == 2
-        assert out.select("label").distinct().count() == 2
-
-    def test_threshold_zero_returns_all(self, spark):
-        df = spark.createDataFrame(
-            [(1, [0.0], 0), (2, [2.0], 0)],
-            "vec_id long, embedding array<float>, label int",
-        )
-        assert label_centroid_audit(df, ratio_threshold_ppm=0).count() == 2
-
-    def test_validation(self, spark):
-        df = spark.createDataFrame(
-            [(1, [0.0], 0)], "vec_id long, embedding array<float>, label int"
-        )
-        with pytest.raises(ValueError, match="ratio_threshold_ppm"):
-            label_centroid_audit(df, ratio_threshold_ppm=-1)

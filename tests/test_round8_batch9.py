@@ -1,47 +1,13 @@
-"""Round-8 batch-9 conformance-census semantics (fixture parity is
-covered by the oracle harness; these pin hand-computable cases)."""
+"""Round-8 batch-9 order-status reconciliation semantics (fixture parity
+is covered by the oracle harness; these pin hand-computable cases)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
-    q_lang_charclass_profile,
     q_order_status_reconciliation,
-    q_source_lang_fd,
 )
-
-
-class TestSourceLangFd:
-    def test_fixture_census_consistency(self, spark):
-        out = q_source_lang_fd(spark, "/root/testdata/sf0.001").collect()
-        import duckdb
-
-        n_docs = duckdb.sql(
-            "select count(*) from '/root/testdata/sf0.001/documents.parquet'"
-        ).fetchone()[0]
-        assert sum(r["n_docs"] for r in out) == n_docs
-        for r in out:
-            # majority count = n_docs - violations, and the reported ppm
-            # must be exactly that count's floored share
-            maj = r["n_docs"] - r["violations"]
-            assert r["majority_ppm"] == maj * 1_000_000 // r["n_docs"]
-            assert 0 < r["majority_ppm"] <= 1_000_000
-            if r["n_langs"] == 1:
-                assert r["violations"] == 0
-                assert r["majority_ppm"] == 1_000_000
-
-
-class TestLangCharclassProfile:
-    def test_shares_partition_the_text(self, spark):
-        out = q_lang_charclass_profile(spark, "/root/testdata/sf0.001").collect()
-        for r in out:
-            total_ppm = (
-                r["letter_ppm"] + r["digit_ppm"] + r["space_ppm"] + r["other_ppm"]
-            )
-            # each share floors independently; the sum can undershoot by
-            # at most 3 ppm units, never overshoot
-            assert 1_000_000 - 3 <= total_ppm <= 1_000_000
 
 
 class TestOrderStatusReconciliation:

@@ -5,7 +5,6 @@ harness; these tests replay the math independently in Python)."""
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 
 from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
     q_customer_lorenz_deciles,
@@ -158,41 +157,6 @@ class TestStreamingTwins:
             for r in q_stream_abc_incremental(spark, SF).collect()
         }
         assert stream == batch
-
-
-class TestVocabRankCensus:
-    def test_brute_force_replay(self, spark):
-        from collections import Counter
-
-        from prioritizing_event_processing_with_apache_kafka_spark.inventory_pipeline import (
-            q_vocab_rank_census,
-        )
-
-        rows = {r.rank_bin: r for r in q_vocab_rank_census(spark, SF).collect()}
-        texts = [
-            t[0]
-            for t in duckdb.sql(f"select text from '{SF}/documents.parquet'").fetchall()
-        ]
-        occ = Counter()
-        for t in texts:
-            occ.update(t.split(" "))
-        ranked = sorted(occ.items(), key=lambda kv: (-kv[1], kv[0]))
-        tot = sum(occ.values())
-        want = {}
-        cum = 0
-        for rank, (_tok, n) in enumerate(ranked, start=1):
-            cum += n
-            b = rank.bit_length() - 1
-            nt, oc, _ = want.get(b, (0, 0, 0))
-            want[b] = (nt + 1, oc + n, cum * 1_000_000 // tot)
-        assert {
-            b: (r.n_terms, r.occurrences, r.cum_coverage_ppm)
-            for b, r in rows.items()
-        } == want
-        # coverage is monotone in bin and ends at 100%
-        bins = sorted(rows)
-        shares = [rows[b].cum_coverage_ppm for b in bins]
-        assert shares == sorted(shares) and shares[-1] == 1_000_000
 
 
 class TestHeavyHittersCms:

@@ -84,89 +84,6 @@ class TestBucketedJoin:
             spark.sql("DROP TABLE IF EXISTS lineitem_b")
 
 
-class TestInterchangeFormats:
-    def test_events_csv_roundtrip_bit_exact(self, spark, sf_dir, tmp_path):
-        from pyspark.sql import functions as F
-
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import (
-            read_csv,
-            write_csv,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        events = load_table(spark, sf_dir, "events")
-        path = str(tmp_path / "events_csv")
-        write_csv(events, path)
-        back = read_csv(spark, path, events.schema)
-        assert back.schema == events.schema
-        # bit-exact round trip including microsecond timestamps
-        assert back.exceptAll(events).count() == 0
-        assert events.exceptAll(back).count() == 0
-
-    def test_embeddings_jsonl_roundtrip(self, spark, sf_dir, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import (
-            read_jsonl,
-            write_jsonl,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        path = str(tmp_path / "emb_jsonl")
-        write_jsonl(emb, path)
-        back = read_jsonl(spark, path, emb.schema)
-        assert back.schema == emb.schema
-        assert back.exceptAll(emb).count() == 0
-        assert emb.exceptAll(back).count() == 0
-
-    def test_events_and_embeddings_orc_roundtrip(self, spark, sf_dir, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import (
-            read_orc,
-            write_orc,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        for table in ("events", "embeddings"):
-            df = load_table(spark, sf_dir, table)
-            path = str(tmp_path / f"{table}_orc")
-            write_orc(df, path)
-            back = read_orc(spark, path)
-            assert back.schema == df.schema
-            assert back.exceptAll(df).count() == 0
-            assert df.exceptAll(back).count() == 0
-
-    def test_orc_scan_pushes_filters(self, spark, sf_dir, tmp_path):
-        from pyspark.sql import functions as F
-
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import (
-            read_orc,
-            write_orc,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        events = load_table(spark, sf_dir, "events")
-        path = str(tmp_path / "events_orc")
-        write_orc(events, path)
-        plan = (
-            read_orc(spark, path)
-            .filter(F.col("user_id") == 7)
-            .select("event_id")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PushedFilters: [IsNotNull(user_id), EqualTo(user_id,7)" in plan
-
-    def test_csv_rejects_array_columns(self, spark, sf_dir):
-        import pytest as _pytest
-
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import write_csv
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        with _pytest.raises(TypeError, match="CSV"):
-            write_csv(emb, "/tmp/never-written")
-
-
 class TestZOrder:
     def test_morton_key_matches_reference(self, spark):
         from prioritizing_event_processing_with_apache_kafka_spark.sources.zorder import zorder_key
@@ -340,23 +257,6 @@ class TestSaltedJoin:
         with _pytest.raises(ValueError, match="inner"):
             salted_join(left, left, "k", how="right")
 
-    def test_events_xml_roundtrip(self, spark, sf_dir, tmp_path):
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.formats import (
-            read_xml,
-            write_xml,
-        )
-        from prioritizing_event_processing_with_apache_kafka_spark.sources.tables import load_table
-
-        events = load_table(spark, sf_dir, "events")
-        path = str(tmp_path / "events_xml")
-        write_xml(events, path, row_tag="event")
-        back = read_xml(spark, path, events.schema, row_tag="event")
-        assert back.schema == events.schema
-        # bit-exact round trip including microsecond timestamps and the
-        # embedded-JSON props strings (XML-escaped on the way through)
-        assert back.exceptAll(events).count() == 0
-        assert events.exceptAll(back).count() == 0
-
 
 class TestBroadcastDemotion:
     """VERDICT r7 item 7: pin the broadcast-threshold behavior of the
@@ -364,8 +264,6 @@ class TestBroadcastDemotion:
     this test proves BOTH directions of the mechanism itself."""
 
     def test_unhinted_demotes_hinted_survives_threshold_off(self, spark, sf_dir):
-        import __spark_entry__ as entrymod
-
         from prioritizing_event_processing_with_apache_kafka_spark.inventory import (
             EVENTS_CONFIG,
             EVENTS_NUM_PARTITIONS,

@@ -25,9 +25,7 @@ import pandas as pd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
+TABLES = "region nation customer supplier part orders lineitem events".split()
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -229,24 +227,6 @@ def _audit_abs_max(cols: str | list[str], bound: float):
     return audit
 
 
-def _audit_min(col: str, bound: float):
-    """Every row's col must be >= bound (recall columns)."""
-
-    def audit(pdf: pd.DataFrame) -> list[str]:
-        if col not in pdf.columns:
-            return [f"self-audit column {col!r} missing from result"]
-        if len(pdf) == 0:
-            return ["self-audit: empty result"]
-        if pdf[col].isna().any():
-            return [f"self-audit: {col} has NaN/None values"]
-        worst = float(pdf[col].min())
-        if worst < bound:
-            return [f"self-audit: min {col} = {worst:.3f} < bound {bound}"]
-        return []
-
-    return audit
-
-
 def _audit_est_exact_pairs(pairs: list[tuple[str, str]], bound_pct: float):
     """|est - exact| / max(exact, 1) * 100 <= bound for each pair."""
 
@@ -303,16 +283,6 @@ SELF_AUDITS = {
     # bucket_percentile_exact.)
     "bucket_percentile_bridge": _audit_abs_max(
         [f"rank_err_p{q}" for q in (50, 90, 99)], 0.05
-    ),
-    # Pruned (IVF-style) k-means assignment vs exact, same seed
-    # centroids: inertia ratios bounded (measured ~1.03 on every
-    # fixture; 1.10 = the documented quality contract), and the
-    # per-vector excess must be structurally non-negative — the pruned
-    # argmin scores a subset of clusters, so a negative excess beyond
-    # rounding noise means the router itself broke.
-    "kmeans_pruned_agreement": lambda pdf: (
-        _audit_abs_max(["inertia_ratio", "inertia_ratio_full"], 1.10)(pdf)
-        + _audit_min("min_excess_d2", -1e-9)(pdf)
     ),
 }
 

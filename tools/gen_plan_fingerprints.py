@@ -37,15 +37,8 @@ GUARDED = [
     "conversion_funnel",
     "events_asof_last_purchase",
     "heavy_hitter_users",
-    "changelog_compaction",
     "scd2_customer_segments",
     "events_tier_at_time",
-    # round 6: the min-struct argmin k-means plan (one tiny-row
-    # exchange per assignment instead of a full scored-row sort)
-    "embedding_kmeans",
-    # round 7: the k-means audit query (exact+pruned assignment in one
-    # plan — growth here doubles real scans)
-    "kmeans_pruned_agreement",
     # round 7, second batch: the drain schedule must stay one range
     # shuffle (riding the exact router's exchange) + one broadcast map
     # join; the gap fill must stay one per-key exchange + a tiny
@@ -107,7 +100,6 @@ GUARDED = [
     "events_json_extract",
     "q7_nation_volume",
     "q10_returned_revenue",
-    "embedding_label_centroids",
     "error_purchase_interval",
     "user_value_ewma",
     "bucket_hourly_anomaly",
@@ -132,23 +124,18 @@ GUARDED = [
     # plus TWO broadcast layout joins and one per-bucket aggregate.
     "bucket_value_mad",
     "layout_rebalance_impact",
-    # round 8 third batch: the weighted sample must keep the threshold
-    # shape (weight-sum agg + broadcast join + survivor window — a
-    # full-stratum window funnel is the regression); k-anonymity is
-    # two hash aggregates; M4 is ONE partial-agg exchange.
-    "documents_weighted_sample",
+    # round 8 third batch: k-anonymity is two hash aggregates; M4 is
+    # ONE partial-agg exchange.
     "events_k_anonymity",
     "events_m4_downsample",
     # round 8 fourth batch: ACF must stay bin-agg + one series window
     # (the bin aggregate is the only row-scaled exchange); Benford is
     # one hash aggregate + a 9-row window; winsorize is the histogram
     # fence subtree + ONE broadcast onto the fact scan (a sort-merge
-    # join here is the regression); the outlier audit is two
-    # aggregates + two broadcasts, zero windows.
+    # join here is the regression).
     "events_hourly_acf",
     "lineitem_benford",
     "orders_winsorized",
-    "embedding_outlier_audit",
     # round 8 fifth batch: decile drift is the fence subtree + TWO
     # broadcasts onto the fact scan (fences, mids) + one group window;
     # erasure is three semi-join/fold pairs with broadcast cohorts.
@@ -167,19 +154,15 @@ GUARDED = [
     # watch one fact join + supplier-keyed agg + histogram subtree.
     "customer_rfm",
     "supplier_ship_sla",
-    # round 8 ninth batch: each is one-or-two map-combined aggregates
-    # (+ a tiny window / broadcast-eligible join) — a fact re-scan or
-    # window-over-corpus sneaking in is the regression.
-    "source_lang_fd",
-    "lang_charclass_profile",
+    # round 8 ninth batch: one-or-two map-combined aggregates (+ a
+    # broadcast-eligible join) — a fact re-scan sneaking in is the
+    # regression.
     "order_status_reconciliation",
     # round 8 tenth batch: backtest = bin agg (the only row-scaled
     # exchange) + bin-sized lag window; churn = two map-combined
-    # aggregates + broadcast midpoint; quantile-norm = posexplode into
-    # a (dim, value) histogram + histogram-sized windows.
+    # aggregates + broadcast midpoint.
     "events_seasonal_backtest",
     "user_churn_census",
-    "embedding_quantile_norm",
     # round 8 eleventh batch (ABC re-planned round 9): ABC = part agg
     # + the distributed global-ordered-scan (ONE range exchange + one
     # pid-partitioned window + tiny broadcast offsets — an
@@ -213,10 +196,6 @@ GUARDED = [
     "user_value_pareto",
     "customer_lorenz_deciles",
     "orders_pit_fx_enrich",
-    # round 9 second batch: the Zipf census must keep the ordered-scan
-    # shape over the term aggregate (bin-sized after it). The streaming
-    # twins are pinned via their __core builders instead.
-    "vocab_rank_census",
     # round 9 third batch: CMS must stay ONE exploded map-combined cell
     # aggregate + a top-k TakeOrdered + broadcast probe joins (a
     # second fact scan per hash row is the regression).
