@@ -35,6 +35,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.operators.caching imp
 from prioritizing_event_processing_with_apache_kafka_spark.functions.keys import extract_bucket
 from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import (
     layout_table,
+    local_table,
     route,
     routed_distribution,
 )
@@ -187,7 +188,8 @@ def q_layout_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (config_id, r.bucket, r.allocation, r.priority_rank,
                  r.partition_lo, r.partition_hi, r.size)
             )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows,
         "config_id int, bucket string, allocation int, priority_rank int, "
         "partition_lo int, partition_hi int, bucket_size int",
@@ -257,8 +259,8 @@ def q_assignment_golden(spark: SparkSession, sf_dir: str) -> DataFrame:
         for consumer, pairs in assign(ppt, subs, cfg).items():
             for topic, partition in pairs:
                 rows.append((sid, consumer, topic, partition))
-    return spark.createDataFrame(
-        rows, "scenario_id int, consumer string, topic string, partition int"
+    return local_table(
+        spark, rows, "scenario_id int, consumer string, topic string, partition int"
     )
 
 
@@ -317,11 +319,14 @@ def q_layout_autobroadcast_canary(spark: SparkSession, sf_dir: str) -> DataFrame
     explicit ``broadcast()`` (``operators/routing.py:route``), so conf
     drift there is impossible; this twin is the early-warning for the
     estimation path every OTHER small-dimension join in the engine
-    relies on. Its plan fingerprint pins ``broadcast_exchanges`` — if
-    a conf change (``spark.sql.autoBroadcastJoinThreshold=-1``), a
-    layout-builder change that destroys stats, or an AQE demotion ever
-    flips this join to a shuffle, the fingerprint guard fails before
-    any 100 TB run pays for it. ``tests/test_skew_and_bucketing.py``
+    relies on. The layout is a JVM ``LocalRelation``
+    (``operators/routing.py:local_table``) with size statistics, so
+    the static plan already broadcasts it, and the plan fingerprint
+    pins that (1 shuffle, 2 broadcasts). If a conf change
+    (``spark.sql.autoBroadcastJoinThreshold=-1``) or a layout builder
+    that loses the statistics (a pickled Python-RDD leaf has none)
+    ever flips this join to a shuffle, the fingerprint guard fails
+    before any 100 TB run pays for it. ``tests/test_skew_and_bucketing.py``
     additionally proves the demotion mechanism: under threshold=-1 the
     unhinted twin degrades to a shuffle join while the hinted
     production path keeps broadcasting. Hash-oracled (same result as
@@ -476,7 +481,8 @@ def q_layout_rebalance_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     # Inner-join semantics of the old two joins: keep buckets present
     # in BOTH layouts (configs share the bucket list, so this is all).
-    both = spark.createDataFrame(
+    both = local_table(
+        spark,
         [
             (b, new_rows[b][0], new_rows[b][1], old_rows[b])
             for b in new_rows

@@ -43,6 +43,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import (
+    local_table,
+)
+
 __all__ = ["consumer_map_table", "drain_schedule"]
 
 # one consumer's view of one partition it owns:
@@ -72,7 +76,7 @@ def consumer_map_table(
             (partition, consumer, len(owned), idx)
             for idx, partition in enumerate(owned)
         )
-    return spark.createDataFrame(rows, CONSUMER_MAP_SCHEMA)
+    return local_table(spark, rows, CONSUMER_MAP_SCHEMA)
 
 
 def drain_schedule(

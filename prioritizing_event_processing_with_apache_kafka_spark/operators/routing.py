@@ -12,8 +12,9 @@ The Spark-first re-expression of the reference's producer
   unknown buckets get NULL partition (fall-through,
   ``BucketPriorityPartitioner.java:74``).
 - **P6 layout**: the pure-Python kernel's output becomes a
-  ≤-few-hundred-bytes DataFrame that Catalyst broadcast-joins — no
-  shuffle of the fact side, ever.
+  ≤-few-hundred-bytes JVM ``LocalRelation`` (:func:`local_table`) that
+  Catalyst broadcast-joins — no shuffle of the fact side, ever, and no
+  Python worker behind the broadcast build.
 - **P7 round-robin**: ``partition = partition_lo + pmod(seq, bucket_size)``
   where ``seq`` depends on the routing *mode* (below). Starved buckets
   (zero partitions after truncation) route to partition ``-1``, exactly
@@ -51,8 +52,12 @@ serialize the world):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from prioritizing_event_processing_with_apache_kafka_spark.operators.caching import (
     scoped_persist,
@@ -64,6 +69,7 @@ from prioritizing_event_processing_with_apache_kafka_spark.plans.config import B
 from prioritizing_event_processing_with_apache_kafka_spark.plans.layout import compute_layout
 
 __all__ = [
+    "local_table",
     "layout_table",
     "route",
     "routed_distribution",
@@ -83,6 +89,30 @@ LAYOUT_SCHEMA = T.StructType(
 )
 
 
+def local_table(
+    spark: SparkSession, rows: Sequence[Sequence], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side rows as a DataFrame whose plan leaf is a JVM
+    ``LocalRelation`` — the engine's one way to turn Python rows into a
+    table.
+
+    The rows travel as one Arrow table, so the relation lives in the
+    JVM: broadcasting or scanning it runs no Python worker (a frame
+    built from the Python rows directly is a pickled-RDD leaf that
+    does), and the optimizer knows its size. ``schema`` is a
+    ``StructType`` (nullability kept) or a DDL string.
+    """
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def layout_table(
     spark: SparkSession, config: BucketPriorityConfig, num_partitions: int
 ) -> DataFrame:
@@ -99,7 +129,7 @@ def layout_table(
         (r.bucket, r.allocation, r.priority_rank, r.partition_lo, r.partition_hi, r.size)
         for r in ranges
     ]
-    return spark.createDataFrame(rows, LAYOUT_SCHEMA)
+    return local_table(spark, rows, LAYOUT_SCHEMA)
 
 
 # monotonically_increasing_id() = (task id << 33) | row-index-in-task.
@@ -227,11 +257,9 @@ def exact_sequence(
             (row["__peps_pid"], b, base, row["__peps_lo"], b if b in layout else None, lo, size)
         )
         counters[b] = base + row["__peps_cnt"]
-    # One parallelize slice: the rows are consumed only as a broadcast
-    # build, and the default slicing would run one near-empty Python
-    # deserializer task per core.
-    offsets = spark.createDataFrame(
-        spark.sparkContext.parallelize(offset_rows, 1),
+    offsets = local_table(
+        spark,
+        offset_rows,
         "__peps_pid long, __peps_bucket string, __peps_base long, __peps_lo long, "
         "__peps_layout_bucket string, __peps_layout_partition_lo int, "
         "__peps_layout_bucket_size int",

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-__all__ = ["plan_exchange_counts", "streaming_core_queries"]
+__all__ = ["plan_exchange_counts", "python_relation_count", "streaming_core_queries"]
 
 # Substrings that identify exchange operators in the plan dump.
 # "Exchange hashpartitioning/rangepartitioning/SinglePartition" are
@@ -43,6 +43,20 @@ def plan_exchange_counts(df: DataFrame) -> dict[str, int]:
         "shuffle_exchanges": sum(plan.count(m) for m in _SHUFFLE_MARKERS),
         "broadcast_exchanges": plan.count("BroadcastExchange"),
     }
+
+
+def python_relation_count(df: DataFrame) -> int:
+    """Count Python-built relations (``LogicalRDD`` leaves) in a
+    DataFrame's optimized plan. A frame built from Python rows is a
+    pickled RDD: scanning or broadcasting it runs a Python-worker job,
+    and it carries no size statistics. Driver-side tables built by
+    ``operators/routing.py:local_table`` are JVM ``LocalRelation``
+    leaves and count 0. (A ``localCheckpoint`` also plans as a
+    ``LogicalRDD``, of JVM rows, and is counted too.)"""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return sum(
+        leaves.apply(i).nodeName() == "LogicalRDD" for i in range(leaves.size())
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -51,6 +51,9 @@ from pyspark.sql import functions as F
 from prioritizing_event_processing_with_apache_kafka_spark.operators.heavyhitters import (
     misra_gries_partial,
 )
+from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import (
+    local_table,
+)
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
     _latest_version_below,
     _write_version,
@@ -269,7 +272,7 @@ def mg_exact_topk(
             # readout — hand it back as a local-relation DataFrame so
             # the caller's materialization doesn't re-run the candidate
             # recount job a second time (ADVICE r11).
-            return spark.createDataFrame(head, top.schema)
+            return local_table(spark, head, top.schema)
     return top
 
 

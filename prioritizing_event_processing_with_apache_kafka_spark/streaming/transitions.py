@@ -46,6 +46,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from prioritizing_event_processing_with_apache_kafka_spark.operators.routing import (
+    local_table,
+)
 from prioritizing_event_processing_with_apache_kafka_spark.streaming.dimension import (
     _latest_version_below,
     _versions,
@@ -279,7 +282,7 @@ def transition_counts_result(
     schema to infer; ``empty_schema`` declares the frame returned in
     that legal-but-empty case (override it for non-string states)."""
     if not _versions(spark, out_path):
-        per_batch = spark.createDataFrame([], empty_schema)
+        per_batch = local_table(spark, [], empty_schema)
     else:
         per_batch = spark.read.parquet(out_path).drop(_VERSION_COL)
     totals = per_batch.groupBy("prev_state", "next_state").agg(

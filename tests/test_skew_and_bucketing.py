@@ -277,9 +277,9 @@ class TestBroadcastDemotion:
         )
 
         def join_kinds(df, final=False):
-            # The canary join's build side is an AGGREGATE — statically
-            # size-unknown, so the broadcast decision is AQE's runtime
-            # call. final=True executes and reads the re-optimized plan.
+            # The canary join's layout side is a LocalRelation with size
+            # statistics, so the static plan already broadcasts it;
+            # final=True executes and reads AQE's re-optimized plan.
             if final:
                 df.collect()
             plan = df._jdf.queryExecution().executedPlan().toString()

@@ -3,10 +3,14 @@
 Usage: python tools/profile_query.py [sf_dir] name [name ...]
 
 Runs each query twice (cold, then warm after clearCache) on a
-``local[SPARK_GRAFT_CPUS]`` session and prints both timings plus the number of Spark jobs/stages the run scheduled, which
-is the first thing to look at when a small-input query is slow: at
-fixture scale, scheduling latency × stage count can dominate actual
-compute, and every avoidable shuffle costs a stage at 100 TB too.
+``local[SPARK_GRAFT_CPUS]`` session and prints both timings (total,
+then build and execute) plus the number of Spark jobs/stages the run
+scheduled, which is the first thing to look at when a small-input
+query is slow: at fixture scale, scheduling latency × stage count can
+dominate actual compute, and every avoidable shuffle costs a stage at
+100 TB too. ``py_rels`` counts the Python-built relations
+(``LogicalRDD`` leaves) in the built DataFrame's optimized plan; each
+one costs a Python-worker job wherever it is scanned or broadcast.
 """
 
 from __future__ import annotations
@@ -43,6 +47,9 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entrymod
+    from prioritizing_event_processing_with_apache_kafka_spark.plans.fingerprint import (
+        python_relation_count,
+    )
 
     queries = entrymod.queries()
     sc = spark.sparkContext
@@ -73,8 +80,13 @@ def main() -> int:
             jobs_before = set(tracker.getJobIdsForGroup(None) or [])
             gc0 = gc_millis()
             t0 = time.time()
-            materialize(fn(spark, sf_dir))
-            dt = time.time() - t0
+            df = fn(spark, sf_dir)
+            build_dt = time.time() - t0
+            py_rels = python_relation_count(df)
+            t1 = time.time()
+            materialize(df)
+            exec_dt = time.time() - t1
+            dt = build_dt + exec_dt
             gc_dt = gc_millis() - gc0
             used_mb = heap.getHeapMemoryUsage().getUsed() // (1 << 20)
             jobs_after = set(tracker.getJobIdsForGroup(None) or [])
@@ -85,8 +97,10 @@ def main() -> int:
                 if info is not None:
                     n_stages += len(info.stageIds)
             print(
-                f"{name:28s} {run}: {dt:6.2f}s  gc={gc_dt/1000:5.2f}s "
-                f"heap={used_mb}M jobs={len(new_jobs)} stages={n_stages}",
+                f"{name:28s} {run}: {dt:6.2f}s (build {build_dt:5.2f}s, "
+                f"exec {exec_dt:5.2f}s)  gc={gc_dt/1000:5.2f}s "
+                f"heap={used_mb}M jobs={len(new_jobs)} stages={n_stages} "
+                f"py_rels={py_rels}",
                 flush=True,
             )
             spark.catalog.clearCache()
